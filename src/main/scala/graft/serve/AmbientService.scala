@@ -54,28 +54,28 @@ class AmbientService(
   lazy val psd: DataFrame = psdIn
 
   // ---- request caches (C1-C3; ref lru_cache(16/64/128)) -----------------
-  private val tsCache = new LruCache[Any, Any](128)
-  private val aggCache = new LruCache[Any, Any](64)
+  private val optionsCache = new LruCache[Option[String], OptionsResponse](OptionsCacheSize)
+  private val tsCache = new LruCache[Any, Any](TsCacheSize)
+  private val aggCache = new LruCache[Any, Any](AggCacheSize)
 
-  private def isoT(i: Instant): String =
-    java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss")
-      .withZone(ZoneOffset.UTC).format(i)
-
-  // ---- /options (SURVEY §3.3) -------------------------------------------
+  // ---- /options (SURVEY §3.3; ref get_options.py:54-56 lru_cache(16)) ----
   def getOptions(hydrophone: Option[String]): OptionsResponse = {
-    val wanted = hydrophone match {
-      case Some(h) => Seq(RequestPlanner.normalizeName(h))
-      // P6: default scan skips sandbox (ref get_options.py:59-64)
-      case None => catalogEntries.map(_.hydrophone).distinct
-        .filterNot(_.equalsIgnoreCase("SANDBOX")).sorted // O3
+    val key = hydrophone.map(RequestPlanner.normalizeName)
+    optionsCache.memo(key) {
+      val wanted = key match {
+        case Some(h) => Seq(h)
+        // P6: default scan skips sandbox (ref get_options.py:59-64)
+        case None => catalogEntries.map(_.hydrophone).distinct
+          .filterNot(_.equalsIgnoreCase("SANDBOX")).sorted // O3
+      }
+      OptionsResponse(wanted.map { h =>
+        val opts = catalogEntries.filter(_.hydrophone == h)
+          .sortBy(e => (e.freqType, e.deltaF.getOrElse(-1), e.deltaT)) // O2
+          .map(e => CoverageOption(e.freqType, e.deltaF, e.deltaT,
+            Some(isoT(e.firstStart)), Some(isoT(e.lastEnd)), e.fileCount))
+        HydrophoneOptions(h, opts)
+      })
     }
-    OptionsResponse(wanted.map { h =>
-      val opts = catalogEntries.filter(_.hydrophone == h)
-        .sortBy(e => (e.freqType, e.deltaF.getOrElse(-1), e.deltaT)) // O2
-        .map(e => CoverageOption(e.freqType, e.deltaF, e.deltaT,
-          Some(isoT(e.firstStart)), Some(isoT(e.lastEnd)), e.fileCount))
-      HydrophoneOptions(h, opts)
-    })
   }
 
   // ---- validation (J1 + J2; ref get_timeseries.py:101-184) --------------
@@ -255,6 +255,18 @@ class AmbientService(
 }
 
 object AmbientService {
+
+  /** Entries per request cache (ref lru_cache(16/64/128)). */
+  val OptionsCacheSize = 16
+  val AggCacheSize = 64
+  val TsCacheSize = 128
+
+  /** The served timestamp text, `yyyy-MM-dd'T'HH:mm:ss` in UTC. One shared
+    * formatter: `DateTimeFormatter` is immutable and thread-safe. */
+  private val IsoSeconds =
+    java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss")
+      .withZone(ZoneOffset.UTC)
+  private[serve] def isoT(i: Instant): String = IsoSeconds.format(i)
 
   /** Bounded LRU memo (reference `lru_cache`; C1-C3). */
   final class LruCache[K, V](capacity: Int) {

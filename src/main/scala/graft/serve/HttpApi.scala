@@ -63,10 +63,39 @@ private[serve] object Json {
   *
   * The Spark work happens inside AmbientService (bounded, cached, point-
   * capped); this layer only parses, dispatches, shapes, and serializes —
-  * it holds no DataFrames and adds no driver-side computation.
+  * it holds no DataFrames and runs no Spark job. It encodes each 200
+  * response object once: a service LRU hit returns the same object, so
+  * the edge answers it with the stored bytes instead of re-encoding it
+  * (see `encodeOnce`). Every request still calls the service.
   */
 object HttpApi {
   private[serve] final case class ParamError(msg: String) extends RuntimeException(msg)
+
+  /** A response body as sent, with the `X-*` count headers that go with it. */
+  private final case class Encoded(body: Array[Byte], headers: Seq[(String, String)])
+
+  /** Encode-memo key: the service's response object by IDENTITY, plus the
+    * request text the body echoes that the service's own key does not pin
+    * (the raw `start_date`, say). A recomputed or swapped-in response is a
+    * new object and misses, so stored bytes are never stale. The object is
+    * held weakly: the memo never keeps alive a response the service's LRU
+    * has dropped, and such an entry simply ages out. */
+  private final class EncodeKey(resp: AnyRef, private val echo: Any) {
+    private val ref = new java.lang.ref.WeakReference(resp)
+    private val hash = System.identityHashCode(resp) * 31 + echo.##
+    override def hashCode(): Int = hash
+    override def equals(o: Any): Boolean = o match {
+      case k: EncodeKey =>
+        val r = ref.get
+        r != null && (r eq k.ref.get) && echo == k.echo
+      case _ => false
+    }
+  }
+
+  /** One memo entry per response object the service's LRUs hold at once. */
+  private val EncodedEntries =
+    AmbientService.OptionsCacheSize + AmbientService.AggCacheSize +
+      AmbientService.TsCacheSize
 }
 
 /** @param logDir directory for the timing log (ref writes
@@ -117,7 +146,7 @@ final class HttpApi(
     // cap bounds memory, excess connections queue in the accept backlog.
     // Daemon threads: HttpServer.stop() does not shut down a user-supplied
     // executor, and a non-daemon pool would pin the JVM forever.
-    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(8, r => {
+    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(threads, r => {
       val t = new Thread(r, "graft-http")
       t.setDaemon(true)
       t
@@ -130,7 +159,22 @@ final class HttpApi(
 
   // FastAPI's request-validation failure (unparseable/missing params) —
   // top-level in the companion so the catch-side type test is exact
-  import HttpApi.ParamError
+  import HttpApi.{Encoded, EncodeKey, EncodedEntries, ParamError}
+
+  private val encoded = new AmbientService.LruCache[EncodeKey, Encoded](EncodedEntries)
+
+  /** Encode `resp` once. A later request whose service call returns the
+    * same object (an LRU hit) with the same `echo` gets the stored bytes;
+    * two concurrent first encodings may both run, and they are identical. */
+  private def encodeOnce(resp: AnyRef, echo: Any = ())(
+      enc: => (String, Seq[(String, String)])): Encoded =
+    encoded.memo(new EncodeKey(resp, echo)) {
+      val (body, headers) = enc
+      Encoded(body.getBytes(UTF_8), headers)
+    }
+
+  private def plain(body: String): Encoded = Encoded(body.getBytes(UTF_8), Nil)
+  private def detail(msg: String): Encoded = plain(Json.obj("detail" -> Json.str(msg)))
 
   private def queryParams(ex: HttpExchange): Map[String, String] =
     Option(ex.getRequestURI.getRawQuery).getOrElse("").split("&").toSeq
@@ -170,10 +214,6 @@ final class HttpApi(
     case other => throw ParamError(s"invalid boolean for '$name': '$other'")
   }
 
-  private def iso(i: Instant): String =
-    java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss")
-      .withZone(ZoneOffset.UTC).format(i)
-
   /** The reference serves lowercase hydrophone slugs. */
   private def lower(h: String): String = h.toLowerCase
 
@@ -206,53 +246,43 @@ final class HttpApi(
       case p => p
     }
     var status = 200
-    var extraHeaders: Seq[(String, String)] = Nil
     var contentType = "application/json"
-    val body: String =
+    val Encoded(bytes, extraHeaders) =
       try {
         if (ex.getRequestMethod == "OPTIONS") {
           // CORS preflight: answer permissively like the reference's
           // CORSMiddleware (allow_methods=["*"], allow_headers=["*"])
           ex.getResponseHeaders.set("Access-Control-Allow-Methods", "*")
           ex.getResponseHeaders.set("Access-Control-Allow-Headers", "*")
-          "{}"
+          plain("{}")
         } else if (ex.getRequestMethod != "GET")
-          { status = 405; Json.obj("detail" -> Json.str("method not allowed")) }
+          { status = 405; detail("method not allowed") }
         else {
           val p = queryParams(ex)
           path match {
-            case "/health" => Json.obj("status" -> Json.str("ok"))
-            case "/openapi.json" => OpenApi.json
-            case "/docs" => contentType = "text/html; charset=utf-8"; OpenApi.docsHtml
+            case "/health" => plain(Json.obj("status" -> Json.str("ok")))
+            case "/openapi.json" => plain(OpenApi.json)
+            case "/docs" => contentType = "text/html; charset=utf-8"; plain(OpenApi.docsHtml)
             case "/options" => options(p)
-            case "/timeseries/broadband" =>
-              val (b, h) = broadbandTimeseries(p); extraHeaders = h; b
-            case "/timeseries/psd" =>
-              val (b, h) = psdTimeseries(p); extraHeaders = h; b
-            case "/aggregations/broadband" =>
-              val (b, h) = broadbandAggregation(p); extraHeaders = h; b
-            case "/aggregations/psd" =>
-              val (b, h) = psdHeatmap(p); extraHeaders = h; b
+            case "/timeseries/broadband" => broadbandTimeseries(p)
+            case "/timeseries/psd" => psdTimeseries(p)
+            case "/aggregations/broadband" => broadbandAggregation(p)
+            case "/aggregations/psd" => psdHeatmap(p)
             case "/aggregations/daily-summary" => dailySummary(p)
             case "/aggregations/daily-broadband-summary" => dailyBroadband(p)
-            case _ =>
-              status = 404; Json.obj("detail" -> Json.str("Not Found"))
+            case _ => status = 404; detail("Not Found")
           }
         }
       } catch {
-        case e: ParamError =>
-          status = 422; Json.obj("detail" -> Json.str(e.getMessage))
-        case e: Errors.ValidationError =>
-          status = 400; Json.obj("detail" -> Json.str(e.getMessage))
-        case e: Errors.OptionsDependencyError =>
-          status = 503; Json.obj("detail" -> Json.str(e.getMessage))
+        case e: ParamError => status = 422; detail(e.getMessage)
+        case e: Errors.ValidationError => status = 400; detail(e.getMessage)
+        case e: Errors.OptionsDependencyError => status = 503; detail(e.getMessage)
         case e: Errors.EngineError => // lookup / aggregation / integrity
-          status = 502; Json.obj("detail" -> Json.str(e.getMessage))
+          status = 502; detail(e.getMessage)
         case e: Exception =>
-          status = 500; Json.obj("detail" -> Json.str(
-            s"internal error: ${Option(e.getMessage).getOrElse(e.getClass.getName)}"))
+          status = 500; detail(
+            s"internal error: ${Option(e.getMessage).getOrElse(e.getClass.getName)}")
       }
-    val bytes = body.getBytes(UTF_8)
     val hs = ex.getResponseHeaders
     hs.set("Content-Type", contentType)
     hs.set("Access-Control-Allow-Origin", "*") // ref CORS middleware
@@ -321,8 +351,11 @@ final class HttpApi(
   }
 
   // ---- endpoint bodies ---------------------------------------------------
+  // Each endpoint parses, calls the service, and hands the response object
+  // to `encodeOnce` with whatever request text its body echoes beyond the
+  // object's own fields.
 
-  private def options(p: Map[String, String]): String = {
+  private def options(p: Map[String, String]): Encoded = {
     val r = service.getOptions(p.get("hydrophone").filter(_.nonEmpty))
     def timeRes(o: Responses.CoverageOption) = Json.obj(
       "delta_t" -> Json.num(o.deltaT.toLong),
@@ -335,41 +368,45 @@ final class HttpApi(
       "first_start" -> Json.orNull(o.firstStart),
       "last_end" -> Json.orNull(o.lastEnd),
       "file_count" -> Json.num(o.fileCount))
-    Json.obj("hydrophones" -> Json.arr(r.hydrophones.map { h =>
-      Json.obj(
-        "hydrophone" -> Json.str(lower(h.hydrophone)),
-        "broadband" -> Json.arr(
-          h.options.filter(_.freqType == "broadband").map(timeRes)),
-        "octave_bands" -> Json.arr(
-          h.options.filter(_.freqType == "octave_bands").map(freqBand)),
-        "delta_hz" -> Json.arr(
-          h.options.filter(_.freqType == "delta_hz").map(freqBand)))
-    }))
+    encodeOnce(r) {
+      (Json.obj("hydrophones" -> Json.arr(r.hydrophones.map { h =>
+        Json.obj(
+          "hydrophone" -> Json.str(lower(h.hydrophone)),
+          "broadband" -> Json.arr(
+            h.options.filter(_.freqType == "broadband").map(timeRes)),
+          "octave_bands" -> Json.arr(
+            h.options.filter(_.freqType == "octave_bands").map(freqBand)),
+          "delta_hz" -> Json.arr(
+            h.options.filter(_.freqType == "delta_hz").map(freqBand)))
+      })), Nil)
+    }
   }
 
-  private def broadbandTimeseries(p: Map[String, String]): (String, Seq[(String, String)]) = {
+  private def broadbandTimeseries(p: Map[String, String]): Encoded = {
     val start = parseInstant("start", required(p, "start"))
     val end = parseInstant("end", required(p, "end"))
     val deltaT = p.get("delta_t").map(parseInt("delta_t", _)).getOrElse(1)
     val validate = p.get("validate").map(parseBool("validate", _)).getOrElse(true)
     val r = service.getBroadbandTimeseries(required(p, "hydrophone"), start, end,
       deltaT, validate)
-    val body = Json.obj(
-      "hydrophone" -> Json.str(lower(r.hydrophone)),
-      "delta_t" -> Json.num(r.deltaT.toLong),
-      "start" -> Json.str(r.startTime),
-      "end" -> Json.str(r.endTime),
-      "expected_point_count" -> Json.num(r.expectedPointCount),
-      "point_count" -> Json.num(r.pointCount),
-      "points" -> Json.arr(r.points.map(pt => Json.obj(
-        "timestamp" -> Json.str(pt.timestamp),
-        "value" -> Json.num(pt.value)))))
-    (body, Seq(
-      "X-Point-Count" -> r.pointCount.toString,
-      "X-Expected-Point-Count" -> r.expectedPointCount.toString))
+    encodeOnce(r) {
+      val body = Json.obj(
+        "hydrophone" -> Json.str(lower(r.hydrophone)),
+        "delta_t" -> Json.num(r.deltaT.toLong),
+        "start" -> Json.str(r.startTime),
+        "end" -> Json.str(r.endTime),
+        "expected_point_count" -> Json.num(r.expectedPointCount),
+        "point_count" -> Json.num(r.pointCount),
+        "points" -> Json.arr(r.points.map(pt => Json.obj(
+          "timestamp" -> Json.str(pt.timestamp),
+          "value" -> Json.num(pt.value)))))
+      (body, Seq(
+        "X-Point-Count" -> r.pointCount.toString,
+        "X-Expected-Point-Count" -> r.expectedPointCount.toString))
+    }
   }
 
-  private def psdTimeseries(p: Map[String, String]): (String, Seq[(String, String)]) = {
+  private def psdTimeseries(p: Map[String, String]): Encoded = {
     val start = parseInstant("start", required(p, "start"))
     val end = parseInstant("end", required(p, "end"))
     val deltaT = p.get("delta_t").map(parseInt("delta_t", _)).getOrElse(1)
@@ -377,49 +414,53 @@ final class HttpApi(
     val r = service.getPsdTimeseries(required(p, "hydrophone"), start, end,
       deltaT, required(p, "delta_f"), validate)
     val expected = graft.ops.TimeseriesOps.expectedPointCount(start, end, deltaT.toLong)
-    val body = Json.obj(
-      "hydrophone" -> Json.str(lower(r.hydrophone)),
-      "delta_t" -> Json.num(r.deltaT.toLong),
-      "delta_f" -> Json.str(r.deltaF),
-      "start" -> Json.str(r.startTime),
-      "end" -> Json.str(r.endTime),
-      "expected_point_count" -> Json.num(expected),
-      "point_count" -> Json.num(r.times.length.toLong),
-      "columns" -> Json.arr(r.frequencies.map(f => Json.str(Json.pyFloat(f)))),
-      "points" -> Json.arr(r.times.zip(r.values).map { case (t, row) =>
-        Json.obj("timestamp" -> Json.str(t),
-          "values" -> Json.arr(row.map(Json.num)))
-      }))
-    (body, Seq(
-      "X-Point-Count" -> r.times.length.toString,
-      "X-Expected-Point-Count" -> expected.toString,
-      "X-Frequency-Count" -> r.frequencies.length.toString))
+    encodeOnce(r, expected) {
+      val body = Json.obj(
+        "hydrophone" -> Json.str(lower(r.hydrophone)),
+        "delta_t" -> Json.num(r.deltaT.toLong),
+        "delta_f" -> Json.str(r.deltaF),
+        "start" -> Json.str(r.startTime),
+        "end" -> Json.str(r.endTime),
+        "expected_point_count" -> Json.num(expected),
+        "point_count" -> Json.num(r.times.length.toLong),
+        "columns" -> Json.arr(r.frequencies.map(f => Json.str(Json.pyFloat(f)))),
+        "points" -> Json.arr(r.times.zip(r.values).map { case (t, row) =>
+          Json.obj("timestamp" -> Json.str(t),
+            "values" -> Json.arr(row.map(Json.num)))
+        }))
+      (body, Seq(
+        "X-Point-Count" -> r.times.length.toString,
+        "X-Expected-Point-Count" -> expected.toString,
+        "X-Frequency-Count" -> r.frequencies.length.toString))
+    }
   }
 
-  private def broadbandAggregation(p: Map[String, String]): (String, Seq[(String, String)]) = {
+  private def broadbandAggregation(p: Map[String, String]): Encoded = {
     val start = parseInstant("start", required(p, "start"))
     val end = parseInstant("end", required(p, "end"))
     val deltaT = p.get("delta_t").map(parseInt("delta_t", _)).getOrElse(1)
     val validate = p.get("validate").map(parseBool("validate", _)).getOrElse(true)
     val r = service.getBroadbandAggregation(required(p, "hydrophone"), start, end,
       required(p, "interval"), deltaT, validate)
-    val body = Json.obj(
-      "hydrophone" -> Json.str(lower(r.hydrophone)),
-      "start" -> Json.str(iso(start)),
-      "end" -> Json.str(iso(end)),
-      "interval" -> Json.str(r.interval),
-      "summary_purpose" -> Json.str(
-        "This endpoint returns a chronologically aggregated broadband series for browser " +
-        "plotting. It starts from true broadband timeseries data and groups it into the " +
-        "requested time bucket."),
-      "point_count" -> Json.num(r.pointCount),
-      "points" -> Json.arr(r.points.map(pt => Json.obj(
-        "timestamp" -> Json.str(pt.timestamp),
-        "value" -> Json.num(pt.value)))))
-    (body, Seq("X-Point-Count" -> r.pointCount.toString))
+    encodeOnce(r, (start, end)) {
+      val body = Json.obj(
+        "hydrophone" -> Json.str(lower(r.hydrophone)),
+        "start" -> Json.str(AmbientService.isoT(start)),
+        "end" -> Json.str(AmbientService.isoT(end)),
+        "interval" -> Json.str(r.interval),
+        "summary_purpose" -> Json.str(
+          "This endpoint returns a chronologically aggregated broadband series for browser " +
+          "plotting. It starts from true broadband timeseries data and groups it into the " +
+          "requested time bucket."),
+        "point_count" -> Json.num(r.pointCount),
+        "points" -> Json.arr(r.points.map(pt => Json.obj(
+          "timestamp" -> Json.str(pt.timestamp),
+          "value" -> Json.num(pt.value)))))
+      (body, Seq("X-Point-Count" -> r.pointCount.toString))
+    }
   }
 
-  private def psdHeatmap(p: Map[String, String]): (String, Seq[(String, String)]) = {
+  private def psdHeatmap(p: Map[String, String]): Encoded = {
     val start = parseInstant("start", required(p, "start"))
     val end = parseInstant("end", required(p, "end"))
     val deltaT = p.get("delta_t").map(parseInt("delta_t", _)).getOrElse(1)
@@ -427,34 +468,38 @@ final class HttpApi(
     val validate = p.get("validate").map(parseBool("validate", _)).getOrElse(true)
     val r = service.getPsdAggregation(required(p, "hydrophone"), start, end,
       required(p, "interval"), deltaF, deltaT, validate)
-    val body = Json.obj(
-      "hydrophone" -> Json.str(lower(r.hydrophone)),
-      "start" -> Json.str(iso(start)),
-      "end" -> Json.str(iso(end)),
-      "delta_t" -> Json.num(deltaT.toLong),
-      "delta_f" -> Json.str(deltaF.trim.toLowerCase),
-      "interval" -> Json.str(r.interval),
-      "summary_purpose" -> Json.str(
-        "This endpoint returns a time-frequency matrix for browser plotting. " +
-        "Each row is one aggregated time bucket, each column is one archived PSD band, " +
-        "and each cell is the mean PSD value for that bucket."),
-      "time_count" -> Json.num(r.times.length.toLong),
-      "frequency_count" -> Json.num(r.frequencies.length.toLong),
-      "times" -> Json.arr(r.times.map(Json.str)),
-      "frequencies" -> Json.arr(r.frequencies.map(f => Json.str(Json.pyFloat(f)))),
-      "values" -> Json.arr(r.values.map(row => Json.arr(row.map(Json.num)))))
-    (body, Seq(
-      "X-Time-Count" -> r.times.length.toString,
-      "X-Frequency-Count" -> r.frequencies.length.toString))
+    encodeOnce(r, (start, end, deltaT, deltaF)) {
+      val body = Json.obj(
+        "hydrophone" -> Json.str(lower(r.hydrophone)),
+        "start" -> Json.str(AmbientService.isoT(start)),
+        "end" -> Json.str(AmbientService.isoT(end)),
+        "delta_t" -> Json.num(deltaT.toLong),
+        "delta_f" -> Json.str(deltaF.trim.toLowerCase),
+        "interval" -> Json.str(r.interval),
+        "summary_purpose" -> Json.str(
+          "This endpoint returns a time-frequency matrix for browser plotting. " +
+          "Each row is one aggregated time bucket, each column is one archived PSD band, " +
+          "and each cell is the mean PSD value for that bucket."),
+        "time_count" -> Json.num(r.times.length.toLong),
+        "frequency_count" -> Json.num(r.frequencies.length.toLong),
+        "times" -> Json.arr(r.times.map(Json.str)),
+        "frequencies" -> Json.arr(r.frequencies.map(f => Json.str(Json.pyFloat(f)))),
+        "values" -> Json.arr(r.values.map(row => Json.arr(row.map(Json.num)))))
+      (body, Seq(
+        "X-Time-Count" -> r.times.length.toString,
+        "X-Frequency-Count" -> r.frequencies.length.toString))
+    }
   }
 
-  private def dailySummary(p: Map[String, String]): String = {
+  private def dailySummary(p: Map[String, String]): Encoded = {
     val numDays = parseInt("num_days", required(p, "num_days"))
     if (numDays <= 0) throw Errors.ValidationError("num_days must be greater than 0")
     val bandLow = p.get("band_low").map(parseInt("band_low", _)).getOrElse(63)
     val bandHigh = p.get("band_high").map(parseInt("band_high", _)).getOrElse(8000)
-    val r = service.getDailySummary(required(p, "hydrophone"),
-      parseDate("start_date", required(p, "start_date")), numDays,
+    val hydrophone = required(p, "hydrophone")
+    val startDate = required(p, "start_date")
+    val r = service.getDailySummary(hydrophone,
+      parseDate("start_date", startDate), numDays,
       bandLow.toDouble, bandHigh.toDouble,
       p.getOrElse("interval", "auto"))
     // ref _series_to_points drops non-finite values per series
@@ -465,43 +510,49 @@ final class HttpApi(
           Json.obj("time_of_day" -> Json.str(l), "value" -> Json.num(v)) })
     def seriesLen(values: Seq[Double]): Long =
       values.count(java.lang.Double.isFinite).toLong
-    Json.obj(
-      "hydrophone" -> Json.str(lower(r.hydrophone)),
-      "start_date" -> Json.str(required(p, "start_date")),
-      "num_days" -> Json.num(numDays.toLong),
-      "band_low" -> Json.num(bandLow.toLong),
-      "band_high" -> Json.num(bandHigh.toLong),
-      "interval" -> Json.str(r.interval),
-      "description" -> Json.str(
-        "This summary shows the typical daily sound pattern for a hydrophone within a " +
-        "specified frequency range. The four series mean, min, max, and count are " +
-        "aggregated by time-of-day bucket."),
-      "mean_length" -> Json.num(seriesLen(r.series.mean)),
-      "min_length" -> Json.num(seriesLen(r.series.min)),
-      "max_length" -> Json.num(seriesLen(r.series.max)),
-      "count_length" -> Json.num(seriesLen(r.series.count)),
-      "mean" -> series(r.series.mean),
-      "min" -> series(r.series.min),
-      "max" -> series(r.series.max),
-      "count" -> series(r.series.count))
+    encodeOnce(r, (startDate, numDays, bandLow, bandHigh)) {
+      (Json.obj(
+        "hydrophone" -> Json.str(lower(r.hydrophone)),
+        "start_date" -> Json.str(startDate),
+        "num_days" -> Json.num(numDays.toLong),
+        "band_low" -> Json.num(bandLow.toLong),
+        "band_high" -> Json.num(bandHigh.toLong),
+        "interval" -> Json.str(r.interval),
+        "description" -> Json.str(
+          "This summary shows the typical daily sound pattern for a hydrophone within a " +
+          "specified frequency range. The four series mean, min, max, and count are " +
+          "aggregated by time-of-day bucket."),
+        "mean_length" -> Json.num(seriesLen(r.series.mean)),
+        "min_length" -> Json.num(seriesLen(r.series.min)),
+        "max_length" -> Json.num(seriesLen(r.series.max)),
+        "count_length" -> Json.num(seriesLen(r.series.count)),
+        "mean" -> series(r.series.mean),
+        "min" -> series(r.series.min),
+        "max" -> series(r.series.max),
+        "count" -> series(r.series.count)), Nil)
+    }
   }
 
-  private def dailyBroadband(p: Map[String, String]): String = {
+  private def dailyBroadband(p: Map[String, String]): Encoded = {
     val numDays = parseInt("num_days", required(p, "num_days"))
     if (numDays <= 0) throw Errors.ValidationError("num_days must be greater than 0")
-    val r = service.getDailyBroadband(required(p, "hydrophone"),
-      parseDate("start_date", required(p, "start_date")), numDays)
-    val pts = r.days.zip(r.values).filter { case (_, v) => java.lang.Double.isFinite(v) }
-    Json.obj(
-      "hydrophone" -> Json.str(lower(r.hydrophone)),
-      "start_date" -> Json.str(required(p, "start_date")),
-      "num_days" -> Json.num(numDays.toLong),
-      "summary_purpose" -> Json.str(
-        "This endpoint shows one true broadband average per day across the " +
-        "requested date window. Unlike the PSD-band daily summary, it uses the " +
-        "upstream broadband product rather than averaging selected PSD bands."),
-      "point_count" -> Json.num(pts.length.toLong),
-      "points" -> Json.arr(pts.map { case (d, v) =>
-        Json.obj("date" -> Json.str(d), "value" -> Json.num(v)) }))
+    val hydrophone = required(p, "hydrophone")
+    val startDate = required(p, "start_date")
+    val r = service.getDailyBroadband(hydrophone,
+      parseDate("start_date", startDate), numDays)
+    encodeOnce(r, (startDate, numDays)) {
+      val pts = r.days.zip(r.values).filter { case (_, v) => java.lang.Double.isFinite(v) }
+      (Json.obj(
+        "hydrophone" -> Json.str(lower(r.hydrophone)),
+        "start_date" -> Json.str(startDate),
+        "num_days" -> Json.num(numDays.toLong),
+        "summary_purpose" -> Json.str(
+          "This endpoint shows one true broadband average per day across the " +
+          "requested date window. Unlike the PSD-band daily summary, it uses the " +
+          "upstream broadband product rather than averaging selected PSD bands."),
+        "point_count" -> Json.num(pts.length.toLong),
+        "points" -> Json.arr(pts.map { case (d, v) =>
+          Json.obj("date" -> Json.str(d), "value" -> Json.num(v)) })), Nil)
+    }
   }
 }

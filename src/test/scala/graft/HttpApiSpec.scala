@@ -41,8 +41,8 @@ class HttpApiSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val base = s"http://127.0.0.1:${server.getAddress.getPort}"
   private lazy val client = HttpClient.newHttpClient()
 
-  private def get(pathAndQuery: String): HttpResponse[String] =
-    client.send(HttpRequest.newBuilder(URI.create(s"$base$pathAndQuery")).GET().build(),
+  private def get(pathAndQuery: String, at: String = base): HttpResponse[String] =
+    client.send(HttpRequest.newBuilder(URI.create(s"$at$pathAndQuery")).GET().build(),
       HttpResponse.BodyHandlers.ofString())
 
   test("/health returns ok") {
@@ -372,5 +372,140 @@ class HttpApiSpec extends AnyFunSuite with BeforeAndAfterAll {
       "&start=2024-01-01T00:00:00&end=2024-01-02T00:00:00&interval=10s&delta_f=3oct")
     assert(capped.statusCode() == 400)
     assert(capped.body().contains("cap"))
+  }
+
+  // ---- encode memo and handler pool --------------------------------------
+
+  private def getBytes(pathAndQuery: String): HttpResponse[Array[Byte]] =
+    client.send(HttpRequest.newBuilder(URI.create(s"$base$pathAndQuery")).GET().build(),
+      HttpResponse.BodyHandlers.ofByteArray())
+
+  private def xHeaders(r: HttpResponse[_]): Map[String, java.util.List[String]] =
+    r.headers().map().asScala.toMap.filter(_._1.toLowerCase.startsWith("x-"))
+
+  /** A service with no archive behind it: only the endpoints a test
+    * overrides can answer. */
+  private class StubService extends AmbientService(
+    throw new IllegalStateException("no broadband"),
+    throw new IllegalStateException("no psd"), Nil)
+
+  /** Serve `svc` on its own ephemeral port; the body gets its base URL. */
+  private def withStub(svc: AmbientService, threads: Int = 8)(body: String => Unit): Unit = {
+    val stubApi = new HttpApi(svc, java.nio.file.Files.createTempDirectory("graft-http-stub"))
+    val srv = stubApi.start(0, threads)
+    try body(s"http://127.0.0.1:${srv.getAddress.getPort}")
+    finally { srv.stop(0); stubApi.close() }
+  }
+
+  test("a repeated request gets byte-identical bytes, the same X-* headers " +
+       "and one timing-log line each") {
+    val q = "hydrophone=orcasound_lab&start=2024-01-01T00:30:00" +
+      "&end=2024-01-01T01:30:00&interval=15m&delta_f=3oct"
+    val first = getBytes(s"/aggregations/psd?$q")
+    val second = getBytes(s"/aggregations/psd?$q")
+    assert(first.statusCode() == 200 && second.statusCode() == 200)
+    assert(java.util.Arrays.equals(first.body(), second.body()))
+    assert(xHeaders(first).keySet.map(_.toLowerCase) ==
+      Set("x-time-count", "x-frequency-count"))
+    assert(xHeaders(second) == xHeaders(first))
+    val lines = java.nio.file.Files.readAllLines(logDir.resolve("api-timing.log"))
+      .asScala.filter(_.contains(s"GET /aggregations/psd query=$q -> 200 "))
+    assert(lines.size == 2, lines.mkString("\n"))
+    assert(lines.map(l => "size=(\\d+)".r.findFirstMatchIn(l).get.group(1)).toSet ==
+      Set(first.body().length.toString))
+  }
+
+  test("the encode memo is keyed by response identity, not by URL") {
+    // a fresh object per call for the same URL, as a swapped-in service
+    // gives after new data lands: every answer reflects its own object
+    val calls = new java.util.concurrent.atomic.AtomicInteger()
+    val svc = new StubService {
+      override def getDailyBroadband(hydrophone: String, startDate: java.time.LocalDate,
+          numDays: Int, deltaT: Int) = graft.serve.Responses.DailyBroadbandResponse(
+        "ORCASOUND_LAB", Seq(startDate.toString), Seq(calls.incrementAndGet().toDouble))
+    }
+    withStub(svc) { at =>
+      val path = "/aggregations/daily-broadband-summary?hydrophone=orcasound_lab" +
+        "&start_date=2024-01-01&num_days=1"
+      val bodies = (1 to 3).map(_ => get(path, at).body())
+      bodies.zipWithIndex.foreach { case (b, i) =>
+        assert(b.contains(s""""points":[{"date":"2024-01-01","value":${i + 1}.0}]"""), b)
+      }
+    }
+  }
+
+  test("one response object is encoded once per echoed request text") {
+    // the service hands back ONE object whatever the request, as an LRU
+    // hit does; its values column counts how often the edge reads it
+    val reads = new java.util.concurrent.atomic.AtomicInteger()
+    val values = new scala.collection.immutable.AbstractSeq[Double] {
+      def apply(i: Int): Double = 1.0
+      def length: Int = 1
+      def iterator: Iterator[Double] = { reads.incrementAndGet(); Iterator(1.0) }
+    }
+    val shared = graft.serve.Responses.DailyBroadbandResponse(
+      "ORCASOUND_LAB", Seq("2024-01-01"), values)
+    val svc = new StubService {
+      override def getDailyBroadband(hydrophone: String, startDate: java.time.LocalDate,
+          numDays: Int, deltaT: Int) = shared
+    }
+    withStub(svc) { at =>
+      def day(d: String) = get("/aggregations/daily-broadband-summary" +
+        s"?hydrophone=orcasound_lab&start_date=$d&num_days=1", at).body()
+      val first = day("2024-01-01")
+      assert(first.contains(""""value":1.0"""), first)
+      val encodeReads = reads.get
+      assert(encodeReads > 0)
+      // same object, same echo: the stored bytes, not a re-encoding
+      assert(day("2024-01-01") == first)
+      assert(reads.get == encodeReads)
+      // same object, another start_date: encoded again, echoing the request
+      val other = day("2024-01-02")
+      assert(other.contains(""""start_date":"2024-01-02""""), other)
+      assert(reads.get > encodeReads)
+    }
+  }
+
+  test("a repeated error answers with its own status and detail each time") {
+    val cases = Seq(
+      // service-side validation (unknown combination)
+      "/timeseries/psd?hydrophone=orcasound_lab&start=2024-01-01T00:00:00" +
+        "&end=2024-01-01T01:00:00&delta_t=10&delta_f=500hz" -> 400,
+      // edge-side validation
+      "/aggregations/daily-summary?hydrophone=orcasound_lab" +
+        "&start_date=2024-01-01&num_days=0" -> 400,
+      "/timeseries/broadband?hydrophone=orcasound_lab" +
+        "&start=not-a-date&end=2024-01-01T01:00:00" -> 422)
+    cases.foreach { case (path, code) =>
+      val rs = (1 to 2).map(_ => get(path))
+      assert(rs.map(_.statusCode()) == Seq(code, code), path)
+      assert(rs.forall(_.body().startsWith("""{"detail":""")), path)
+      assert(rs.map(_.body()).distinct.size == 1, path)
+    }
+  }
+
+  test("start(port, threads) serves `threads` requests at once") {
+    import scala.jdk.FutureConverters._
+    import scala.concurrent.Await
+    import scala.concurrent.duration._
+    // each request holds its handler thread until all n have arrived, so
+    // a pool smaller than n leaves the rest queued and the holders time out
+    val n = 12
+    val arrived = new java.util.concurrent.CountDownLatch(n)
+    val svc = new StubService {
+      override def getOptions(hydrophone: Option[String]) = {
+        arrived.countDown()
+        if (!arrived.await(10, java.util.concurrent.TimeUnit.SECONDS))
+          throw new IllegalStateException(s"${arrived.getCount} of $n requests never arrived")
+        graft.serve.Responses.OptionsResponse(Nil)
+      }
+    }
+    withStub(svc, threads = n) { at =>
+      val req = HttpRequest.newBuilder(URI.create(s"$at/options")).GET().build()
+      val codes = (1 to n).map(_ =>
+        client.sendAsync(req, HttpResponse.BodyHandlers.ofString()).asScala)
+        .map(f => Await.result(f, 60.seconds).statusCode())
+      assert(codes == Seq.fill(n)(200), codes)
+    }
   }
 }

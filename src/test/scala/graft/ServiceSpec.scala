@@ -85,6 +85,13 @@ class ServiceSpec extends AnyFunSuite {
     assert(opts.forall(_.firstStart.contains("2024-01-01T00:00:00")))
   }
 
+  test("options are memoized on the normalized hydrophone (ref lru_cache(16))") {
+    assert(service.getOptions(None) eq service.getOptions(None))
+    val named = service.getOptions(Some("orcasound-lab"))
+    assert(named eq service.getOptions(Some(" ORCASOUND_LAB ")))
+    assert(named.hydrophones.map(_.hydrophone) == Seq("ORCASOUND_LAB"))
+  }
+
   test("broadband timeseries: window slice with envelope and counts") {
     val r = service.getBroadbandTimeseries("orcasound lab",
       inst("2024-01-01T00:00:00Z"), inst("2024-01-01T01:00:00Z"), 1)
