@@ -506,18 +506,11 @@ object DedupOps {
     }
     edges.unpersist(false)
     p.unpersist(false)
-    lastDistributedRounds = i
     if (!converged)
       throw graft.planner.Errors.AggregationError(
         s"connected components did not converge in $maxIter rounds")
     labels
   }
-
-  /** Diagnostic only: rounds the LAST distributed [[duplicateClusters]]
-    * run took to converge (−1 until the distributed branch has run in this
-    * JVM). Read by `tools/Profile cc_dist` to pin the log-diameter bound
-    * with evidence; never consulted by query code. */
-  @volatile var lastDistributedRounds: Int = -1
 
   // ---- SimHash ----------------------------------------------------------
 

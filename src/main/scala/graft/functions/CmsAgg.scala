@@ -1,13 +1,10 @@
 package graft.functions
 
-import java.nio.ByteBuffer
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types._
 
 /** Count-Min sketch (Cormode & Muthukrishnan 2005) as one imperative
   * aggregate — the frequency sketch next to the engine's Bloom
@@ -37,18 +34,11 @@ case class CmsSketchAgg(
     width: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]] {
+  extends LongArrayAgg(child, depth * width, 0L, LongArrayAgg.Sum) {
 
   require(depth > 0 && width > 0, "cms_sketch: depth and width must be > 0")
   require(depth.toLong * width <= Int.MaxValue,
     s"cms_sketch: depth*width must index an Array (got ${depth}x$width)")
-
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def createAggregationBuffer(): Array[Long] =
-    new Array[Long](depth * width)
 
   override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
     val v = child.eval(input)
@@ -68,25 +58,6 @@ case class CmsSketchAgg(
       }
     }
     buf
-  }
-
-  override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
-    var i = 0
-    while (i < a.length) { a(i) += b(i); i += 1 }
-    a
-  }
-
-  override def eval(buf: Array[Long]): Any = new GenericArrayData(buf)
-
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(8 * buf.length)
-    buf.foreach(bb.putLong)
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val bb = ByteBuffer.wrap(bytes)
-    Array.fill(depth * width)(bb.getLong())
   }
 
   override def withNewMutableAggBufferOffset(newOffset: Int): CmsSketchAgg =

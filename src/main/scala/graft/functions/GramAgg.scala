@@ -1,10 +1,8 @@
 package graft.functions
 
-import java.nio.ByteBuffer
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
@@ -45,20 +43,15 @@ case class GramMicroAgg(
     dims: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]] {
+  extends LongArrayAgg(vec, dims * (dims + 1) / 2, 0L, LongArrayAgg.Sum) {
 
   require(dims > 0, s"gram_micro needs dims > 0, got $dims")
-  private val tri = dims * (dims + 1) / 2
 
-  override def children: Seq[Expression] = Seq(vec)
-  override def nullable: Boolean = false
   override def dataType: DataType = ArrayType(
     StructType(Seq(
       StructField("i", IntegerType, nullable = false),
       StructField("j", IntegerType, nullable = false),
       StructField("s", LongType, nullable = false))), containsNull = false)
-
-  override def createAggregationBuffer(): Array[Long] = new Array[Long](tri)
 
   private def isFloat: Boolean = vec.dataType match {
     case ArrayType(FloatType, _) => true
@@ -92,14 +85,8 @@ case class GramMicroAgg(
     buf
   }
 
-  override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
-    var i = 0
-    while (i < tri) { a(i) += b(i); i += 1 }
-    a
-  }
-
   override def eval(buf: Array[Long]): Any = {
-    val rows = new Array[Any](tri)
+    val rows = new Array[Any](buf.length)
     var idx = 0; var i = 0
     while (i < dims) {
       var j = i
@@ -110,21 +97,6 @@ case class GramMicroAgg(
       i += 1
     }
     new GenericArrayData(rows)
-  }
-
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(8 * tri)
-    var i = 0
-    while (i < tri) { bb.putLong(buf(i)); i += 1 }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val bb = ByteBuffer.wrap(bytes)
-    val buf = new Array[Long](tri)
-    var i = 0
-    while (i < tri) { buf(i) = bb.getLong(); i += 1 }
-    buf
   }
 
   override def withNewMutableAggBufferOffset(newOffset: Int): GramMicroAgg =

@@ -3,11 +3,8 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types._
 
 /** Fixed-range histogram sketch: the MERGEABLE quantile summary next to
   * the engine's CMS (frequency), HLL (cardinality), and Bloom
@@ -49,7 +46,7 @@ case class HistogramAgg(
     bins: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]] {
+  extends LongArrayAgg(child, bins, 0L, LongArrayAgg.Sum) {
 
   require(bins >= 2 && bins <= (1 << 16),
     s"histogram: bins must be in [2, 65536], got $bins")
@@ -57,12 +54,6 @@ case class HistogramAgg(
     s"histogram: need finite lo < hi, got [$lo, $hi)")
 
   private val w = (hi - lo) / bins
-
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def createAggregationBuffer(): Array[Long] = new Array[Long](bins)
 
   override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
     val v = child.eval(input)
@@ -75,25 +66,6 @@ case class HistogramAgg(
       }
     }
     buf
-  }
-
-  override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
-    var i = 0
-    while (i < bins) { a(i) += b(i); i += 1 }
-    a
-  }
-
-  override def eval(buf: Array[Long]): Any = new GenericArrayData(buf)
-
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(8 * bins)
-    bb.asLongBuffer().put(buf)
-    bb.array()
-  }
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val out = new Array[Long](bins)
-    java.nio.ByteBuffer.wrap(bytes).asLongBuffer().get(out)
-    out
   }
 
   override def withNewMutableAggBufferOffset(newOffset: Int): HistogramAgg =

@@ -1,13 +1,9 @@
 package graft.functions
 
-import java.nio.ByteBuffer
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types._
 
 /** MinHash signature as a single imperative aggregate.
   *
@@ -28,20 +24,14 @@ case class MinHashSigAgg(
     seed: Long,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]] {
+  extends LongArrayAgg(child, k, MinHashSig.Prime, LongArrayAgg.Min) {
 
-  private val Prime = 2147483647L // 2^31 - 1
+  import MinHashSig.Prime
   @transient private lazy val coeffs: Array[(Long, Long)] = {
     val rng = new scala.util.Random(seed)
     Array.fill(k)((rng.nextInt(Int.MaxValue - 1).toLong + 1,
                    rng.nextInt(Int.MaxValue).toLong))
   }
-
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def createAggregationBuffer(): Array[Long] = Array.fill(k)(Prime)
 
   override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
     val v = child.eval(input)
@@ -56,25 +46,6 @@ case class MinHashSigAgg(
       }
     }
     buf
-  }
-
-  override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
-    var i = 0
-    while (i < k) { if (b(i) < a(i)) a(i) = b(i); i += 1 }
-    a
-  }
-
-  override def eval(buf: Array[Long]): Any = new GenericArrayData(buf)
-
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(8 * k)
-    buf.foreach(bb.putLong)
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val bb = ByteBuffer.wrap(bytes)
-    Array.fill(k)(bb.getLong())
   }
 
   override def withNewMutableAggBufferOffset(newOffset: Int): MinHashSigAgg =

@@ -388,20 +388,13 @@ object JoinQueries {
         // job is 8 bucket tasks on a 32-core context, so serial ingest
         // left 3/4 of the machine idle. Catalog ops on two DIFFERENT
         // table names are safe concurrently.
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-        try {
-          Seq(
-            () => Tables.lineitem(s, dir)
-              .write.bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-              .option("path", s"$root/$liT").mode("overwrite").saveAsTable(liT),
-            () => Tables.orders(s, dir)
-              .write.bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-              .option("path", s"$root/$oT").mode("overwrite").saveAsTable(oT))
-            .map(w => pool.submit(new java.util.concurrent.Callable[Unit] {
-              override def call(): Unit = w()
-            }))
-            .foreach(_.get())
-        } finally pool.shutdown()
+        graft.util.Par.overlap(2)(Seq(
+          () => Tables.lineitem(s, dir)
+            .write.bucketBy(8, "l_orderkey").sortBy("l_orderkey")
+            .option("path", s"$root/$liT").mode("overwrite").saveAsTable(liT),
+          () => Tables.orders(s, dir)
+            .write.bucketBy(8, "o_orderkey").sortBy("o_orderkey")
+            .option("path", s"$root/$oT").mode("overwrite").saveAsTable(oT)))
       }
       val li = s.table(liT)
       val o = s.table(oT)

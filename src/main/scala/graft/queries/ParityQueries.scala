@@ -153,18 +153,12 @@ object ParityQueries {
       // timestamps went tz-aware). Holding the conf at MICROS for the
       // whole block makes the inner set/restores idempotent no matter
       // how the threads interleave.
-      graft.sources.SkipIndex.withMicrosTimestamps(bb) {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-        try {
-          (0 to 4).map { w =>
-            pool.submit(new java.util.concurrent.Callable[Unit] {
-              override def call(): Unit =
-                graft.sources.PartitionedArchive.appendBroadbandBatch(
-                  bb.filter(floor((dayofmonth(col("ts")) - 1) / lit(7))
-                    .cast("int") === w).coalesce(1), root, w.toLong, "s5")
-            })
-          }.foreach(_.get())
-        } finally pool.shutdown()
+      graft.sources.PartitionedArchive.withMicrosTimestamps(bb) {
+        graft.util.Par.overlap(3)((0 to 4).map { w => () =>
+          graft.sources.PartitionedArchive.appendBroadbandBatch(
+            bb.filter(floor((dayofmonth(col("ts")) - 1) / lit(7))
+              .cast("int") === w).coalesce(1), root, w.toLong, "s5")
+        })
       }
       val bands = bb.select("hydrophone").distinct().collect()
         .map(_.getString(0)).toSeq.sorted // catalog-scale: one row per band

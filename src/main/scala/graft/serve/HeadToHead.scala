@@ -222,17 +222,13 @@ object HeadToHead {
     * Returns (concurrency → cold stats, concurrency → warm stats). */
   def runConcurrent(spark: SparkSession, root: String, startDate: LocalDate,
       months: Int, rateSec: Int, clientCounts: Seq[Int] = Seq(8, 32),
-      perClassOverride: Int = 0,
-      /** false = the FIFO counterfactual: no pool assignment, every job
-        * queues in the default pool — measures the starvation the
-        * per-class pools exist to prevent. */
-      pools: Boolean = true): Seq[(Int, Seq[ConcStats], Seq[ConcStats])] = {
+      perClassOverride: Int = 0): Seq[(Int, Seq[ConcStats], Seq[ConcStats])] = {
     val service = AmbientService.fromArchive(spark, root)
     new DailySummaryStore(spark, root)
       .maintainTrailing(Hydrophone, "octave_bands", 3, rateSec, Seq(1, 7, 30))
     val api = new HttpApi(service,
       java.nio.file.Files.createTempDirectory("graft-conc"),
-      scheduler = if (pools) Some(spark) else None)
+      scheduler = Some(spark))
     val server = api.start(0, threads = 64)
     try {
       val base = s"http://127.0.0.1:${server.getAddress.getPort}"

@@ -138,7 +138,7 @@ object Deletes {
           path.getParent, s"_rewrite_${path.getName}")
         // same stats-bearing micros encoding as the original writer, so
         // the rewritten file stays zone-prunable
-        SkipIndex.withMicrosTimestamps(survivors) {
+        PartitionedArchive.withMicrosTimestamps(survivors) {
           survivors.coalesce(1).write.mode("overwrite").parquet(staging.toString)
         }
         val part = fs.listStatus(staging)

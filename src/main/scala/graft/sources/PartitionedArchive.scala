@@ -31,7 +31,7 @@ object PartitionedArchive {
     * window query scans the whole partition (caught by the 10×-archive
     * scan-metrics test in ArchiveLayoutSpec). The conf is scoped around
     * the synchronous write and restored after. */
-  private def withMicrosTimestamps[T](df: DataFrame)(f: => T): T = {
+  private[graft] def withMicrosTimestamps[T](df: DataFrame)(f: => T): T = {
     val key = "spark.sql.parquet.outputTimestampType"
     val conf = df.sparkSession.conf
     val prev = conf.getOption(key)

@@ -59,26 +59,13 @@ object SkipIndex {
     * treats stats-less files as must-read). */
   def writeTimeClustered(df: DataFrame, tsCol: String, dir: String,
                          numFiles: Int = 32): Unit =
-    withMicrosTimestamps(df) {
+    PartitionedArchive.withMicrosTimestamps(df) {
       df.withColumn("__d", to_date(col(tsCol)))
         .repartition(numFiles, col("__d"))
         .sortWithinPartitions(col(tsCol))
         .drop("__d")
         .write.mode("overwrite").parquet(dir)
     }
-
-  /** Scope a write to INT64 TIMESTAMP_MICROS (stats-bearing) parquet
-    * timestamps; restore the session conf after. */
-  private[graft] def withMicrosTimestamps[T](df: DataFrame)(f: => T): T = {
-    val key = "spark.sql.parquet.outputTimestampType"
-    val conf = df.sparkSession.conf
-    val prev = conf.getOption(key)
-    conf.set(key, "TIMESTAMP_MICROS")
-    try f finally prev match {
-      case Some(v) => conf.set(key, v)
-      case None => conf.unset(key)
-    }
-  }
 
   /** One index row per parquet file: `(file, n_rows, bytes, min_us,
     * max_us)` for an INT64-backed column `statCol` (TIMESTAMP_MICROS or
@@ -588,7 +575,7 @@ object SkipIndex {
       .withColumn("file", canon(col("_metadata.file_path")))
       .join(broadcast(binOf), Seq("file"))
       .drop("file")
-    withMicrosTimestamps(tagged) {
+    PartitionedArchive.withMicrosTimestamps(tagged) {
       tagged
         .repartition(nBins, col("bin"))
         .sortWithinPartitions(col(tsCol))

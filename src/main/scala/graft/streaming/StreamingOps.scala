@@ -189,7 +189,7 @@ object StreamingOps {
           col("event_type"), col("value"))
       Seq("copy_a", "copy_b").foreach { name =>
         val tmp = new java.io.File(root, s"_tmp_$name")
-        graft.sources.SkipIndex.withMicrosTimestamps(ev) {
+        graft.sources.PartitionedArchive.withMicrosTimestamps(ev) {
           ev.coalesce(1).write.mode("overwrite").parquet(tmp.getAbsolutePath)
         }
         val part = tmp.listFiles().find(f =>

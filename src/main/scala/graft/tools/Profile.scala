@@ -3,17 +3,19 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.jdk.CollectionConverters._
 
-/** Dev profiling entry: time named pipeline stages at a given sf dir.
-  * `runMain graft.tools.Profile <sfDir> <what>` */
+/** Dev profiling entry: `runMain graft.tools.Profile <sfDir> <mode> [args]`.
+  *
+  *  - `serve_h2h`                 serving head-to-head vs BASELINE.md
+  *  - `serve_conc`                concurrent mixed clients, FAIR pools
+  *  - `jobs <q>`                  per-job timeline of one contract query
+  *  - `cells <q1,q2,…> [passes]`  per-pass wall seconds (default 2 passes)
+  *
+  * Formatted plans come from [[ExplainDump]]. */
 object Profile {
+  val Modes: Seq[String] = Seq("serve_h2h", "serve_conc", "jobs", "cells")
+
   def elapsed(f: => Unit): Double = {
     val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-  }
-
-  def time(label: String)(f: => Long): Unit = {
-    var n = 0L
-    val dt = elapsed { n = f }
-    println(f"[profile] $label%-40s $dt%8.2f s  rows=$n")
   }
 
   def force(df: DataFrame): Long = {
@@ -22,7 +24,11 @@ object Profile {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val what = if (args.length > 1) args(1) else "simhash"
+    val what = args.lift(1).getOrElse("")
+    if (!Modes.contains(what)) {
+      System.err.println(s"[profile] unknown mode '$what'; modes: ${Modes.mkString(", ")}")
+      sys.exit(2)
+    }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .withExtensions(new graft.functions.GraftExtensions)
@@ -44,692 +50,32 @@ object Profile {
     spark.sparkContext.setLogLevel("WARN")
     spark.read.parquet(s"$sfDir/documents.parquet").count() // warmup
 
+    // one contract-query pass under Bench's isolation (clearCache +
+    // unpersist-all after it), in wall seconds
+    def pass(q: String): Double = {
+      val dt = elapsed(force(graft.SparkEntry.queries(q)(spark, sfDir)))
+      spark.catalog.clearCache()
+      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      dt
+    }
+
+    // the serving modes' reference-shaped archive (see serve_h2h)
+    //   SPARK_GRAFT_H2H_ROOT   archive dir (default /tmp/graft_h2h)
+    //   SPARK_GRAFT_H2H_MONTHS months (default 22)
+    val h2hRoot = sys.env.getOrElse("SPARK_GRAFT_H2H_ROOT", "/tmp/graft_h2h")
+    val h2hMonths = sys.env.getOrElse("SPARK_GRAFT_H2H_MONTHS", "22").toInt
+    val startDate = java.time.LocalDate.of(2020, 1, 1)
+    if (what.startsWith("serve_")) {
+      // serving-latency file-split tuning: request windows touch few,
+      // small-ish files (a pruned heatmap window, a 50 MB maintained
+      // rollup); the default 128 MB split packs them onto 1-2 tasks and
+      // serializes the scan. 16 MB splits fan those scans across the
+      // cores — worth ~3x on the daily-summary read path (PERF.md r16).
+      spark.conf.set("spark.sql.files.maxPartitionBytes", "16m")
+      spark.conf.set("spark.sql.files.openCostInBytes", "4m")
+    }
+
     what match {
-      case "simhash" =>
-        val docs = graft.tables.Tables.documents(spark, sfDir)
-        import org.apache.spark.sql.functions._
-        val toks = docs.select(col("doc_id"),
-          explode(graft.text.TextOps.wsTokens(lower(col("text")))).as("tok"))
-        time("explode tokens")(toks.count())
-        val fps = graft.dedup.DedupOps.simhash(docs, "doc_id", "text")
-        time("simhash fingerprints")(fps.count())
-        time("simhash fingerprints (2nd)")(fps.count())
-        val pairs = graft.dedup.DedupOps.simhashPairs(fps, 3)
-        time("simhash pairs (recompute fps)")(pairs.count())
-      case "corpus_clean" =>
-        import org.apache.spark.sql.functions._
-        import graft.dedup.DedupOps
-        val d = graft.tables.Tables.documents(spark, sfDir)
-        val exactKeep = DedupOps.exactDedup(d, "doc_id", "text")
-          .select(col("keep_id").as("doc_id"))
-        time("exact dedup")(exactKeep.count())
-        val exactKept = d.join(exactKeep, Seq("doc_id"), "left_semi")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        time("persist kept")(exactKept.count())
-        // the contract path (prefix-filtered); the naive line stays for
-        // comparison
-        val pairs = DedupOps.ngramJaccardPairsPrefix(exactKept, "doc_id", "text", 3, 0.8)
-          .select(col("id_a"), col("id_b"))
-        time("ngram pairs (prefix)")(pairs.count())
-        time("ngram pairs (prefix, 2nd)")(pairs.count())
-        time("ngram pairs (naive, comparison)")(
-          DedupOps.ngramJaccardPairs(exactKept, "doc_id", "text", 3, 0.8).count())
-        var clusters: DataFrame = null
-        // duplicateClusters is EAGER (checkpointed rounds) — time the call
-        time("CC (eager rounds)") { clusters = DedupOps.duplicateClusters(pairs); 0L }
-        time("CC labels read")(clusters.count())
-        val losers = clusters.filter(col("doc_id") =!= col("cluster_id")).select("doc_id")
-        val fin = exactKept.join(losers, Seq("doc_id"), "left_anti")
-          .withColumn("n_tokens", size(graft.text.TextOps.wsTokens(col("text"))))
-          .withColumn("lang_pred", graft.text.TextOps.langId(col("text")))
-          .filter(col("n_tokens") >= 50 && col("lang_pred") =!= "und")
-        time("final gates")(fin.count())
-      case "clean_split" =>
-        // bench-identical force of q_corpus_clean, split into the eager
-        // part (pair join + clustering run inside the query function) and
-        // the noop-sink execution of the returned frame
-        var fin: DataFrame = null
-        time("query fn (eager pair join + CC)") {
-          fin = graft.SparkEntry.queries("q_corpus_clean")(spark, sfDir); 0L
-        }
-        // count(): EliminateSorts strips the final orderBy, so this times
-        // the anti-join + kernels WITHOUT the range exchange
-        time("fin.count (no sort, kernels via filter)")(fin.count())
-        time("noop write (gates + sort)") {
-          fin.write.format("noop").mode("overwrite").save(); 0L
-        }
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-        time("query fn (2nd)") {
-          fin = graft.SparkEntry.queries("q_corpus_clean")(spark, sfDir); 0L
-        }
-        time("noop write (2nd)") {
-          fin.write.format("noop").mode("overwrite").save(); 0L
-        }
-      case "gates" =>
-        // dissect q_corpus_clean's final-gates stage: anti-join + kernels
-        import org.apache.spark.sql.functions._
-        val d = graft.tables.Tables.documents(spark, sfDir)
-        val kept = d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        time("persist docs")(kept.count())
-        time("n_tokens kernel only")(kept
-          .withColumn("n_tokens", size(graft.text.TextOps.wsTokens(col("text"))))
-          .filter(col("n_tokens") >= 50).count())
-        time("langId kernel only")(kept
-          .withColumn("lang_pred", graft.text.TextOps.langId(col("text")))
-          .filter(col("lang_pred") =!= "und").count())
-        time("both kernels")(kept
-          .withColumn("n_tokens", size(graft.text.TextOps.wsTokens(col("text"))))
-          .withColumn("lang_pred", graft.text.TextOps.langId(col("text")))
-          .filter(col("n_tokens") >= 50 && col("lang_pred") =!= "und").count())
-        val losers = spark.range(100).select(col("id").as("doc_id"))
-        time("anti-join + both kernels")(kept
-          .join(losers, Seq("doc_id"), "left_anti")
-          .withColumn("n_tokens", size(graft.text.TextOps.wsTokens(col("text"))))
-          .withColumn("lang_pred", graft.text.TextOps.langId(col("text")))
-          .filter(col("n_tokens") >= 50 && col("lang_pred") =!= "und").count())
-        time("both kernels (2nd)")(kept
-          .withColumn("n_tokens", size(graft.text.TextOps.wsTokens(col("text"))))
-          .withColumn("lang_pred", graft.text.TextOps.langId(col("text")))
-          .filter(col("n_tokens") >= 50 && col("lang_pred") =!= "und").count())
-      case "ngram_prefix" =>
-        // stage dissection of the prefix-filtered exact pair join
-        import org.apache.spark.sql.functions._
-        import graft.dedup.DedupOps
-        val d = graft.tables.Tables.documents(spark, sfDir)
-        val ex = DedupOps.shingleHashes(d, "doc_id", "text", 3)
-        time("shingle hashes")(ex.count())
-        val ghs = ex.groupBy("doc_id")
-          .agg(sort_array(collect_list("gh")).as("ghs"))
-        time("ghs aggregate")(ghs.count())
-        val ghsC = ghs.localCheckpoint(true)
-        val prefix = DedupOps.prefixIndex(ex, 0.8)
-        time("prefix index rows")(prefix.count())
-        val a = prefix.as("a"); val b = prefix.as("b")
-        val bare = a.join(b, col("a.gh") === col("b.gh") &&
-            col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-          .distinct()
-        time("candidates (no ppjoin filters)")(bare.count())
-        val lengthOk = least(col("a.n_sh"), col("b.n_sh")) * 1000 >=
-          greatest(col("a.n_sh"), col("b.n_sh")) * 800
-        val positionOk =
-          (least(col("a.n_sh") - col("a.pos"), col("b.n_sh") - col("b.pos")) + 1) *
-            1800 >= (col("a.n_sh") + col("b.n_sh")) * 800
-        val filtered = a.join(b, col("a.gh") === col("b.gh") &&
-            col("a.doc_id") < col("b.doc_id") && lengthOk && positionOk)
-          .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-          .distinct()
-        time("candidates (length+positional)")(filtered.count())
-        val naiveJoinVol = ex.as("a").join(ex.as("b"),
-          col("a.gh") === col("b.gh") && col("a.doc_id") < col("b.doc_id"))
-        time("naive join volume")(naiveJoinVol.count())
-        time("full prefix pair join")(
-          DedupOps.ngramJaccardPairsPrefix(d, "doc_id", "text", 3, 0.8).count())
-        time("full naive pair join")(
-          DedupOps.ngramJaccardPairs(d, "doc_id", "text", 3, 0.8).count())
-        ghsC.unpersist()
-      case "lsh_hi" =>
-        // sub-quadratic claim check at a PRODUCTION near-dup threshold:
-        // exact block-pair scan vs banded-LSH candidates + exact verify,
-        // 8-plane × 32-band signatures, threshold 0.8
-        import graft.sim.SimilarityOps
-        val emb = graft.tables.Tables.embeddings(spark, sfDir)
-        val n = emb.count()
-        time(s"exact block-pair scan t=0.8 (n=$n)")(
-          SimilarityOps.cosinePairsBlocked(emb, "vec_id", "embedding", 0.8).count())
-        val sig = SimilarityOps.bandedSignatures(emb, "vec_id", "embedding", 8, 32)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        time("signatures (8 planes x 32 bands)")(sig.count())
-        time("candidate pairs")(SimilarityOps.lshPairCandidates(sig).count())
-        time("lsh candidates + exact verify t=0.8")(
-          SimilarityOps.cosinePairsLsh(sig, 0.8).count())
-        sig.unpersist()
-      case "scale_big" =>
-        // REAL scaling evidence: the sf0.1 corpus is small enough that job
-        // overhead swamps wall-clock, so build 10× and 100× derived corpora
-        // (every token suffixed with the replica id — replicas share no
-        // shingles, so the near-dup structure is the original's replicated,
-        // never cross-replica) and measure the linear-path pipelines.
-        import graft.dedup.DedupOps
-        import org.apache.spark.sql.functions._
-        val base = graft.tables.Tables.documents(spark, sfDir)
-        val n0 = base.count()
-        // collision-proof replica offset (a fixed constant breaks silently
-        // on corpora with larger ids); cache keyed by BASE dir + factor and
-        // gated on _SUCCESS so a different base or a killed build rebuilds
-        val idStride = base.agg(max("doc_id")).first().getLong(0) + 1
-        val baseTag = new java.io.File(sfDir).getName
-        def corpus(times: Int): org.apache.spark.sql.DataFrame = {
-          val path = s"/tmp/graft_scale_${baseTag}_${times}x"
-          if (!new java.io.File(s"$path/_SUCCESS").exists()) {
-            (0 until times).map { i =>
-              base.select(
-                (col("doc_id") + lit(i * idStride)).as("doc_id"),
-                regexp_replace(col("text"), "(\\S+)", s"$$1_$i").as("text"))
-            }.reduce(_ unionByName _)
-              .repartition(32).write.mode("overwrite").parquet(path)
-          }
-          spark.read.parquet(path)
-        }
-        def t(f: => Long): Double = elapsed { f; () }
-        Seq(1, 10, 100).foreach { times =>
-          val c = corpus(times).persist()
-          c.count()
-          val exact = t(DedupOps.exactDedup(c, "doc_id", "text").count())
-          val mh = t(DedupOps.minhashDedupPairs(c, "doc_id", "text", 3, 64, 16, 0.8).count())
-          val sh = t(DedupOps.simhashPairs(DedupOps.simhash(c, "doc_id", "text"), 3).count())
-          // noop write, not count(): a count lets Catalyst drop the window
-          // (it doesn't change cardinality) and measures nothing
-          val pk = t(force(graft.text.TextOps.packSequences(c, "doc_id", "text", 2048, 64)))
-          println(f"[profile] ${times}%3d× (${n0 * times}%7d docs): exact $exact%6.1f s  minhash+lsh $mh%6.1f s  simhash $sh%6.1f s  pack $pk%6.1f s")
-          c.unpersist()
-        }
-      case "scale_r6" =>
-        // 10× scale evidence for the round-5/6 operators: strat-sample,
-        // vocab/OOV, the rarity-ordered prefix pair join, bloom semi-join,
-        // SCD2 — plus the duplicate-clustering driver-cap boundary (time
-        // the distributed CC path on the same real pair graph).
-        import org.apache.spark.sql.functions._
-        import graft.dedup.DedupOps
-        import graft.ops.{JoinOps, MergeOps}
-        val base = graft.tables.Tables.documents(spark, sfDir)
-        val n0 = base.count()
-        val idStride = base.agg(max("doc_id")).first().getLong(0) + 1
-        val baseTag = new java.io.File(sfDir).getName
-        def corpus(times: Int): DataFrame = {
-          // distinct cache path from scale_big's: this corpus carries the
-          // source column too (strat/vocab group on it)
-          val path = s"/tmp/graft_scale6_${baseTag}_${times}x"
-          if (!new java.io.File(s"$path/_SUCCESS").exists()) {
-            (0 until times).map { i =>
-              base.select(
-                (col("doc_id") + lit(i * idStride)).as("doc_id"),
-                col("source"),
-                regexp_replace(col("text"), "(\\S+)", s"$$1_$i").as("text"))
-            }.reduce(_ unionByName _)
-              .repartition(32).write.mode("overwrite").parquet(path)
-          }
-          spark.read.parquet(path)
-        }
-        def t(f: => Unit): Double = elapsed(f)
-        def vocabOov(c: DataFrame): DataFrame = {
-          val termCounts = c.select(col("source"),
-              explode(graft.text.TextOps.wsTokens(lower(col("text")))).as("term"))
-            .groupBy("source", "term").agg(count(lit(1)).as("n"))
-            .localCheckpoint(true)
-          val vocab = termCounts.groupBy("term").agg(sum("n").as("n_term"))
-            .orderBy(col("n_term").desc, col("term")).limit(200)
-            .select(col("term"), lit(1).as("in_vocab"))
-          termCounts.join(broadcast(vocab), Seq("term"), "left")
-            .groupBy("source")
-            .agg(sum("n").as("n_tokens"),
-              sum(when(col("in_vocab").isNull, col("n")).otherwise(0L)).as("n_oov"))
-        }
-        // first 1× is an untimed-in-spirit warmup (codegen + readers);
-        // compare the SECOND 1× line against the 10× line
-        Seq(1, 1, 10).foreach { times =>
-          val c = corpus(times).persist(); c.count()
-          val hv = graft.text.TextOps.md5Key64(col("doc_id"))
-          val strat = t(c.select(col("source"), col("doc_id"), hv.as("hv"))
-            .groupBy("source")
-            .agg(graft.functions.TopKByAgg.topk_by(-col("hv"), col("doc_id"), 5))
-            .count())
-          val voc = t(force(vocabOov(c)))
-          val pref = t(DedupOps.ngramJaccardPairsPrefix(c, "doc_id", "text", 3, 0.8).count())
-          println(f"[profile] ${times}%3d× (${n0 * times}%7d docs): strat $strat%6.1f s  vocab_oov $voc%6.1f s  prefix_pairs $pref%6.1f s")
-          c.unpersist()
-        }
-        Seq(1L, 1L, 10L, 100L).foreach { times =>
-          val nFact = 600000L * times
-          val fact = spark.range(nFact)
-            .select((col("id") % 1000000L).as("k"), col("id").as("v"))
-          val dim = spark.range(1000)
-            .select((col("id") * 997L % 1000000L).as("k"))
-          val bloom = t(JoinOps.bloomSemiJoin(fact, dim, "k", "k", 1000).count())
-          val nCh = 600000L * times
-          val changes = spark.range(nCh).select(
-            (col("id") % (nCh / 10)).as("ent"), col("id").as("ver"),
-            timestamp_seconds(col("id")).as("ts"), col("id").as("v"))
-          val scd = t(force(MergeOps.scd2Intervals(changes, "ent", "ts", "ver",
-            "9999-12-31 00:00:00")))
-          println(f"[profile] ${times}%3d× rows=${nFact}%8d: bloom_semi $bloom%6.1f s  scd2 $scd%6.1f s")
-        }
-        // CC cap boundary: same real near-dup pair graph, both paths
-        val c10 = corpus(10).persist(); c10.count()
-        val pairs = DedupOps.minhashDedupPairs(c10, "doc_id", "text", 3, 64, 16, 0.8)
-          .select("id_a", "id_b").persist()
-        val ne = pairs.count()
-        val viaDriver = t(DedupOps.duplicateClusters(pairs).count())
-        val viaRounds = t(DedupOps.duplicateClusters(pairs, driverEdgeCap = 0L).count())
-        println(f"[profile] CC on $ne edges (10× corpus): driver union-find $viaDriver%6.1f s  distributed rounds $viaRounds%6.1f s")
-        pairs.unpersist(); c10.unpersist()
-      case "scale_new" =>
-        // 10×/100× scale evidence for the round-6 additions: SemDeDup,
-        // PQ ANN, epoch shuffle, perplexity buckets. Embedding ops scale on
-        // replicated-vector corpora (ids offset per replica; replicas are
-        // exact duplicates of the originals, so near-dup structure is the
-        // original's replicated `times`-fold — a worst-ish case for dedup:
-        // every original gains times-1 more duplicates). Text/shuffle ops
-        // reuse the scale_r6 replica corpus.
-        import org.apache.spark.sql.functions._
-        import org.apache.spark.sql.expressions.Window
-        import graft.sim.SimilarityOps
-        val emb0 = graft.tables.Tables.embeddings(spark, sfDir)
-        val nv0 = emb0.count()
-        val vStride = emb0.agg(max("vec_id")).first().getLong(0) + 1
-        def embX(times: Int): DataFrame =
-          (0 until times).map { i =>
-            emb0.select((col("vec_id") + lit(i * vStride)).as("vec_id"),
-              col("embedding"))
-          }.reduce(_ unionByName _)
-        def t(f: => Unit): Double = elapsed(f)
-        Seq(1, 1, 10).foreach { times =>
-          val e = embX(times).repartition(32).persist(); e.count()
-          // kmeansCentroids is EAGER (a collect per Lloyd round), so it is
-          // timed as its own line — the earlier "+train" label measured an
-          // interval that never contained training
-          var cent: DataFrame = null
-          val train = t { cent =
-            SimilarityOps.kmeansCentroids(e, "vec_id", "embedding", 16, 3) }
-          val sem = t(
-            SimilarityOps.semDedup(e, "vec_id", "embedding", cent, 0.4).count())
-          // forced-salted variant: a threshold below the mean cell size
-          // routes (nearly) every cell through the within-cell block-pair
-          // shape — times the salting overhead/benefit on the same data
-          val semSalt = t(SimilarityOps.semDedup(e, "vec_id", "embedding",
-            cent, 0.4, hotCellThreshold = (nv0 * times / 32).toInt.max(1),
-            nBlocks = 8).count())
-          val pq = t(SimilarityOps.pqTopK(e, "vec_id", "embedding",
-            querySelector = 10, k = 5, m = 4, ksub = 16).count())
-          val ivfpq = t(SimilarityOps.ivfPqTopK(e, "vec_id", "embedding",
-            querySelector = 10, k = 5, nCells = 16, nProbe = 2,
-            m = 4, ksub = 16).count())
-          println(f"[profile] ${times}%3d× (${nv0 * times}%7d vecs): kmeans_train $train%6.1f s  semdedup $sem%6.1f s  semdedup_salted $semSalt%6.1f s  pq_topk $pq%6.1f s  ivfpq_topk $ivfpq%6.1f s")
-          e.unpersist()
-        }
-        Seq(1L, 1L, 10L, 100L).foreach { times =>
-          val n = 500000L * times
-          val d = spark.range(n).select(col("id").as("doc_id"),
-            graft.text.TextOps.md5Key64(col("id"), "epoch1:").as("hv"))
-          // `shuffle_diag` breaks the 100× cost down: map-side md5+conv is
-          // 6 s, the full-row exchange + per-shard sort is the rest — a
-          // single-box shuffle-I/O bound (2 GB through one local disk),
-          // not a plan artifact; the hash-exchange + bounded-shard-sort
-          // shape is what distributes.
-          val shuf = t(d.withColumn("shard", pmod(col("hv"), lit(32)).cast("int"))
-            .withColumn("pos", row_number().over(
-              Window.partitionBy(col("shard")).orderBy(col("hv"), col("doc_id"))))
-            .select(sum(col("pos").cast("long"))).collect())
-          // the ppl-bucket boundary aggregate: EXACT percentile state is the
-          // per-source score list — time it alone at scale (the LM scoring
-          // upstream is covered by the text-op rows above / scale_big)
-          val scores = spark.range(n).select(
-            (col("id") % 5).cast("string").as("source"),
-            (col("id") % 9973L).cast("double").as("s"))
-          val ppl = t(scores.groupBy("source")
-            .agg(percentile(col("s"), lit(0.33)), percentile(col("s"), lit(0.67)))
-            .collect())
-          println(f"[profile] ${times}%3d× rows=${n}%9d: epoch_shuffle(32 shards) $shuf%6.1f s  exact_percentile $ppl%6.1f s")
-        }
-      case "shuffle_diag" =>
-        // component breakdown of the epoch shuffle at 50M rows
-        import org.apache.spark.sql.functions._
-        import org.apache.spark.sql.expressions.Window
-        val n = 50000000L
-        val d = spark.range(n).select(col("id").as("doc_id"),
-          graft.text.TextOps.md5Key64(col("id"), "epoch1:").as("hv"))
-          .withColumn("shard", pmod(col("hv"), lit(32)).cast("int"))
-        time("A: map-only (md5+conv+sum)") {
-          d.select(sum(pmod(col("hv"), lit(1000000L)))).collect(); n }
-        time("B: A + exchange (groupBy shard)") {
-          d.groupBy("shard").count().collect(); n }
-        time("C: A + exchange + per-shard sort+rank") {
-          d.withColumn("pos", row_number().over(
-            Window.partitionBy(col("shard")).orderBy(col("hv"), col("doc_id"))))
-            .select(sum(col("pos").cast("long"))).collect(); n }
-        time("C again") {
-          d.withColumn("pos", row_number().over(
-            Window.partitionBy(col("shard")).orderBy(col("hv"), col("doc_id"))))
-            .select(sum(col("pos").cast("long"))).collect(); n }
-      case "scale_substr" =>
-        // ExactSubstr family at 1x/10x on the replica corpus — the WORST
-        // case for this operator: replication makes every window of every
-        // document duplicated, so the hit join returns the full gram
-        // frame and the interval merge covers every document end to end.
-        import org.apache.spark.sql.functions._
-        val d0 = graft.tables.Tables.documents(spark, sfDir)
-          .select("doc_id", "text")
-        val stride = d0.agg(max("doc_id")).first().getLong(0) + 1
-        def docsX(times: Int): DataFrame =
-          (0 until times).map { i =>
-            d0.select((col("doc_id") + lit(i * stride)).as("doc_id"),
-              col("text"))
-          }.reduce(_ unionByName _)
-        def t(f: => Unit): Double = elapsed(f)
-        Seq(1, 1, 10).foreach { times =>
-          val d = docsX(times).repartition(32).persist(); d.count()
-          val nd = d.count()
-          val spans = t(graft.text.TextOps.substrDedupSpans(
-            d, "doc_id", "text", 20).count())
-          val keep1 = t(graft.text.TextOps.substrDedupSpans(
-            d, "doc_id", "text", 20, keepFirst = true).count())
-          val clean = t(graft.text.TextOps.substrDedupApply(
-            d, "doc_id", "text", 20).count())
-          println(f"[profile] ${times}%3dx ($nd%6d docs, all-duplicated): " +
-            f"substr_spans $spans%6.1f s  keep1 $keep1%6.1f s  " +
-            f"apply $clean%6.1f s")
-          d.unpersist()
-        }
-        // 100x spans-only point (500k docs, ~25M windows); shuffle
-        // partitions scale with the data per the epoch-shuffle lesson
-        spark.conf.set("spark.sql.shuffle.partitions", 128)
-        val d100 = docsX(100).repartition(128).persist(); d100.count()
-        val s100 = t(graft.text.TextOps.substrDedupSpans(
-          d100, "doc_id", "text", 20).count())
-        println(f"[profile] 100x (500000 docs, all-duplicated): " +
-          f"substr_spans $s100%6.1f s (128 shuffle partitions)")
-        d100.unpersist()
-        spark.conf.set("spark.sql.shuffle.partitions", cpus)
-      case "scale_r8" =>
-        // Round-8 additions at replica scale: PCA (ONE Gram pass + fixed
-        // driver eigensolve + map-only projection — both stages should
-        // track corpus size linearly with no training-style multipliers)
-        // and the Count-Min sketch pass next to the exact groupBy counts
-        // it replaces at 100 TB (constant 16 KiB partials vs a full
-        // key-set shuffle).
-        import org.apache.spark.sql.functions._
-        val emb0 = graft.tables.Tables.embeddings(spark, sfDir)
-        val nv0 = emb0.count()
-        val vStride = emb0.agg(max("vec_id")).first().getLong(0) + 1
-        def embX(times: Int): DataFrame =
-          (0 until times).map { i =>
-            emb0.select((col("vec_id") + lit(i * vStride)).as("vec_id"),
-              col("embedding"))
-          }.reduce(_ unionByName _)
-        def t(f: => Unit): Double = elapsed(f)
-        Seq(1, 1, 10, 100).foreach { times =>
-          val e = embX(times).repartition(32).persist(); e.count()
-          var m: graft.sim.PcaOps.PcaModel = null
-          val fit = t { m = graft.sim.PcaOps.fit(e, "embedding", 64, 4) }
-          val proj = t(force(graft.sim.PcaOps.project(e, "vec_id",
-            "embedding", graft.sim.PcaOps.modelFrame(spark, m), 4)))
-          println(f"[profile] ${times}%3d× (${nv0 * times}%8d vecs): " +
-            f"pca_fit $fit%6.1f s  pca_project $proj%6.1f s")
-          e.unpersist()
-        }
-        val d0 = graft.tables.Tables.documents(spark, sfDir)
-          .select("doc_id", "text")
-        val nd0 = d0.count()
-        val dStride = d0.agg(max("doc_id")).first().getLong(0) + 1
-        def docsX(times: Int): DataFrame =
-          (0 until times).map { i =>
-            d0.select((col("doc_id") + lit(i * dStride)).as("doc_id"),
-              col("text"))
-          }.reduce(_ unionByName _)
-        Seq(1, 1, 10, 100).foreach { times =>
-          val d = docsX(times).repartition(32).persist(); d.count()
-          val bgs = d.select(explode(graft.functions.WordShingles
-            .word_shingles(col("text"), 2, distinct = false)).as("bg"))
-          val cms = t(bgs
-            .select(graft.text.TextOps.md5Fields(col("bg"), 4, 512).as("rc"))
-            .agg(graft.functions.CmsSketchAgg.cms_sketch(col("rc"), 4, 512))
-            .collect())
-          val exact = t(force(bgs.groupBy("bg").agg(count(lit(1)))))
-          // the honest 100 TB comparison hashes on BOTH sides: exact
-          // distinct-key counting over the same 64-bit keys (the sketch
-          // replaces the full key-set exchange, not the hashing)
-          val exactH = t(force(bgs
-            .select(graft.text.TextOps.md5Key64(col("bg"), "cms0:").as("k"))
-            .groupBy("k").agg(count(lit(1)))))
-          println(f"[profile] ${times}%3d× (${nd0 * times}%8d docs): " +
-            f"cms_sketch $cms%6.1f s  exact_counts $exact%6.1f s  " +
-            f"exact_hashed $exactH%6.1f s")
-          d.unpersist()
-        }
-      case "events_scale" =>
-        // Parity-family scale law (round 10): a FIXED 7-day window query
-        // against an archive that grows 1×/10×/50× in time span must stay
-        // flat — partition pruning (date dirs) + row-group skipping (ts
-        // min/max on sorted files) cut the scan to the window regardless
-        // of archive size — while a whole-archive aggregate grows
-        // linearly. This is the structural claim that the reference's
-        // read-amplification cliff (63 s for 7 d → 226 s for 30 d, scan
-        // grows with REQUEST span; scan also grows with ARCHIVE size)
-        // cannot reproduce here. Replication shifts timestamps by whole
-        // archive spans, so growth is along the realistic axis (more
-        // history), not duplicate keys.
-        import org.apache.spark.sql.functions._
-        val ev0 = graft.tables.Tables.events(spark, sfDir)
-          .select("event_id", "ts", "user_id", "event_type", "value")
-        val n0 = ev0.count()
-        val spanDays = 31L
-        def evX(times: Int): DataFrame =
-          (0 until times).map { i =>
-            ev0.select(col("event_id"),
-              (col("ts") + expr(s"INTERVAL ${i * spanDays} DAYS")).as("ts"),
-              col("user_id"), col("event_type"), col("value"))
-          }.reduce(_ unionByName _)
-        def t(f: => Unit): Double = elapsed(f)
-        val wS = java.time.Instant.parse("2024-01-05T00:00:00Z")
-        val wE = java.time.Instant.parse("2024-01-12T00:00:00Z")
-        Seq(1, 1, 10, 50).foreach { times =>
-          val root = s"/tmp/graft_profile_events/x$times"
-          // _SUCCESS (not dir-exists) guards the replica cache: a killed
-          // mid-write run leaves a partial dir that exists() would trust,
-          // silently shrinking the scale point forever after
-          if (!new java.io.File(root, "_SUCCESS").exists()) {
-            evX(times).withColumn("d", to_date(col("ts")))
-              .repartition(col("d")).sortWithinPartitions("ts")
-              .write.mode("overwrite").partitionBy("d").parquet(root)
-          }
-          val arch = spark.read.parquet(root)
-          // the request window bounds BOTH the partition column (d — this
-          // is what actually prunes the date directories; a ts-only
-          // predicate cannot reach them) and the data column (ts — exact
-          // semantics + row-group min/max skipping within kept files)
-          val dPruned = arch.filter(
-            col("d") >= lit(java.sql.Date.valueOf(
-              java.time.LocalDate.ofInstant(wS, java.time.ZoneOffset.UTC))) &&
-            col("d") <= lit(java.sql.Date.valueOf(
-              java.time.LocalDate.ofInstant(wE, java.time.ZoneOffset.UTC))))
-          val win = t(force(graft.ops.ResampleOps.resampleMean(
-            graft.ops.TimeseriesOps.windowFilter(dPruned, "ts", wS, wE),
-            "ts", "value", "1h")))
-          val full = t(force(arch
-            .groupBy(window(col("ts"), "1 day")).agg(avg("value"))))
-          println(f"[profile] ${times}%3d× (${n0 * times}%9d rows, " +
-            f"${spanDays * times}%4d days): 7d-window resample $win%6.1f s  " +
-            f"full-archive daily $full%6.1f s")
-        }
-      case "bloom_scale" =>
-        // Bloom-routing scale law (round 10): a 5-key opaque-id lookup
-        // against an archive growing 1×/10×/50× along the history axis.
-        // Zone maps cannot serve this probe at any scale (hash keys span
-        // every file's range); the claim measured is that the BLOOM
-        // route stays ~constant (≤5+fp files read, independent of
-        // archive span) while the full-scan lookup grows linearly —
-        // and that the index build cost is one data pass, amortized
-        // over every later probe. Trace ids stay unique across replicas
-        // (event ids shift by n0 per replica) so each probe has exactly
-        // one true file at every scale.
-        import org.apache.spark.sql.functions._
-        import graft.sources.SkipIndex
-        val ev0 = graft.tables.Tables.events(spark, sfDir)
-          .select("event_id", "ts", "value")
-        val n0 = ev0.count()
-        def evX(times: Int): DataFrame =
-          (0 until times).map { i =>
-            ev0.select((col("event_id") + lit(i * n0)).as("event_id"),
-              (col("ts") + expr(s"INTERVAL ${i * 31L} DAYS")).as("ts"),
-              col("value"))
-          }.reduce(_ unionByName _)
-            .withColumn("trace_id", md5(col("event_id").cast("string")))
-        def t(f: => Unit): Double = elapsed(f)
-        val traces = Seq(17L, 4242L, 31337L, 55555L, 77777L).map(id =>
-          graft.text.TextOps.md5Hex((id % n0).toString))
-        Seq(1, 1, 10, 50).foreach { times =>
-          val root = s"/tmp/graft_profile_bloom/x$times"
-          if (!new java.io.File(root, "_SUCCESS").exists())
-            SkipIndex.writeTimeClustered(evX(times), "ts", root,
-              numFiles = 20 * times)
-          val total = spark.read.parquet(root).inputFiles.length
-          var bidx: DataFrame = null
-          val build = t {
-            bidx = SkipIndex.buildBloomIndex(spark, root, "trace_id",
-              expectedItemsPerFile = 8192, numBits = 1L << 17)
-            bidx = bidx.cache(); bidx.count()
-          }
-          var routed = 0
-          val lookup = t {
-            val picked = SkipIndex.pruneFilesByKeys(bidx, traces)
-            routed = picked.count().toInt
-            force(SkipIndex.readFiles(spark, picked)
-              .filter(col("trace_id").isin(traces: _*)))
-          }
-          val fullScan = t(force(spark.read.parquet(root)
-            .filter(col("trace_id").isin(traces: _*))))
-          bidx.unpersist()
-          println(f"[profile] ${times}%3d× (${n0 * times}%9d rows, " +
-            f"$total%4d files): bloom build $build%6.1f s  " +
-            f"routed $routed%3d files, lookup $lookup%5.2f s  " +
-            f"full-scan lookup $fullScan%5.2f s")
-        }
-
-      case "audio_scale" =>
-        // Spectral pipeline throughput vs corpus size: waveforms 1×/4×/10×
-        // (sf0.1 documents replicated with offset ids). The pipeline is a
-        // narrow map (synthesize → frame → FFT → band partials) + one
-        // keyed aggregate, so wall should scale ~linearly with samples
-        // and the per-sample rate should hold — the 100 TB claim is the
-        // RATE, not the toy wall time.
-        import org.apache.spark.sql.functions._
-        import graft.audio.SpectralOps
-        val (sr, ns, fl, hop) = (1024, 1024, 256, 128)
-        val d0 = graft.tables.Tables.documents(spark, sfDir).select("doc_id")
-        val n0 = d0.count()
-        def docsX(times: Int): DataFrame =
-          (0 until times).map { i =>
-            d0.select((col("doc_id") + lit(i * n0)).as("doc_id"))
-          }.reduce(_ unionByName _)
-        def t(f: => Unit): Double = elapsed(f)
-        Seq(1, 1, 4, 10).foreach { times =>
-          val waves = SpectralOps.synthesizeWaves(docsX(times), "doc_id", sr, ns)
-          val framed = SpectralOps.frameWaveform(waves, "samples", fl, hop)
-          val psd = t(force(SpectralOps.welchBandDb(
-            SpectralOps.bandPartialsFused(framed, "doc_id", sr, fl), "doc_id")))
-          val nSamp = n0 * times * ns
-          println(f"[profile] ${times}%3d× (${n0 * times}%8d waves, " +
-            f"$nSamp%10d samples): welch-psd $psd%6.1f s  " +
-            f"${nSamp / psd / 1e6}%6.1f Msamples/s")
-        }
-
-      case "audio_stages" =>
-        // Where do the audio cells' seconds go? Synthesis (interpreted
-        // higher-order transform), framing, FFT+band kernel, WAV
-        // encode/decode — timed cumulatively at sf0.1 (5k waves).
-        import graft.audio.{SpectralOps, WavCodec}
-        val (sr, ns, fl, hop) = (1024, 1024, 256, 128)
-        val docs = graft.tables.Tables.documents(spark, sfDir).select("doc_id")
-        def waves = SpectralOps.synthesizeWaves(docs, "doc_id", sr, ns)
-        (1 to 2).foreach { pass =>
-          val tSynth = elapsed(force(waves))
-          val tFrame = elapsed(force(SpectralOps.frameWaveform(waves, "samples", fl, hop)))
-          val tFull = elapsed(force(SpectralOps.welchBandDb(
-            SpectralOps.bandPartialsFused(
-              SpectralOps.frameWaveform(waves, "samples", fl, hop), "doc_id", sr, fl),
-            "doc_id")))
-          val tEnc = elapsed(force(WavCodec.encodeWaves(waves, "doc_id", "samples", sr)))
-          val tDec = elapsed(force(WavCodec.decodeWaves(
-            WavCodec.encodeWaves(waves, "doc_id", "samples", sr), "doc_id", "wav")))
-          println(f"[profile] pass $pass: synth $tSynth%5.2f s  +frame $tFrame%5.2f s  " +
-            f"full-psd $tFull%5.2f s  +encode $tEnc%5.2f s  +decode $tDec%5.2f s")
-        }
-
-      case "audio_scale2" =>
-        // Scale shape of the round-11 additions: WAV encode+decode
-        // (JDK codec throughput), TDOA xcorr (per-pair kernel), event
-        // detection (frame totals + per-recording island window) at
-        // 1×/4×/10× corpus replicas.
-        import org.apache.spark.sql.functions._
-        import graft.audio.{SpectralOps, WavCodec}
-        val (sr, ns, fl, hop) = (1024, 1024, 256, 128)
-        val d0 = graft.tables.Tables.documents(spark, sfDir).select("doc_id")
-        val n0 = d0.count()
-        def docsX(times: Int): DataFrame =
-          (0 until times).map { i =>
-            d0.select((col("doc_id") + lit(i * n0)).as("doc_id"))
-          }.reduce(_ unionByName _)
-        Seq(1, 1, 4, 10).foreach { times =>
-          val docs = docsX(times)
-          val waves = SpectralOps.synthesizeWaves(docs, "doc_id", sr, ns)
-          val tWav = elapsed(force(WavCodec.decodeWaves(
-            WavCodec.encodeWaves(waves, "doc_id", "samples", sr), "doc_id", "wav")))
-          val pairs = SpectralOps.synthesizeDelayedPairs(docs, "doc_id", sr, ns)
-          val tTdoa = elapsed(force(SpectralOps.tdoaPeaks(
-            SpectralOps.pairCorrelations(pairs, "doc_id", 32), "doc_id", sr)))
-          val bursts = SpectralOps.synthesizeBursts(docs, "doc_id", sr, ns)
-          val tDet = elapsed(force(SpectralOps.detectEvents(
-            SpectralOps.bandPartialsFused(
-              SpectralOps.frameWaveform(bursts, "samples", fl, hop), "doc_id", sr, fl),
-            "doc_id", 1000000000000L, sr, hop)))
-          val nSamp = n0 * times * ns
-          println(f"[profile] ${times}%3d× (${n0 * times}%8d waves): " +
-            f"wav-roundtrip $tWav%5.1f s (${nSamp / tWav / 1e6}%5.1f Ms/s)  " +
-            f"tdoa $tTdoa%5.1f s  detect $tDet%5.1f s")
-        }
-
-      case "ivm_scale" =>
-        // Dim-delta IVM vs archive span: replicas shift ts by k·31 days
-        // and offset user_id by k·100000, so the delta keys (3, 7, 11)
-        // hold facts ONLY in replica 0's day-span — the affected
-        // partition count is CONSTANT as the archive grows 10×, and the
-        // maintenance cost must stay ~flat (vs the full rebuild, which
-        // grows linearly). That separation is the IVM claim.
-        import org.apache.spark.sql.functions._
-        import graft.sources.SkipIndex
-        import graft.ops.RollupOps
-        val ev0 = graft.tables.Tables.events(spark, sfDir)
-          .select(col("event_id"), col("ts"), col("user_id"), col("value"))
-        def evX(times: Int): DataFrame =
-          (0 until times).map { k =>
-            ev0.select(col("event_id"),
-              (col("ts") + expr(s"INTERVAL ${k * 31} DAYS")).as("ts"),
-              (col("user_id") + lit(k * 100000L)).as("user_id"), col("value"))
-          }.reduce(_ unionByName _)
-        val deltaKeys = Seq("3", "7", "11")
-        def segV(updated: Boolean)(d: DataFrame): DataFrame = {
-          val seg = if (updated)
-            when(col("user_id").isin(3L, 7L, 11L), lit(99L))
-              .otherwise(col("user_id") % 5)
-          else col("user_id") % 5
-          d.withColumn("segment", seg).groupBy("day", "segment")
-            .agg(count(lit(1)).as("n"),
-              sum(round(col("value") * 1e6, 0).cast("long")).as("sum_micro"))
-        }
-        Seq(1, 1, 4, 10).foreach { times =>
-          val root = s"/tmp/graft_profile_ivm/x$times"
-          graft.util.LocalFs.deleteRecursively(new java.io.File(root))
-          SkipIndex.writeTimeClustered(evX(times), "ts", root, 16 * times)
-          val idx = SkipIndex.buildFooterIndex(spark, root, "ts")
-          val tBloom = elapsed {
-            SkipIndex.buildBloomIndex(spark, root,
-                "CAST(user_id AS STRING)", 100000L, 1L << 20)
-              .write.mode("overwrite").parquet(s"$root/../bloom_x$times")
-          }
-          val bloom = spark.read.parquet(s"$root/../bloom_x$times")
-          val facts = spark.read.parquet(root).withColumn("day", to_date(col("ts")))
-          segV(updated = false)(facts).write.mode("overwrite")
-            .parquet(s"$root/../v1_x$times")
-          val v1 = spark.read.parquet(s"$root/../v1_x$times")
-          val tMaint = elapsed(force(RollupOps.maintainOnDimDelta(
-            v1, idx, bloom, "user_id", deltaKeys, "ts", segV(updated = true))))
-          val tFull = elapsed(force(segV(updated = true)(facts)))
-          println(f"[profile] ${times}%3d× (${facts.count()}%9d facts): " +
-            f"bloom-build $tBloom%5.1f s  maintain $tMaint%5.1f s  " +
-            f"full-rebuild $tFull%5.1f s")
-        }
-
       case "serve_h2h" =>
         // r14 verdict #4: the flagship serving head-to-head against the
         // reference's PUBLISHED endpoint wall-clocks (BASELINE.md), on a
@@ -738,32 +84,20 @@ object Profile {
         // rows/month at 1 s resolution). See graft.serve.HeadToHead for
         // the claim and the caveat. Archive persists across invocations;
         // delete the root to force a rebuild.
-        //   SPARK_GRAFT_H2H_ROOT   archive dir (default /tmp/graft_h2h)
-        //   SPARK_GRAFT_H2H_MONTHS months (default 22)
         import graft.serve.HeadToHead
-        // serving-latency file-split tuning: request windows touch few,
-        // small-ish files (a pruned heatmap window, a 50 MB maintained
-        // rollup); the default 128 MB split packs them onto 1-2 tasks and
-        // serializes the scan. 16 MB splits fan those scans across the
-        // cores — worth ~3x on the daily-summary read path (PERF.md r16).
-        spark.conf.set("spark.sql.files.maxPartitionBytes", "16m")
-        spark.conf.set("spark.sql.files.openCostInBytes", "4m")
-        val root = sys.env.getOrElse("SPARK_GRAFT_H2H_ROOT", "/tmp/graft_h2h")
-        val months = sys.env.getOrElse("SPARK_GRAFT_H2H_MONTHS", "22").toInt
-        val startDate = java.time.LocalDate.of(2020, 1, 1)
         val rateSec = 1
-        val marker = new java.io.File(s"$root/psd/_SUCCESS")
+        val marker = new java.io.File(s"$h2hRoot/psd/_SUCCESS")
         if (!marker.exists()) {
-          println(s"[profile] building $months-month archive under $root ...")
+          println(s"[profile] building $h2hMonths-month archive under $h2hRoot ...")
           val b0 = System.nanoTime()
-          HeadToHead.buildArchive(spark, root, startDate, months, rateSec)
+          HeadToHead.buildArchive(spark, h2hRoot, startDate, h2hMonths, rateSec)
           val bSec = (System.nanoTime() - b0) / 1e9
-          val sz = graft.util.LocalFs.sizeOf(new java.io.File(root))
+          val sz = graft.util.LocalFs.sizeOf(new java.io.File(h2hRoot))
           println(f"[profile] archive built in $bSec%.1f s " +
             f"(${sz / 1e9}%.2f GB on disk)")
         }
         val (bootstrap, rollupMaint, cells) = HeadToHead.run(
-          spark, root, startDate, months, rateSec)
+          spark, h2hRoot, startDate, h2hMonths, rateSec)
         println(f"[profile] catalog bootstrap (persisted sidecar; first " +
           f"run builds it from footers): $bootstrap%.2f s")
         println(f"[profile] daily-summary rollup maintenance (offline, " +
@@ -782,1154 +116,33 @@ object Profile {
         // starving the dashboard. Requires the serve_h2h archive
         // (build it first if absent).
         import graft.serve.HeadToHead
-        spark.conf.set("spark.sql.files.maxPartitionBytes", "16m")
-        spark.conf.set("spark.sql.files.openCostInBytes", "4m")
-        val root = sys.env.getOrElse("SPARK_GRAFT_H2H_ROOT", "/tmp/graft_h2h")
-        val months = sys.env.getOrElse("SPARK_GRAFT_H2H_MONTHS", "22").toInt
-        val startDate = java.time.LocalDate.of(2020, 1, 1)
-        require(new java.io.File(s"$root/psd/_SUCCESS").exists(),
-          s"serve_conc needs the serve_h2h archive at $root — run serve_h2h first")
-        // SPARK_GRAFT_CONC_POOLS=off runs the FIFO counterfactual (no
-        // pool assignment — the starvation the pools prevent)
-        val pools = !sys.env.get("SPARK_GRAFT_CONC_POOLS").contains("off")
-        println(s"[profile] scheduler pools: ${if (pools) "FAIR per class" else "OFF (FIFO counterfactual)"}")
-        val levels = HeadToHead.runConcurrent(spark, root, startDate, months,
-          rateSec = 1, pools = pools)
+        require(new java.io.File(s"$h2hRoot/psd/_SUCCESS").exists(),
+          s"serve_conc needs the serve_h2h archive at $h2hRoot — run serve_h2h first")
+        val levels = HeadToHead.runConcurrent(spark, h2hRoot, startDate, h2hMonths,
+          rateSec = 1)
         println("[profile] pass    N  class      count  err     p50 s     p99 s     max s")
         levels.foreach { case (n, cold, warm) =>
-          cold.foreach { s =>
-            println(f"[profile] cold ${n}%4d  ${s.cls}%-9s ${s.count}%6d  ${s.errors}%3d  " +
-              f"${s.p50}%8.3f  ${s.p99}%8.3f  ${s.max}%8.3f")
-          }
-          warm.foreach { s =>
-            println(f"[profile] warm ${n}%4d  ${s.cls}%-9s ${s.count}%6d  ${s.errors}%3d  " +
-              f"${s.p50}%8.3f  ${s.p99}%8.3f  ${s.max}%8.3f")
-          }
-        }
-
-      case "http_bench" =>
-        // Serving-layer throughput: a real HttpApi over a sf0.1-scale
-        // archive (events as broadband points), mixed request workload
-        // from 16 concurrent clients. Reports req/s + latency quantiles
-        // per endpoint class — cold (first touch computes + memoizes)
-        // then steady-state (LRU-served; the production read path).
-        import org.apache.spark.sql.functions._
-        import graft.serve.{AmbientService, HttpApi}
-        val ev = graft.tables.Tables.events(spark, sfDir)
-        val bb = ev.select(lit("ORCASOUND_LAB").as("hydrophone"),
-          lit(60).as("delta_t"), col("ts"), col("value"))
-        val psd = ev.select(lit("ORCASOUND_LAB").as("hydrophone"),
-          lit("octave_bands").as("freq_type"), lit(3).as("delta_f"),
-          lit(60).as("delta_t"), col("ts"),
-          ((col("event_id") % 5) * 63.0 + 63.0).as("band"), col("value"))
-        val svc = AmbientService.fromFrames(bb, psd)
-        val logDir = java.nio.file.Files.createTempDirectory("graft-http-bench")
-        val api = new HttpApi(svc, logDir)
-        val server = api.start(0)
-        val base = s"http://127.0.0.1:${server.getAddress.getPort}"
-        val urls = Seq(
-          "/options",
-          "/timeseries/broadband?hydrophone=orcasound_lab" +
-            "&start=2024-01-02T00:00:00&end=2024-01-02T06:00:00&delta_t=60",
-          "/aggregations/broadband?hydrophone=orcasound_lab" +
-            "&start=2024-01-02T00:00:00&end=2024-01-14T00:00:00&interval=1h&delta_t=60",
-          "/aggregations/psd?hydrophone=orcasound_lab" +
-            "&start=2024-01-02T00:00:00&end=2024-01-08T00:00:00&interval=1h&delta_f=3oct&delta_t=60",
-          "/timeseries/psd?hydrophone=orcasound_lab" +
-            "&start=2024-01-03T00:00:00&end=2024-01-03T06:00:00" +
-            "&delta_t=60&delta_f=3oct")
-        try {
-          def fire(n: Int, threads: Int): Seq[Double] = {
-            val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
-            try {
-              val tasks = (0 until n).map { i =>
-                pool.submit(new java.util.concurrent.Callable[Double] {
-                  override def call(): Double = {
-                    val u = urls(i % urls.length)
-                    val t0 = System.nanoTime()
-                    val c = new java.net.URL(base + u).openConnection()
-                      .asInstanceOf[java.net.HttpURLConnection]
-                    val code = c.getResponseCode
-                    if (code != 200) {
-                      val err = Option(c.getErrorStream)
-                        .map(e => new String(e.readAllBytes())).getOrElse("")
-                      require(false, s"$u -> $code: $err")
-                    }
-                    val body = new String(c.getInputStream.readAllBytes())
-                    (System.nanoTime() - t0) / 1e6
-                  }
-                })
-              }
-              tasks.map(_.get()).toSeq
-            } finally pool.shutdown()
-          }
-          def stats(lat: Seq[Double], wall: Double, label: String): Unit = {
-            val s = lat.sorted
-            println(f"[profile] $label%-12s ${lat.size}%5d req in $wall%6.2f s " +
-              f"= ${lat.size / wall}%7.1f req/s   " +
-              f"p50 ${s(s.size / 2)}%7.1f ms  p95 ${s((s.size * 95) / 100)}%7.1f ms")
-          }
-          val w0 = System.nanoTime()
-          val cold = fire(urls.length, 1) // each endpoint computed once
-          stats(cold, (System.nanoTime() - w0) / 1e9, "cold")
-          Seq((200, 16), (2000, 16), (2000, 4), (2000, 32)).foreach {
-            case (n, threads) =>
-              val w = System.nanoTime()
-              val lat = fire(n, threads)
-              stats(lat, (System.nanoTime() - w) / 1e9, s"warm×$n c$threads")
-          }
-        } finally { server.stop(0); api.close() }
-
-      case "rollup_stages" =>
-        // Where does q_stream_rollup's wall go? Time the 6-batch
-        // maintenance loop three ways: the full streamed run (micro-batch
-        // engine + maintenance), a direct driver loop over the SAME
-        // batches (maintenance only — the engine overhead is the
-        // difference), and the per-stage costs inside one batch.
-        import org.apache.spark.sql.functions._
-        import graft.sources.SkipIndex
-        import graft.streaming.StreamingOps
-        val recompute: DataFrame => DataFrame = d => d.groupBy("day").agg(
-          count(lit(1)).as("n_events"),
-          round(sum(round(col("value") * 1e6, 0).cast("long")).cast("double")
-            / count(lit(1)) / 1e6, 6).as("avg_value"))
-        def t(f: => Unit): Double = elapsed(f)
-        val full = t(StreamingOps.runStreamRollupOnce(spark, sfDir, recompute)
-          .write.format("noop").mode("overwrite").save())
-        // direct loop, no stream engine
-        val tmp = java.nio.file.Files.createTempDirectory("graft_prof_rollup").toString
-        val ev = graft.tables.Tables.events(spark, sfDir)
-          .select("event_id", "ts", "user_id", "event_type", "value")
-          .repartitionByRange(6, col("ts"))
-        ev.write.parquet(s"$tmp/src")
-        val files = spark.read.parquet(s"$tmp/src").inputFiles.sorted
-        val arch = s"$tmp/arch"
-        val direct = t {
-          files.zipWithIndex.foreach { case (f, i) =>
-            StreamingOps.maintainRollupBatch(
-              spark.read.parquet(f), i.toLong, "prof", "ts", arch, recompute)
-          }
-        }
-        // stage split for one more batch over the 6-batch archive
-        val extra = spark.read.parquet(files.head)
-        val tAppend = t(SkipIndex.appendClusteredBatch(extra, "ts", arch, 99L, "prof"))
-        var idx: DataFrame = null
-        val tRefresh = t {
-          idx = SkipIndex.refreshFooterIndex(
-            spark, arch, "ts", SkipIndex.loadIndexOrEmpty(spark, arch))
-        }
-        val tPersist = t(SkipIndex.persistIndex(spark, idx, arch))
-        val tChanged = t(extra.select(to_date(col("ts")).as("day"))
-          .distinct().collect(): Unit)
-        println(f"[profile] streamed $full%6.1f s  direct-loop $direct%6.1f s " +
-          f"(engine overhead ${full - direct}%5.1f s)")
-        println(f"[profile] one batch: append $tAppend%5.2f s  " +
-          f"refresh $tRefresh%5.2f s  persist $tPersist%5.2f s  " +
-          f"changed-collect $tChanged%5.2f s")
-        // pure engine floor: same 6-file stream, no-op body
-        val noop = t {
-          val stream = spark.readStream
-            .schema(spark.read.parquet(s"$tmp/src").schema)
-            .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src")
-          val q = stream.writeStream
-            .foreachBatch { (b: DataFrame, _: Long) => b.count(): Unit }
-            .option("checkpointLocation", s"$tmp/ckpt_noop")
-            .start()
-          try q.processAllAvailable() finally q.stop()
-        }
-        println(f"[profile] no-op 6-batch stream (count only): $noop%6.1f s")
-        // decompose the streamed run: src prep | stream+maintenance | drain
-        val tmp2 = java.nio.file.Files.createTempDirectory("graft_prof_r2").toString
-        val tPrep = t {
-          graft.tables.Tables.events(spark, sfDir)
-            .select("event_id", "ts", "user_id", "event_type", "value")
-            .repartitionByRange(6, col("ts"))
-            .write.parquet(s"$tmp2/src")
-        }
-        val tStream = t {
-          val stream = spark.readStream
-            .schema(spark.read.parquet(s"$tmp2/src").schema)
-            .option("maxFilesPerTrigger", "1").parquet(s"$tmp2/src")
-          val q = StreamingOps.rollupIngest(stream, "ts", s"$tmp2/arch",
-            s"$tmp2/ckpt", recompute)
-          try q.processAllAvailable() finally q.stop()
-        }
-        println(f"[profile] decomposed: src-prep $tPrep%5.2f s  " +
-          f"stream+maintenance $tStream%6.1f s  " +
-          f"(vs direct-loop $direct%5.1f s on the 32-part session)")
-        // child-session effect, partition count separated
-        Seq(32, 8).foreach { parts =>
-          val tmp3 = java.nio.file.Files.createTempDirectory(s"graft_prof_p$parts").toString
-          val ses = spark.newSession()
-          ses.conf.set("spark.sql.shuffle.partitions", parts)
-          graft.tables.Tables.events(ses, sfDir)
-            .select("event_id", "ts", "user_id", "event_type", "value")
-            .repartitionByRange(6, col("ts"))
-            .write.parquet(s"$tmp3/src")
-          val tChild = t {
-            val stream = ses.readStream
-              .schema(ses.read.parquet(s"$tmp3/src").schema)
-              .option("maxFilesPerTrigger", "1").parquet(s"$tmp3/src")
-            val q = StreamingOps.rollupIngest(stream, "ts", s"$tmp3/arch",
-              s"$tmp3/ckpt", recompute)
-            try q.processAllAvailable() finally q.stop()
-          }
-          println(f"[profile] child session, $parts%2d shuffle partitions: " +
-            f"stream+maintenance $tChild%6.1f s")
-        }
-
-      case "inc_scale" =>
-        // Incremental-dedup index growth (round 11): screen a FIXED
-        // incoming batch against a persisted band index whose history
-        // grows 1×/4×/10×. Replica signatures are PERTURBED (element-wise
-        // +i·C) so histories are distinct non-duplicates — candidate
-        // count stays ~constant and the measurement isolates pure
-        // index-size scaling: build should grow ~linearly (one pass over
-        // history), screening shuffles only the batch (zero Exchange
-        // above the index scan — IncDedupSpec), so its growth is the
-        // sequential bucketed-table scan, never a history reshuffle.
-        import org.apache.spark.sql.functions._
-        import graft.dedup.{DedupOps, IncrementalDedup}
-        val (k, bands) = (128, 32)
-        val d0 = graft.tables.Tables.documents(spark, sfDir)
-          .select("doc_id", "text")
-        val sigs0 = DedupOps.minhashSignatures(d0, "doc_id", "text",
-          n = 3, k = k).persist()
-        val n0 = sigs0.count()
-        def histX(times: Int): DataFrame =
-          (0 until times).map { i =>
-            sigs0.select((col("doc_id") + lit(i * n0 * 2)).as("doc_id"),
-              transform(col("sig"), x => x + lit(i * 1000003L)).as("sig"))
-          }.reduce(_ unionByName _)
-        val batch = sigs0.select((col("doc_id") + lit(-n0 * 2)).as("doc_id"),
-          col("sig")).filter(col("doc_id") % 10 === 0).persist()
-        val nb = batch.count()
-        def t(f: => Unit): Double = elapsed(f)
-        Seq(1, 1, 4, 10).foreach { times =>
-          val table = s"graft_prof_inc_x$times"
-          val build = t(IncrementalDedup.buildBandIndex(
-            spark, histX(times), k, bands, table))
-          var pairs = 0L
-          val screen = t {
-            pairs = IncrementalDedup.screenBatch(
-              spark, table, batch, k, bands, minAgree = 0.5).count()
-          }
-          println(f"[profile] ${times}%3d× history (${n0 * times}%8d sigs, " +
-            f"$nb%6d-doc batch): index build $build%6.1f s  " +
-            f"screen $screen%6.2f s  pairs $pairs%6d")
-          spark.sql(s"DROP TABLE IF EXISTS `$table`")
-        }
-        sigs0.unpersist(); batch.unpersist(): Unit
-
-      case "maint_scale" =>
-        // Deletes + compaction maintenance at 1×/10× archive span
-        // (round 11): the GDPR-erasure claim is that a 5-key delete costs
-        // O(routed files), not O(archive) — tombstone append is O(keys),
-        // the logical-read overhead is one broadcast anti-join, and the
-        // bloom-routed physical apply rewrites ~5 files at every scale.
-        // Compaction planning is metadata-scale (window cumsum over the
-        // file manifest) — flat regardless of data volume.
-        import org.apache.spark.sql.functions._
-        import graft.sources.{Deletes, SkipIndex}
-        val ev0 = graft.tables.Tables.events(spark, sfDir)
-          .select("event_id", "ts", "value")
-        val n0 = ev0.count()
-        def evX(times: Int): DataFrame =
-          (0 until times).map { i =>
-            ev0.select((col("event_id") + lit(i * n0)).as("event_id"),
-              (col("ts") + expr(s"INTERVAL ${i * 31L} DAYS")).as("ts"),
-              col("value"))
-          }.reduce(_ unionByName _)
-            .withColumn("trace_id", md5(col("event_id").cast("string")))
-        def t(f: => Unit): Double = elapsed(f)
-        val doomed = Seq(17L, 4242L, 31337L, 55555L, 77777L).map(id =>
-          graft.text.TextOps.md5Hex((id % n0).toString))
-        Seq(1, 1, 10).foreach { times =>
-          val root = s"/tmp/graft_profile_maint/x$times"
-          graft.util.LocalFs.deleteRecursively(
-            new java.io.File(root)) // deletes mutate: always fresh
-          SkipIndex.writeTimeClustered(evX(times), "ts", root,
-            numFiles = 20 * times)
-          val bidx = SkipIndex.buildBloomIndex(spark, root, "trace_id",
-            expectedItemsPerFile = 8192, numBits = 1L << 17).cache()
-          bidx.count()
-          val tomb = t(Deletes.addTombstones(spark, root, doomed))
-          val logical = t(force(
-            Deletes.readWithDeletes(spark, root, "trace_id")))
-          val plain = t(force(spark.read.parquet(root)))
-          var rewritten = 0
-          val apply = t {
-            rewritten = Deletes.applyDeletes(
-              spark, root, "trace_id", bidx).size
-          }
-          bidx.unpersist()
-          // compaction: plan over the post-delete manifest (metadata
-          // scale), then execute the planned bins
-          val manifest = SkipIndex.refreshFooterIndex(spark, root, "ts",
-            SkipIndex.loadIndexOrEmpty(spark, root))
-          var bins = 0L
-          val plan = t {
-            val p = SkipIndex.assignBins(manifest, "bytes",
-              Seq("min_us", "file"), 8L << 20)
-            bins = p.agg(max(col("bin"))).first().getLong(0) + 1
-          }
-          val compact = t(SkipIndex.compact(spark,
-            SkipIndex.assignBins(manifest, "bytes",
-              Seq("min_us", "file"), 8L << 20),
-            root, "ts", s"$root/_compacted"))
-          println(f"[profile] ${times}%3d× (${n0 * times}%9d rows): " +
-            f"tombstone $tomb%5.2f s  logical-read $logical%5.2f s " +
-            f"(plain $plain%5.2f s)  apply $apply%5.2f s " +
-            f"($rewritten files)  compact-plan $plan%5.2f s " +
-            f"($bins bins)  compact $compact%6.1f s")
-        }
-
-      case "pca_recall" =>
-        // PCA as the ANN pre-stage (dimension reduction before search —
-        // the classic OPQ/PCA-IVF front half): project the clustered
-        // corpus (same generator as recall_clustered) to 4/8/16 dims and
-        // measure brute-force recall@5 in projected space vs the exact
-        // 64-dim truth, next to each cut's captured variance. One fit at
-        // k=64 yields the full spectrum; projections reuse its leading
-        // columns.
-        import org.apache.spark.sql.functions._
-        import graft.sim.{PcaOps, SimilarityOps}
-        def h01c(seed: org.apache.spark.sql.Column,
-            i: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-          (pmod(xxhash64(seed, i), lit(2000L)).cast("double") - 1000.0) / 1000.0
-        // two corpora: isotropic within-cluster noise (PCA's worst case —
-        // no linear cut can rank inside a cluster) vs noise confined to
-        // the first 8 dims (intrinsic dim ≈ 8; PCA's design case)
-        for ((n, noiseDims) <- Seq((5000L, 64), (50000L, 64),
-            (5000L, 8), (50000L, 8))) {
-          val e = spark.range(n).select(col("id").as("vec_id"),
-            transform(sequence(lit(1), lit(64)), i =>
-              (h01c(pmod(col("id"), lit(32L)), i) +
-                when(i <= noiseDims,
-                  h01c(col("id") + lit(1000000L), i) * lit(0.15))
-                  .otherwise(lit(0.0))).cast("float"))
-              .as("embedding"))
-            .repartition(32).persist()
-          e.count()
-          val truth = SimilarityOps.bruteForceTopK(
-              e, "vec_id", "embedding", 10, 5)
-            .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
-          val m = PcaOps.fit(e, "embedding", 64, 64)
-          val seamF = PcaOps.modelFrame(spark, m).localCheckpoint(true)
-          val totVar = m.eigenvalues.sum
-          val lines = Seq(4, 8, 16).map { k =>
-            val pv = PcaOps.project(e, "vec_id", "embedding", seamF, k)
-              .select(col("vec_id"),
-                array((1 to k).map(c => col(s"pc$c")): _*)
-                  .cast("array<float>").as("embedding"))
-            val got = SimilarityOps.bruteForceTopK(
-                pv, "vec_id", "embedding", 10, 5)
-              .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
-            val rec = got.intersect(truth).size.toDouble / truth.size
-            // the production shape: k-dim PRESCREEN at 10× overfetch +
-            // exact re-rank of the candidates — recall is then the
-            // fraction of true neighbors the 50-candidate screen retains
-            val got50 = SimilarityOps.bruteForceTopK(
-                pv, "vec_id", "embedding", 10, 50)
-              .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
-            val rec50 = truth.intersect(got50).size.toDouble / truth.size
-            val varexp = m.eigenvalues.take(k).sum / totVar
-            f"k=$k recall $rec%.3f prescreen50 $rec50%.3f (var $varexp%.2f)"
-          }
-          println(f"[profile] pca_recall n=$n%6d noiseDims=$noiseDims%2d @5: " +
-            lines.mkString("  "))
-          e.unpersist()
-        }
-      case "recall_clustered" =>
-        // Counterpart to recall10x: SYNTHETIC CLUSTERED embeddings (32
-        // hash-derived centers, small per-vector noise) — the corpus shape
-        // FAISS's residual coding presumes. recall10x showed residual
-        // IVF-PQ losing on uniform-random vectors; this case measures
-        // whether the residual path's advantage materializes once the
-        // data has cluster structure (cell-local residuals are then
-        // small and the per-cell codebooks concentrate precision).
-        import org.apache.spark.sql.functions._
-        import graft.sim.SimilarityOps
-        def h01(seed: org.apache.spark.sql.Column,
-            i: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-          (pmod(xxhash64(seed, i), lit(2000L)).cast("double") - 1000.0) / 1000.0
-        Seq(5000L, 50000L).foreach { n =>
-          // vector = center(id % 32) + 0.15 * noise(id); noise seeds are
-          // offset by 1e6 so they never collide with the 32 center seeds
-          val e = spark.range(n).select(col("id").as("vec_id"),
-            transform(sequence(lit(1), lit(64)), i =>
-              h01(pmod(col("id"), lit(32L)), i) +
-                h01(col("id") + lit(1000000L), i) * lit(0.15)).as("embedding"))
-            .repartition(32).persist()
-          e.count()
-          val truth = SimilarityOps.bruteForceTopK(
-              e, "vec_id", "embedding", 10, 5)
-            .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
-          def recall(df: DataFrame): Double = {
-            val got = df.collect().map(r => (r.getLong(0), r.getLong(2))).toSet
-            got.intersect(truth).size.toDouble / truth.size
-          }
-          val rTrn = recall(SimilarityOps.pqTopKFrom(
-            e, "vec_id", "embedding", SimilarityOps.pqCodebooksTrained(
-              e, "vec_id", "embedding", 4, 16, 3), 10, 5, 4))
-          val rIvfPq = recall(SimilarityOps.ivfPqTopK(
-            e, "vec_id", "embedding", 10, 5, 16, 2, 4, 16))
-          val rRes = recall(SimilarityOps.ivfPqResidualTopK(
-            e, "vec_id", "embedding", SimilarityOps.ivfPqResidualBooks(
-              e, "vec_id", "embedding", 16, 4, 16, 2), 10, 5, 16, 2, 4))
-          // FAISS's real composition: TRAINED coarse quantizer (cells
-          // track the 32 planted clusters) + residual books trained
-          // against the SAME cells — 32 cells so the quantizer can align
-          val tc = SimilarityOps.kmeansCentroids(
-            e, "vec_id", "embedding", 32, 3).localCheckpoint(true)
-          val rResT = recall(SimilarityOps.ivfPqResidualTopK(
-            e, "vec_id", "embedding", SimilarityOps.ivfPqResidualBooks(
-              e, "vec_id", "embedding", 32, 4, 16, 2, cents = Some(tc)),
-            10, 5, 32, 4, 4, cents = Some(tc)))
-          println(f"[profile] clustered n=$n%6d recall@5: " +
-            f"pq_trained $rTrn%.3f  ivfpq_raw $rIvfPq%.3f  " +
-            f"ivfpq_residual_detcoarse $rRes%.3f  " +
-            f"ivfpq_residual_trainedcoarse $rResT%.3f")
-          e.unpersist()
-        }
-      case "recall10x" =>
-        // VERDICT r7 #7: does the trained-quantizer cost buy recall?
-        // recall@5 vs exact brute-force ground truth for the PQ family at
-        // 1× and 10× (replica corpus, ids offset per replica). Replicas
-        // make exact duplicates of every vector, so the id-exact recall
-        // measure penalizes replica-id ties EQUALLY across variants — the
-        // comparison isolates code fidelity, not tie luck.
-        import org.apache.spark.sql.functions._
-        import graft.sim.SimilarityOps
-        val emb0 = graft.tables.Tables.embeddings(spark, sfDir)
-        val vStride = emb0.agg(max("vec_id")).first().getLong(0) + 1
-        def embX(times: Int): DataFrame =
-          (0 until times).map { i =>
-            emb0.select((col("vec_id") + lit(i * vStride)).as("vec_id"),
-              col("embedding"))
-          }.reduce(_ unionByName _)
-        Seq(1, 10).foreach { times =>
-          val e = embX(times).repartition(32).persist(); e.count()
-          val truth = SimilarityOps.bruteForceTopK(
-              e, "vec_id", "embedding", 10, 5)
-            .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
-          def recall(df: DataFrame): Double = {
-            val got = df.collect().map(r => (r.getLong(0), r.getLong(2))).toSet
-            got.intersect(truth).size.toDouble / truth.size
-          }
-          val rDet = recall(SimilarityOps.pqTopK(
-            e, "vec_id", "embedding", 10, 5, 4, 16))
-          val books = SimilarityOps.pqCodebooksTrained(
-            e, "vec_id", "embedding", 4, 16, 3)
-          val rTrn = recall(SimilarityOps.pqTopKFrom(
-            e, "vec_id", "embedding", books, 10, 5, 4))
-          val rIvfPq = recall(SimilarityOps.ivfPqTopK(
-            e, "vec_id", "embedding", 10, 5, 16, 2, 4, 16))
-          val rbooks = SimilarityOps.ivfPqResidualBooks(
-            e, "vec_id", "embedding", 16, 4, 16, 2)
-          val rRes = recall(SimilarityOps.ivfPqResidualTopK(
-            e, "vec_id", "embedding", rbooks, 10, 5, 16, 2, 4))
-          println(f"[profile] ${times}%3d× recall@5 vs brute force: " +
-            f"pq_det $rDet%.3f  pq_trained $rTrn%.3f  " +
-            f"ivfpq_raw $rIvfPq%.3f  ivfpq_residual $rRes%.3f")
-          e.unpersist()
-        }
-      case "shuffle_diag2" =>
-        // VERDICT r7 #5: attribute the epoch-shuffle 100x point — shuffle
-        // vs sort vs SPILL — and test the real scale lever. The window's
-        // exchange is hashpartitioning(shard, spark.sql.shuffle.partitions)
-        // so the per-task sort is n/PARTITIONS rows no matter how many
-        // shards the query names; raising shard count alone changes
-        // nothing, raising shuffle partitions with the data is the lever.
-        import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-        import org.apache.spark.sql.functions._
-        import org.apache.spark.sql.expressions.Window
-        val spillMem = new java.util.concurrent.atomic.AtomicLong
-        val spillDisk = new java.util.concurrent.atomic.AtomicLong
-        val shufW = new java.util.concurrent.atomic.AtomicLong
-        spark.sparkContext.addSparkListener(new SparkListener {
-          override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-            val m = te.taskMetrics
-            if (m != null) {
-              spillMem.addAndGet(m.memoryBytesSpilled)
-              spillDisk.addAndGet(m.diskBytesSpilled)
-              shufW.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+          Seq("cold" -> cold, "warm" -> warm).foreach { case (label, stats) =>
+            stats.foreach { s =>
+              println(f"[profile] $label ${n}%4d  ${s.cls}%-9s ${s.count}%6d  ${s.errors}%3d  " +
+                f"${s.p50}%8.3f  ${s.p99}%8.3f  ${s.max}%8.3f")
             }
           }
-        })
-        val n = 50000000L
-        val d = spark.range(n).select(col("id").as("doc_id"),
-          graft.text.TextOps.md5Key64(col("id"), "epoch1:").as("hv"))
-        // first 32-partition run repeats last so codegen warmup doesn't
-        // pollute the comparison; shards track partitions (shards >=
-        // partitions keeps every task busy)
-        Seq(32, 32, 128, 512, 32).foreach { parts =>
-          spark.conf.set("spark.sql.shuffle.partitions", parts)
-          spillMem.set(0); spillDisk.set(0); shufW.set(0)
-          val t = elapsed {
-            d.withColumn("shard", pmod(col("hv"), lit(parts)).cast("int"))
-              .withColumn("pos", row_number().over(
-                Window.partitionBy(col("shard"))
-                  .orderBy(col("hv"), col("doc_id"))))
-              .select(sum(col("pos").cast("long"))).collect()
-          }
-          Thread.sleep(1000) // listener bus drains async
-          println(f"[profile] epoch_shuffle n=50M parts=$parts%4d: $t%6.1f s" +
-            f"  spillMem=${spillMem.get / 1e9}%7.2f GB" +
-            f"  spillDisk=${spillDisk.get / 1e9}%6.2f GB" +
-            f"  shuffleWrite=${shufW.get / 1e9}%5.2f GB")
-        }
-        spark.conf.set("spark.sql.shuffle.partitions", cpus)
-      case "cc_dist" =>
-        // Stress the >cap distributed log-diameter branch of
-        // duplicateClusters — the one 100 TB-critical path the sub-cap
-        // contract graphs never exercise. Planted chain graph: nodes
-        // [0, n), edge (i, i+1) unless i ends a CHAIN-block → components
-        // are exactly the CHAIN-sized blocks, so expected labels are
-        // closed-form (block start) and verification needs no second CC
-        // implementation. Chains are the WORST case for label
-        // propagation (diameter = CHAIN−1); real near-dup graphs are
-        // denser and converge faster.
-        import org.apache.spark.sql.functions._
-        import graft.dedup.DedupOps
-        val chain = 1024L
-        def chainEdges(nNodes: Long) = spark.range(nNodes)
-          .filter(pmod(col("id"), lit(chain)) =!= (chain - 1))
-          .select(col("id").as("id_a"), (col("id") + 1).as("id_b"))
-        // 1) equality: driver union-find vs forced-distributed on the SAME
-        //    1M-edge graph (cap default = driver; cap 0 = distributed)
-        val eq = chainEdges(1000000L)
-        val viaDriver = DedupOps.duplicateClusters(eq).persist()
-        val viaDist = DedupOps.duplicateClusters(eq, driverEdgeCap = 0L).persist()
-        val only1 = viaDriver.exceptAll(viaDist).count()
-        val only2 = viaDist.exceptAll(viaDriver).count()
-        println(s"[profile] cc equality driver-vs-distributed @1M edges: " +
-          s"driverOnly=$only1 distOnly=$only2 " +
-          (if (only1 == 0 && only2 == 0) "IDENTICAL" else "MISMATCH"))
-        viaDriver.unpersist(); viaDist.unpersist()
-        // 2) scale: ~20M edges (10× the 2M driver cap) through the
-        //    distributed branch it naturally selects; verify every label
-        //    equals its block start, report convergence rounds vs the
-        //    log₂(diameter) bound
-        Seq(2000000L, 20000000L).foreach { nNodes =>
-          val edges = chainEdges(nNodes)
-          var labels: DataFrame = null
-          val t = elapsed {
-            labels = DedupOps.duplicateClusters(edges, driverEdgeCap = 0L)
-              .persist()
-            labels.count()
-          }
-          val bad = labels.filter(col("cluster_id") =!=
-            (col("doc_id") - pmod(col("doc_id"), lit(chain)))).count()
-          val rounds = DedupOps.lastDistributedRounds
-          println(f"[profile] cc_dist n=$nNodes%9d edges≈${nNodes - nNodes / chain}%9d " +
-            f"chain=$chain: $t%6.1f s  rounds=$rounds  wrongLabels=$bad " +
-            f"(log2 diameter=${math.ceil(math.log(chain.toDouble) / math.log(2)).toInt})")
-          labels.unpersist()
-        }
-      case "lsh_skew" =>
-        // Planted hot band-bucket for the LSH candidate self-join — the
-        // boilerplate-corpus worst case (FAM identical vectors collide in
-        // EVERY band, so each band carries one bucket of FAM rows whose
-        // self-join alone emits FAM²/2 pairs). rowsPerBand=16 keeps
-        // natural buckets tiny (~n/65k rows), isolating the planted skew.
-        import org.apache.spark.sql.functions._
-        import graft.sim.SimilarityOps
-        val n = 200000L; val fam = 4000L; val d = 64
-        def vec(idc: org.apache.spark.sql.Column) =
-          transform(sequence(lit(1), lit(d)),
-            i => (pmod(xxhash64(idc, i), lit(2000L)).cast("double") - 1000.0)
-              / 1000.0)
-        def sigOf(df: DataFrame) = SimilarityOps.bandedSignatures(
-          df, "id", "v", rowsPerBand = 16, nBands = 8).localCheckpoint(true)
-        val baseSig = sigOf(spark.range(n)
-          .select(col("id"), vec(col("id")).as("v")))
-        val hotSig = sigOf(spark.range(n).select(col("id"),
-          vec(when(col("id") < fam, lit(0L)).otherwise(col("id"))).as("v")))
-        def bandedOf(sig: DataFrame) = sig.select(col("id"),
-          posexplode(col("bands")).as(Seq("band", "bucket")))
-        // production pipeline (plain candidate join), with/without AQE
-        // skew-join — neither can nor needs to split the hot key
-        Seq(("true", "skewJoin on"), ("false", "skewJoin off")).foreach {
-          case (flag, lbl) =>
-            spark.conf.set("spark.sql.adaptive.skewJoin.enabled", flag)
-            time(s"pipeline no-hot  ($lbl)")(
-              SimilarityOps.cosinePairsLsh(baseSig, 0.9).count())
-            time(s"pipeline hot 4k  ($lbl)")(
-              SimilarityOps.cosinePairsLsh(hotSig, 0.9).count())
-            time(s"pipeline hot 4k  ($lbl) 2nd")(
-              SimilarityOps.cosinePairsLsh(hotSig, 0.9).count())
-        }
-        spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-        // candidate stage alone: plain vs the salted (rejected) shape
-        time("cands plain")(SimilarityOps.lshPairCandidates(hotSig).count())
-        time("cands plain 2nd")(SimilarityOps.lshPairCandidates(hotSig).count())
-        time("cands salted")(
-          SimilarityOps.bucketSelfJoinPairs(bandedOf(hotSig)).count())
-        time("cands salted 2nd")(
-          SimilarityOps.bucketSelfJoinPairs(bandedOf(hotSig)).count())
-        // parity: salted and plain must produce the identical pair set
-        val sP = SimilarityOps.bucketSelfJoinPairs(bandedOf(hotSig))
-        val uP = SimilarityOps.lshPairCandidates(hotSig)
-        println(s"[profile] salted-vs-plain diff: " +
-          s"${sP.exceptAll(uP).count()} / ${uP.exceptAll(sP).count()} (want 0 / 0)")
-      case "aqe_audit" =>
-        // AQE posture across the 5 most expensive contract queries (from
-        // BENCH_DETAIL r9): each config runs twice under Bench's exact
-        // isolation; compare the MINIMA (the box's ±15% band drowns single
-        // readings). Flags are runtime confs — fresh plans per run.
-        val top5 = Seq("q_corpus_clean", "q_corpus_clean_lsh",
-          "q_cosine_pairs", "q_cosine_pairs_lsh", "q_dedup_embed_lsh")
-        val configs = Seq(
-          ("aqe-off", Map("spark.sql.adaptive.enabled" -> "false")),
-          ("aqe-default", Map("spark.sql.adaptive.enabled" -> "true",
-            "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
-            "spark.sql.adaptive.skewJoin.enabled" -> "true")),
-          ("no-coalesce", Map("spark.sql.adaptive.enabled" -> "true",
-            "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
-            "spark.sql.adaptive.skewJoin.enabled" -> "true")),
-          ("no-skewjoin", Map("spark.sql.adaptive.enabled" -> "true",
-            "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
-            "spark.sql.adaptive.skewJoin.enabled" -> "false")))
-        for ((q, fn) <- graft.SparkEntry.queries.toSeq.sortBy(_._1)
-               if top5.contains(q); (cfg, confs) <- configs) {
-          confs.foreach { case (k, v) => spark.conf.set(k, v) }
-          val ts = (1 to 2).map { _ =>
-            val t = elapsed {
-              fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-            }
-            spark.catalog.clearCache()
-            spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-            t
-          }
-          println(f"[profile] $q%-22s $cfg%-12s min=${ts.min}%6.2f s  (${ts.map(t => f"$t%.2f").mkString(", ")})")
-        }
-        configs(1)._2.foreach { case (k, v) => spark.conf.set(k, v) }
-      case "star_cap" =>
-        // Quantify the star-edge bucket cap on the lsh_skew corpus: how
-        // much candidate volume the cap removes, what it costs in verified
-        // pairs, and whether the CLUSTERING result changes (it must not,
-        // for an identical-vector boilerplate family).
-        import org.apache.spark.sql.functions._
-        import graft.sim.SimilarityOps
-        val n = 200000L; val fam = 4000L; val d = 64
-        def vec(idc: org.apache.spark.sql.Column) =
-          transform(sequence(lit(1), lit(d)),
-            i => (pmod(xxhash64(idc, i), lit(2000L)).cast("double") - 1000.0)
-              / 1000.0)
-        def mkSig() = SimilarityOps.bandedSignatures(
-          spark.range(n).select(col("id"),
-            vec(when(col("id") < fam, lit(0L)).otherwise(col("id"))).as("v")),
-          "id", "v", rowsPerBand = 16, nBands = 8).localCheckpoint(true)
-        def verified(hotSig: DataFrame, cands: DataFrame) = {
-          val va = hotSig.select(col("id").as("id_a"), col("v").as("va"),
-            col("nv").as("na"))
-          val vb = hotSig.select(col("id").as("id_b"), col("v").as("vb"),
-            col("nv").as("nb"))
-          cands.join(va, Seq("id_a")).join(vb, Seq("id_b"))
-            .withColumn("cos", round(
-              graft.functions.VectorFunctions.vec_dot(col("va"), col("vb"))
-                / (col("na") * col("nb")), 6))
-            .filter(col("cos") >= 0.9)
-            .select("id_a", "id_b")
-        }
-        // each variant's big intermediates are freed before the next runs
-        // (the first pass's 13M-row resident checkpoints inflated the
-        // second variant's verify 7× — block-manager contamination, not
-        // plan cost); clusters compare as small collected sets
-        def runVariant(name: String, maxBucket: Int): (Long, Set[(Long, Long)]) = {
-          val hotSig = mkSig()
-          var cands: DataFrame = null
-          var pairs: DataFrame = null
-          time(s"$name: candidates") {
-            cands = SimilarityOps.lshPairCandidates(hotSig, maxBucket)
-              .localCheckpoint(true)
-            cands.count()
-          }
-          time(s"$name: verify") {
-            pairs = verified(hotSig, cands).localCheckpoint(true)
-            pairs.count()
-          }
-          val np = pairs.count()
-          val clusters = graft.dedup.DedupOps.duplicateClusters(pairs)
-            .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-          (np, clusters)
-        }
-        val (nCap, cCap) = runVariant("capped(2048)", 2048)
-        val (nPlain, cPlain) = runVariant("plain", Int.MaxValue)
-        val diff = (cPlain diff cCap).size + (cCap diff cPlain).size
-        println(s"[profile] star_cap: verified pairs $nPlain -> $nCap " +
-          s"(${"%.1f".format(100.0 * nCap / math.max(nPlain, 1))}%), " +
-          s"cluster diff rows=$diff (want 0)")
-      case "explain" =>
-        graft.SparkEntry.queries(args(2))(spark, sfDir).explain("formatted")
-      case "gram" =>
-        // GramMicroAgg scaling: synthetic d=64 vectors (hash-derived,
-        // materialized before timing so only the aggregate pass is timed)
-        import org.apache.spark.sql.functions._
-        Seq(1L, 1L, 10L, 100L).foreach { times =>
-          val n = 2000L * times
-          val d = spark.range(n).select(col("id"),
-            transform(sequence(lit(1), lit(64)),
-              i => (pmod(xxhash64(col("id"), i), lit(2000L)).cast("double")
-                - 1000.0) / 1000.0).as("v"))
-            .persist()
-          d.count()
-          val t = elapsed {
-            d.agg(graft.functions.GramMicroAgg.gram_micro(col("v"), 64)).collect()
-          }
-          println(f"[profile] ${times}%3d× (${n}%7d vecs, d=64): gram_micro $t%6.2f s")
-          d.unpersist()
-        }
-      case "retrieval_scale" =>
-        // BM25's structural claim (RetrievalOps scaladoc): the broadcast
-        // query-term filter lands BEFORE the postings aggregate, so the
-        // shuffled frame is bounded by MATCHING tokens — vs the naive
-        // formulation that aggregates the full corpus postings and
-        // filters after. Both produce identical results; measure both at
-        // replica scale, plus the shipped hybrid fusion.
-        import org.apache.spark.sql.functions._
-        import spark.implicits._
-        val d0 = graft.tables.Tables.documents(spark, sfDir)
-          .select("doc_id", "text")
-        val nd0 = d0.count()
-        val stride = d0.agg(max("doc_id")).first().getLong(0) + 1
-        def docsX(times: Int): DataFrame =
-          (0 until times).map { i =>
-            d0.select((col("doc_id") + lit(i * stride)).as("doc_id"),
-              col("text"))
-          }.reduce(_ unionByName _)
-        val q = graft.queries.RetrievalQueries.Bm25Queries.toDF("query_id", "term")
-        def naiveBm25(docs: DataFrame): DataFrame = {
-          // aggregate-then-filter: the full (doc, term) postings frame
-          // crosses the exchange before the query terms prune it
-          val toks = docs
-            .select(col("doc_id"), graft.text.TextOps.wsTokens(lower(col("text"))).as("ts"))
-            .select(col("doc_id"), size(col("ts")).cast("double").as("dl"),
-              explode(col("ts")).as("term"))
-          val stats = docs
-            .select(size(graft.text.TextOps.wsTokens(lower(col("text"))))
-              .cast("double").as("dl0"))
-            .agg(count(lit(1)).cast("double").as("n_docs"), avg("dl0").as("avgdl"))
-          val terms = q.select(col("query_id").cast("long").as("query_id"),
-            col("term")).distinct()
-          val tf = toks.groupBy("doc_id", "term")
-            .agg(count(lit(1)).cast("double").as("tf"), first(col("dl")).as("dl"))
-          val dfreq = tf.groupBy("term").agg(count(lit(1)).cast("double").as("df"))
-          val matched = tf.join(broadcast(terms), Seq("term"))
-          matched.join(broadcast(dfreq.join(terms.select("term").distinct(), Seq("term"))),
-              Seq("term"))
-            .crossJoin(broadcast(stats))
-            .withColumn("cn", round(
-              log(lit(1.0) + (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
-                * col("tf") * lit(2.2)
-                / (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl")))
-              * 1e9, 0).cast("long"))
-            .groupBy("query_id", "doc_id")
-            .agg(round(sum(col("cn")).cast("double") / 1e9, 6).as("score"))
-        }
-        // two corpus shapes: the synthetic testdata re-uses a ~100-word
-        // vocabulary (map-side combine collapses the full postings frame
-        // almost for free — the formulations should tie), and a
-        // hapax-tailed variant appending 20 unique tokens per doc (the
-        // realistic long-tail term distribution: roughly half of any real
-        // corpus's postings are near-hapax). The pre-filter drops the
-        // tail BEFORE the exchange; agg-then-filter shuffles it.
-        def withTail(d: DataFrame): DataFrame = d.select(col("doc_id"),
-          concat(col("text"), lit(" "), array_join(
-            transform(sequence(lit(1), lit(20)),
-              i => concat(lit("u"), col("doc_id"), lit("x"), i)), " ")).as("text"))
-        Seq(("common-vocab", identity[DataFrame] _),
-            ("hapax-tail", withTail _)).foreach { case (shape, mk) =>
-          Seq(1, 1, 10, 50).foreach { times =>
-            val d = mk(docsX(times)).repartition(32).persist(); d.count()
-            val shipped = elapsed(force(
-              graft.text.RetrievalOps.bm25TopK(d, "doc_id", "text", q, 10)))
-            val naive = elapsed(force(
-              graft.text.RetrievalOps.rankTopK(naiveBm25(d),
-                "query_id", "doc_id", "score", 10)))
-            println(f"[profile] $shape%-12s ${times}%3d× (${nd0 * times}%8d docs): " +
-              f"bm25_prefiltered $shipped%6.1f s  bm25_agg_then_filter $naive%6.1f s")
-            d.unpersist()
-          }
-        }
-        time("q_hybrid_rrf (shipped, 1×)")(
-          force(graft.SparkEntry.queries("q_hybrid_rrf")(spark, sfDir)))
-      case "index_scale" =>
-        // Persisted-IVF claim (IndexOps scaladoc): the build pays the
-        // assignment once; each search then reads only the probed cell
-        // partitions, where the recompute path (ivfTopK) re-assigns the
-        // whole corpus per search. Measure build / index-search /
-        // recompute-search at replica scale, plus the pruned-vs-total
-        // file counts behind the I/O claim.
-        import org.apache.spark.sql.functions._
-        val e0 = graft.tables.Tables.embeddings(spark, sfDir)
-        val nv0 = e0.count()
-        val stride = e0.agg(max("vec_id")).first().getLong(0) + 1
-        def embX(times: Int): DataFrame =
-          (0 until times).map { i =>
-            e0.select((col("vec_id") + lit(i * stride)).as("vec_id"),
-              col("embedding"))
-          }.reduce(_ unionByName _)
-        Seq(1, 1, 10, 50).foreach { times =>
-          val e = embX(times).repartition(32).persist(); e.count()
-          val cent = e.select(col("vec_id").as("cell"), col("embedding").as("cv"))
-            .orderBy("cell").limit(16)
-          val dir = s"/tmp/graft_index_profile/x$times/ivf"
-          val build = elapsed(
-            graft.sim.IndexOps.buildIvfIndex(e, "vec_id", "embedding", cent, dir))
-          // batch shape: 100 queries × 2 probes union-cover all 16 cells
-          // (no pruning left to exploit — the honest caveat); the pruning
-          // claim is the SERVING shape, so also measure a 1-query search,
-          // where the index reads 2 of 16 cell directories and the
-          // recompute path re-assigns the whole corpus
-          val queries = e.filter(col("vec_id") % 10 === 0 && col("vec_id") < 1000)
-            .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-            .localCheckpoint(true)
-          val oneQ = queries.filter(col("query_id") === 0).localCheckpoint(true)
-          val viaIndex = elapsed(force(
-            graft.sim.IndexOps.queryIvfIndex(spark, dir, queries, k = 5, nProbe = 2)))
-          val recompute = elapsed(force(
-            graft.sim.SimilarityOps.ivfTopK(e, "vec_id", "embedding",
-              querySelector = 10, k = 5, nCells = 16, nProbe = 2)
-              .filter(col("query_id") < 1000)))
-          val idx1q = elapsed(force(
-            graft.sim.IndexOps.queryIvfIndex(spark, dir, oneQ, k = 5, nProbe = 2)))
-          val rec1q = elapsed(force(
-            graft.sim.SimilarityOps.ivfTopKFrom(e, "vec_id", "embedding",
-              cent, querySelector = stride * times, k = 5, nProbe = 2)))
-          val all = spark.read.parquet(s"$dir/postings")
-          val total = all.select(input_file_name()).distinct().count()
-          // files one query's 2 probed cells actually scan, via the same
-          // pruned-read shape queryIvfIndex builds
-          val probedCells = graft.sim.SimilarityOps.probeCells(
-              oneQ.select(col("query_id").as("id"), col("qv").as("v"),
-                graft.sim.SimilarityOps.l2norm(col("qv")).as("nv")),
-              spark.read.parquet(s"$dir/centroids"), 2)
-            .select("cell").distinct().collect().map(_.get(0))
-          val probedFiles = all.filter(col("cell").isin(probedCells.toIndexedSeq: _*))
-            .select(input_file_name()).distinct().count()
-          println(f"[profile] ${times}%3d× (${nv0 * times}%8d vecs): " +
-            f"build $build%6.1f s  search100q idx $viaIndex%5.1f s / " +
-            f"recompute $recompute%5.1f s  search1q idx $idx1q%5.1f s / " +
-            f"recompute $rec1q%5.1f s  files 1q $probedFiles/$total")
-          e.unpersist()
-        }
-      case "skip_scale" =>
-        // SkipIndex claim: pruning cost is metadata-flat while the
-        // benefit (scan fraction avoided) GROWS with archive span — a
-        // fixed 3-day window reads 3/30 of a 1-month archive but
-        // 3/(30·N) of an N-month one. Replicate events with ts shifted
-        // +31 days per replica (archive span grows, density constant),
-        // then measure: index-build time (footer pass), pruned-vs-total
-        // file counts and bytes, and pruned-query vs full-filter-query
-        // wall time.
-        import org.apache.spark.sql.functions._
-        val ev0 = graft.tables.Tables.events(spark, sfDir)
-          .select("event_id", "ts", "user_id", "event_type", "value")
-        val n0 = ev0.count()
-        Seq(1, 1, 4, 12).foreach { months =>
-          val ev = (0 until months).map { i =>
-            ev0.select(col("event_id"), (col("ts") +
-              expr(s"INTERVAL ${i * 31} DAYS")).as("ts"),
-              col("user_id"), col("event_type"), col("value"))
-          }.reduce(_ unionByName _)
-          val dir = s"/tmp/graft_skip_profile/x$months/events_flat"
-          val wbuild = elapsed(graft.sources.SkipIndex.writeTimeClustered(
-            ev, "ts", dir, numFiles = 32 * months))
-          var idx: DataFrame = null
-          val ibuild = elapsed {
-            idx = graft.sources.SkipIndex.buildFooterIndex(spark, dir, "ts")
-              .persist(); idx.count(): Unit
-          }
-          val lo = java.time.Instant.parse("2024-01-10T00:00:00Z")
-          val hi = java.time.Instant.parse("2024-01-13T00:00:00Z")
-          val picked = graft.sources.SkipIndex.pruneFiles(idx,
-            lo.getEpochSecond * 1000000L, hi.getEpochSecond * 1000000L)
-          val (kept, total) = (picked.count(), idx.count())
-          val keptBytes = picked.agg(sum("bytes")).first().getLong(0)
-          val totalBytes = idx.agg(sum("bytes")).first().getLong(0)
-          def winAgg(df: DataFrame): DataFrame = df
-            .filter(col("ts") >= lit(java.sql.Timestamp.from(lo)) &&
-                    col("ts") < lit(java.sql.Timestamp.from(hi)))
-            .groupBy(to_date(col("ts")).as("day"))
-            .agg(count(lit(1)).as("n"), avg("value").as("m"))
-          val tPruned = elapsed(force(
-            winAgg(graft.sources.SkipIndex.readFiles(spark, picked))))
-          val tFull = elapsed(force(winAgg(spark.read.parquet(dir))))
-          println(f"[profile] ${months}%3d mo (${n0 * months}%8d rows): " +
-            f"write $wbuild%5.1f s  footer-index $ibuild%5.1f s  " +
-            f"files $kept%3d/$total%3d  bytes ${keptBytes / 1024}%6d/" +
-            f"${totalBytes / 1024}%6d KiB  query pruned $tPruned%5.2f s " +
-            f"/ full $tFull%5.2f s")
-          idx.unpersist()
-        }
-
-      case "zorder_skip" =>
-        // Zone maps are only as good as the CLUSTERING: on a
-        // time-clustered layout, per-file user_id ranges span the whole
-        // domain and a user predicate prunes nothing; z-ordering
-        // (user, hour) bounds BOTH dimensions per file, so the SAME
-        // footer index prunes on either — the ZOrder2 kernel and the
-        // skip index composed into the 2-D data-skipping story.
-        import org.apache.spark.sql.functions._
-        val ev = graft.tables.Tables.events(spark, sfDir)
-          .select("event_id", "ts", "user_id", "event_type", "value")
-        val flatT = "/tmp/graft_zskip/time"
-        graft.sources.SkipIndex.writeTimeClustered(ev, "ts", flatT)
-        val flatZ = "/tmp/graft_zskip/zord"
-        spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-        ev.withColumn("x", col("user_id").cast("int"))
-          .withColumn("y", floor((unix_micros(col("ts")) - lit(1704067200000000L))
-            / lit(3.6e9)).cast("int"))
-          .withColumn("zv", graft.functions.ZOrder2.z_order(col("x"), col("y"))
-            - lit(4611686018427387904L))
-          .withColumn("zb", shiftright(col("zv"), 14))
-          .repartition(32, col("zb"))
-          .sortWithinPartitions("zv")
-          .drop("x", "y", "zv", "zb")
-          .write.mode("overwrite").parquet(flatZ)
-        Seq(("time-clustered", flatT), ("z-ordered", flatZ)).foreach {
-          case (label, dir) =>
-            val idxU = graft.sources.SkipIndex.buildFooterIndex(spark, dir, "user_id")
-            val keptU = graft.sources.SkipIndex.pruneFiles(idxU, 100L, 150L).count()
-            val idxT = graft.sources.SkipIndex.buildFooterIndex(spark, dir, "ts")
-            val lo = java.time.Instant.parse("2024-01-10T00:00:00Z")
-            val hi = java.time.Instant.parse("2024-01-13T00:00:00Z")
-            val keptT = graft.sources.SkipIndex.pruneFiles(idxT,
-              lo.getEpochSecond * 1000000L, hi.getEpochSecond * 1000000L).count()
-            val total = idxU.count()
-            // sanity: pruned read reproduces the full-filter answer
-            val pruned = graft.sources.SkipIndex.readFiles(spark,
-              graft.sources.SkipIndex.pruneFiles(idxU, 100L, 150L))
-              .filter(col("user_id") >= 100L && col("user_id") < 150L).count()
-            val full = spark.read.parquet(dir)
-              .filter(col("user_id") >= 100L && col("user_id") < 150L).count()
-            require(pruned == full, s"$label: pruned $pruned != full $full")
-            println(f"[profile] $label%-15s files: user-range $keptU%3d/$total%3d  " +
-              f"3-day window $keptT%3d/$total%3d  (rows in user range: $full)")
-        }
-
-      case "knn_scale" =>
-        // kNN-graph claim: exact block-pair work grows n², the IVF
-        // cell-join Σ|cell|·|probes| ≈ n²·(nProbe/nCells) with constant
-        // cells — and at REAL scale nCells grows ~√n, making it
-        // sub-quadratic. Measure both paths' wall time and the scored
-        // candidate-pair counts at 1×/10×, IVF alone at 50×.
-        import org.apache.spark.sql.functions._
-        val e0 = graft.tables.Tables.embeddings(spark, sfDir)
-        val nv0 = e0.count()
-        val stride = e0.agg(max("vec_id")).first().getLong(0) + 1
-        Seq(1, 1, 10, 50).foreach { times =>
-          val e = (0 until times).map { i =>
-            e0.select((col("vec_id") + lit(i * stride)).as("vec_id"),
-              col("embedding"))
-          }.reduce(_ unionByName _).repartition(32).persist()
-          val n = e.count()
-          // centroids come from the DISTINCT original vectors (replicas
-          // would duplicate centroids and degenerate the quantizer)
-          def centK(nc: Int): DataFrame =
-            e0.select(col("vec_id").as("cell"), col("embedding").as("cv"))
-              .orderBy("cell").limit(nc)
-          def runIvf(nc: Int): (Double, Long) = {
-            val cent = centK(nc)
-            val t = elapsed(force(graft.sim.SimilarityOps.knnJoinIvf(
-              e, "vec_id", "embedding", cent, k = 5, nProbe = 2)))
-            val probes = graft.sim.SimilarityOps.corpusProbes(
-              e, "vec_id", "embedding", cent, 2)
-            val cands = probes.filter(col("probe_rank") === 1)
-              .groupBy("cell").agg(count(lit(1)).as("nc"))
-              .join(probes.groupBy("cell").agg(count(lit(1)).as("np")), "cell")
-              .agg(sum(col("nc") * col("np"))).first().getLong(0)
-            (t, cands)
-          }
-          // fixed 16 cells (the contract-query quantizer) vs ~√n cells
-          // (the FAISS sizing rule) — constant cells stop scaling: 16
-          // join keys bound both parallelism and the candidate fraction
-          val (t16, c16) = runIvf(16)
-          val ncScaled = 16 * math.ceil(math.sqrt(times.toDouble)).toInt
-          val (tS, cS) = runIvf(ncScaled)
-          val tExact = if (times <= 10)
-            elapsed(force(graft.sim.SimilarityOps.knnJoin(
-              e, "vec_id", "embedding", k = 5)))
-            else Double.NaN
-          println(f"[profile] ${times}%3d× ($n%7d vecs): ivf16 $t16%6.1f s " +
-            f"(${c16.toDouble / (n.toDouble * n)}%.4f of n²)  " +
-            f"ivf$ncScaled%d $tS%6.1f s (${cS.toDouble / (n.toDouble * n)}%.4f)" +
-            f"  exact $tExact%6.1f s")
-          e.unpersist()
-        }
-
-      case "behavior_scale" =>
-        // Scale evidence for the session's additions.
-        // (a) binned interval join: the June-slice contract vs its naive
-        //     theta twin (Spark broadcasts the small side → nested-loop,
-        //     |o_June|·|lineitem| comparisons), then the ALL-orders run
-        //     the naive plan could never survive (|o|·|li| ≈ 9e10 at
-        //     sf1): the binned cost is Σ_bin |A_bin|·|B_bin| and should
-        //     grow ~linearly in the slice width.
-        import org.apache.spark.sql.functions._
-        import graft.ops.JoinOps
-        def ordersSlice(lo: String, hi: String) =
-          graft.tables.Tables.orders(spark, sfDir)
-            .filter(col("o_orderdate") >= lit(lo).cast("timestamp") &&
-                    col("o_orderdate") <  lit(hi).cast("timestamp"))
-            .select(col("o_orderkey"), col("o_orderdate"),
-              (col("o_orderdate") + expr("INTERVAL 170 HOURS")).as("o_end"))
-        val li = graft.tables.Tables.lineitem(spark, sfDir)
-          .select(col("l_orderkey"), col("l_shipdate"), col("l_quantity"))
-        def agg(j: org.apache.spark.sql.DataFrame) =
-          j.groupBy("o_orderkey").agg(count(lit(1)).as("n")).count()
-        val june = ordersSlice("1995-06-01 00:00:00", "1995-07-01 00:00:00")
-        time("range join June: binned")(
-          agg(JoinOps.binnedIntervalJoin(june, "o_orderdate", "o_end", li, "l_shipdate")))
-        time("range join June: naive theta (BNLJ)")(
-          agg(june.join(li, col("l_shipdate") >= col("o_orderdate") &&
-            col("l_shipdate") < col("o_end"))))
-        val all = ordersSlice("1990-01-01 00:00:00", "2010-01-01 00:00:00")
-        time("range join ALL orders: binned")(
-          agg(JoinOps.binnedIntervalJoin(all, "o_orderdate", "o_end", li, "l_shipdate")))
-        // (b) triangles: contract-sized kNN graph, then a planted
-        //     degree-100k hub star unioned onto a real edge set — the
-        //     naive wedge join would enumerate 1e10 hub wedges; the
-        //     degree orientation must keep it flat.
-        val e = graft.tables.Tables.embeddings(spark, sfDir)
-        val cent = e.select(col("vec_id").as("cell"), col("embedding").as("cv"))
-          .orderBy("cell").limit(16)
-        val knn = graft.sim.SimilarityOps.knnJoinIvf(
-          e, "vec_id", "embedding", cent, k = 5, nProbe = 2)
-          .select(col("query_id").as("a"), col("neighbor_id").as("b"))
-          .localCheckpoint(true)
-        time("triangles: kNN graph")(
-          graft.graph.GraphOps.triangleCounts(knn, "a", "b").count())
-        val hub = spark.range(100000L)
-          .select(lit(-1L).as("a"), (col("id") + 1000000L).as("b"))
-        time("triangles: kNN + planted degree-1e5 hub")(
-          graft.graph.GraphOps.triangleCounts(
-            knn.unionByName(hub), "a", "b").count())
-
-      case "s6_scale" =>
-        // Session-6 additions under 1×/10× growth. Three claims:
-        // (a) ACF / seasonal-decomp / changepoint are two-level — the
-        //     scan dominates and the rollup-side windows stay
-        //     calendar-bounded, so wall grows ~linearly with rows (time
-        //     replication also grows the hour/day rollup linearly, the
-        //     worst case for the claim);
-        // (b) BFS / min-cost relaxation grow ~linearly in EDGES when
-        //     the graph grows as disjoint copies (key-offset
-        //     replication — realistic sharded-corpus growth, keeps
-        //     per-round frontier joins equi-key);
-        // (c) snapshot commit+read overhead is the data write cost —
-        //     manifests are O(files) and never rescan history.
-        import org.apache.spark.sql.functions._
-        val ev0 = graft.tables.Tables.events(spark, sfDir)
-          .select("event_id", "ts", "user_id", "event_type", "value")
-        val li0 = graft.tables.Tables.lineitem(spark, sfDir)
-          .select("l_partkey", "l_suppkey", "l_quantity")
-        val (maxP, maxS) = {
-          val r = li0.agg(max("l_partkey"), max("l_suppkey")).head
-          (r.getLong(0) + 1, r.getLong(1) + 1)
-        }
-        val spanDays = 31L
-        def evX(times: Int): DataFrame =
-          (0 until times).map { i =>
-            ev0.select(
-              (col("ts") + expr(s"INTERVAL ${i * spanDays} DAYS")).as("ts"),
-              col("event_type"), col("value"))
-          }.reduce(_ unionByName _)
-        def liX(times: Int): DataFrame =
-          (0 until times).map { i =>
-            li0.select((col("l_partkey") + lit(i * maxP)).as("l_partkey"),
-              (col("l_suppkey") + lit(i * maxS)).as("l_suppkey"),
-              col("l_quantity"))
-          }.reduce(_ unionByName _)
-        Seq(1, 1, 10).foreach { times =>
-          val evDir = s"/tmp/graft_profile_s6/ev_x$times"
-          val liDir = s"/tmp/graft_profile_s6/li_x$times"
-          if (!new java.io.File(evDir, "_SUCCESS").exists())
-            evX(times).write.mode("overwrite").parquet(evDir)
-          if (!new java.io.File(liDir, "_SUCCESS").exists())
-            liX(times).write.mode("overwrite").parquet(liDir)
-          val ev = spark.read.parquet(evDir)
-          val li = spark.read.parquet(liDir)
-
-          // (a) the three rollup-windowed stats, inlined on the scaled
-          // events (same plans as q_acf/q_seasonal_decomp/q_changepoint)
-          val hourly = ev.groupBy(col("event_type"),
-              expr("unix_micros(ts) div 3600000000").as("hb"))
-            .agg(sum(round(col("value") * 1e6, 0).cast("long"))
-              .cast("decimal(38,0)").as("x")).localCheckpoint(true)
-          val acf = elapsed(force(hourly
-            .withColumn("lag", explode(array((1 to 3).map(lit): _*)))
-            .join(hourly.select(col("event_type").as("et2"),
-                col("hb").as("hb2"), col("x").as("y")),
-              col("et2") === col("event_type") &&
-                col("hb2") === col("hb") + col("lag"))
-            .groupBy("event_type", "lag")
-            .agg(count(lit(1)).as("n"), sum(col("x") * col("y")).as("sxy"))))
-          val daily = ev.groupBy(col("event_type"),
-              to_date(col("ts")).as("day"))
-            .agg(sum(round(col("value") * 1e6, 0).cast("long")).as("x"))
-          val wOrd = org.apache.spark.sql.expressions.Window
-            .partitionBy("event_type").orderBy("day")
-          val cusum = elapsed(force(daily
-            .withColumn("idx", row_number().over(wOrd).cast("long"))
-            .withColumn("prefix", sum(col("x")).over(wOrd.rowsBetween(
-              org.apache.spark.sql.expressions.Window.unboundedPreceding,
-              org.apache.spark.sql.expressions.Window.currentRow)))))
-
-          // (b) graph rounds on the 10× disjoint-copy graph
-          val pairs = li.groupBy(col("l_partkey"), col("l_suppkey"))
-            .agg(min(col("l_quantity")).cast("long").as("w"))
-          val edges = pairs.select(
-              concat(lit("p"), col("l_partkey")).as("src"),
-              concat(lit("s"), col("l_suppkey")).as("dst"), col("w"))
-            .unionByName(pairs.select(
-              concat(lit("s"), col("l_suppkey")).as("src"),
-              concat(lit("p"), col("l_partkey")).as("dst"), col("w")))
-          val seeds = pairs.select(col("l_suppkey")).distinct()
-            .filter(col("l_suppkey") % 20 === 0)
-            .select(concat(lit("s"), col("l_suppkey")).as("node"))
-          val nEdges = edges.count()
-          val bfs = elapsed(force(graft.graph.GraphOps.bfsHops(
-            edges.select("src", "dst"), seeds, 3)))
-          val sssp = elapsed(force(graft.graph.GraphOps.minCostPaths(
-            edges, seeds, 3)))
-
-          // (c) snapshot commit + versioned read on the scaled events
-          val snapDir = s"/tmp/graft_profile_s6/snap_x$times"
-          val sp = new org.apache.hadoop.fs.Path(snapDir)
-          val pfs = sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (pfs.exists(sp)) { pfs.delete(sp, true): Unit }
-          val half = ev.filter(dayofmonth(col("ts")) <= 15)
-          val rest = ev.filter(dayofmonth(col("ts")) > 15)
-          val snap = elapsed {
-            graft.sources.Snapshots.commitAppend(spark, snapDir, half)
-            graft.sources.Snapshots.commitAppend(spark, snapDir, rest)
-            force(graft.sources.Snapshots.readSnapshot(spark, snapDir, 0)): Unit
-            force(graft.sources.Snapshots.readSnapshot(spark, snapDir, 1)): Unit
-          }
-          println(f"[profile] x$times%-3d acf $acf%6.2f s  cusum-win " +
-            f"$cusum%6.2f s  bfs(3) $bfs%6.2f s  sssp(3) $sssp%6.2f s " +
-            f" snapshots $snap%6.2f s  (edges=$nEdges)")
         }
 
       case "cells" =>
         // re-measure a comma-separated list of contract queries, each
-        // cold+warm under Bench's isolation (clearCache + unpersist-all
-        // between passes), all in ONE JVM — for patching bench-detail
-        // cells that landed in a co-tenant contention window without
-        // paying a full-suite re-run. Prints machine-greppable lines.
+        // for `passes` passes (default 2: cold then warm) under Bench's
+        // isolation, all in ONE JVM — for patching bench-detail cells
+        // that landed in a co-tenant contention window without paying a
+        // full-suite re-run, and (passes > 2) for separating intrinsic
+        // steady-state cost from accumulation effects (block-store
+        // pressure, codegen eviction, GC). Machine-greppable lines.
+        val passes = args.lift(3).map(_.toInt).getOrElse(2)
         args(2).split(",").map(_.trim).filter(_.nonEmpty).foreach { q =>
-          val run = () => {
-            val dt = elapsed(force(graft.SparkEntry.queries(q)(spark, sfDir)))
-            spark.catalog.clearCache()
-            spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-            dt
+          (1 to passes).foreach { i =>
+            println(f"[cells] $q pass $i ${pass(q)}%.3f s")
           }
-          val cold = run(); val warm = run()
-          println(f"[cells] $q cold=$cold%.3f warm=$warm%.3f")
         }
 
       case "jobs" =>
@@ -1968,17 +181,15 @@ object Profile {
           }
         }
         spark.sparkContext.addSparkListener(listener)
-        (1 to 2).foreach { pass =>
+        (1 to 2).foreach { p =>
           jobs.clear()
           val t0 = System.currentTimeMillis()
-          val dt = elapsed(force(graft.SparkEntry.queries(q)(spark, sfDir)))
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+          val dt = pass(q)
           Thread.sleep(300) // listener drain
           val js = jobs.values.asScala.toSeq.sortBy(_.sub)
           var cursor = t0
           var gapTotal = 0L; var jobTotal = 0L
-          println(f"[jobs] $q pass $pass: wall $dt%.2f s, ${js.size} jobs")
+          println(f"[jobs] $q pass $p: wall $dt%.2f s, ${js.size} jobs")
           js.foreach { j =>
             val gap = j.sub - cursor
             gapTotal += math.max(0L, gap); jobTotal += (j.fin - j.sub)
@@ -1991,24 +202,6 @@ object Profile {
             f"(wall ${(dt * 1000).toLong}%d ms)")
         }
         spark.sparkContext.removeSparkListener(listener)
-
-      case "repeat" =>
-        // run one contract query N times under Bench's exact isolation
-        // (clearCache + unpersist-all after each pass) and print each
-        // pass — the trend separates intrinsic steady-state cost from
-        // accumulation effects (block-store pressure, codegen eviction,
-        // GC) that a single cold/warm pair can't
-        val q = args(2)
-        val n = if (args.length > 3) args(3).toInt else 4
-        (1 to n).foreach { i =>
-          val dt = elapsed(force(graft.SparkEntry.queries(q)(spark, sfDir)))
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-          println(f"[profile] $q pass $i: $dt%8.2f s")
-        }
-      case q =>
-        time(q)(force(graft.SparkEntry.queries(q)(spark, sfDir)))
-        time(q + " (2nd)")(force(graft.SparkEntry.queries(q)(spark, sfDir)))
     }
     spark.stop()
   }

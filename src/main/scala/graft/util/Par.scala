@@ -1,5 +1,6 @@
 package graft.util
 
+import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Executors, TimeUnit}
 import org.apache.spark.sql.DataFrame
 
 /** Source-grain parallelism repair (guide §2.5 "input skew: one huge
@@ -43,5 +44,27 @@ object Par {
     // planning-only probe (no job): the physical scan's split count
     val n = df.rdd.getNumPartitions
     if (n * 2 >= par) df else df.repartition(par)
+  }
+
+  /** Run independent jobs (e.g. writes to disjoint paths) on a pool of
+    * `threads`, submitted in `tasks` order, so the tail of one job
+    * back-fills the executors the next needs (guide §2.6). Returns once
+    * every task has finished. The first task to fail rethrows its own
+    * exception (not the `ExecutionException` wrapper), after the pool is
+    * shut down with interrupts and drained: queued tasks never start and
+    * no running sibling outlives the call. */
+  def overlap(threads: Int)(tasks: Seq[() => Unit]): Unit = {
+    val pool = Executors.newFixedThreadPool(threads)
+    val done = new ExecutorCompletionService[Unit](pool)
+    try {
+      tasks.foreach(t => done.submit(() => t()))
+      tasks.foreach { _ =>
+        try done.take().get()
+        catch { case e: ExecutionException => throw e.getCause }
+      }
+    } finally {
+      pool.shutdownNow()
+      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+    }
   }
 }

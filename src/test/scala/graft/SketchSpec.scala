@@ -273,4 +273,38 @@ class SketchSpec extends AnyFunSuite {
     assert(est - exact <= math.ceil(math.E * ev * or / 512.0).toLong,
       s"est $est exceeds the εN·M bound over exact $exact")
   }
+
+  test("LongArrayAgg base: serde round trip and order-free partial merge " +
+      "for cms_sketch, hist_sketch, minhash_sig and gram_micro") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types._
+    import graft.functions._
+    val rng = new scala.util.Random(7)
+    def in(t: DataType) = BoundReference(0, t, nullable = true)
+    def arr(xs: Array[_]) = InternalRow(new GenericArrayData(xs))
+    val cases: Seq[(String, LongArrayAgg, Seq[InternalRow])] = Seq(
+      ("cms_sketch", CmsSketchAgg(in(ArrayType(LongType)), 3, 16),
+        Seq.fill(300)(arr(Array.fill(3)(rng.nextInt(16).toLong)))),
+      ("hist_sketch", HistogramAgg(in(DoubleType), -1.0, 1.0, 8),
+        Seq.fill(300)(InternalRow(rng.nextGaussian()))),
+      ("minhash_sig", MinHashSigAgg(in(LongType), 16, 42L),
+        Seq.fill(300)(InternalRow(rng.nextLong()))),
+      ("gram_micro", GramMicroAgg(in(ArrayType(DoubleType)), 4),
+        Seq.fill(300)(arr(Array.fill(4)(rng.nextDouble() - 0.5)))))
+    cases.foreach { case (name, agg, rows) =>
+      def fold(rs: Seq[InternalRow]) =
+        rs.foldLeft(agg.createAggregationBuffer())(agg.update)
+      val single = fold(rows)
+      val bytes = agg.serialize(single)
+      assert(bytes.length == 8 * single.length, name)
+      assert(agg.deserialize(bytes).sameElements(single), s"$name: serde")
+      val (l, r) = rows.splitAt(rows.size / 3)
+      assert(agg.merge(fold(l), fold(r)).sameElements(single), s"$name: l+r")
+      assert(agg.merge(fold(r), fold(l)).sameElements(single), s"$name: r+l")
+      assert(agg.merge(agg.createAggregationBuffer(), fold(rows)).sameElements(single),
+        s"$name: the empty buffer is the merge identity")
+    }
+  }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.SkipIndex
+import graft.sources.{PartitionedArchive, SkipIndex}
 import graft.tables.Tables
 
 /** Zone-map skip index + compaction (SkipIndex): the footer-only index
@@ -198,7 +198,7 @@ class SkipIndexSpec extends AnyFunSuite {
     val base = Tables.events(spark, TestSpark.Sf0001)
       .withColumn("trace_id", md5(col("event_id").cast("string")))
       .select("event_id", "ts", "trace_id", "value")
-    SkipIndex.withMicrosTimestamps(base) {
+    PartitionedArchive.withMicrosTimestamps(base) {
       base.repartition(96, col("event_id"))
         .write.mode("overwrite").parquet(dir)
     }
