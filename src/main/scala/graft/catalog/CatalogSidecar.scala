@@ -1,7 +1,5 @@
 package graft.catalog
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -30,10 +28,11 @@ import graft.sources.{PartitionedArchive, SkipIndex}
   *    ROWS — `AmbientService.fromFrames` semantics, kept bit-identical so
   *    the sidecar is invisible to every consumer).
   *
-  * Freshness needs no markers and no writer hooks: [[load]] diffs the
-  * persisted index against the live listing — new files (batch ingest,
-  * plain appends, compaction rewrites) get O(new) footer reads; rows for
-  * deleted files drop out of the kept set.
+  * Freshness needs no markers and no writer hooks: [[load]] is the one
+  * index maintainer, [[SkipIndex.load]], which diffs the persisted index
+  * against the live listing — new files (batch ingest, plain appends,
+  * compaction rewrites) get O(new) footer reads; rows for deleted files
+  * drop out of the kept set.
   *
   * EVERYTHING here is metadata-scale (one row per FILE — ~1e5 rows at
   * 100 TB), so the whole bootstrap path runs ON THE DRIVER: the listing
@@ -41,176 +40,31 @@ import graft.sources.{PartitionedArchive, SkipIndex}
   * the parquet-hadoop record reader (no Spark job, no datasource
   * resolution), and the inventory is a driver fold. Spark enters only
   * where scale genuinely needs it: a distributed footer-read fan-out when
-  * a refresh finds MANY new files (> [[FanOutThreshold]] — initial builds
-  * over large archives), the bounded data-scan fallback for stats-less
-  * files, and the index persist (a 1-task write, paid only when the
-  * listing changed). A restart with an up-to-date sidecar therefore costs
-  * a few milliseconds of FS metadata — vs 9–29 s for the recompute and
-  * ~14 s for the r16 first-cut Spark-job spelling of this same
-  * aggregation (PERF.md r16).
+  * a refresh finds MANY new files (initial builds over large archives),
+  * the bounded data-scan fallback for stats-less files, and the index
+  * persist (a 1-task write, paid only when the listing changed). A
+  * restart with an up-to-date sidecar therefore costs a few milliseconds
+  * of FS metadata — vs 9–29 s for the recompute and ~14 s for the r16
+  * first-cut Spark-job spelling of this same aggregation (PERF.md r16).
   */
 object CatalogSidecar {
 
   /** One persisted index row (the [[SkipIndex]] footer-index schema,
     * driver-held). `file` is stored in [[SkipIndex.canonPath]] spelling. */
-  final case class FileStat(file: String, nRows: Long, bytes: Long,
-      minUs: Long, maxUs: Long, nNulls: Long)
+  type FileStat = SkipIndex.FileStat
 
   /** A product's footer index as a driver VALUE (same rationale as
     * SkipIndex's localize contract: index frames left as live plans
     * re-run their reads and race overwrites). */
   final class ProductIndex(val rows: IndexedSeq[FileStat])
 
-  /** Above this many unindexed files a refresh reads footers via a Spark
-    * fan-out instead of a driver loop — first builds over big archives
-    * distribute; steady-state refreshes (0..few new files) stay local. */
-  private val FanOutThreshold = 512
-
-  // ---- driver-side FS + parquet plumbing ---------------------------------
-
-  /** Recursive listing of the product's DATA files — Spark's FileIndex
-    * visibility rule (`_`/`.`-prefixed names are metadata, at every path
-    * depth), canonical spelling. Plain `listStatus` recursion that PRUNES
-    * hidden directories instead of `listFiles(recursive=true)`: the
-    * located-status iterator computes block locations per file (~5 ms
-    * each on LocalFileSystem — 1.9 s for the 352-file head-to-head
-    * archive vs 24 ms this way), locations we never use, and descending
-    * into `_`-trees would walk every maintained rollup window for
-    * nothing. Also the right shape for object stores: one LIST per
-    * directory, none under metadata prefixes. */
-  private def visibleDataFiles(fs: FileSystem, root: Path): IndexedSeq[String] = {
-    val out = IndexedSeq.newBuilder[String]
-    def hidden(n: String) = n.startsWith("_") || n.startsWith(".")
-    def walk(d: Path): Unit = fs.listStatus(d).foreach { st =>
-      if (!hidden(st.getPath.getName)) {
-        if (st.isDirectory) walk(st.getPath)
-        else out += SkipIndex.canonPath(st.getPath.toString)
-      }
-    }
-    walk(root)
-    out.result()
-  }
-
-  /** Process-wide memo of driver index reads, keyed by product dir and
-    * validated against a (name, mtime, length) snapshot of the index's
-    * part files — parquet parts are immutable per identity, so a hit is
-    * exact. Keeps the per-request freshness check (fingerprints reload
-    * the index on every daily-summary request) at FS-metadata cost. */
-  private val idxReadCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Seq[(String, Long, Long)], IndexedSeq[FileStat])]
-
-  /** Read the persisted `_skipindex` rows on the driver with the
-    * parquet-hadoop record reader — a handful of metadata rows must not
-    * cost a Spark job + datasource resolution. Indexes persisted before
-    * the `n_nulls` column existed read as -1 (unknown), matching
-    * [[SkipIndex.loadIndexOrEmpty]]. */
-  private def readIndexDriver(conf: Configuration, productDir: String)
-      : IndexedSeq[FileStat] = {
-    val idxDir = new Path(SkipIndex.indexPath(productDir))
-    val fs = idxDir.getFileSystem(conf)
-    if (!fs.exists(idxDir)) return IndexedSeq.empty
-    val parts = fs.listStatus(idxDir).filter { st =>
-      val n = st.getPath.getName
-      st.isFile && !(n.startsWith("_") || n.startsWith("."))
-    }
-    val snapshot = parts.map(st =>
-      (st.getPath.getName, st.getModificationTime, st.getLen)).toSeq.sorted
-    val hit = idxReadCache.get(productDir)
-    if (hit != null && hit._1 == snapshot) return hit._2
-    val out = IndexedSeq.newBuilder[FileStat]
-    parts.foreach { st =>
-      val reader = org.apache.parquet.hadoop.ParquetReader
-        .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
-          st.getPath)
-        .withConf(conf).build()
-      try {
-        var g = reader.read()
-        while (g != null) {
-          val hasNulls = g.getType.containsField("n_nulls")
-          out += FileStat(
-            SkipIndex.canonPath(g.getString("file", 0)),
-            g.getLong("n_rows", 0), g.getLong("bytes", 0),
-            g.getLong("min_us", 0), g.getLong("max_us", 0),
-            if (hasNulls && g.getFieldRepetitionCount("n_nulls") > 0)
-              g.getLong("n_nulls", 0)
-            else -1L)
-          g = reader.read()
-        }
-      } finally reader.close()
-    }
-    val rows = out.result()
-    idxReadCache.put(productDir, (snapshot, rows))
-    rows
-  }
-
-  private val IndexSchema = StructType(Seq(
-    StructField("file", StringType), StructField("n_rows", LongType),
-    StructField("bytes", LongType), StructField("min_us", LongType),
-    StructField("max_us", LongType), StructField("n_nulls", LongType)))
-
-  /** Per-product persist lock: concurrent serving requests each refresh
-    * the index ([[DailySummaryStore]] fingerprints run `load` per
-    * request), and two threads that both see the same new files must not
-    * overwrite `_skipindex` simultaneously — mode=overwrite deletes
-    * before writing, so an interleaved pair can leave a torn index
-    * directory. JVM-level is enough: one serving process owns an archive
-    * (the deployment shape); cross-process writers go through the ingest
-    * paths, which rebuild via the same listing diff on next load. */
-  private val persistLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]
-
-  private def persist(spark: SparkSession, productDir: String,
-      rows: IndexedSeq[FileStat]): Unit = {
-    val lock = persistLocks.computeIfAbsent(productDir, _ => new Object)
-    lock.synchronized {
-      val rs = new java.util.ArrayList[Row](rows.size)
-      rows.foreach(r => rs.add(Row(r.file, r.nRows, r.bytes, r.minUs, r.maxUs, r.nNulls)))
-      SkipIndex.persistIndex(spark,
-        spark.createDataFrame(rs, IndexSchema), productDir)
-    }
-  }
-
-  /** Bring the product's footer index up to date with the live listing,
-    * persist it back IF anything changed (append/delete/compaction), and
-    * return it as a driver value. Steady state (unchanged listing) is a
-    * pure-metadata no-op: one FS walk + one driver parquet read, zero
-    * Spark jobs, zero writes. */
-  def load(spark: SparkSession, productDir: String): ProductIndex = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new Path(productDir)
-    val fs = p.getFileSystem(conf)
-    val listing =
-      if (fs.exists(p)) visibleDataFiles(fs, p) else IndexedSeq.empty[String]
-    val listed = listing.toSet
-    val existing = readIndexDriver(conf, productDir)
-    val kept = existing.filter(r => listed.contains(r.file))
-    val known = kept.iterator.map(_.file).toSet
-    val newFiles = listing.filterNot(known)
-    val fresh =
-      if (newFiles.isEmpty) IndexedSeq.empty[FileStat]
-      else if (newFiles.size <= FanOutThreshold)
-        // driver loop: footer read ≈ one small ranged read per file
-        newFiles.map { f =>
-          val (file, r, b, mn, mx, nn) = SkipIndex.footerStats(conf, f, "ts")
-          FileStat(SkipIndex.canonPath(file), r, b, mn, mx, nn)
-        }
-      else {
-        // initial build / bulk landing: distribute the footer reads
-        import spark.implicits._
-        val confBc = spark.sparkContext.broadcast(
-          new org.apache.spark.util.SerializableConfiguration(conf))
-        spark.createDataset(newFiles).mapPartitions { it =>
-          val c = confBc.value.value
-          it.map(f => SkipIndex.footerStats(c, f, "ts"))
-        }.collect().toIndexedSeq // metadata scale: one tuple per file
-          .map { case (f, r, b, mn, mx, nn) =>
-            FileStat(SkipIndex.canonPath(f), r, b, mn, mx, nn) }
-      }
-    val rows = kept ++ fresh
-    if (fresh.nonEmpty || kept.size != existing.size)
-      persist(spark, productDir, rows)
-    new ProductIndex(rows)
-  }
+  /** The product's footer index, current with its listing — the one
+    * maintainer [[SkipIndex.load]]: persisted back only if the listing
+    * changed (append/delete/compaction). Steady state (unchanged listing)
+    * is a pure-metadata no-op: one FS walk + one driver parquet read,
+    * zero Spark jobs, zero writes. */
+  def load(spark: SparkSession, productDir: String): ProductIndex =
+    new ProductIndex(SkipIndex.load(spark, productDir))
 
   // ---- inventory (A7) ----------------------------------------------------
 
@@ -361,7 +215,4 @@ object CatalogSidecar {
           (r.minUs, r.maxUs))
       }
       .groupBy(_._1).map { case (k, v) => k -> v.map(_._2) })
-
-  def broadbandZones(spark: SparkSession, root: String): FileZones =
-    zonesFrom(load(spark, s"$root/broadband"))
 }

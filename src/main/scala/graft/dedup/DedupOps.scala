@@ -250,9 +250,9 @@ object DedupOps {
     * `maxBucket` is the 100 TB boilerplate escape hatch: a template family
     * of B near-identical docs shares a bucket in EVERY band, and its
     * B²/2-per-band candidate clique is quadratic WORK downstream (distinct
-    * + exact verify) that no physical re-shape can pay for — Profile
-    * `lsh_skew` measured that salting the emit only (the non-quadratic
-    * part) is a ~1.6× pessimization. Buckets over the cap instead emit a
+    * + exact verify) that no physical re-shape can pay for — salting the
+    * emit only (the non-quadratic part) measured a ~1.6× pessimization
+    * (PERF.md round 9, "LSH hot-bucket skew"). Buckets over the cap instead emit a
     * STAR: `B−1` edges from the bucket's min doc_id to each member —
     * the shape large-scale MinHash dedup pipelines use (buckets cluster
     * via union-find, not all-pairs). Semantics caveat, so it is OPT-IN

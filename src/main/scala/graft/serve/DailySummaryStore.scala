@@ -51,16 +51,19 @@ final class DailySummaryStore(spark: SparkSession, root: String) {
   private def us(i: Instant): Long =
     i.getEpochSecond * 1000000L + i.getNano / 1000L
 
+  private def psdIndex(): CatalogSidecar.ProductIndex =
+    CatalogSidecar.load(spark, s"$root/psd")
+
   /** Fingerprint of the archive state a window's stats derive from: the
     * psd footer-index rows under this product key whose ts zones overlap
-    * the window. [[CatalogSidecar.load]] reconciles the index against the
-    * live listing first, so the fingerprint sees appends/deletes/
-    * compaction immediately — and the whole check is driver-side
-    * metadata (one FS walk + tiny parquet read), fast enough to run per
-    * request. */
-  private def fingerprint(h: String, freqType: String, deltaF: Int,
-      deltaT: Int, start: Instant, end: Instant): String = {
-    val idx = CatalogSidecar.load(spark, s"$root/psd")
+    * the window. `idx` comes from [[CatalogSidecar.load]], which
+    * reconciles the index against the live listing, so the fingerprint
+    * sees appends/deletes/compaction immediately — and the whole check
+    * is driver-side metadata (one FS walk + tiny parquet read), fast
+    * enough to run per request. */
+  private def fingerprint(idx: CatalogSidecar.ProductIndex, h: String,
+      freqType: String, deltaF: Int, deltaT: Int,
+      start: Instant, end: Instant): String = {
     val part = s"hydrophone=$h/freq_type=$freqType/delta_f=$deltaF/delta_t=$deltaT/"
     val rows = idx.rows.iterator
       .filter(r => r.file.contains(part) &&
@@ -87,6 +90,12 @@ final class DailySummaryStore(spark: SparkSession, root: String) {
     * a crash mid-maintenance leaves a stale/absent fingerprint and
     * `statsFor` keeps falling back — never serves torn stats. */
   def maintain(h: String, freqType: String, deltaF: Int, deltaT: Int,
+      startDay: LocalDate, numDays: Int): Unit =
+    maintainWith(psdIndex(), h, freqType, deltaF, deltaT, startDay, numDays)
+
+  /** [[maintain]] against an index the caller loaded BEFORE this scan. */
+  private def maintainWith(idx: CatalogSidecar.ProductIndex, h: String,
+      freqType: String, deltaF: Int, deltaT: Int,
       startDay: LocalDate, numDays: Int): Unit = {
     val start = startDay.atStartOfDay(ZoneOffset.UTC).toInstant
     val end = startDay.plusDays(numDays.toLong).atStartOfDay(ZoneOffset.UTC).toInstant
@@ -97,7 +106,7 @@ final class DailySummaryStore(spark: SparkSession, root: String) {
     // compute the fingerprint BEFORE the scan: a write racing into the
     // window between scan and stamp then mismatches at read time
     // (conservative — falls back) instead of serving stats that miss it
-    val fp = fingerprint(h, freqType, deltaF, deltaT, start, end)
+    val fp = fingerprint(idx, h, freqType, deltaF, deltaT, start, end)
     if (fs.exists(fpPath)) fs.delete(fpPath, false)
     val summary = DailySummaryOps.timeOfDaySummary(
         loadWindow(h, freqType, deltaF, deltaT, start, end),
@@ -122,10 +131,13 @@ final class DailySummaryStore(spark: SparkSession, root: String) {
 
   /** Trailing windows anchored at the newest psd data (the dashboard
     * request shape): end-day = the day after the last ts zone in the
-    * footer index. Returns the (days, startDay) windows maintained. */
+    * footer index. Returns the (days, startDay) windows maintained. The
+    * index is loaded once for the whole pass: every window's freshness
+    * check and every stale window's fingerprint read it, and it is still
+    * taken before any scan, so a racing append falls back. */
   def maintainTrailing(h: String, freqType: String, deltaF: Int,
       deltaT: Int, days: Seq[Int]): Seq[(Int, LocalDate)] = {
-    val idx = CatalogSidecar.load(spark, s"$root/psd")
+    val idx = psdIndex()
     val part = s"hydrophone=$h/freq_type=$freqType/delta_f=$deltaF/delta_t=$deltaT/"
     val zones = idx.rows
       .filter(r => r.file.contains(part) && r.maxUs != Long.MinValue)
@@ -141,8 +153,8 @@ final class DailySummaryStore(spark: SparkSession, root: String) {
         // incremental: a window whose fingerprint still matches the
         // archive needs no work — re-running maintenance with no new
         // data costs one metadata check per window, not a window scan
-        if (statsFor(h, freqType, deltaF, deltaT, start, end).isEmpty)
-          maintain(h, freqType, deltaF, deltaT, startDay, n)
+        if (statsWith(idx, h, freqType, deltaF, deltaT, start, end).isEmpty)
+          maintainWith(idx, h, freqType, deltaF, deltaT, startDay, n)
         n -> startDay
       }
     }
@@ -152,6 +164,14 @@ final class DailySummaryStore(spark: SparkSession, root: String) {
     * (request falls back to the raw-scan path). Same schema as
     * `timeOfDaySummary` — callers band-filter and bucket on top. */
   def statsFor(h: String, freqType: String, deltaF: Int, deltaT: Int,
+      start: Instant, end: Instant): Option[DataFrame] =
+    statsWith(psdIndex(), h, freqType, deltaF, deltaT, start, end)
+
+  /** [[statsFor]] against `idx`, which is loaded only once a stored
+    * fingerprint exists to compare (by-name: off-anchor requests skip the
+    * listing walk). */
+  private def statsWith(idx: => CatalogSidecar.ProductIndex, h: String,
+      freqType: String, deltaF: Int, deltaT: Int,
       start: Instant, end: Instant): Option[DataFrame] = {
     val startZ = start.atZone(ZoneOffset.UTC)
     val endZ = end.atZone(ZoneOffset.UTC)
@@ -168,7 +188,7 @@ final class DailySummaryStore(spark: SparkSession, root: String) {
     val stored = new String(
       org.apache.hadoop.io.IOUtils.readFullyToByteArray(fs.open(fpPath)),
       "UTF-8")
-    if (stored != fingerprint(h, freqType, deltaF, deltaT, start, end)) None
+    if (stored != fingerprint(idx, h, freqType, deltaF, deltaT, start, end)) None
     else Some(spark.read.parquet(s"$d/stats"))
   }
 }

@@ -350,7 +350,8 @@ object SimilarityOps {
     * rows needed) or the data is clustered (real near-dup corpora are);
     * for exhaustive low-threshold scans use [[cosinePairsBlocked]].
     * `maxBucket` (opt-in) applies the star-edge boilerplate cap to
-    * over-cap buckets — see the hot branch below and `Profile star_cap`. */
+    * over-cap buckets — see the hot branch below and PERF.md ("Star-edge
+    * cap on the EMBEDDING-LSH family"). */
   def lshPairCandidates(sig: DataFrame, maxBucket: Int = Int.MaxValue)
       : DataFrame = {
     val banded = sig.select(col("id"),
@@ -363,11 +364,11 @@ object SimilarityOps {
     } else {
       // over-cap star edges — the same boilerplate escape hatch as
       // DedupOps.lshCandidates' maxBucket (see its scaladoc for the
-      // semantics caveat and Profile star_cap for the measured tradeoff):
-      // a hot bucket's clique is quadratic WORK downstream; its members
-      // link through the bucket-min hub instead, which clustering
-      // consumers (dedupEmbedLsh) resolve identically when the bucket is
-      // a true near-dup family
+      // semantics caveat and PERF.md's star-edge cap table for the
+      // measured tradeoff): a hot bucket's clique is quadratic WORK
+      // downstream; its members link through the bucket-min hub instead,
+      // which clustering consumers (dedupEmbedLsh) resolve identically
+      // when the bucket is a true near-dup family
       val hot = banded.groupBy("band", "bucket")
         .agg(count(lit(1)).as("__bn"), min("id").as("__hub"))
         .filter(col("__bn") > maxBucket)
@@ -384,78 +385,6 @@ object SimilarityOps {
       coldPairs.unionByName(star)
     }
     pairs.distinct()
-  }
-
-  /** Block-count cutoff for [[bucketSelfJoinPairs]] (the MEASURED-AND-
-    * REJECTED salted candidate join — see its scaladoc). */
-  val DefaultHotBucketThreshold = 2048
-
-  /** Skew-salted variant of the banded-bucket candidate self-join —
-    * MEASURED AND REJECTED as a default; kept as the evidence artifact
-    * behind `Profile lsh_skew` and the parity spec, and as the shape to
-    * revisit if the verify stage ever moves inside the candidate join.
-    *
-    * Hypothesis: a boilerplate family of B near-identical items shares one
-    * bucket in EVERY band, so the plain (band, bucket) equi-join emits
-    * that family's B²/2 pairs per band on ONE reducer each — and AQE
-    * skew-join cannot split it (it rebalances input partition bytes; the
-    * inputs here are tiny). This helper spreads the emission with
-    * [[semDedup]]-style blocked replication per (band, bucket):
-    * `nb = ⌈B/threshold⌉` (≤64) id-blocks, pairs met block-to-block.
-    *
-    * Measured verdict (Profile `lsh_skew`, planted 4k-identical bucket in
-    * a 200k corpus, 8 bands): pair SET is identical (0/0 exceptAll), but
-    * the salted candidate stage runs ~1.6× SLOWER (28.7 s → 45-48 s
-    * adjacent readings) and the full pipeline ~1.5× slower. Why salting
-    * cannot pay here: the candidate join only EMITS id pairs — the
-    * expensive per-pair work (exact cosine verify) happens AFTER a
-    * re-shuffle on the pair ids, which a hot bucket leaves well
-    * distributed, so the hot reducer serializes only ~100ns/pair emission
-    * while the salt adds a full rollup shuffle, a broadcast, and breaks
-    * the self-join's ReusedExchange. The staged emit→redistribute→verify
-    * architecture is skew-robust BY CONSTRUCTION; for buckets so hot that
-    * even emission is unaffordable (B ≳ 10⁵), total candidate VOLUME
-    * (bands·B²/2 through distinct+verify) is the real wall and the scale
-    * path is capping, not salting — see
-    * [[graft.dedup.DedupOps.lshCandidates]]'s `maxBucket` star-edge mode. */
-  def bucketSelfJoinPairs(banded0: DataFrame,
-                          hotBucketThreshold: Int = DefaultHotBucketThreshold)
-      : DataFrame = {
-    val banded = banded0.select(col("id"), col("band"), col("bucket"))
-    val hotKeys = banded.groupBy("band", "bucket")
-      .agg(count(lit(1)).as("__bn"))
-      .filter(col("__bn") > hotBucketThreshold)
-    val tagged = banded.join(broadcast(hotKeys), Seq("band", "bucket"), "left")
-    val cold = tagged.filter(col("__bn").isNull).drop("__bn")
-    val a = cold.as("a"); val b = cold.as("b")
-    val coldPairs = a.join(b, col("a.band") === col("b.band") &&
-        col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-    // hot buckets: block count scales with bucket size so per-reducer pair
-    // volume stays ~threshold² until the 64-block cap (beyond which the
-    // bucket is quadratic-dominant no matter the physical shape)
-    val blocked = tagged.filter(col("__bn").isNotNull)
-      .withColumn("__nb", least(
-        ceil(col("__bn") / lit(hotBucketThreshold.toDouble)), lit(64L))
-        .cast("int"))
-      .withColumn("blk", pmod(col("id"), col("__nb")).cast("int"))
-    val ha = blocked
-      .withColumn("bb", explode(filter(sequence(lit(0), col("__nb") - 1),
-        j => j >= col("blk"))))
-      .select(col("band"), col("bucket"), col("blk").as("ba"), col("bb"),
-        col("id").as("id_a"))
-    val hb = blocked
-      .withColumn("ba", explode(filter(sequence(lit(0), col("__nb") - 1),
-        j => j <= col("blk"))))
-      .select(col("band"), col("bucket"), col("ba"), col("blk").as("bb"),
-        col("id").as("id_b"))
-    val hotPairs = ha.join(hb, Seq("band", "bucket", "ba", "bb"))
-      // cross-block keys pair each combination once; only ba=bb sees both
-      // orders + self-pairs, deduped by id (same shape as cosinePairsBlocked)
-      .filter(col("ba") =!= col("bb") || col("id_a") < col("id_b"))
-      .select(least(col("id_a"), col("id_b")).as("id_a"),
-        greatest(col("id_a"), col("id_b")).as("id_b"))
-    coldPairs.unionByName(hotPairs).distinct()
   }
 
   /** Banded signatures frame `(id, v, nv, bands ARRAY<BIGINT>)` — the

@@ -69,8 +69,10 @@ object Deletes {
     * file dropped entirely when nothing survives — preserving the
     * archive's file-per-zone layout for every untouched file (their
     * paths, bytes, and zone stats stay bit-identical; DeletesSpec pins
-    * it). Callers holding a `_skipindex` should refresh it afterwards
-    * ([[SkipIndex.buildFooterIndex]] + persist — footer-only cost).
+    * it). Callers holding a `_skipindex` bring it current with
+    * [[SkipIndex.load]]: rewrites land under fresh `rw-*` names, so the
+    * listing diff drops the originals' rows and reads only the rewrites'
+    * footers.
     *
     * Returns the rewritten (or deleted) file paths. */
   def applyDeletes(spark: SparkSession, dir: String, keyCol: String,

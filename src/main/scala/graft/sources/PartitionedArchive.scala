@@ -68,21 +68,6 @@ object PartitionedArchive {
         .parquet(s"$root/psd")
     }
 
-  /** Append a broadband micro-batch into the same layout. Plain blind
-    * append — NOT replay-safe on its own (a re-delivered batch appends its
-    * rows twice); streaming ingest goes through [[appendBroadbandBatch]],
-    * which adds batch-scoped idempotency on top of the same writer
-    * discipline. Periodic [[compactPartition]] folds the accumulated
-    * per-batch files back into row-group-sized ones. */
-  def appendBroadband(df: DataFrame, root: String): Unit =
-    withMicrosTimestamps(df) {
-      df.sortWithinPartitions("hydrophone", "delta_t", "ts")
-        .write.mode("append")
-        .option("compression", "zstd")
-        .partitionBy(BroadbandPartitions: _*)
-        .parquet(s"$root/broadband")
-    }
-
   /** Idempotent micro-batch append — the `foreachBatch` target for
     * [[graft.streaming.StreamingOps.archiveIngest]]. `foreachBatch` is
     * at-least-once: if the JVM dies after data lands but before the

@@ -1,9 +1,11 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import scala.jdk.CollectionConverters._
 
@@ -30,9 +32,14 @@ import scala.jdk.CollectionConverters._
   *
   * Design rules encoded here:
   *  - The index build reads FOOTERS ONLY (`ParquetFileReader.readFooter`
-  *    distributed over the file list) — metadata-scale I/O, never a data
-  *    scan. This is the Delta/Iceberg stats-collection discipline
-  *    re-expressed on plain parquet.
+  *    on the driver, distributed over the file list for large listings)
+  *    — metadata-scale I/O, never a data scan. This is the Delta/Iceberg
+  *    stats-collection discipline re-expressed on plain parquet.
+  *  - ONE maintainer keeps the persisted `_skipindex` current: [[load]]
+  *    diffs it against a driver listing walk and reads footers only for
+  *    new files ([[reconcile]]). The serving catalog, the daily-summary
+  *    fingerprints, streaming ingest and the layout cells all go
+  *    through it.
   *  - Pruning is a filter on the index frame followed by a bounded
   *    collect of the surviving PATHS (the same metadata-bounded shape as
   *    [[graft.sim.IndexOps.queryIvfIndex]]'s probed-cell collect): the
@@ -67,61 +74,40 @@ object SkipIndex {
         .write.mode("overwrite").parquet(dir)
     }
 
-  /** One index row per parquet file: `(file, n_rows, bytes, min_us,
-    * max_us)` for an INT64-backed column `statCol` (TIMESTAMP_MICROS or
-    * raw long — the min/max are whatever unit the file stores, callers
-    * prune in the same unit). Footer-only: the executors open each
-    * file's metadata tail, never a data page. The file list itself comes
-    * from the catalog listing (`inputFiles` — the same driver-side
-    * metadata op every table read performs). */
-  def buildFooterIndex(spark: SparkSession, dataDir: String,
-                       statCol: String): DataFrame = {
-    // out-of-band deletes/compaction (Deletes.applyDeletes, external
-    // cleanup) don't invalidate the session's FileStatusCache — a stale
-    // listing would feed footerStats a vanished file and fail the job
-    spark.catalog.refreshByPath(dataDir)
-    val files = spark.read.parquet(dataDir).inputFiles.toIndexedSeq
-    import spark.implicits._
-    val ds: Dataset[String] = spark.createDataset(files)(Encoders.STRING)
-    // ship the session's Hadoop conf (spark.hadoop.* — object-store
-    // creds) to the executors; a bare Configuration() is local-FS-only
-    val confBc = spark.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(
-        spark.sparkContext.hadoopConfiguration))
-    localize(spark, ds.mapPartitions { it =>
-      val conf = confBc.value.value
-      it.map { f => footerStats(conf, f, statCol) }
-    }.toDF("file", "n_rows", "bytes", "min_us", "max_us", "n_nulls"))
-  }
+  /** A from-scratch index over `dataDir`'s data files as a frame:
+    * [[reconcile]] against an empty index. Footer-only, and nothing is
+    * persisted. */
+  def buildFooterIndex(spark: SparkSession, dataDir: String): DataFrame =
+    toFrame(spark, reconcile(spark, dataDir, IndexedSeq.empty))
 
-  /** Pin an index frame's ROWS on the driver (metadata scale by the
-    * module contract — one row per file). Index frames are consumed
-    * lazily by joins, pruning, and LATER refreshes; leaving them as live
-    * plans would re-run the footer reads at every evaluation, and a
-    * footer re-read after a file was deleted/compacted out from under
-    * the plan fails the job (observed as a cache-eviction-timing flake:
-    * a `.cache()`d index evicted under memory pressure re-read a footer
-    * the test had deleted). Localizing makes the index a VALUE — the
-    * same reason [[persistIndex]] materializes before overwriting. */
-  private def localize(spark: SparkSession, df: DataFrame): DataFrame = {
-    val rows = new java.util.ArrayList[org.apache.spark.sql.Row](
-      df.collect().toList.asJava)
+  /** Pin a frame's ROWS on the driver (metadata or serving scale by the
+    * caller's contract). Index and result frames are consumed lazily by
+    * joins, pruning and later maintenance; left as live plans they re-run
+    * their reads at every evaluation, and a footer or version re-read
+    * after a file was deleted/compacted out from under the plan fails the
+    * job (observed as a cache-eviction-timing flake: a `.cache()`d index
+    * evicted under memory pressure re-read a footer the test had
+    * deleted). Localizing makes the frame a VALUE. */
+  private[graft] def localize(spark: SparkSession, df: DataFrame): DataFrame = {
+    val rows = new java.util.ArrayList[Row](df.collect().toList.asJava)
     spark.createDataFrame(rows, df.schema)
   }
 
-  /** Read one footer → (file, rows, compressedBytes, min, max, nulls)
-    * for the INT64 column `statCol`. Files with no non-null stats for
-    * the column surface as (Long.MaxValue, Long.MinValue) — they never
-    * match a range and are listed by [[unprunableFiles]] for safety
-    * audits. `n_nulls` is the column's null count, or -1 when any block
-    * lacks a null count — consumers that need exact row accounting
-    * (metaWindowStats' interior path) treat unknown as "must scan";
-    * range PRUNING never needs it (a null matches no range). */
-  private[graft] def footerStats(conf: org.apache.hadoop.conf.Configuration,
-                          file: String, statCol: String)
-      : (String, Long, Long, Long, Long, Long) = {
+  /** The footer index is kept for this column: every archive indexed
+    * here carries its event time as INT64 `ts` (TIMESTAMP_MICROS). */
+  private val StatCol = "ts"
+
+  /** Read one footer → its index row for the INT64 column `ts`. Files
+    * with no non-null stats for the column surface as (Long.MaxValue,
+    * Long.MinValue) — they never match a range and are listed by
+    * [[unprunableFiles]] for safety audits. `nNulls` is the column's
+    * null count, or -1 when any block lacks a null count — consumers
+    * that need exact row accounting (metaWindowStats' interior path)
+    * treat unknown as "must scan"; range PRUNING never needs it (a null
+    * matches no range). */
+  private def footerStats(conf: Configuration, file: String): FileStat = {
     val md = org.apache.parquet.hadoop.ParquetFileReader.readFooter(
-      conf, new org.apache.hadoop.fs.Path(file),
+      conf, new Path(file),
       org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER)
     var rows = 0L; var bytes = 0L
     var mn = Long.MaxValue; var mx = Long.MinValue
@@ -130,7 +116,7 @@ object SkipIndex {
       rows += b.getRowCount
       bytes += b.getCompressedSize
       b.getColumns.asScala
-        .find(_.getPath.toDotString == statCol)
+        .find(_.getPath.toDotString == StatCol)
         .foreach { cc =>
           val st = cc.getStatistics
           if (st != null && !st.isEmpty) {
@@ -146,7 +132,7 @@ object SkipIndex {
           } else nullsKnown = false
         }
     }
-    (file, rows, bytes, mn, mx, if (nullsKnown) nulls else -1L)
+    FileStat(canonPath(file), rows, bytes, mn, mx, if (nullsKnown) nulls else -1L)
   }
 
   /** Replay-idempotent micro-batch append into a FLAT archive: the
@@ -170,177 +156,226 @@ object SkipIndex {
     * skips `_`/`.` paths), so index and data share one root. */
   def indexPath(dir: String): String = s"$dir/_skipindex"
 
-  /** Does `dir` hold at least one DATA file — a file outside `_`/`.`
-    * sidecar paths? (Spark's FileIndex visibility rule: underscore and
-    * dot prefixed names are metadata, at every path depth.) */
-  private def hasDataFiles(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def visible(q: org.apache.hadoop.fs.Path): Boolean = {
-      var cur = q
-      var ok = true
-      while (ok && cur != null && cur.depth() > p.depth()) {
-        val n = cur.getName
-        ok = !(n.startsWith("_") || n.startsWith("."))
-        cur = cur.getParent
-      }
-      ok
-    }
-    if (!fs.exists(p)) false
-    else {
-      val it = fs.listFiles(p, true)
-      var found = false
-      while (!found && it.hasNext) {
-        val st = it.next()
-        found = st.isFile && visible(st.getPath)
-      }
-      found
-    }
+  /** One index row, held on the driver: the `_skipindex` schema
+    * (`file, n_rows, bytes, min_us, max_us, n_nulls`) of one parquet
+    * file's `ts` footer stats. `file` is in [[canonPath]] spelling. */
+  final case class FileStat(file: String, nRows: Long, bytes: Long,
+      minUs: Long, maxUs: Long, nNulls: Long)
+
+  private val IndexSchema = StructType(Seq(
+    StructField("file", StringType), StructField("n_rows", LongType),
+    StructField("bytes", LongType), StructField("min_us", LongType),
+    StructField("max_us", LongType), StructField("n_nulls", LongType)))
+
+  /** Index rows as a frame over driver-held rows (a local relation:
+    * evaluating it never re-reads a footer or the persisted index). */
+  def toFrame(spark: SparkSession, rows: Seq[FileStat]): DataFrame = {
+    val rs = new java.util.ArrayList[Row](rows.size)
+    rows.foreach(r => rs.add(Row(r.file, r.nRows, r.bytes, r.minUs, r.maxUs, r.nNulls)))
+    spark.createDataFrame(rs, IndexSchema)
   }
 
-  /** Load the persisted index, or an empty frame with the index schema
-    * when none exists yet (first batch of a fresh archive). */
-  def loadIndexOrEmpty(spark: SparkSession, dir: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(indexPath(dir))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) {
-      val idx = spark.read.parquet(indexPath(dir))
-      // an index persisted before the n_nulls column existed: null
-      // count UNKNOWN (-1) — conservative for exact-count consumers,
-      // irrelevant for range pruning
-      if (idx.columns.contains("n_nulls")) idx
-      else idx.withColumn("n_nulls", lit(-1L))
-    } else {
-      import spark.implicits._
-      Seq.empty[(String, Long, Long, Long, Long, Long)]
-        .toDF("file", "n_rows", "bytes", "min_us", "max_us", "n_nulls")
-    }
-  }
-
-  /** Persist an index frame at [[indexPath]]. The frame is materialized
-    * on the driver first — it is METADATA-scale by construction (one row
-    * per file; ~1e5 rows at 100 TB), and reading `_skipindex` while
-    * overwriting it would otherwise race the lazy scan. */
-  def persistIndex(spark: SparkSession, idx: DataFrame, dir: String): Unit = {
-    val rows = idx.collect().toIndexedSeq // metadata-scale
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), idx.schema)
-      .write.mode("overwrite").parquet(indexPath(dir))
-  }
-
-  /** INCREMENTAL index maintenance: bring a persisted index up to date
-    * with the archive by reading footers ONLY for files the index has
-    * not seen (the shape continuous ingest needs — each refresh costs
-    * O(new files), never O(archive); deleted files' rows are dropped so
-    * compaction rewrites self-heal). The listing diff runs on the
-    * metadata frames; stats merge by union since per-file rows are
-    * immutable (parquet files never change in place — an overwritten
-    * file has a new name). */
-  def refreshFooterIndex(spark: SparkSession, dataDir: String,
-                         statCol: String, existing: DataFrame): DataFrame = {
-    import spark.implicits._
-    // same stale-FileStatusCache guard as buildFooterIndex
-    spark.catalog.refreshByPath(dataDir)
-    // an archive with NO data files yet (first empty micro-batch of an
-    // ingest loop: only _ingest_commits/_skipindex sidecars exist) fails
-    // parquet schema inference — that's an empty listing, not an error.
-    // The emptiness is established by an EXPLICIT fs walk, never by
-    // catching AnalysisException: the same exception also covers
-    // all-corrupt footers and path races over a POPULATED archive, and
-    // treating those as "empty" would semi-join every existing index
-    // row away — silent index loss where a loud failure is correct.
-    val files =
-      if (!hasDataFiles(spark, dataDir)) IndexedSeq.empty[String]
-      else spark.read.parquet(dataDir).inputFiles.toIndexedSeq
-    val listing = spark.createDataset(files)(Encoders.STRING).toDF("file")
-    // joins on the metadata frames, never an N-file isin literal
-    val kept = existing.join(listing, Seq("file"), "left_semi")
-    val newFiles = listing
-      .join(existing.select("file"), Seq("file"), "left_anti")
-      .collect().map(_.getString(0)).toIndexedSeq // bounded: new files only
-    // localize BOTH branches: a held reference to a live `kept` plan
-    // would lazily re-read the persisted _skipindex and can fail or go
-    // stale after a later overwrite — exactly the flake the localize
-    // contract exists to prevent
-    if (newFiles.isEmpty) localize(spark, kept)
-    else {
-      val confBc = spark.sparkContext.broadcast(
-        new org.apache.spark.util.SerializableConfiguration(
-          spark.sparkContext.hadoopConfiguration))
-      val fresh = spark.createDataset(newFiles)(Encoders.STRING)
-        .mapPartitions { it =>
-          val conf = confBc.value.value
-          it.map { f => footerStats(conf, f, statCol) }
-        }.toDF("file", "n_rows", "bytes", "min_us", "max_us", "n_nulls")
-      localize(spark, kept.unionByName(fresh))
-    }
-  }
-
-  /** EXTEND an index by exactly the given new files — the per-micro-batch
-    * fast path: when the caller already knows which files just landed
-    * ([[appendClusteredBatch]] returns them), the refresh needs no
-    * directory listing, no datasource resolution, and no Spark job — the
-    * handful of new footers is read ON THE DRIVER (the same footerStats
-    * kernel the distributed build uses) and appended to the localized
-    * index value. Already-indexed paths are skipped, so a replayed
-    * batch's file list is absorbed idempotently.
-    *
-    * Contract vs [[refreshFooterIndex]]: this trusts the caller's file
-    * list and does NOT heal rows for files deleted out-of-band — an
-    * ingest loop carrying its index through this path assumes no
-    * concurrent deletions during the stream (true for the append-only
-    * archives it serves); a restart goes through loadIndexOrEmpty +
-    * refreshFooterIndex, which reconciles against the real listing. */
   /** One path, several spellings: Spark's inputFiles listing renders
     * local files as `file:///x` while Hadoop's makeQualified (the
     * appender's form) renders `file:/x` — compared raw, every landed
     * file would re-enter an index beside its listing-spelled row and a
     * picks read would double its rows (caught by RollupSpec). Every
     * site that compares file paths across those two sources — index
-    * extension here, the maintenance loop's changed-day routing, the
-    * delete-apply live-path intersection — must use THIS one
-    * canonicalizer; per-site copies were drifting hazards. */
+    * rows, the maintenance loop's changed-day routing, the delete-apply
+    * live-path intersection — must use THIS one canonicalizer; per-site
+    * copies were drifting hazards. */
   def canonPath(s: String): String = s.replaceFirst("^file:/+", "file:///")
 
-  def extendFooterIndex(spark: SparkSession, existing: DataFrame,
-                        newFiles: Seq[String], statCol: String): DataFrame = {
-    // store and compare ONE spelling (the listing's, so
-    // refreshFooterIndex's listing-diff healing keeps working on
-    // extended indexes) — see canonPath
-    def canon(s: String) = canonPath(s)
-    val existRows = existing.collect().toIndexedSeq
-    val fileIdx = existing.schema.fieldIndex("file")
-    val known = existRows.map(r => canon(r.getString(fileIdx))).toSet
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fresh = newFiles.map(canon).distinct.filterNot(known).map { f =>
-      val (file, rows, bytes, mn, mx, nulls) = footerStats(conf, f, statCol)
-      org.apache.spark.sql.Row(canon(file), rows, bytes, mn, mx, nulls)
+  // ---- the one index maintainer: listing diff, driver read, persist ----
+
+  /** Above this many unindexed files [[reconcile]] reads footers through
+    * a Spark fan-out instead of a driver loop — first builds over big
+    * archives distribute; steady-state refreshes (0..few new files) stay
+    * local. */
+  private val FanOutThreshold = 512
+
+  /** Recursive listing of `root`'s DATA files — Spark's FileIndex
+    * visibility rule (`_`/`.`-prefixed names are metadata, at every path
+    * depth), canonical spelling. Plain `listStatus` recursion that PRUNES
+    * hidden directories instead of `listFiles(recursive=true)`: the
+    * located-status iterator computes block locations per file (~5 ms
+    * each on LocalFileSystem — 1.9 s for the 352-file head-to-head
+    * archive vs 24 ms this way), locations we never use, and descending
+    * into `_`-trees (`_rollup`, `_staging`, `_ingest_commits`, maintained
+    * summary windows) would walk them for nothing. Also the right shape
+    * for object stores: one LIST per directory, none under metadata
+    * prefixes. */
+  private def visibleDataFiles(fs: FileSystem, root: Path): IndexedSeq[String] = {
+    val out = IndexedSeq.newBuilder[String]
+    def hidden(n: String) = n.startsWith("_") || n.startsWith(".")
+    def walk(d: Path): Unit = fs.listStatus(d).foreach { st =>
+      if (!hidden(st.getPath.getName)) {
+        if (st.isDirectory) walk(st.getPath)
+        else out += canonPath(st.getPath.toString)
+      }
     }
-    val all = new java.util.ArrayList[org.apache.spark.sql.Row](
-      (existRows ++ fresh).asJava)
-    spark.createDataFrame(all, existing.schema)
+    walk(root)
+    out.result()
+  }
+
+  /** Process-wide memo of driver index reads, keyed by data dir and
+    * validated against a (name, mtime, length) snapshot of the index's
+    * part files — parquet parts are immutable per identity, so a hit is
+    * exact. Keeps the per-request freshness check (daily-summary
+    * fingerprints reload the index on every request) at FS-metadata
+    * cost. */
+  private val idxReadCache =
+    new java.util.concurrent.ConcurrentHashMap[String, (Seq[(String, Long, Long)], IndexedSeq[FileStat])]
+
+  /** Read the persisted `_skipindex` rows on the driver with the
+    * parquet-hadoop record reader — a handful of metadata rows must not
+    * cost a Spark job + datasource resolution. Indexes persisted before
+    * the `n_nulls` column existed read as -1 (null count unknown:
+    * conservative for exact-count consumers, irrelevant for range
+    * pruning). */
+  private def readIndexDriver(conf: Configuration, dir: String)
+      : IndexedSeq[FileStat] = {
+    val idxDir = new Path(indexPath(dir))
+    val fs = idxDir.getFileSystem(conf)
+    if (!fs.exists(idxDir)) return IndexedSeq.empty
+    val parts = fs.listStatus(idxDir).filter { st =>
+      val n = st.getPath.getName
+      st.isFile && !(n.startsWith("_") || n.startsWith("."))
+    }
+    val snapshot = parts.map(st =>
+      (st.getPath.getName, st.getModificationTime, st.getLen)).toSeq.sorted
+    val hit = idxReadCache.get(dir)
+    if (hit != null && hit._1 == snapshot) return hit._2
+    val out = IndexedSeq.newBuilder[FileStat]
+    parts.foreach { st =>
+      val reader = org.apache.parquet.hadoop.ParquetReader
+        .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
+          st.getPath)
+        .withConf(conf).build()
+      try {
+        var g = reader.read()
+        while (g != null) {
+          val hasNulls = g.getType.containsField("n_nulls")
+          out += FileStat(
+            canonPath(g.getString("file", 0)),
+            g.getLong("n_rows", 0), g.getLong("bytes", 0),
+            g.getLong("min_us", 0), g.getLong("max_us", 0),
+            if (hasNulls && g.getFieldRepetitionCount("n_nulls") > 0)
+              g.getLong("n_nulls", 0)
+            else -1L)
+          g = reader.read()
+        }
+      } finally reader.close()
+    }
+    val rows = out.result()
+    idxReadCache.put(dir, (snapshot, rows))
+    rows
+  }
+
+  /** Bring `existing` index rows up to date with `dir`'s live listing:
+    * rows for files no longer listed drop out (deletes, compaction
+    * rewrites), and footers are read ONLY for listed files the index has
+    * not seen — on the driver up to [[FanOutThreshold]] files, through a
+    * Spark fan-out above it. Per-file rows are never re-read: parquet
+    * files this engine writes never change in place (a rewrite, e.g.
+    * [[Deletes.applyDeletes]], lands under a new name). A missing or
+    * data-less `dir` lists empty. */
+  def reconcile(spark: SparkSession, dir: String,
+      existing: IndexedSeq[FileStat]): IndexedSeq[FileStat] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(dir)
+    val fs = root.getFileSystem(conf)
+    val listing =
+      if (fs.exists(root)) visibleDataFiles(fs, root) else IndexedSeq.empty[String]
+    val listed = listing.toSet
+    val kept = existing.filter(r => listed.contains(r.file))
+    val known = kept.iterator.map(_.file).toSet
+    val newFiles = listing.filterNot(known)
+    val fresh =
+      if (newFiles.size <= FanOutThreshold)
+        // driver loop: footer read ≈ one small ranged read per file
+        newFiles.map(footerStats(conf, _))
+      else {
+        // initial build / bulk landing: distribute the footer reads, and
+        // ship the session's Hadoop conf (spark.hadoop.* — object-store
+        // creds) to the executors
+        import spark.implicits._
+        val confBc = spark.sparkContext.broadcast(
+          new org.apache.spark.util.SerializableConfiguration(conf))
+        spark.createDataset(newFiles).mapPartitions { it =>
+          val c = confBc.value.value
+          it.map(footerStats(c, _))
+        }.collect().toIndexedSeq // metadata scale: one row per file
+      }
+    kept ++ fresh
+  }
+
+  /** The index of `dir` as a driver value, current with its listing: the
+    * persisted rows, [[reconcile]]d, and persisted back only if that
+    * changed them. Steady state (unchanged listing) is a pure-metadata
+    * no-op: one FS walk + one memoized driver read, zero Spark jobs, zero
+    * writes. Every reader of `_skipindex` goes through here. */
+  def load(spark: SparkSession, dir: String): IndexedSeq[FileStat] = {
+    val existing = readIndexDriver(spark.sparkContext.hadoopConfiguration, dir)
+    val rows = reconcile(spark, dir, existing)
+    if (rows != existing) persistIndex(spark, dir, rows)
+    rows
+  }
+
+  /** Per-dir persist lock: concurrent serving requests each [[load]] the
+    * index (daily-summary fingerprints run per request), and two threads
+    * that both see the same new files must not overwrite `_skipindex`
+    * simultaneously — mode=overwrite deletes before writing, so an
+    * interleaved pair can leave a torn index directory. JVM-level is
+    * enough: one serving process owns an archive (the deployment shape);
+    * other writers' changes are picked up by the next [[load]]. */
+  private val persistLocks =
+    new java.util.concurrent.ConcurrentHashMap[String, Object]
+
+  /** Persist index rows at [[indexPath]] as one parquet part (a 1-task
+    * write from driver-held rows, so nothing lazily reads `_skipindex`
+    * while it is overwritten). */
+  def persistIndex(spark: SparkSession, dir: String,
+      rows: IndexedSeq[FileStat]): Unit =
+    persistLocks.computeIfAbsent(dir, _ => new Object).synchronized {
+      toFrame(spark, rows).coalesce(1)
+        .write.mode("overwrite").parquet(indexPath(dir))
+    }
+
+  /** EXTEND index rows by exactly the given new files — the
+    * per-micro-batch fast path: when the caller already knows which files
+    * just landed ([[appendClusteredBatch]] returns them), the refresh
+    * needs no directory listing, no datasource resolution, and no Spark
+    * job — the handful of new footers is read ON THE DRIVER. Paths
+    * already indexed are skipped, so a replayed batch's file list is
+    * absorbed idempotently.
+    *
+    * Contract vs [[load]]: this trusts the caller's file list and does
+    * NOT drop rows for files deleted out-of-band — an ingest loop
+    * carrying its index through this path assumes no concurrent
+    * deletions during the stream (true for the append-only archives it
+    * serves); a restart goes through [[load]], which reconciles against
+    * the real listing. */
+  def extendFooterIndex(spark: SparkSession, existing: IndexedSeq[FileStat],
+      newFiles: Seq[String]): IndexedSeq[FileStat] = {
+    val known = existing.iterator.map(_.file).toSet
+    val conf = spark.sparkContext.hadoopConfiguration
+    existing ++ newFiles.map(canonPath).distinct.filterNot(known)
+      .map(footerStats(conf, _))
   }
 
   /** Changed-DAY derivation from index rows: every epoch day covered by
     * each row's `[min_us, max_us]` zone, plus a null-group flag when any
     * row carries (`n_nulls` > 0) or cannot rule out (−1) null stat-column
     * values — footer zones EXCLUDE nulls, so the NULL day is a changed
-    * group zones can't name and must be routed explicitly. Shared by the
-    * streamed maintenance loop and dim-delta IVM; the two must derive
-    * identically or their maintained views diverge. */
-  def zoneChangedDays(idxSchema: org.apache.spark.sql.types.StructType,
-      rows: Seq[org.apache.spark.sql.Row])
-      : (Seq[java.time.LocalDate], Boolean) = {
-    val (nR, mnI, mxI, nnI) = (idxSchema.fieldIndex("n_rows"),
-      idxSchema.fieldIndex("min_us"), idxSchema.fieldIndex("max_us"),
-      idxSchema.fieldIndex("n_nulls"))
+    * group zones can't name and must be routed explicitly. */
+  def zoneChangedDays(rows: Seq[FileStat]): (Seq[java.time.LocalDate], Boolean) = {
     val days = rows.flatMap { r =>
-      val (rows0, mn, mx) = (r.getLong(nR), r.getLong(mnI), r.getLong(mxI))
-      if (rows0 == 0L || mn > mx) Seq.empty
-      else (Math.floorDiv(mn, 86400000000L) to Math.floorDiv(mx, 86400000000L))
+      if (r.nRows == 0L || r.minUs > r.maxUs) Seq.empty
+      else (Math.floorDiv(r.minUs, 86400000000L) to Math.floorDiv(r.maxUs, 86400000000L))
         .map(java.time.LocalDate.ofEpochDay)
     }.distinct
-    (days, rows.exists(_.getLong(nnI) != 0L))
+    (days, rows.exists(_.nNulls != 0L))
   }
 
   /** Pruned pick set for a changed-day recompute: the day-zone files,
@@ -489,7 +524,7 @@ object SkipIndex {
   }
 
   /** Metadata-only windowed aggregate with boundary correction: count /
-    * min / max of `tsCol` over `[loUs, hiUs)` where INTERIOR files
+    * min / max of `ts` over `[loUs, hiUs)` where INTERIOR files
     * (zone fully inside the window — parquet INT64 stats are exact, so
     * footer rows/min/max ARE the file's true aggregate) contribute
     * straight from the index and only BOUNDARY files (zone straddles a
@@ -501,9 +536,9 @@ object SkipIndex {
     * decomposition is exact, not approximate — the full-scan answer is
     * the oracle. Returns one row `(n_rows, min_us, max_us)`; min/max
     * are NULL when the window is empty. */
-  def metaWindowStats(spark: SparkSession, dataDir: String, tsCol: String,
+  def metaWindowStats(spark: SparkSession, dataDir: String,
       loUs: Long, hiUs: Long): DataFrame = {
-    val idx = buildFooterIndex(spark, dataDir, tsCol)
+    val idx = buildFooterIndex(spark, dataDir)
     val hasStats = col("min_us") <= col("max_us")
     // interior eligibility additionally needs a PROVABLY null-free stat
     // column: footer n_rows counts null-ts rows the window predicate
@@ -520,11 +555,11 @@ object SkipIndex {
       else scanned
         // timestamp-typed bounds (constant-folded) so the boundary scan
         // keeps row-group skipping on the ts column
-        .filter(col(tsCol) >= timestamp_micros(lit(loUs)) &&
-                col(tsCol) < timestamp_micros(lit(hiUs)))
+        .filter(col(StatCol) >= timestamp_micros(lit(loUs)) &&
+                col(StatCol) < timestamp_micros(lit(hiUs)))
         .agg(count(lit(1)).as("n_rows"),
-          min(unix_micros(col(tsCol))).as("mn"),
-          max(unix_micros(col(tsCol))).as("mx"))
+          min(unix_micros(col(StatCol))).as("mn"),
+          max(unix_micros(col(StatCol))).as("mx"))
     val metaAgg = idx.filter(interiorP)
       .agg(coalesce(sum("n_rows"), lit(0L)).as("n_rows"),
         min("min_us").as("mn"), max("max_us").as("mx"))

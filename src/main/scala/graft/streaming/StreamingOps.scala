@@ -1,7 +1,6 @@
 package graft.streaming
 
 import java.util.concurrent.atomic.AtomicInteger
-import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -50,10 +49,9 @@ object StreamingOps {
     * twice; a long-lived service would grow without bound). Results here
     * are serving-edge sized (hundreds of rows), so the local copy is fine. */
   private def drainTable(spark: SparkSession, name: String): DataFrame = {
-    val t = spark.table(name)
-    val rows = new java.util.ArrayList[org.apache.spark.sql.Row](t.collect().toList.asJava)
+    val out = graft.sources.SkipIndex.localize(spark, spark.table(name))
     spark.catalog.dropTempView(name)
-    spark.createDataFrame(rows, t.schema)
+    out
   }
 
   /** Streaming parquet source whose schema comes from the FILE FOOTER (via
@@ -636,25 +634,19 @@ object StreamingOps {
     * ([[graft.sources.SkipIndex.appendClusteredBatch]] — staging +
     * deterministic names + commit marker, so at-least-once redelivery is
     * exactly-once on disk), then the co-located zone-map index is
-    * brought up to date INCREMENTALLY (footer reads for the new files
-    * only) and persisted beside the data. Data is prunable the moment
-    * the batch commits — the skip-index twin of [[archiveIngest]]'s
-    * partition-directory path and the ANN index's streamed postings. */
+    * brought up to date INCREMENTALLY by [[graft.sources.SkipIndex.load]]
+    * (footer reads for the new files only) and persisted beside the
+    * data. Data is prunable the moment the batch commits — the
+    * skip-index twin of [[archiveIngest]]'s partition-directory path and
+    * the ANN index's streamed postings. */
   def flatArchiveIngest(stream: DataFrame, tsCol: String, dir: String,
       checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
     val streamId = streamScope(checkpoint)
     stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         import graft.sources.SkipIndex
-        val s = batch.sparkSession
         SkipIndex.appendClusteredBatch(batch, tsCol, dir, batchId, streamId)
-        val root = new org.apache.hadoop.fs.Path(dir)
-        val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-        val hasData = fs.exists(root) &&
-          fs.listStatus(root).exists(_.getPath.getName.endsWith(".parquet"))
-        if (hasData) // an empty first batch has nothing to index
-          SkipIndex.persistIndex(s, SkipIndex.refreshFooterIndex(
-            s, dir, tsCol, SkipIndex.loadIndexOrEmpty(s, dir)), dir)
+        SkipIndex.load(batch.sparkSession, dir): Unit
       }
       .option("checkpointLocation", checkpoint)
       .start()
@@ -758,18 +750,18 @@ object StreamingOps {
     * recompute instead of a nightly full scan. */
   /** Driver-held state the CONTINUOUS maintenance loop carries between
     * micro-batches so each batch is metadata-work-free:
-    *  - `idx`: the localized footer index (extended per batch from the
+    *  - `idx`: the footer-index rows (extended per batch from the
     *    appender's landed-file list — zero listings, zero jobs);
     *  - `prev`: the last rollup version THIS loop wrote, as a localized
     *    value with its batch id (re-reading the version parquet each
     *    batch cost a datasource resolution + scan).
     * Both are pure caches of on-disk state: an empty carry (fresh loop,
     * restart, or a direct [[maintainRollupBatch]] call as in RollupSpec's
-    * replay pins) falls back to disk and reconciles via the full
-    * refresh — round 11 measured the carry at ~2× on the streamed
-    * maintenance cell. */
+    * replay pins) falls back to disk and reconciles via
+    * [[graft.sources.SkipIndex.load]] — round 11 measured the carry at
+    * ~2× on the streamed maintenance cell. */
   private[graft] final class RollupCarry {
-    var idx: Option[DataFrame] = None
+    var idx: Option[IndexedSeq[graft.sources.SkipIndex.FileStat]] = None
     var prev: Option[(Long, DataFrame)] = None
     var persistCountdown: Int = 0
   }
@@ -778,20 +770,12 @@ object StreamingOps {
     * it is re-persisted. The on-disk `_skipindex` is a warm-start CACHE,
     * not a correctness input — every fresh loop (and every non-loop
     * reader) reconciles it against the real listing via
-    * [[graft.sources.SkipIndex.refreshFooterIndex]], which costs one
-    * footer read per file persisted-behind. Writing it every batch was
+    * [[graft.sources.SkipIndex.load]], which costs one footer read per
+    * file persisted-behind. Writing it every batch was
     * ~0.15 s/batch of the streamed-maintenance cell for zero recovery
     * benefit; this bounds restart reconcile work to ≤16 footers while
     * removing the write from the steady-state batch path. */
   private val IndexPersistEvery = 16
-
-  /** Pin a result frame's rows on the driver (serving-scale by the rollup
-    * contract: one row per (key, day)-grain group). */
-  private def localizeFrame(spark: SparkSession, df: DataFrame): DataFrame = {
-    val rows = new java.util.ArrayList[org.apache.spark.sql.Row](
-      df.collect().toList.asJava)
-    spark.createDataFrame(rows, df.schema)
-  }
 
   private[graft] def maintainRollupBatch(batch: DataFrame, batchId: Long,
       streamId: String, tsCol: String, dir: String,
@@ -803,20 +787,18 @@ object StreamingOps {
     // marker-short-circuited replay), so index maintenance is a driver
     // footer read per new file — no listing, no resolution, no job
     val landed = SkipIndex.appendClusteredBatch(batch, tsCol, dir, batchId, streamId)
+    // a fresh loop (or restart) reconciles against the real listing once
+    // — load persists the index if that changed it, so a brand-new
+    // archive gets one at all — then stays incremental; the steady-state
+    // batch extends only the carried copy, persisted every
+    // [[IndexPersistEvery]] batches (the cache contract there)
     val freshCarry = carry.idx.isEmpty
-    val base = carry.idx.getOrElse {
-      // fresh loop or restart: reconcile the persisted index against the
-      // real listing once, then stay incremental
-      SkipIndex.refreshFooterIndex(s, dir, tsCol, SkipIndex.loadIndexOrEmpty(s, dir))
-    }
-    val idx = SkipIndex.extendFooterIndex(s, base, landed, tsCol)
-    // persist on the first batch of a loop (so a brand-new archive gets
-    // an index at all) and every [[IndexPersistEvery]] batches; the
-    // steady-state batch extends only the carried copy — see the cache
-    // contract on IndexPersistEvery
-    carry.persistCountdown -= 1
-    if (freshCarry || carry.persistCountdown <= 0) {
-      SkipIndex.persistIndex(s, idx, dir)
+    val idx = SkipIndex.extendFooterIndex(s,
+      carry.idx.getOrElse(SkipIndex.load(s, dir)), landed)
+    carry.persistCountdown =
+      if (freshCarry) IndexPersistEvery else carry.persistCountdown - 1
+    if (carry.persistCountdown <= 0) {
+      SkipIndex.persistIndex(s, dir, idx)
       carry.persistCountdown = IndexPersistEvery
     }
     carry.idx = Some(idx)
@@ -830,19 +812,15 @@ object StreamingOps {
     // session exactly: epoch-day = floor(µs / 86400e6).
     def canonF(p: String) = SkipIndex.canonPath(p)
     val landedSet = landed.map(canonF).toSet
-    val idxRows = idx.collect().toIndexedSeq
-    val fI = idx.schema.fieldIndex("file")
-    val landedRows = idxRows
-      .filter(r => landedSet.contains(canonF(r.getString(fI))))
     // changed days from footer zones + the NULL-day flag (zones exclude
-    // nulls, so null-ts rows are a changed group zones can't name) —
-    // shared derivation with dim-delta IVM: SkipIndex.zoneChangedDays
+    // nulls, so null-ts rows are a changed group zones can't name)
     val (changedDays, landedNulls) =
-      SkipIndex.zoneChangedDays(idx.schema, landedRows)
+      SkipIndex.zoneChangedDays(idx.filter(r => landedSet.contains(r.file)))
     val changed: Seq[Any] =
       if (landedNulls) changedDays :+ (null: Any) else changedDays
     if (changed.nonEmpty) {
-      val picks = SkipIndex.picksForChangedDays(idx, changedDays, landedNulls)
+      val picks = SkipIndex.picksForChangedDays(
+        SkipIndex.toFrame(s, idx), changedDays, landedNulls)
       // The landed files' rows ARE this batch's rows: the appender wrote
       // exactly the batch (and a marker-short-circuited replay returns
       // the files that hold the same batch's content) — so the recompute
@@ -870,7 +848,7 @@ object StreamingOps {
       val prev = carry.prev.collect { case (id, v) if id < batchId => v }
         .orElse(latestRollup(s, dir, beforeId = Some(batchId),
           streamId = Some(streamId)))
-      val next = localizeFrame(s, prev match {
+      val next = SkipIndex.localize(s, prev match {
         case Some(p) =>
           graft.ops.RollupOps.maintainByKeys(p, data, changed, "day", recompute)
         case None =>

@@ -130,7 +130,7 @@ class DeletesSpec extends AnyFunSuite {
     // rewrites land under FRESH rw-* names (immutable-by-name, so the
     // incremental footer refresh re-reads them) and the rebuilt index
     // must carry real stats for every file, rewritten ones included
-    val idx = SkipIndex.buildFooterIndex(spark, dir, "ts")
+    val idx = SkipIndex.buildFooterIndex(spark, dir)
     assert(SkipIndex.unprunableFiles(idx).count() == 0)
     val oldNames = rewritten.map(f =>
       new org.apache.hadoop.fs.Path(f).getName).toSet

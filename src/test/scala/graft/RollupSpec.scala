@@ -143,9 +143,9 @@ class RollupSpec extends AnyFunSuite {
   }
 
   test("empty first batch against an empty archive is a no-op, not a crash") {
-    // regression: refreshFooterIndex ran spark.read.parquet on an archive
-    // holding only sidecar dirs and died on schema inference — the first
-    // delivery of a fresh ingest loop is exactly this shape
+    // regression: an index refresh that listed through spark.read.parquet
+    // died on schema inference over an archive holding only sidecar dirs
+    // — the first delivery of a fresh ingest loop is exactly this shape
     import graft.streaming.StreamingOps
     val tmp = java.nio.file.Files.createTempDirectory("graft_rollup_empty").toString
     val arch = s"$tmp/arch"
@@ -213,7 +213,7 @@ class RollupSpec extends AnyFunSuite {
     ).toDF("event_id", "ts_s", "user_id", "value")
       .withColumn("ts", col("ts_s").cast("timestamp")).drop("ts_s")
     SkipIndex.writeTimeClustered(facts0, "ts", root, numFiles = 8)
-    val idx = SkipIndex.buildFooterIndex(spark, root, "ts")
+    val idx = SkipIndex.buildFooterIndex(spark, root)
     val bloom = SkipIndex.buildBloomIndex(
       spark, root, "CAST(user_id AS STRING)", 100L, 1L << 16)
     // the delta key's facts live on one day → strictly fewer files route

@@ -203,31 +203,9 @@ class SimilaritySpec extends AnyFunSuite {
       s"LSH recall ${lsh.size}/${exact.size}")
   }
 
-  test("salted bucket self-join ≡ plain candidates on a planted hot bucket") {
-    // 40 copies of one vector (one hot bucket per band, over the forced
-    // threshold) + 60 distinct vectors; the rejected-but-kept salted
-    // shape must emit the identical candidate set (see bucketSelfJoinPairs
-    // scaladoc for the measured verdict)
-    val emb = spark.range(100).selectExpr("id",
-      "transform(sequence(1, 8), i -> CASE WHEN id < 40 THEN CAST(i AS DOUBLE) " +
-        "ELSE cast(hash(id, i) % 100 AS DOUBLE) END) AS v")
-    val sig = SimilarityOps.bandedSignatures(emb, "id", "v", 4, 8)
-      .localCheckpoint(true)
-    val banded = sig.select(col("id"),
-      posexplode(col("bands")).as(Seq("band", "bucket")))
-    val plain = SimilarityOps.lshPairCandidates(sig)
-    val salted = SimilarityOps.bucketSelfJoinPairs(banded, hotBucketThreshold = 8)
-    assert(salted.exceptAll(plain).count() == 0)
-    assert(plain.exceptAll(salted).count() == 0)
-    // the planted family really is a >threshold bucket (the salt engaged)
-    val hotSizes = banded.groupBy("band", "bucket").count()
-      .filter(col("count") > 8).count()
-    assert(hotSizes >= 8, s"expected >=8 hot (band,bucket) keys, got $hotSizes")
-  }
-
   test("bucket-capped embedding candidates: stars for hot buckets, same clusters") {
-    // same planted corpus as the salted test: 40 identical vectors share
-    // one over-cap bucket in every band; 60 randoms stay under cap
+    // planted corpus: 40 identical vectors share one over-cap bucket in
+    // every band; 60 randoms stay under cap
     val emb = spark.range(100).selectExpr("id",
       "transform(sequence(1, 8), i -> CASE WHEN id < 40 THEN CAST(i AS DOUBLE) " +
         "ELSE cast(hash(id, i) % 100 AS DOUBLE) END) AS v")

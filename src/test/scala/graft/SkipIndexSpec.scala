@@ -22,7 +22,7 @@ class SkipIndexSpec extends AnyFunSuite {
     dir
   }
 
-  private lazy val index = SkipIndex.buildFooterIndex(spark, flatDir, "ts").cache()
+  private lazy val index = SkipIndex.buildFooterIndex(spark, flatDir).cache()
 
   test("footer index agrees with a data scan: rows, min/max per file") {
     val fromData = spark.read.parquet(flatDir)
@@ -85,7 +85,7 @@ class SkipIndexSpec extends AnyFunSuite {
     assert(interior > 0, "window too narrow: no interior files, nothing metadata-answered")
     assert(boundary < index.count(), "boundary not a strict subset")
 
-    val got = SkipIndex.metaWindowStats(spark, flatDir, "ts", loUs, hiUs).head()
+    val got = SkipIndex.metaWindowStats(spark, flatDir, loUs, hiUs).head()
     val exp = spark.read.parquet(flatDir)
       .filter(col("ts") >= lit(java.sql.Timestamp.from(lo)) &&
               col("ts") < lit(java.sql.Timestamp.from(hi)))
@@ -111,7 +111,7 @@ class SkipIndexSpec extends AnyFunSuite {
     SkipIndex.writeTimeClustered(rows, "ts", dir, numFiles = 2)
     val lo = java.time.Instant.parse("2024-01-01T00:00:00Z")
     val hi = java.time.Instant.parse("2024-01-10T00:00:00Z")
-    val got = SkipIndex.metaWindowStats(spark, dir, "ts",
+    val got = SkipIndex.metaWindowStats(spark, dir,
       lo.getEpochSecond * 1000000L, hi.getEpochSecond * 1000000L).head()
     assert(got.getLong(0) === 3L, s"null-ts rows counted: ${got.getLong(0)}")
   }
@@ -122,7 +122,7 @@ class SkipIndexSpec extends AnyFunSuite {
     val lo = java.time.Instant.parse("2024-01-07T06:00:00Z")
     val hi = java.time.Instant.parse("2024-01-07T18:00:00Z")
     val (loUs, hiUs) = (lo.getEpochSecond * 1000000L, hi.getEpochSecond * 1000000L)
-    val got = SkipIndex.metaWindowStats(spark, flatDir, "ts", loUs, hiUs).head()
+    val got = SkipIndex.metaWindowStats(spark, flatDir, loUs, hiUs).head()
     val exp = spark.read.parquet(flatDir)
       .filter(col("ts") >= lit(java.sql.Timestamp.from(lo)) &&
               col("ts") < lit(java.sql.Timestamp.from(hi)))
@@ -130,7 +130,7 @@ class SkipIndexSpec extends AnyFunSuite {
     assert(got.getLong(0) === exp && exp > 0)
 
     // empty window (1970): zero rows, NULL min/max, no crash
-    val empty = SkipIndex.metaWindowStats(spark, flatDir, "ts", 0L, 1L).head()
+    val empty = SkipIndex.metaWindowStats(spark, flatDir, 0L, 1L).head()
     assert(empty.getLong(0) === 0L)
     assert(empty.isNullAt(1) && empty.isNullAt(2))
   }
@@ -259,14 +259,25 @@ class SkipIndexSpec extends AnyFunSuite {
     assert(bins.distinct.size < plan.size)
   }
 
-  test("refreshFooterIndex: incremental ≡ rebuild; only new files' footers read; deletions dropped") {
+  /** A from-scratch index of `dir`, back as driver rows. */
+  private def rebuilt(dir: String): Seq[SkipIndex.FileStat] =
+    SkipIndex.buildFooterIndex(spark, dir).collect().toSeq.map(r =>
+      SkipIndex.FileStat(r.getString(0), r.getLong(1), r.getLong(2),
+        r.getLong(3), r.getLong(4), r.getLong(5)))
+
+  /** Index rows in a spelling-free, order-free form for comparison. */
+  private def norm(rows: Seq[SkipIndex.FileStat]) = rows
+    .map(r => (r.file.replaceFirst("^file:/+", "/"), r.nRows, r.minUs, r.maxUs))
+    .sorted
+
+  test("reconcile/load: incremental ≡ rebuild; only new files' footers read; deletions dropped") {
     val dir = new java.io.File("target/fixtures/events_flat_refresh").getAbsolutePath
     val ev = Tables.events(spark, TestSpark.Sf0001)
       .select("event_id", "ts", "user_id", "event_type", "value")
     SkipIndex.writeTimeClustered(ev.filter(col("ts") <
       lit(java.sql.Timestamp.valueOf("2024-01-15 00:00:00"))), "ts", dir)
-    val idx0 = SkipIndex.buildFooterIndex(spark, dir, "ts").cache()
-    idx0.count()
+    val idx0 = SkipIndex.load(spark, dir) // first build, persisted
+    assert(new java.io.File(SkipIndex.indexPath(dir)).isDirectory)
 
     // append the second half as new files (fresh subdir files via a
     // second write into a sibling then move — simplest: write with
@@ -280,22 +291,24 @@ class SkipIndexSpec extends AnyFunSuite {
       .write.mode("append").parquet(dir)
     finally spark.conf.unset(key)
 
-    val refreshed = SkipIndex.refreshFooterIndex(spark, dir, "ts", idx0)
-    val rebuilt = SkipIndex.buildFooterIndex(spark, dir, "ts")
-    def norm(df: org.apache.spark.sql.DataFrame) = df
-      .select(regexp_replace(col("file"), "^file:/+", "/").as("file"),
-        col("n_rows"), col("min_us"), col("max_us"))
-      .orderBy("file").collect().toSeq
-    assert(norm(refreshed) === norm(rebuilt))
-    assert(refreshed.count() > idx0.count())
+    val refreshed = SkipIndex.load(spark, dir)
+    assert(norm(refreshed) === norm(rebuilt(dir)))
+    assert(refreshed.size > idx0.size)
+    // only new files' footers are read: a row already indexed is carried
+    // as it stands, so a doctored row survives reconcile untouched
+    val doctored = idx0.head.copy(nRows = -7L)
+    val carried = SkipIndex.reconcile(spark, dir, doctored +: idx0.tail)
+    assert(carried.contains(doctored))
+    assert(carried.size === refreshed.size)
 
-    // deletion heals: drop one file on disk → refresh forgets its row
-    val victim = new java.io.File(
-      norm(refreshed).head.getString(0))
+    // deletion heals: drop one file on disk → load forgets its row
+    val victim = new java.io.File(norm(refreshed).head._1)
     assert(victim.exists()); victim.delete()
-    val healed = SkipIndex.refreshFooterIndex(spark, dir, "ts", refreshed)
-    assert(!norm(healed).map(_.getString(0)).contains(victim.getPath))
-    assert(healed.count() === refreshed.count() - 1)
+    val healed = SkipIndex.load(spark, dir)
+    assert(!norm(healed).map(_._1).contains(victim.getPath))
+    assert(healed.size === refreshed.size - 1)
+    // and the healed index is what was persisted
+    assert(SkipIndex.load(spark, dir) === healed)
   }
 
   test("streaming flat ingest: exactly-once files, index fresh per batch, pruning correct") {
@@ -323,14 +336,14 @@ class SkipIndexSpec extends AnyFunSuite {
 
     val data = spark.read.parquet(dir)
     assert(data.count() === 100)
-    // the persisted index is current: identical to a from-scratch rebuild
+    // the index is current: identical to a from-scratch rebuild
     def norm(df: org.apache.spark.sql.DataFrame) = df
       .select(regexp_replace(col("file"), "^file:/+", "/").as("file"),
         col("n_rows"), col("min_us"), col("max_us"))
       .orderBy("file").collect().toSeq
-    val idx = SkipIndex.loadIndexOrEmpty(spark, dir)
+    val idx = SkipIndex.toFrame(spark, SkipIndex.load(spark, dir))
     assert(idx.count() >= 2)
-    assert(norm(idx) === norm(SkipIndex.buildFooterIndex(spark, dir, "ts")))
+    assert(norm(idx) === norm(SkipIndex.buildFooterIndex(spark, dir)))
     // zone pruning serves straight off the streamed archive
     val lo = java.time.Instant.parse("2024-02-02T00:00:00Z")
     val hi = java.time.Instant.parse("2024-02-03T00:00:00Z")
@@ -345,6 +358,45 @@ class SkipIndexSpec extends AnyFunSuite {
       .digest(ckpt.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
     SkipIndex.appendClusteredBatch(rows(1), "ts", dir, batchId = 0L, streamId)
     assert(spark.read.parquet(dir).count() === 100)
+  }
+
+  test("streamed archive with sidecars: CatalogSidecar.load ≡ rebuild and writes nothing") {
+    import spark.implicits._
+    import java.sql.Timestamp
+    import graft.streaming.StreamingOps
+    val src = java.nio.file.Files.createTempDirectory("graft_flat_side_src").toString
+    val dir = java.nio.file.Files.createTempDirectory("graft_flat_side_arch").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_flat_side_ckpt").toString
+    def rows(day: Int) = (0 until 40).map { i =>
+      (day * 1000L + i, Timestamp.valueOf(f"2024-03-0$day 00:00:00")
+        .toLocalDateTime.plusSeconds(i * 90L), i.toDouble)
+    }.map { case (id, t, v) => (id, Timestamp.valueOf(t), v) }
+      .toDF("event_id", "ts", "value")
+    rows(1).coalesce(1).write.parquet(s"$src/f1")
+    rows(2).coalesce(1).write.parquet(s"$src/f2")
+    val stream = spark.readStream
+      .schema("event_id LONG, ts TIMESTAMP, value DOUBLE")
+      .option("maxFilesPerTrigger", "1").parquet(s"$src/*")
+    val q = StreamingOps.flatArchiveIngest(stream, "ts", dir, ckpt)
+    try q.processAllAvailable() finally q.stop()
+    // a rollup maintenance batch adds its `_rollup` version, and a
+    // crashed batch leaves a staged data file behind
+    StreamingOps.maintainRollupBatch(rows(3), 0L, "side", "ts", dir,
+      _.groupBy("day").agg(count(lit(1)).as("n")))
+    rows(4).coalesce(1).write.parquet(s"$dir/_staging/batch=crashed")
+    Seq("_ingest_commits", "_staging", "_rollup", "_skipindex").foreach(d =>
+      assert(new java.io.File(s"$dir/$d").isDirectory, s"missing sidecar $d"))
+
+    val idxDir = new java.io.File(SkipIndex.indexPath(dir))
+    def snapshot() = idxDir.listFiles().map(f => f.getName -> f.lastModified()).toMap
+    val before = snapshot()
+    Thread.sleep(1100) // fs mtime granularity
+    val loaded = graft.catalog.CatalogSidecar.load(spark, dir).rows
+    assert(loaded.size >= 3) // every landed day's files ...
+    assert(!loaded.exists(_.file.contains("/_"))) // ... and no sidecar's
+    assert(loaded.sortBy(_.file) === rebuilt(dir).sortBy(_.file))
+    assert(snapshot() === before,
+      "an index current with the listing must not be rewritten")
   }
 
   test("compact: content preserved, exactly one file per bin, zones stay time-contiguous") {
