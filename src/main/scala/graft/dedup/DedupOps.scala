@@ -224,24 +224,6 @@ object DedupOps {
           col(textCol), n, k, seed).as("sig"))
       .filter(col("sig").getItem(0) < graft.functions.MinHashSig.Prime)
 
-  /** `ObjectHashAggregate` (the exec for TypedImperativeAggregate) falls
-    * back to SORT-based aggregation after only 128 distinct keys per
-    * partition by default — ruinous for per-document aggregates. Raise it;
-    * buffers here are ≤1 KB so even 128k in-flight groups is ~128 MB.
-    *
-    * SESSION-WIDE SIDE EFFECT, by design: [[minhashSignatures]] and
-    * [[simhash]] raise this conf on the caller's SparkSession at
-    * plan-construction time and never restore it (the conf is read at
-    * EXECUTION, so a scoped set-restore around plan build would be a
-    * no-op race). The mutation is monotone (only ever raises to one fixed
-    * value) and idempotent, so concurrent callers commute; callers that
-    * need a different value must set it AFTER building these plans, or
-    * run them on a separate session (`spark.newSession()` shares the
-    * SparkContext but isolates conf). */
-  private def raiseObjectAggThreshold(df: DataFrame): Unit =
-    df.sparkSession.conf.set(
-      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-
   /** LSH candidate pairs: slice the k-row signature into `bands` bands of
     * `k/bands` rows; docs sharing a (band, band-hash) bucket are candidates.
     * The bucket join shuffles on the band hash — no all-pairs comparison
@@ -517,15 +499,21 @@ object DedupOps {
   /** 64-bit SimHash fingerprint per document: xxhash64 per token, bit votes
     * folded by the single-buffer [[graft.functions.SimHashAgg]] imperative
     * aggregate (a 64-sum-column formulation shuffles 64-field rows and
-    * measured ~2× slower at sf0.1). One shuffle on doc_id. */
-  def simhash(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    raiseObjectAggThreshold(df)
-    df.select(col(idCol).as("doc_id"),
-        explode(TextOps.wsTokens(lower(col(textCol)))).as("tok"))
-      .withColumn("h", xxhash64(col("tok")))
-      .groupBy("doc_id")
-      .agg(graft.functions.SimHashAgg.simhash_agg(col("h")).as("simhash"))
-  }
+    * measured ~2× slower at sf0.1). One shuffle on doc_id.
+    *
+    * `ObjectHashAggregate` falls back to SORT-based aggregation after 128
+    * keys per partition by default — ruinous per document — so the frame
+    * lives on a child session with the threshold raised (≤1 KB buffers:
+    * 128k groups is ~128 MB); the conf is read at execution. */
+  def simhash(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    graft.util.Sessions.scoped(df,
+        "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "131072") {
+      _.select(col(idCol).as("doc_id"),
+          explode(TextOps.wsTokens(lower(col(textCol)))).as("tok"))
+        .withColumn("h", xxhash64(col("tok")))
+        .groupBy("doc_id")
+        .agg(graft.functions.SimHashAgg.simhash_agg(col("h")).as("simhash"))
+    }
 
   /** Duplicate-cluster SIZE distribution — the dedup-QA histogram (how
     * many clusters of each size the near-dup graph resolves to,

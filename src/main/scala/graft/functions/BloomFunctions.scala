@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal, XxHash64}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -31,13 +31,21 @@ object BloomFunctions {
     * `...maxNumBits` (default 67108864 ≈ 8 MB) — read from the active
     * session conf at execution. Beyond ~6.7M keys the advertised fpp
     * degrades silently (no failure: false positives just rise, eroding
-    * pruning). Callers sizing above the defaults must raise those confs;
-    * [[graft.ops.JoinOps.bloomSemiJoin]] does so automatically. */
+    * pruning). Builds sized above the defaults run on a child session
+    * carrying [[bloomCaps]], as JoinOps.bloomSemiJoin and buildBloomIndex do. */
   def bloom_agg(key: Column, expectedItems: Long, numBits: Long): Column =
     ColumnBridge.column(
       new BloomFilterAggregate(
         new XxHash64(Seq(ColumnBridge.expression(key))),
         Literal(expectedItems), Literal(numBits)).toAggregateExpression())
+
+  /** The runtime-filter caps for a [[graft.util.Sessions.child]] build:
+    * `max(caller's value, needed)` each. */
+  def bloomCaps(spark: SparkSession, expectedItems: Long,
+      numBits: Long): Seq[(String, String)] =
+    Seq("spark.sql.optimizer.runtime.bloomFilter.maxNumItems" -> expectedItems,
+        "spark.sql.optimizer.runtime.bloomFilter.maxNumBits" -> numBits)
+      .map { case (k, needed) => k -> math.max(spark.conf.get(k).toLong, needed).toString }
 
   /** Membership probe against a driver-collected bloom filter blob. False
     * positives possible (rate set by the build sizing), false negatives

@@ -295,21 +295,24 @@ object JoinOps {
         s"$dimKey: ${dim.schema(dimKey).dataType}); cast one side first — " +
         "XxHash64 hashes raw bytes, so INT 5 and BIGINT 5 probe different bits")
     val bits = if (numBits > 0) numBits else math.max(64L, expectedItems * 10L)
-    // Spark caps BloomFilterAggregate's sizing at the runtime-filter conf
-    // maxima (defaults 4M items / 67M bits) — above that the ~1% fpp would
-    // degrade SILENTLY (correctness survives via the verify join; pruning
-    // doesn't). Raise the caps monotonically to honor the caller's sizing.
-    val conf = dim.sparkSession.conf
-    def raiseTo(key: String, atLeast: Long): Unit =
-      if (conf.get(key).toLong < atLeast) conf.set(key, atLeast.toString)
-    raiseTo("spark.sql.optimizer.runtime.bloomFilter.maxNumItems", expectedItems)
-    raiseTo("spark.sql.optimizer.runtime.bloomFilter.maxNumBits", bits)
-    val blob = dim.agg(bloom_agg(col(dimKey), expectedItems, bits).as("bf"))
-      .head().getAs[Array[Byte]](0)
+    val blob = bloomBlob(dim, dimKey, expectedItems, bits)
     // empty dim → no blob → empty semi-join (don't probe a null sketch)
     val pre = if (blob == null) fact.filter(lit(false))
       else fact.filter(might_contain(blob, col(factKey)))
     pre.join(dim.select(col(dimKey).as(factKey)).distinct(),
       Seq(factKey), "left_semi")
+  }
+
+  /** The dim side's bloom blob (null for an empty dim), aggregated on a
+    * child session whose runtime-filter caps honor the sizing: above the
+    * caps the fpp would degrade SILENTLY (the verify join keeps results
+    * exact; pruning erodes). */
+  private[graft] def bloomBlob(dim: DataFrame, dimKey: String,
+      expectedItems: Long, bits: Long): Array[Byte] = {
+    import graft.functions.BloomFunctions._
+    graft.util.Sessions.scoped(dim, bloomCaps(dim.sparkSession, expectedItems, bits): _*) {
+      _.agg(bloom_agg(col(dimKey), expectedItems, bits).as("bf"))
+        .head().getAs[Array[Byte]](0)
+    }
   }
 }

@@ -80,7 +80,7 @@ object RollupOps {
     * partition footprint, never a full-view rebuild.
     *
     * @param prev      the maintained view (built under the OLD dimension)
-    * @param idx       footer index of the fact archive ([[graft.sources.SkipIndex]])
+    * @param idx       footer-index rows of the fact archive ([[graft.sources.SkipIndex.load]])
     * @param bloomIdx  per-file bloom over the DIMENSION KEY as string
     * @param keyCol    the dimension-key column in the facts (cast to
     *                  string for the delta comparison, matching the
@@ -89,7 +89,8 @@ object RollupOps {
     * @param tsCol     fact event-time column (day-partitions the view)
     * @param recompute partition recompute under the NEW dimension
     *                  (typically broadcast-join + aggregate) */
-  def maintainOnDimDelta(prev: DataFrame, idx: DataFrame, bloomIdx: DataFrame,
+  def maintainOnDimDelta(prev: DataFrame,
+      idx: Seq[graft.sources.SkipIndex.FileStat], bloomIdx: DataFrame,
       keyCol: String, deltaKeys: Seq[String], tsCol: String,
       recompute: DataFrame => DataFrame): DataFrame = {
     import graft.sources.SkipIndex
@@ -126,7 +127,7 @@ object RollupOps {
       require(days.size + (if (hasNull) 1 else 0) == changed.size,
         s"unexpected day-key types in $changed")
       val picks = SkipIndex.picksForChangedDays(idx, days, hasNull)
-      val data = SkipIndex.readFiles(spark, picks)
+      val data = spark.read.parquet(picks: _*)
         .withColumn("day", to_date(col(tsCol)))
       maintainByKeys(prev, data, changed, "day", recompute)
     }

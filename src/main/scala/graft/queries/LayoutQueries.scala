@@ -376,12 +376,11 @@ object LayoutQueries {
       }
       // the first run builds and persists the footer index; later runs
       // find it current (one listing walk, no footer read, no write)
-      val idx = SkipIndex.toFrame(s, SkipIndex.load(s, root))
       val bloom = s.read.parquet(s"$root/../ivm_bloom")
       val v1 = s.read.parquet(s"$root/../ivm_v1")
       graft.ops.RollupOps.maintainOnDimDelta(
-          v1, idx, bloom, "user_id", deltaKeys.map(_.toString), "ts",
-          segV(dim(updated = true)))
+          v1, SkipIndex.load(s, root), bloom, "user_id",
+          deltaKeys.map(_.toString), "ts", segV(dim(updated = true)))
         .orderBy("day", "segment")
     }),
 

@@ -145,21 +145,11 @@ object ParityQueries {
       // overlap them so the tail of one write back-fills the executors
       // the next needs (guide §2.6); each lands the same one-file-per-
       // partition layout as the sequential loop did.
-      // withMicrosTimestamps OUTSIDE the pool: each append wraps its
-      // write in a set/restore of the SESSION-scoped
-      // parquet.outputTimestampType, and two concurrent set/restores
-      // interleave into a leaked conf (one run left TIMESTAMP_MICROS
-      // installed for every later Verify query — 11 cells' output
-      // timestamps went tz-aware). Holding the conf at MICROS for the
-      // whole block makes the inner set/restores idempotent no matter
-      // how the threads interleave.
-      graft.sources.PartitionedArchive.withMicrosTimestamps(bb) {
-        graft.util.Par.overlap(3)((0 to 4).map { w => () =>
-          graft.sources.PartitionedArchive.appendBroadbandBatch(
-            bb.filter(floor((dayofmonth(col("ts")) - 1) / lit(7))
-              .cast("int") === w).coalesce(1), root, w.toLong, "s5")
-        })
-      }
+      graft.util.Par.overlap(3)((0 to 4).map { w => () =>
+        graft.sources.PartitionedArchive.appendBroadbandBatch(
+          bb.filter(floor((dayofmonth(col("ts")) - 1) / lit(7))
+            .cast("int") === w).coalesce(1), root, w.toLong, "s5")
+      })
       val bands = bb.select("hydrophone").distinct().collect()
         .map(_.getString(0)).toSeq.sorted // catalog-scale: one row per band
       bands.map { h =>

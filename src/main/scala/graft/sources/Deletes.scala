@@ -140,8 +140,8 @@ object Deletes {
           path.getParent, s"_rewrite_${path.getName}")
         // same stats-bearing micros encoding as the original writer, so
         // the rewritten file stays zone-prunable
-        PartitionedArchive.withMicrosTimestamps(survivors) {
-          survivors.coalesce(1).write.mode("overwrite").parquet(staging.toString)
+        graft.util.Sessions.scoped(survivors, PartitionedArchive.MicrosTs) {
+          _.coalesce(1).write.mode("overwrite").parquet(staging.toString)
         }
         val part = fs.listStatus(staging)
           .map(_.getPath).find(_.getName.endsWith(".parquet"))

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.util.Sessions
 
 /** The canonical partitioned archive layout (SURVEY §4.2.2).
   *
@@ -29,18 +30,10 @@ object PartitionedArchive {
     * Spark's default is legacy INT96, which carries NO column statistics —
     * with it, `ts` row-group pruning silently never happens and every
     * window query scans the whole partition (caught by the 10×-archive
-    * scan-metrics test in ArchiveLayoutSpec). The conf is scoped around
-    * the synchronous write and restored after. */
-  private[graft] def withMicrosTimestamps[T](df: DataFrame)(f: => T): T = {
-    val key = "spark.sql.parquet.outputTimestampType"
-    val conf = df.sparkSession.conf
-    val prev = conf.getOption(key)
-    conf.set(key, "TIMESTAMP_MICROS")
-    try f finally prev match {
-      case Some(v) => conf.set(key, v)
-      case None => conf.unset(key)
-    }
-  }
+    * scan-metrics test in ArchiveLayoutSpec). Writers apply it through
+    * [[graft.util.Sessions.scoped]], so it never reaches the caller's
+    * session. */
+  private[graft] val MicrosTs = "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS"
 
   /** Ingest a broadband frame `(hydrophone, delta_t, ts, value)`.
     * Rows are sorted by `ts` within each partition so parquet row-group
@@ -49,8 +42,8 @@ object PartitionedArchive {
     * ranges. zstd trades a little CPU for the scan bandwidth that
     * dominates at archive scale. */
   def writeBroadband(df: DataFrame, root: String): Unit =
-    withMicrosTimestamps(df) {
-      df.sortWithinPartitions("hydrophone", "delta_t", "ts")
+    Sessions.scoped(df, MicrosTs) {
+      _.sortWithinPartitions("hydrophone", "delta_t", "ts")
         .write.mode("overwrite")
         .option("compression", "zstd")
         .partitionBy(BroadbandPartitions: _*)
@@ -60,8 +53,8 @@ object PartitionedArchive {
   /** Ingest a PSD long frame
     * `(hydrophone, freq_type, delta_f, delta_t, ts, band, value)`. */
   def writePsd(df: DataFrame, root: String): Unit =
-    withMicrosTimestamps(df) {
-      df.sortWithinPartitions("hydrophone", "freq_type", "delta_f", "delta_t", "ts")
+    Sessions.scoped(df, MicrosTs) {
+      _.sortWithinPartitions("hydrophone", "freq_type", "delta_f", "delta_t", "ts")
         .write.mode("overwrite")
         .option("compression", "zstd")
         .partitionBy(PsdPartitions: _*)
@@ -154,8 +147,8 @@ object PartitionedArchive {
       }
       return landed.toSeq
     }
-    withMicrosTimestamps(df) {
-      df.sortWithinPartitions(sortCols.map(col): _*)
+    Sessions.scoped(df, MicrosTs) {
+      _.sortWithinPartitions(sortCols.map(col): _*)
         .write.mode("overwrite")
         .option("compression", "zstd")
         .partitionBy(partitionCols: _*)
@@ -271,8 +264,8 @@ object PartitionedArchive {
     val df = spark.read.parquet(dir)
     val ranged = if (nFiles == 1) df.repartition(1)
       else df.repartitionByRange(nFiles, org.apache.spark.sql.functions.col("ts"))
-    withMicrosTimestamps(df) {
-      ranged.sortWithinPartitions("ts")
+    Sessions.scoped(ranged, MicrosTs) {
+      _.sortWithinPartitions("ts")
         .write.mode("overwrite").option("compression", "zstd").parquet(tmp.toString)
     }
     if (fs.exists(old)) fs.delete(old, true) // stale leftover from a crash AFTER promote

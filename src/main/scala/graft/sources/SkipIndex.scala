@@ -2,12 +2,13 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import scala.jdk.CollectionConverters._
+import graft.util.Sessions
 
 /** File-level ZONE-MAP skip index + small-file compaction for flat
   * (un-partitioned) parquet archives — the data-skipping layer every
@@ -66,8 +67,8 @@ object SkipIndex {
     * treats stats-less files as must-read). */
   def writeTimeClustered(df: DataFrame, tsCol: String, dir: String,
                          numFiles: Int = 32): Unit =
-    PartitionedArchive.withMicrosTimestamps(df) {
-      df.withColumn("__d", to_date(col(tsCol)))
+    Sessions.scoped(df, PartitionedArchive.MicrosTs) {
+      _.withColumn("__d", to_date(col(tsCol)))
         .repartition(numFiles, col("__d"))
         .sortWithinPartitions(col(tsCol))
         .drop("__d")
@@ -383,14 +384,14 @@ object SkipIndex {
     * unprunable residue — DISTINCT applied after ALL contributors (an
     * all-null file satisfies both the null picks and the unprunable
     * test; deduping early double-reads it). */
-  def picksForChangedDays(idx: DataFrame, days: Seq[java.time.LocalDate],
-      includeNullGroup: Boolean): DataFrame = {
+  def picksForChangedDays(idx: Seq[FileStat], days: Seq[java.time.LocalDate],
+      includeNullGroup: Boolean): Seq[String] = {
     def us(d: java.time.LocalDate): Long = d.toEpochDay * 86400000000L
-    val dayPicks = days.map(d => pruneFiles(idx, us(d), us(d) + 86400000000L))
-    val nullPicks =
-      if (includeNullGroup) Seq(idx.filter(col("n_nulls") =!= 0L)) else Seq.empty
-    (dayPicks ++ nullPicks :+ unprunableFiles(idx))
-      .reduce(_ unionByName _).distinct()
+    val dayPicks = days.flatMap(d =>
+      idx.filter(r => r.maxUs >= us(d) && r.minUs < us(d) + 86400000000L))
+    val nullPicks = if (includeNullGroup) idx.filter(_.nNulls != 0L) else Seq.empty
+    val unprunable = idx.filter(r => r.nRows > 0 && r.minUs > r.maxUs)
+    (dayPicks ++ nullPicks ++ unprunable).map(_.file).distinct
   }
 
   /** Files whose `[min_us, max_us]` zone intersects `[loUs, hiUs)`.
@@ -439,8 +440,8 @@ object SkipIndex {
     * as n_files × fpp, so a constant bits-per-row blob stops being flat
     * as the archive grows — a naive caller at 10⁴ files would silently
     * regress toward a scan. With the defaults (`0` = derive), the build
-    * reads the footers (metadata-scale, the same budget as the footer
-    * index) for the file count and the LARGEST per-file row count, sets
+    * takes the file count and the LARGEST per-file row count from
+    * [[reconcile]]'s footer rows (nothing is persisted), sets
     * `fpp = min(1%, 1/(2·n_files))`, and sizes bits with the standard
     * optimal formula — routed files stay ~true+O(1) at any archive
     * span. Both knobs remain overridable for callers that know their
@@ -448,29 +449,14 @@ object SkipIndex {
     * rows). */
   def buildBloomIndex(spark: SparkSession, dataDir: String, keyCol: String,
       expectedItemsPerFile: Long = 0L, numBits: Long = 0L): DataFrame = {
-    spark.catalog.refreshByPath(dataDir) // same stale-listing guard as footer index
+    spark.catalog.refreshByPath(dataDir) // the build read lists through Spark
     val (items, bits) =
       if (expectedItemsPerFile > 0 && numBits > 0) (expectedItemsPerFile, numBits)
       else {
-        val files = spark.read.parquet(dataDir).inputFiles.toIndexedSeq
-        val nFiles = math.max(1, files.length)
-        import spark.implicits._
-        val confBc = spark.sparkContext.broadcast(
-          new org.apache.spark.util.SerializableConfiguration(
-            spark.sparkContext.hadoopConfiguration))
-        val maxRows = spark.createDataset(files)(Encoders.STRING)
-          .mapPartitions { it =>
-            val conf = confBc.value.value
-            it.map { f =>
-              org.apache.parquet.hadoop.ParquetFileReader.readFooter(
-                  conf, new org.apache.hadoop.fs.Path(f),
-                  org.apache.parquet.format.converter
-                    .ParquetMetadataConverter.NO_FILTER)
-                .getBlocks.asScala.map(_.getRowCount.toLong).sum
-            }
-          }.reduce(math.max _)
+        val rows = reconcile(spark, dataDir, IndexedSeq.empty)
+        val nFiles = math.max(1, rows.length)
         val i = if (expectedItemsPerFile > 0) expectedItemsPerFile
-          else math.max(1L, maxRows)
+          else rows.iterator.map(_.nRows).foldLeft(1L)(math.max)
         val fpp = math.min(0.01, 1.0 / (2.0 * nFiles))
         val b = if (numBits > 0) numBits
           else math.max(64L,
@@ -478,16 +464,14 @@ object SkipIndex {
         (i, b)
       }
     // honor the derived sizing past BloomFilterAggregate's silent
-    // runtime-filter clamps (same monotone raise as bloomSemiJoin)
-    def raiseTo(key: String, atLeast: Long): Unit =
-      if (spark.conf.get(key).toLong < atLeast)
-        spark.conf.set(key, atLeast.toString)
-    raiseTo("spark.sql.optimizer.runtime.bloomFilter.maxNumItems", items)
-    raiseTo("spark.sql.optimizer.runtime.bloomFilter.maxNumBits", bits)
+    // runtime-filter clamps: the build runs on a child session whose caps
+    // are raised to at least the sizing (same rule as bloomSemiJoin)
+    val built = Sessions.child(spark,
+      graft.functions.BloomFunctions.bloomCaps(spark, items, bits): _*)
     // keyCol is any SQL expression (a plain column name, or e.g.
     // `CAST(user_id AS STRING)` — probe-side pruneCollectedByKeys hashes
     // STRING keys, so non-string key columns are indexed via a cast)
-    spark.read.parquet(dataDir)
+    built.read.parquet(dataDir)
       .groupBy(col("_metadata.file_path").as("file"))
       .agg(graft.functions.BloomFunctions.bloom_agg(
         expr(keyCol), items, bits).as("bloom"))
@@ -610,9 +594,8 @@ object SkipIndex {
       .withColumn("file", canon(col("_metadata.file_path")))
       .join(broadcast(binOf), Seq("file"))
       .drop("file")
-    PartitionedArchive.withMicrosTimestamps(tagged) {
-      tagged
-        .repartition(nBins, col("bin"))
+    Sessions.scoped(tagged, PartitionedArchive.MicrosTs) {
+      _.repartition(nBins, col("bin"))
         .sortWithinPartitions(col(tsCol))
         .write.mode("overwrite").partitionBy("bin").parquet(outDir)
     }

@@ -2,8 +2,10 @@ package graft.streaming
 
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.PlanBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.util.Sessions
 
 /** Structured Streaming embodiment of the resample family (SURVEY §2.10:
   * the reference is batch-only, but its tumbling-bucket shapes ARE what
@@ -76,16 +78,13 @@ object StreamingOps {
     * handling as the batch reader ([[graft.tables.Tables.adaptTs]]): raw
     * int64 nanos → derived µs timestamp; native parquet timestamp → used
     * directly. Output dtype is TimestampType either way. */
-  def eventsStream(spark: SparkSession, dir: String): DataFrame =
-    // Conf scope: the footer probe + readStream declaration below resolve
-    // the schema inside the window; micro-batch execution decodes by that
-    // declared schema and never re-reads the confs (same mechanism
-    // ConfScopeSpec pins for the batch path).
-    graft.tables.Tables.withTsReadConfs(spark) {
-      // the streaming parquet source wants a directory; glob-filter to the
-      // events table within the multi-table sf dir
-      graft.tables.Tables.adaptTs(footerSchemaStream(spark, dir, "events.parquet"))
-    }
+  def eventsStream(spark: SparkSession, dir: String): DataFrame = {
+    // resolved under the read confs like Tables.events, then rebound; the
+    // streaming source wants a directory, so glob-filter to the events table
+    val child = Sessions.child(spark, graft.tables.Tables.TsReadConfs: _*)
+    PlanBridge.ofRows(spark, graft.tables.Tables.adaptTs(
+      footerSchemaStream(child, dir, "events.parquet")).queryExecution.analyzed)
+  }
 
   /** Event-time tumbling-window mean over a stream (A1 as a stream). */
   def windowedMean(stream: DataFrame, duration: String,
@@ -127,21 +126,9 @@ object StreamingOps {
     * of 32 means 32 mostly-empty state stores per operator side paying
     * fixed open/commit/snapshot cost every micro-batch. A production
     * deployment of the same operators sizes this UP with load; the point
-    * is that it is sized deliberately either way. */
-  private val StatePartitions = 8
-
-  /** An isolated child session (shared SparkContext, own SQLConf) with the
-    * state-partition count applied. Mutating the CALLER's session conf
-    * around query start would race with concurrent planning on other
-    * threads — two overlapping drivers could leave the streaming override
-    * installed for every later batch query. A child session makes the
-    * override invisible outside the driver; the memory-sink temp view and
-    * its drain stay inside the same child. */
-  private def stateSizedSession(spark: SparkSession): SparkSession = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", StatePartitions)
-    s
-  }
+    * is that it is sized deliberately either way. Each driver (its sink
+    * view and drain included) runs on a [[Sessions.child]] carrying it. */
+  private val StateConf = "spark.sql.shuffle.partitions" -> "8"
 
   /** Run the streaming resample to completion over the (finite) events
     * table and return the full result. Complete mode + memory sink: every
@@ -149,7 +136,7 @@ object StreamingOps {
     * batch oracle applies. */
   def runResampleOnce(spark: SparkSession, dir: String, duration: String): DataFrame = {
     val name = s"graft_stream_resample_${runId.incrementAndGet()}"
-    val ses = stateSizedSession(spark)
+    val ses = Sessions.child(spark, StateConf)
     val q = windowedMeanMilli(eventsStream(ses, dir), duration)
       .writeStream.outputMode("complete")
       .format("memory").queryName(name)
@@ -187,8 +174,8 @@ object StreamingOps {
           col("event_type"), col("value"))
       Seq("copy_a", "copy_b").foreach { name =>
         val tmp = new java.io.File(root, s"_tmp_$name")
-        graft.sources.PartitionedArchive.withMicrosTimestamps(ev) {
-          ev.coalesce(1).write.mode("overwrite").parquet(tmp.getAbsolutePath)
+        Sessions.scoped(ev, graft.sources.PartitionedArchive.MicrosTs) {
+          _.coalesce(1).write.mode("overwrite").parquet(tmp.getAbsolutePath)
         }
         val part = tmp.listFiles().find(f =>
           f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
@@ -200,7 +187,7 @@ object StreamingOps {
       marker.createNewFile(): Unit
     }
     val name = s"graft_stream_dedup_wm_${runId.incrementAndGet()}"
-    val ses = stateSizedSession(spark)
+    val ses = Sessions.child(spark, StateConf)
     // ONE FILE PER TRIGGER: without it the source loads both copies in a
     // single micro-batch and the cross-batch re-delivery path this
     // driver exists to exercise never runs — the duplicate of every row
@@ -232,7 +219,7 @@ object StreamingOps {
       thresholdNano: Long): DataFrame = {
     import graft.audio.SpectralOps
     val name = s"graft_stream_audio_det_${runId.incrementAndGet()}"
-    val ses = stateSizedSession(spark)
+    val ses = Sessions.child(spark, StateConf)
     val bursts = SpectralOps.synthesizeBursts(
       documentsStream(ses, dir).select("doc_id"), "doc_id", sampleRate, nSamples)
     val partials = SpectralOps.bandPartialsFused(
@@ -263,7 +250,7 @@ object StreamingOps {
       nSamples: Int, frameLen: Int, hop: Int): DataFrame = {
     import graft.audio.SpectralOps
     val name = s"graft_stream_audio_${runId.incrementAndGet()}"
-    val ses = stateSizedSession(spark)
+    val ses = Sessions.child(spark, StateConf)
     val waves = SpectralOps.synthesizeWaves(
       documentsStream(ses, dir).select("doc_id"), "doc_id", sampleRate, nSamples)
     val partials = SpectralOps.bandPartialsFused(
@@ -378,7 +365,7 @@ object StreamingOps {
     * (late re-crawls of the same content arrive within the watermark). */
   def runStreamDedupOnce(spark: SparkSession, dir: String): DataFrame = {
     val name = s"graft_stream_dedup_${runId.incrementAndGet()}"
-    val ses = stateSizedSession(spark)
+    val ses = Sessions.child(spark, StateConf)
     val q = documentsStream(ses, dir)
       .select(md5(col("text").cast("binary")).as("content_hash"))
       .dropDuplicates("content_hash")
@@ -440,7 +427,7 @@ object StreamingOps {
     * DuckDB oracle replays exactly that from the banded fixture. */
   def runStreamNearDupOnce(spark: SparkSession, dir: String,
       n: Int, kHashes: Int, bands: Int, seed: Long = 42L): DataFrame = {
-    val ses = stateSizedSession(spark)
+    val ses = Sessions.child(spark, StateConf)
     import ses.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val name = s"graft_stream_neardup_${runId.incrementAndGet()}"
@@ -484,7 +471,7 @@ object StreamingOps {
   def runStreamCmsOnce(spark: SparkSession, dir: String,
       depth: Int, width: Int): DataFrame = {
     val name = s"graft_stream_cms_${runId.incrementAndGet()}"
-    val ses = stateSizedSession(spark)
+    val ses = Sessions.child(spark, StateConf)
     val q = documentsStream(ses, dir)
       .select(explode(graft.functions.WordShingles.word_shingles(
         col("text"), 2, distinct = false)).as("bg"))
@@ -512,7 +499,7 @@ object StreamingOps {
     * this needs 512 bytes per group, forever. */
   def runStreamHllOnce(spark: SparkSession, dir: String, p: Int): DataFrame = {
     val name = s"graft_stream_hll_${runId.incrementAndGet()}"
-    val ses = stateSizedSession(spark)
+    val ses = Sessions.child(spark, StateConf)
     val q = documentsStream(ses, dir)
       .select(col("lang"), explode(graft.functions.WordShingles.word_shingles(
         col("text"), 2, distinct = false)).as("bg"))
@@ -540,7 +527,7 @@ object StreamingOps {
   def runStreamHistOnce(spark: SparkSession, dir: String,
                         lo: Double, hi: Double, bins: Int): DataFrame = {
     val name = s"graft_stream_hist_${runId.incrementAndGet()}"
-    val ses = stateSizedSession(spark)
+    val ses = Sessions.child(spark, StateConf)
     val q = eventsStream(ses, dir)
       .groupBy(col("event_type"))
       .agg(graft.functions.HistogramAgg.hist_sketch(
@@ -567,7 +554,7 @@ object StreamingOps {
     * of state, forever, vs per-distinct-key state for exact counting. */
   def runStreamMgOnce(spark: SparkSession, dir: String, k: Int): DataFrame = {
     val name = s"graft_stream_mg_${runId.incrementAndGet()}"
-    val ses = stateSizedSession(spark)
+    val ses = Sessions.child(spark, StateConf)
     val q = documentsStream(ses, dir)
       // pre-projected key: same interpreted-child rule as the batch query
       .select(explode(graft.text.TextOps.wsTokens(lower(col("text")))).as("word"))
@@ -614,7 +601,7 @@ object StreamingOps {
     * continuous-ingest shape of distinct + set-overlap tracking. */
   def runStreamKmvOnce(spark: SparkSession, dir: String, k: Int): DataFrame = {
     val name = s"graft_stream_kmv_${runId.incrementAndGet()}"
-    val ses = stateSizedSession(spark)
+    val ses = Sessions.child(spark, StateConf)
     val q = documentsStream(ses, dir)
       .select(col("lang"), explode(graft.functions.WordShingles.word_shingles(
         col("text"), 2, distinct = false)).as("bg"))
@@ -810,8 +797,7 @@ object StreamingOps {
     // the enumeration is driver arithmetic, not a Spark job. LocalDate
     // (timezone-free proleptic days) matches to_date(ts) under the UTC
     // session exactly: epoch-day = floor(µs / 86400e6).
-    def canonF(p: String) = SkipIndex.canonPath(p)
-    val landedSet = landed.map(canonF).toSet
+    val landedSet = landed.map(SkipIndex.canonPath).toSet
     // changed days from footer zones + the NULL-day flag (zones exclude
     // nulls, so null-ts rows are a changed group zones can't name)
     val (changedDays, landedNulls) =
@@ -819,8 +805,8 @@ object StreamingOps {
     val changed: Seq[Any] =
       if (landedNulls) changedDays :+ (null: Any) else changedDays
     if (changed.nonEmpty) {
-      val picks = SkipIndex.picksForChangedDays(
-        SkipIndex.toFrame(s, idx), changedDays, landedNulls)
+      // (index rows are canonPath-spelled, so picks compare directly)
+      val picks = SkipIndex.picksForChangedDays(idx, changedDays, landedNulls)
       // The landed files' rows ARE this batch's rows: the appender wrote
       // exactly the batch (and a marker-short-circuited replay returns
       // the files that hold the same batch's content) — so the recompute
@@ -830,14 +816,12 @@ object StreamingOps {
       // written milliseconds ago (r16 verdict item 5; guide §6). Every
       // landed file is always picked — its footer zone is a subset of
       // the changed-day set by construction — which the require pins.
-      val pickPaths = picks.select("file").collect().map(_.getString(0))
-      val pickSet = pickPaths.map(canonF).toSet
-      require(landedSet.subsetOf(pickSet),
+      require(landedSet.subsetOf(picks.toSet),
         s"maintainRollupBatch: landed files missing from picks: " +
-          s"${landedSet.diff(pickSet)}")
-      val otherPaths = pickPaths.filterNot(p => landedSet.contains(canonF(p)))
+          s"${landedSet.diff(picks.toSet)}")
+      val otherPaths = picks.filterNot(landedSet)
       val data = (if (otherPaths.isEmpty) batch
-        else batch.unionByName(s.read.parquet(otherPaths.toIndexedSeq: _*)))
+        else batch.unionByName(s.read.parquet(otherPaths: _*)))
         .withColumn("day", to_date(col(tsCol)))
       // prev = latest version STRICTLY BEFORE this batch id: on
       // redelivery a half-written own version must not become input —
@@ -885,7 +869,7 @@ object StreamingOps {
     * oracle applies unchanged. */
   def runStreamRollupOnce(spark: SparkSession, dir: String,
       recompute: DataFrame => DataFrame): DataFrame = {
-    val ses = stateSizedSession(spark)
+    val ses = Sessions.child(spark, StateConf)
     val tmp = java.nio.file.Files.createTempDirectory("graft_stream_rollup").toString
     val (src, arch, ckpt) = (s"$tmp/src", s"$tmp/arch", s"$tmp/ckpt")
     graft.tables.Tables.events(ses, dir)
@@ -911,7 +895,7 @@ object StreamingOps {
     * post-stream logical view. */
   def runStreamDeletesOnce(spark: SparkSession, dataDir: String,
       keyCol: String, requestBatches: Seq[Seq[String]]): DataFrame = {
-    val ses = stateSizedSession(spark)
+    val ses = Sessions.child(spark, StateConf)
     import ses.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft_stream_del").toString
     requestBatches.zipWithIndex.foreach { case (keys, i) =>
@@ -1011,7 +995,7 @@ object StreamingOps {
 
   def runStreamCdcOnce(spark: SparkSession, dir: String,
       feedOf: DataFrame => Seq[DataFrame]): DataFrame = {
-    val ses = stateSizedSession(spark)
+    val ses = Sessions.child(spark, StateConf)
     val tmp = java.nio.file.Files.createTempDirectory("graft_stream_cdc").toString
     val (src, snapDir, ckpt) = (s"$tmp/src", s"$tmp/snap", s"$tmp/ckpt")
     val snap = graft.tables.Tables.events(ses, dir)
@@ -1101,7 +1085,7 @@ object StreamingOps {
   def runStreamSampleOnce(spark: SparkSession, dir: String,
       k: Int): DataFrame = {
     val name = s"graft_stream_sample_${runId.incrementAndGet()}"
-    val ses = stateSizedSession(spark)
+    val ses = Sessions.child(spark, StateConf)
     val q = documentsStream(ses, dir)
       .select(col("source"),
         graft.text.TextOps.md5Key64(col("doc_id")).as("hv"),
@@ -1132,7 +1116,7 @@ object StreamingOps {
     * unchanged. */
   def runStreamPitOnce(spark: SparkSession, dir: String): DataFrame = {
     val name = s"graft_stream_pit_${runId.incrementAndGet()}"
-    val ses = stateSizedSession(spark)
+    val ses = Sessions.child(spark, StateConf)
     val orders = graft.tables.Tables.orders(ses, dir)
     val dim = graft.ops.MergeOps.scd2Intervals(
         orders.select(col("o_custkey"), col("o_orderkey"),
@@ -1195,7 +1179,7 @@ object StreamingOps {
     * same exactness with that small delay. */
   def runStreamJoinOnce(spark: SparkSession, dir: String): DataFrame = {
     val name = s"graft_stream_join_${runId.incrementAndGet()}"
-    val ses = stateSizedSession(spark)
+    val ses = Sessions.child(spark, StateConf)
     val purchases = eventsStream(ses, dir)
       .filter(col("event_type") === "purchase")
       .select(col("user_id"), col("ts").as("p_ts"), col("event_id").as("purchase_id"))
@@ -1230,7 +1214,7 @@ object StreamingOps {
     * the sentinel only finalizes a bounded replay. */
   def runStreamSessionsOnce(spark: SparkSession, dir: String): DataFrame = {
     val name = s"graft_stream_sessions_${runId.incrementAndGet()}"
-    val ses = stateSizedSession(spark)
+    val ses = Sessions.child(spark, StateConf)
     // sentinel parquet written fresh under target/ per run with a NATIVE
     // timestamp column, then read back through the same footer-derived +
     // adaptive path as the real stream — both sides surface ts as
@@ -1282,7 +1266,7 @@ object StreamingOps {
     * widens the mask array). The streamed twin of
     * [[graft.ops.BehaviorOps.cohortRetention]]. */
   def runStreamRetentionOnce(spark: SparkSession, dir: String): DataFrame = {
-    val ses = stateSizedSession(spark)
+    val ses = Sessions.child(spark, StateConf)
     import ses.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val name = s"graft_stream_retention_${runId.incrementAndGet()}"
@@ -1391,7 +1375,7 @@ object StreamingOps {
     * applies verbatim; the cross-batch carry/late-event semantics are
     * pinned separately in StreamingSpec. */
   def runStreamAsofOnce(spark: SparkSession, dir: String): DataFrame = {
-    val ses = stateSizedSession(spark)
+    val ses = Sessions.child(spark, StateConf)
     import ses.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val name = s"graft_stream_asof_${runId.incrementAndGet()}"
@@ -1490,7 +1474,7 @@ object StreamingOps {
 
   def runStreamFunnelOnce(spark: SparkSession, dir: String,
       stage1: String, stage2: String, stage3: String): DataFrame = {
-    val ses = stateSizedSession(spark)
+    val ses = Sessions.child(spark, StateConf)
     import ses.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val name = s"graft_stream_funnel_${runId.incrementAndGet()}"
@@ -1555,7 +1539,7 @@ object StreamingOps {
     * closed form as the batch test; constant state per group forever. */
   def runStreamWelchMomentsOnce(spark: SparkSession, dir: String): DataFrame = {
     val name = s"graft_stream_welch_${runId.incrementAndGet()}"
-    val ses = stateSizedSession(spark)
+    val ses = Sessions.child(spark, StateConf)
     val q = eventsStream(ses, dir)
       .select(col("event_type"), (col("user_id") % 2).as("grp"),
         round(col("value") * 1e6, 0).cast("long")
@@ -1592,7 +1576,7 @@ object StreamingOps {
     * applies unchanged. */
   def runStreamAttributionOnce(spark: SparkSession, dir: String,
       lookbackHours: Long): DataFrame = {
-    val ses = stateSizedSession(spark)
+    val ses = Sessions.child(spark, StateConf)
     import ses.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val name = s"graft_stream_attribution_${runId.incrementAndGet()}"
@@ -1656,7 +1640,7 @@ object StreamingOps {
     * to each group's LAST emission (`max_by` on the monotone count), which
     * equals the batch per-user aggregate — hence oracle-checkable. */
   def runUserStatsOnce(spark: SparkSession, dir: String): DataFrame = {
-    val ses = stateSizedSession(spark)
+    val ses = Sessions.child(spark, StateConf)
     import ses.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val name = s"graft_stream_userstats_${runId.incrementAndGet()}"

@@ -1,6 +1,8 @@
 package graft.tables
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.PlanBridge
+import graft.util.Sessions
 
 /** Readers for the driver-generated parquet tables (TESTDATA.md).
   *
@@ -51,43 +53,19 @@ object Tables {
     * PARQUET_TYPE_ILLEGAL) and `spark.sql.parquet.inferTimestampNTZ.enabled
     * =false` (a timezone-less micros archive otherwise infers TIMESTAMP_NTZ
     * instead of the session-UTC TimestampType every downstream op and
-    * oracle expects). Both confs are consulted only while the read schema
-    * is RESOLVED; execution decodes by the already-resolved schema and
-    * never re-reads them (verified empirically: post-restore actions on
-    * both an annotated-nanos file and an NTZ-micros file return correct
-    * values with filters still pushed — pinned by ConfScopeSpec). So this
-    * method applies them via [[withTsReadConfs]], which restores the
-    * caller's values before returning: co-resident workloads on the same
-    * session observe no conf drift. */
+    * oracle expects). Both are read only while the schema is RESOLVED
+    * (pinned by ConfScopeSpec), so the scan resolves on a
+    * [[graft.util.Sessions.child]] carrying [[TsReadConfs]] and the plan is
+    * rebound to the caller's session, whose conf never changes. */
   def events(spark: SparkSession, dir: String): DataFrame =
-    withTsReadConfs(spark) { adaptTs(read(spark, dir, "events")) }
+    PlanBridge.ofRows(spark, adaptTs(read(Sessions.child(spark, TsReadConfs: _*),
+      dir, "events")).queryExecution.analyzed)
 
-  /** Apply the two legacy parquet-timestamp read confs around `body`
-    * (which must force schema resolution of any frame it returns — a
-    * plain `spark.read.parquet(...)` already does, eagerly) and restore
-    * the caller's previous values afterwards, set-or-unset exactly. Shared
-    * by the batch reader above and the streaming source
-    * ([[graft.streaming.StreamingOps.eventsStream]]), so both paths scope
-    * identically. Not thread-atomic: two threads interleaving on the SAME
-    * session can observe each other's window — the service layer reads
-    * tables once per session at startup, and the streaming drivers run in
-    * their own child sessions, so the window is uncontended in practice. */
-  def withTsReadConfs[A](spark: SparkSession)(body: => A): A = {
-    val keys = Seq("spark.sql.legacy.parquet.nanosAsLong" -> "true",
-                   "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false")
-    // getOption reports the session DEFAULT for a never-set conf, so
-    // explicit-set-ness must come from getAll (set entries only) — restoring
-    // a default by setting it explicitly would be value-equivalent but
-    // observable drift (the key starts appearing in getAll / hadoopConf).
-    val explicitlySet = spark.conf.getAll
-    val prev = keys.map { case (k, _) => k -> explicitlySet.get(k) }
-    keys.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
+  /** The legacy parquet-timestamp read confs, shared with the streaming
+    * source ([[graft.streaming.StreamingOps.eventsStream]]). */
+  private[graft] val TsReadConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false")
 
   /** Apply the nanos-vs-native branch to a frame whose `ts` column came
     * off a parquet scan (shared by the batch reader and the streaming

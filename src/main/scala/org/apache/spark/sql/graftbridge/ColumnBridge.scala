@@ -35,3 +35,10 @@ object PlanBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 }
+
+/** Bridge to the `private[sql]` session cloner ([[graft.util.Sessions]]). */
+object SessionBridge {
+  def cloneSession(spark: org.apache.spark.sql.SparkSession)
+      : org.apache.spark.sql.SparkSession =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
+}

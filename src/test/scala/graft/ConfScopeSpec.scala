@@ -3,14 +3,15 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.tables.Tables
 
-/** Pins the conf-scoping contract of `Tables.withTsReadConfs` (r10 verdict
-  * item 8): reading the events archive must leave the CALLER's parquet
-  * timestamp confs exactly as it found them — set values restored, unset
-  * keys unset again — while the returned frame still decodes correctly
-  * when acted on AFTER the restore. The load-bearing fact (verified here,
-  * relied on by both the batch and streaming readers) is that
-  * `nanosAsLong` and `inferTimestampNTZ.enabled` are consulted only during
-  * schema RESOLUTION; execution decodes by the already-resolved schema. */
+/** Pins the conf-scoping contract of `Tables.events` (r10 verdict item 8):
+  * reading the events archive must leave the CALLER's parquet timestamp
+  * confs exactly as it found them — set values kept, unset keys unset —
+  * because the read confs go on a cloned session (`graft.util.Sessions`)
+  * that only resolves the schema, while the returned frame, rebound to
+  * the caller's session, still decodes correctly. The load-bearing fact
+  * (verified here, relied on by both the batch and streaming readers) is
+  * that `nanosAsLong` and `inferTimestampNTZ.enabled` are consulted only
+  * during schema RESOLUTION; execution decodes by the resolved schema. */
 class ConfScopeSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   private val NanosKey = "spark.sql.legacy.parquet.nanosAsLong"

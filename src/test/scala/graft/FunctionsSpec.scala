@@ -245,20 +245,22 @@ class FunctionsSpec extends AnyFunSuite {
       graft.functions.MinHashSig.minhash_text_sig(col("text"), 3, 32, 7L).as("sig"))
     // the aggregate pipeline built INLINE — DedupOps.minhashSignatures
     // now routes through the kernel itself, so going via it would
-    // compare the kernel to the kernel and pin nothing
-    spark.conf.set(
-      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-    val viaAgg = graft.dedup.DedupOps.shingleSets(docs, "doc_id", "text", 3)
-      .withColumn("h", xxhash64(col("shingle")))
-      .groupBy("doc_id")
-      .agg(graft.functions.MinHashSigAgg.minhash_sig(col("h"), 32, 7L).as("sig"))
-    // full outer on doc_id, any row with differing sigs is a failure;
-    // docs with <n tokens have NO agg row (nothing to explode) — the
-    // kernel yields the empty-buffer signature there, same as the agg's
-    // createAggregationBuffer, so only compare where both exist
-    val joined = viaKernel.as("k").join(viaAgg.as("a"), Seq("doc_id"), "left")
-      .select(col("doc_id"), col("k.sig").as("ks"), col("a.sig").as("as"))
-      .collect()
+    // compare the kernel to the kernel and pin nothing; the comparison
+    // runs on a child session with the object-agg fallback raised
+    val joined = graft.util.Sessions.scoped(viaKernel,
+        "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "131072") { k =>
+      val viaAgg = graft.dedup.DedupOps.shingleSets(docs, "doc_id", "text", 3)
+        .withColumn("h", xxhash64(col("shingle")))
+        .groupBy("doc_id")
+        .agg(graft.functions.MinHashSigAgg.minhash_sig(col("h"), 32, 7L).as("sig"))
+      // full outer on doc_id, any row with differing sigs is a failure;
+      // docs with <n tokens have NO agg row (nothing to explode) — the
+      // kernel yields the empty-buffer signature there, same as the agg's
+      // createAggregationBuffer, so only compare where both exist
+      k.as("k").join(viaAgg.as("a"), Seq("doc_id"), "left")
+        .select(col("doc_id"), col("k.sig").as("ks"), col("a.sig").as("as"))
+        .collect()
+    }
     assert(joined.nonEmpty)
     joined.foreach { r =>
       if (!r.isNullAt(2))

@@ -207,14 +207,13 @@ class HttpApiSpec extends AnyFunSuite with BeforeAndAfterAll {
       "spark.sql.session.timeZone",
       "spark.sql.shuffle.partitions")
     val before = confKeys.map(k => k -> spark.conf.getOption(k))
-    // co-resident workload following the documented recipe — Tables.events
-    // mutates ITS session's confs, so it runs on newSession(); racing it
-    // against the request storm pins that the recipe actually isolates:
+    // co-resident workload on the SERVING session itself — Tables.events
+    // resolves its read under conf overrides, which live on a cloned
+    // session only; racing it against the request storm pins that:
     // responses stay coherent and the serving session's confs never move
     val mutator = Future {
       (0 until 3).foreach { _ =>
-        graft.tables.Tables.events(spark.newSession(), TestSpark.Sf0001)
-          .count(): Unit
+        graft.tables.Tables.events(spark, TestSpark.Sf0001).count(): Unit
       }
     }
     val path = "/aggregations/broadband?hydrophone=orcasound_lab" +

@@ -62,15 +62,22 @@ class PipelineOpsSpec extends AnyFunSuite {
 
   test("bloomSemiJoin raises the runtime bloom-filter conf caps to its sizing") {
     // Spark clamps BloomFilterAggregate at the conf maxima (4M items /
-    // 67M bits by default); sizing above them must raise the caps so the
-    // advertised fpp holds instead of degrading silently
+    // 67M bits by default); sizing above them must still build the
+    // advertised blob instead of degrading silently — on a child session,
+    // so the caller's caps stay where they were
+    val caps = Seq("spark.sql.optimizer.runtime.bloomFilter.maxNumItems",
+      "spark.sql.optimizer.runtime.bloomFilter.maxNumBits")
+    def callerCaps = spark.conf.getAll.filter { case (k, _) => caps.contains(k) }
+    val before = callerCaps
     val fact = spark.range(0, 100).select(col("id").as("k"))
     val dim = spark.range(0, 10).select(col("id").as("k"))
-    JoinOps.bloomSemiJoin(fact, dim, "k", "k", expectedItems = 8000000L).count()
-    assert(spark.conf.get(
-      "spark.sql.optimizer.runtime.bloomFilter.maxNumItems").toLong >= 8000000L)
-    assert(spark.conf.get(
-      "spark.sql.optimizer.runtime.bloomFilter.maxNumBits").toLong >= 80000000L)
+    val blob = JoinOps.bloomBlob(dim, "k", 8000000L, 80000000L)
+    assert(org.apache.spark.util.sketch.BloomFilter
+      .readFrom(new java.io.ByteArrayInputStream(blob)).bitSize() >= 80000000L)
+    val got = JoinOps.bloomSemiJoin(fact, dim, "k", "k", expectedItems = 8000000L)
+      .collect().map(_.getLong(0)).sorted.toSeq
+    assert(got == (0L until 10L))
+    assert(callerCaps == before)
   }
 
   // ---- scd2Intervals -------------------------------------------------

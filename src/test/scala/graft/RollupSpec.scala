@@ -213,7 +213,7 @@ class RollupSpec extends AnyFunSuite {
     ).toDF("event_id", "ts_s", "user_id", "value")
       .withColumn("ts", col("ts_s").cast("timestamp")).drop("ts_s")
     SkipIndex.writeTimeClustered(facts0, "ts", root, numFiles = 8)
-    val idx = SkipIndex.buildFooterIndex(spark, root)
+    val idx = SkipIndex.reconcile(spark, root, IndexedSeq.empty)
     val bloom = SkipIndex.buildBloomIndex(
       spark, root, "CAST(user_id AS STRING)", 100L, 1L << 16)
     // the delta key's facts live on one day → strictly fewer files route

@@ -198,8 +198,8 @@ class SkipIndexSpec extends AnyFunSuite {
     val base = Tables.events(spark, TestSpark.Sf0001)
       .withColumn("trace_id", md5(col("event_id").cast("string")))
       .select("event_id", "ts", "trace_id", "value")
-    PartitionedArchive.withMicrosTimestamps(base) {
-      base.repartition(96, col("event_id"))
+    graft.util.Sessions.scoped(base, PartitionedArchive.MicrosTs) {
+      _.repartition(96, col("event_id"))
         .write.mode("overwrite").parquet(dir)
     }
     val nFiles = spark.read.parquet(dir).inputFiles.length
@@ -284,12 +284,11 @@ class SkipIndexSpec extends AnyFunSuite {
     // append mode clustered on the remaining days)
     val rest = ev.filter(col("ts") >=
       lit(java.sql.Timestamp.valueOf("2024-01-15 00:00:00")))
-    val key = "spark.sql.parquet.outputTimestampType"
-    spark.conf.set(key, "TIMESTAMP_MICROS")
-    try rest.withColumn("__d", to_date(col("ts")))
-      .repartition(8, col("__d")).sortWithinPartitions("ts").drop("__d")
-      .write.mode("append").parquet(dir)
-    finally spark.conf.unset(key)
+    graft.util.Sessions.scoped(rest, PartitionedArchive.MicrosTs) {
+      _.withColumn("__d", to_date(col("ts")))
+        .repartition(8, col("__d")).sortWithinPartitions("ts").drop("__d")
+        .write.mode("append").parquet(dir)
+    }
 
     val refreshed = SkipIndex.load(spark, dir)
     assert(norm(refreshed) === norm(rebuilt(dir)))

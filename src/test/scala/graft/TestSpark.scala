@@ -60,9 +60,10 @@ object TestSpark {
     * produced with parquet-java's example API directly (parquet-hadoop is
     * on Spark's classpath). Without `spark.sql.legacy.parquet.nanosAsLong`
     * the read fails analysis with PARQUET_TYPE_ILLEGAL, which makes this
-    * fixture the probe ConfScopeSpec uses to pin that the conf window in
-    * `Tables.withTsReadConfs` covers schema resolution and that execution
-    * after restore still decodes correctly. Columns are the minimal
+    * fixture the probe ConfScopeSpec uses to pin that `Tables.events`
+    * resolves the schema under the read confs (on a cloned session) and
+    * that execution on the caller's unchanged session still decodes
+    * correctly. Columns are the minimal
     * (event_id, ts, value) — adaptTs only keys on `ts`. */
   lazy val AnnotatedNanosFixtureDir: String = {
     val dir = new java.io.File("target/fixtures/nanos_annotated").getAbsoluteFile
