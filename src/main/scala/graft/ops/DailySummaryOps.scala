@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** "Typical day" time-of-day summaries (reference:
@@ -15,8 +15,19 @@ import org.apache.spark.sql.functions._
 object DailySummaryOps {
 
   /** A4 — group N days of PSD rows by time-of-day and band; four stats in
-    * one pass. `tod` is the `HH:mm:ss` label the reference serves
-    * (ref `app/services/get_aggregations.py:99`).
+    * one pass, rendered with the `HH:mm:ss` label the reference serves
+    * (ref `app/services/get_aggregations.py:99`) on top of
+    * [[timeOfDayStats]]. */
+  def timeOfDaySummary(df: DataFrame, tsCol: String, bandCol: String,
+      valueCol: String, exactMilli: Boolean = false): DataFrame =
+    meanStats(timeOfDayStats(df, tsCol, bandCol, valueCol, exactMilli), exactMilli)
+      .select(todLabel(col("sod")).as("tod"), col("band"), col("mean_value"),
+        col("min_value"), col("max_value"), col("point_count"))
+
+  /** The A4 kernel: `(sod, band, sum, count, min, max)` per integer
+    * second-of-day and band — the mergeable form the daily-summary store
+    * persists ([[graft.serve.DailySummaryStore]]), and the raw-scan
+    * fallback's aggregate.
     *
     * The GROUPING key is the integer second-of-day, not the label: the
     * r15 head-to-head measured the label-keyed formulation at 81 s for a
@@ -24,22 +35,47 @@ object DailySummaryOps {
     * equivalent heatmap scan ran 8 s — a per-row `date_format`
     * (DateTimeFormatter) plus variable-width string keys in every
     * per-task partial aggregation map. Epoch-second arithmetic keys the
-    * same groups fixed-width and codegen-cheap; the label renders AFTER
+    * same groups fixed-width and codegen-cheap; a label renders AFTER
     * aggregation over the bounded (≤86 400 × bands) result. `ts % 86400`
     * is the UTC second-of-day — identical to the session-timezone label
     * because the engine pins sessions to UTC (F3, `Tables.scala`), which
     * is also what [[todLabel]]'s arithmetic already assumes. */
-  def timeOfDaySummary(df: DataFrame, tsCol: String, bandCol: String,
-      valueCol: String, exactMilli: Boolean = false): DataFrame = {
-    val v = ResampleOps.nanToNull(col(valueCol))
-    df.groupBy(pmod(col(tsCol).cast("long"), lit(86400L)).as("__sod"),
-        col(bandCol).as("band"))
-      .agg(ResampleOps.meanOf(v, exactMilli).as("mean_value"),
-           min(v).as("min_value"),
-           max(v).as("max_value"), count(v).as("point_count"))
-      .select(todLabel(col("__sod")).as("tod"), col("band"),
-        col("mean_value"), col("min_value"), col("max_value"),
-        col("point_count"))
+  def timeOfDayStats(df: DataFrame, tsCol: String, bandCol: String,
+      valueCol: String, exactMilli: Boolean = false): DataFrame =
+    mergeStats(df.select(rowStats(col(tsCol), col(bandCol), col(valueCol), exactMilli): _*),
+      col("sod"), col("band"))
+
+  /** One raw row as a stats partial `(sod, band, sum, count, min, max)`:
+    * the value NaN-normalized ([[ResampleOps.nanToNull]]) and counted once
+    * when present. `exactMilli` sums milli-unit longs (the determinism
+    * form of [[ResampleOps.meanOf]]). */
+  def rowStats(ts: Column, band: Column, value: Column,
+      exactMilli: Boolean = false): Seq[Column] = {
+    val v = ResampleOps.nanToNull(value)
+    Seq(pmod(ts.cast("long"), lit(86400L)).as("sod"), band.as("band"),
+      (if (exactMilli) round(v * 1000, 0).cast("long") else v).as("sum"),
+      when(v.isNull, 0L).otherwise(1L).as("count"), v.as("min"), v.as("max"))
+  }
+
+  /** Merge stats partials per key: sums and counts add, extrema fold.
+    * Associative and commutative, so any grouping of the partials (raw
+    * rows, day blocks, merged blocks) gives the same count, min and max,
+    * and the same sum up to floating-point addition order. */
+  def mergeStats(df: DataFrame, keys: Column*): DataFrame =
+    df.groupBy(keys: _*).agg(sum("sum").as("sum"), sum("count").as("count"),
+      min("min").as("min"), max("max").as("max"))
+
+  /** Stats → the served columns `(sod, band, mean_value, min_value,
+    * max_value, point_count)`, mean = sum / count: the same division
+    * `avg` performs, NULL for an all-NULL group (its sum is NULL). */
+  def meanStats(stats: DataFrame, exactMilli: Boolean = false): DataFrame = {
+    val mean =
+      if (exactMilli)
+        ResampleOps.microMeanHalfUp(col("sum"), col("count")).cast("double") / 1e6
+      else col("sum") / col("count").cast("double")
+    stats.select(col("sod"), col("band"), mean.as("mean_value"),
+      col("min").as("min_value"), col("max").as("max_value"),
+      col("count").as("point_count"))
   }
 
   /** A5 — re-anchored resample of a typical-day series: bucket the

@@ -35,10 +35,12 @@ class AmbientService(
       * no probe (data-derived catalogs) empty windows are plain success. */
     integrityFileCount: (String, Int, Instant, Instant) => Long =
       (_, _, _, _) => 0L,
-    /** Maintained (tod × band) stats for a daily-summary window
-      * ([[DailySummaryStore.statsFor]]); None → raw-scan path. The hook
-      * returns the EXACT A4 aggregate the raw path computes, so serving
-      * from it is invisible except in latency (DailySummaryStoreSpec). */
+    /** Maintained (second-of-day × band) stats for a daily-summary window
+      * ([[DailySummaryStore.statsFor]], [[DailySummaryOps.meanStats]]
+      * columns); None → raw-scan path. The hook returns the A4 aggregate
+      * the raw path computes (means equal up to float addition order), so
+      * serving from it is invisible except in latency
+      * (DailySummaryStoreSpec). */
     dailySummaryStats: (String, String, Int, Int, Instant, Instant) => Option[DataFrame] =
       (_, _, _, _, _, _) => None) {
 
@@ -195,25 +197,18 @@ class AmbientService(
         Instant.EPOCH, Instant.EPOCH.plusSeconds(86400)) // bucket the 24h typical day
       val bucketSecs = ResampleOps.IntervalSeconds(iv)
       RequestPlanner.enforcePointCap(86400L / bucketSecs)
-      // A4: (tod, band) stats in one pass; P2: band range; A3: mean across
+      // A4: (sod, band) stats in one pass; P2: band range; A3: mean across
       // bands per tod; A5: re-anchored bucketing of the typical day itself.
-      // The stats come from the maintained rollup when one covers this
-      // exact window and is fresh (band filtering on top — band is a
-      // grouping key, so filtering stats == filtering rows); otherwise
-      // the raw-scan aggregate, unchanged.
+      // The stats come from the maintained rollup when its fresh blocks or
+      // a materialized window cover this window (band filtering on top —
+      // band is a grouping key, so filtering stats == filtering rows);
+      // otherwise the raw-scan aggregate, unchanged. Both carry the
+      // integer second-of-day.
       val stats = dailySummaryStats(h, freqType, deltaF, deltaT, start, end)
         .map(s => BandOps.bandRange(s, "band", bandLow, bandHigh))
-        .getOrElse(DailySummaryOps.timeOfDaySummary(
+        .getOrElse(DailySummaryOps.meanStats(DailySummaryOps.timeOfDayStats(
           BandOps.bandRange(loadPsd(h, freqType, deltaF, deltaT, start, end),
-            "band", bandLow, bandHigh), "ts", "band", "value"))
-      // second-of-day from the label by arithmetic (a to_timestamp/
-      // date_format round-trip would shift on non-UTC sessions); the
-      // maintained rollup carries it precomputed
-      val sod = if (stats.columns.contains("sod")) col("sod") else {
-        val parts = split(col("tod"), ":")
-        parts.getItem(0).cast("long") * 3600L +
-          parts.getItem(1).cast("long") * 60L + parts.getItem(2).cast("long")
-      }
+            "band", bandLow, bandHigh), "ts", "band", "value")))
       // group by the INTEGER bucket and render the label on the ≤2000
       // result rows after — formatting + hash-shuffling a string key per
       // fact row is the same trap the A4 kernel fixed in r15 (17× on the
@@ -221,7 +216,7 @@ class AmbientService(
       // same reason: a whole sort stage for ≤2000 rows (zero-padded
       // labels sort lexicographically == chronologically).
       val bucketed = stats
-        .groupBy(((floor(sod / bucketSecs) * bucketSecs).cast("long")).as("sod_bucket"))
+        .groupBy(((floor(col("sod") / bucketSecs) * bucketSecs).cast("long")).as("sod_bucket"))
         .agg(avg("mean_value").as("mean"), avg("min_value").as("min"),
              avg("max_value").as("max"),
              // §7.5.5: the served `count` is the MEAN of per-band counts

@@ -120,4 +120,191 @@ class DailySummaryStoreSpec extends AnyFunSuite {
       start.plusSeconds(86400), start.plusSeconds(2 * 86400)).isEmpty,
       "different window")
   }
+
+  // ---- dyadic day blocks --------------------------------------------------
+
+  private val Z = java.time.ZoneOffset.UTC
+  private def at(d: LocalDate) = d.atStartOfDay(Z).toInstant
+  private def stats(store: DailySummaryStore, d: LocalDate, n: Int) =
+    store.statsFor(H, "octave_bands", 3, DT, at(d), at(d.plusDays(n.toLong)))
+
+  /** The first day in 2024 whose epoch day is a multiple of 8, so the
+    * block tilings below are fixed: over days +0..+7, trailing windows
+    * of 1 and 7 days store L0 at +7 (the 1-day window) and, for the 7-day
+    * window from +1, its tiling L0 at +1, L1 at +2 and L2 at +4. */
+  private val Aligned = LocalDate.ofEpochDay((LocalDate.of(2024, 1, 1).toEpochDay + 7) / 8 * 8)
+
+  private def storeDir(root: String) = new java.io.File(
+    s"$root/psd/_daily_summary/hydrophone=$H/freq_type=octave_bands/delta_f=3/delta_t=$DT")
+
+  /** Stored aggregate directory → its file names (part files carry the
+    * writing job's id, so a rewritten directory shows new names). */
+  private def storeFiles(root: String): Map[String, Set[String]] =
+    Option(storeDir(root).listFiles()).getOrElse(Array.empty[java.io.File])
+      .filter(_.isDirectory).map(d => d.getName -> d.list().toSet).toMap
+
+  /** (path, size, mtime) of every file under `root`. */
+  private def manifest(root: String): Map[String, (Long, Long)] = {
+    val it = java.nio.file.Files.walk(java.nio.file.Paths.get(root)).iterator()
+    val out = Map.newBuilder[String, (Long, Long)]
+    while (it.hasNext) {
+      val f = it.next().toFile
+      if (f.isFile) out += f.getPath -> (f.length -> f.lastModified)
+    }
+    out.result()
+  }
+
+  private def parquetFiles(dir: java.io.File): Seq[String] =
+    dir.list().toSeq.filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
+
+  test("an off-anchor, non-aligned whole-day window is served by merging " +
+      "its stored tiling blocks, exactly as the raw scan computes it") {
+    val days = (0 until 8).map(i => Aligned.plusDays(i.toLong))
+    val root = freshArchive(days)
+    val store = new DailySummaryStore(spark, root)
+    store.maintainTrailing(H, "octave_bands", 3, DT, Seq(1, 7))
+    val withStore = AmbientService.fromArchive(spark, root)
+    // [d+1, d+4) tiles as L0 + L1, [d+2, d+8) as L1 + L2: all stored
+    for ((start, n) <- Seq(Aligned.plusDays(1) -> 3, Aligned.plusDays(2) -> 6)) {
+      assert(stats(store, start, n).isDefined, s"$start + $n days must merge blocks")
+      assertSame(daily(withStore, start, n), daily(rawService(root), start, n))
+      assertSame(daily(withStore, start, n, lo = 100.0),
+        daily(rawService(root), start, n, lo = 100.0))
+    }
+    // a tiling block no pass stored means raw fallback: [d+3, d+6) tiles
+    // as L0 at +3 and L1 at +4, neither stored; [d, d+2) is L1 at +0
+    assert(stats(store, Aligned.plusDays(3), 3).isEmpty)
+    assert(stats(store, Aligned, 2).isEmpty)
+  }
+
+  test("merge law: a level-1 block is the merge of its two level-0 " +
+      "children, exact for count, min and max, NaN values excluded") {
+    val d = Aligned
+    val root = java.nio.file.Files.createTempDirectory("graft_dss").toString
+    PartitionedArchive.writePsd(Seq(d, d.plusDays(1)).map(dayPsd)
+      .reduce(_ unionByName _)
+      .withColumn("value", org.apache.spark.sql.functions.when(
+        org.apache.spark.sql.functions.minute(
+          org.apache.spark.sql.functions.col("ts")) % 3 === 0, Double.NaN)
+        .otherwise(org.apache.spark.sql.functions.col("value"))), root)
+    val store = new DailySummaryStore(spark, root)
+    store.maintain(H, "octave_bands", 3, DT, d, 1)
+    store.maintain(H, "octave_bands", 3, DT, d.plusDays(1), 1)
+    store.maintain(H, "octave_bands", 3, DT, d, 2) // L1 from the two blocks
+    def read(name: String) = spark.read.schema(DailySummaryStore.StatsSchema)
+      .parquet(s"${storeDir(root)}/$name")
+    def rows(df: DataFrame) = df.collect().map(r =>
+      (r.getLong(0), r.getDouble(1)) -> (r.getAs[Any](2), r.getLong(3), r.getAs[Any](4),
+        r.getAs[Any](5))).toMap
+    val l1 = rows(read(s"block=L1_$d"))
+    val merged = rows(graft.ops.DailySummaryOps.mergeStats(
+      read(s"block=L0_$d").unionByName(read(s"block=L0_${d.plusDays(1)}")),
+      org.apache.spark.sql.functions.col("sod"), org.apache.spark.sql.functions.col("band")))
+    assert(l1.size == 1440 * 2 && l1.keySet == merged.keySet)
+    l1.foreach { case (k, (sum, n, mn, mx)) =>
+      val (sum2, n2, mn2, mx2) = merged(k)
+      assert(n == n2 && mn == mn2 && mx == mx2, s"$k")
+      if (k._1 / 60 % 60 % 3 == 0) assert(n == 0 && sum == null && mn == null && mx == null)
+      else {
+        assert(n == 2)
+        val (a, b) = (sum.asInstanceOf[Double], sum2.asInstanceOf[Double])
+        assert(math.abs(a - b) <= 1e-9 * math.abs(b))
+      }
+    }
+    // and both equal the raw aggregate over the two days
+    val raw = rows(graft.ops.DailySummaryOps.timeOfDayStats(
+      PartitionedArchive.readPsd(spark, root), "ts", "band", "value"))
+    assert(raw.map { case (k, (_, n, mn, mx)) => k -> (n, mn, mx) } ==
+      l1.map { case (k, (_, n, mn, mx)) => k -> (n, mn, mx) })
+  }
+
+  test("an append into one old day stales only what overlaps it; the next " +
+      "pass rewrites only the stored blocks and windows over that day") {
+    val days = (0 until 8).map(i => Aligned.plusDays(i.toLong))
+    val root = freshArchive(days)
+    val store = new DailySummaryStore(spark, root)
+    store.maintainTrailing(H, "octave_bands", 3, DT, Seq(1, 7))
+    val w7 = s"window=${Aligned.plusDays(1)}_7"
+    val before = storeFiles(root)
+    val l2 = s"block=L2_${Aligned.plusDays(4)}"
+    assert(before.keySet == Set(s"block=L0_${Aligned.plusDays(1)}", s"block=L0_${Aligned.plusDays(7)}",
+      s"block=L1_${Aligned.plusDays(2)}", l2, w7))
+    val x = Aligned.plusDays(5)
+    PartitionedArchive.appendPsdBatch(dayPsd(x), root, 0L, "t")
+    assert(stats(store, Aligned.plusDays(4), 4).isEmpty)
+    assert(stats(store, Aligned.plusDays(1), 7).isEmpty)
+    assert(stats(store, Aligned.plusDays(1), 3).isDefined)
+    assert(stats(store, Aligned.plusDays(2), 2).isDefined)
+    assert(stats(store, Aligned.plusDays(7), 1).isDefined)
+    store.maintainTrailing(H, "octave_bands", 3, DT, Seq(1, 7))
+    val after = storeFiles(root)
+    assert(after.keySet == before.keySet)
+    assert(after.keySet.filter(k => after(k) != before(k)) == Set(l2, w7))
+    assertSame(daily(AmbientService.fromArchive(spark, root), Aligned.plusDays(1), 7),
+      daily(rawService(root), Aligned.plusDays(1), 7))
+    assertSame(daily(AmbientService.fromArchive(spark, root), x, 1),
+      daily(rawService(root), x, 1))
+  }
+
+  test("a pass with no new data runs no Spark job and writes nothing; each " +
+      "stored aggregate holds one file per merge partition") {
+    val root = freshArchive((0 until 8).map(i => Aligned.plusDays(i.toLong)))
+    val store = new DailySummaryStore(spark, root)
+    store.maintainTrailing(H, "octave_bands", 3, DT, Seq(1, 7))
+    // the 1-day window's block is a one-input build (one file); the 7-day
+    // window's build merges 7 inputs (6 raw days and that block):
+    // min(7, 2 × 4 shuffle partitions) merge partitions
+    val newest = s"block=L0_${Aligned.plusDays(7)}"
+    storeDir(root).listFiles().filter(_.isDirectory).foreach(d =>
+      assert(parquetFiles(d).size == (if (d.getName == newest) 1 else 7), d.getName))
+    val before = manifest(root)
+    val (tag, marker) = ("dss-noop", "dss-marker")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val seen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("dss.tag")).foreach {
+          case `tag` => jobs.incrementAndGet()
+          case `marker` => seen.countDown()
+          case _ =>
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty("dss.tag", tag)
+      store.maintainTrailing(H, "octave_bands", 3, DT, Seq(1, 7))
+      // one marker job after the pass: the listener sees events in order,
+      // so once it has seen the marker it has seen any job of the pass
+      sc.setLocalProperty("dss.tag", marker)
+      sc.parallelize(Seq(1), 1).count()
+      assert(seen.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.setLocalProperty("dss.tag", null)
+      sc.removeSparkListener(listener)
+    }
+    assert(jobs.get == 0)
+    assert(manifest(root) == before)
+  }
+
+  test("a pass over a hard-link copy never rewrites a shared file in place") {
+    val days = (0 until 8).map(i => Aligned.plusDays(i.toLong))
+    val root = freshArchive(days)
+    new DailySummaryStore(spark, root).maintainTrailing(H, "octave_bands", 3, DT, Seq(1, 7))
+    val original = manifest(root)
+    val copy = java.nio.file.Files.createTempDirectory("graft_dss_copy")
+    val src = java.nio.file.Paths.get(root)
+    val it = java.nio.file.Files.walk(src).iterator()
+    while (it.hasNext) {
+      val p = it.next()
+      val q = copy.resolve(src.relativize(p).toString)
+      if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(q)
+      else java.nio.file.Files.createLink(q, p)
+    }
+    PartitionedArchive.appendPsdBatch(dayPsd(Aligned.plusDays(8)), copy.toString, 0L, "t")
+    val windows = new DailySummaryStore(spark, copy.toString)
+      .maintainTrailing(H, "octave_bands", 3, DT, Seq(1, 7))
+    assert(windows == Seq(1 -> Aligned.plusDays(8), 7 -> Aligned.plusDays(2)))
+    assert(manifest(root) == original)
+  }
 }
