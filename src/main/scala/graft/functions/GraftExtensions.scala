@@ -64,7 +64,8 @@ object GraftFunctions {
 }
 
 /** Session-extension wrapper: SQL functions, the nanos-pushdown
-  * optimizer rule, and the as-of merge planner strategy. */
+  * optimizer rule, the as-of merge planner strategy, and the small
+  * global-sort query-stage rule. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.builders.foreach { case (name, b) =>
@@ -73,5 +74,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }
     ext.injectOptimizerRule(_ => graft.plans.NanosPredicatePushdown)
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
+    ext.injectQueryStagePrepRule(_ => graft.plans.SmallGlobalSort)
   }
 }

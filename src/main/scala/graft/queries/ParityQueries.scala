@@ -150,8 +150,12 @@ object ParityQueries {
           bb.filter(floor((dayofmonth(col("ts")) - 1) / lit(7))
             .cast("int") === w).coalesce(1), root, w.toLong, "s5")
       })
-      val bands = bb.select("hydrophone").distinct().collect()
-        .map(_.getString(0)).toSeq.sorted // catalog-scale: one row per band
+      // the bands are the archive's hydrophone= partition directories
+      val product = new org.apache.hadoop.fs.Path(s"$root/broadband")
+      val bands = product.getFileSystem(s.sparkContext.hadoopConfiguration)
+        .listStatus(product).toSeq.filter(_.isDirectory)
+        .flatMap(d => graft.sources.PartitionedArchive.partitionValues(product, d.getPath)
+          .get("hydrophone")).sorted
       bands.map { h =>
         (h, graft.sources.PartitionedArchive.matchingFileCount(
           s, root, "broadband", Map("hydrophone" -> h, "delta_t" -> 60)))

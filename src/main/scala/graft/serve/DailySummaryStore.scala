@@ -312,7 +312,9 @@ object DailySummaryStore {
 
   /** The fingerprints of one product key's aggregates: a hash of the
     * footer-index rows whose ts zones overlap the aggregate's days, after
-    * a tag of the stored schema (a change of format reads as stale). */
+    * a tag of the stored schema (a change of format reads as stale). A
+    * row's file is hashed by its path relative to the product root, so a
+    * copied or moved archive keeps its rollup fresh. */
   private final class Fingerprints(idx: CatalogSidecar.ProductIndex, k: Key) {
     private val rows = idx.rows.filter(_.file.contains(k.part))
     private def overlaps(a: Agg)(r: CatalogSidecar.FileStat): Boolean =
@@ -322,7 +324,8 @@ object DailySummaryStore {
       val md = java.security.MessageDigest.getInstance("SHA-256")
       md.update(StatsSchema.simpleString.getBytes(UTF_8))
       rows.filter(overlaps(a))
-        .map(r => s"${r.file}|${r.nRows}|${r.minUs}|${r.maxUs}").sorted
+        .map(r => s"${r.file.substring(r.file.indexOf(k.part))}|${r.nRows}|" +
+          s"${r.minUs}|${r.maxUs}").sorted
         .foreach(s => md.update(("\n" + s).getBytes(UTF_8)))
       md.digest().map("%02x".format(_)).mkString
     }

@@ -294,14 +294,6 @@ object PartitionedArchive {
     val base = new Path(s"$root/$product")
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(base)) return Seq.empty
-    // parse k=v only BELOW the product root — an '=' in the root path (e.g.
-    // /data/env=prod/...) must not leak keys into the predicate's map
-    val basePrefix = base.toUri.getPath.stripSuffix("/") + "/"
-    def partValues(p: Path): Map[String, String] = {
-      val rel = p.toUri.getPath.stripPrefix(basePrefix)
-      rel.split("/").filter(_.contains("="))
-        .map { seg => val Array(k, v) = seg.split("=", 2); k -> v }.toMap
-    }
     val leaves = scala.collection.mutable.ArrayBuffer.empty[Path]
     def walk(dir: Path): Unit = {
       val kids = fs.listStatus(dir).filter(_.isDirectory)
@@ -310,20 +302,33 @@ object PartitionedArchive {
     }
     walk(base)
     // never match the product root itself (no partition segments parsed)
-    val dropped = leaves.filter(l => l != base && partValues(l).nonEmpty &&
-      predicate(partValues(l)))
+    val dropped = leaves.filter(l => l != base && partitionValues(base, l).nonEmpty &&
+      predicate(partitionValues(base, l)))
     dropped.foreach(l => fs.delete(l, true))
     dropped.map(_.toString).toSeq
   }
 
+  /** The `k=v` partition values in `p`'s path BELOW `base`: an '=' in
+    * the root path (e.g. /data/env=prod/...) must not leak keys. */
+  private[graft] def partitionValues(base: Path, p: Path): Map[String, String] =
+    p.toUri.getPath.stripPrefix(base.toUri.getPath.stripSuffix("/") + "/")
+      .split("/").filter(_.contains("="))
+      .map { seg => val Array(k, v) = seg.split("=", 2); k -> v }.toMap
+
   /** S5 — metadata-only matching-file count (the reference's integrity
     * probe, `get_timeseries.py:71-81`): how many data files does the
-    * partition for this product hold? Never opens a file. */
+    * partition for this product hold? One driver listing walk; never
+    * opens a file and runs no Spark job. */
   def matchingFileCount(spark: SparkSession, root: String, product: String,
       partitionValues: Map[String, Any]): Long = {
-    val dir = partitionValues.foldLeft(s"$root/$product") {
+    val dir = new Path(partitionValues.foldLeft(s"$root/$product") {
       case (acc, (k, v)) => s"$acc/$k=$v"
-    }
-    listing(spark, dir).filter(col("path").endsWith(".parquet")).count()
+    })
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def count(d: Path): Long = fs.listStatus(d).iterator.map { st =>
+      if (st.isDirectory) count(st.getPath)
+      else if (st.getPath.getName.endsWith(".parquet")) 1L else 0L
+    }.sum
+    if (fs.exists(dir)) count(dir) else 0L
   }
 }

@@ -960,14 +960,12 @@ object StreamingOps {
     * arrival-order-independent don't need it; q_stream_snapshots'
     * version contents do).
     *
-    * EMPTY-TRANCHE CAVEAT (same as [[stageSlices]]): an empty frame
-    * yields a dir with no parquet file → no micro-batch, where the old
-    * per-tranche `coalesce(1).write` always produced a file — and the
-    * callers infer the stream schema from `f0`. The contract feeds are
-    * all non-empty by construction; the require below turns a future
-    * violation into a named error instead of a silent batch-count (and
-    * q_stream_snapshots version-numbering) drift. */
-  private def stageTranches(frames: Seq[DataFrame], src: String): Unit = {
+    * An empty frame stages no file under its tag, so its tranche gets a
+    * schema-only part file of its own: every tranche is one micro-batch
+    * (a zero-row one when empty), batch numbering (and q_stream_snapshots'
+    * version numbering) does not drift, and `f0` always carries the
+    * schema the callers read the stream with. */
+  private[graft] def stageTranches(frames: Seq[DataFrame], src: String): Unit = {
     val stage = s"$src.stage"
     frames.zipWithIndex
       .map { case (f, i) => f.withColumn("__g", lit(i)) }
@@ -979,11 +977,10 @@ object StreamingOps {
       val from = java.nio.file.Paths.get(stage, s"__g=$i")
       val dst = java.nio.file.Paths.get(src, s"f$i")
       java.nio.file.Files.createDirectories(dst.getParent)
-      require(java.nio.file.Files.exists(from),
-        s"stageTranches: tranche $i is empty — the staged feed would " +
-          "lose a micro-batch (see the empty-tranche caveat above)")
-      java.nio.file.Files.move(from, dst,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      if (java.nio.file.Files.exists(from))
+        java.nio.file.Files.move(from, dst,
+          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      else frames(i).limit(0).write.parquet(dst.toString)
       val t = java.nio.file.attribute.FileTime.fromMillis(base + i * 2000L)
       // Files.list must be closed (it holds a directory handle)
       val listing = java.nio.file.Files.list(dst)

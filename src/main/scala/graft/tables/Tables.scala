@@ -1,6 +1,10 @@
 package graft.tables
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.graftbridge.PlanBridge
 import graft.util.Sessions
 
@@ -13,8 +17,26 @@ import graft.util.Sessions
   * because callers compose plain `select`/`filter` on the returned frame.
   */
 object Tables {
-  private def read(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** A single-file table is read with the schema of its footer, read on
+    * the driver and converted as `spark`'s parquet inference would (its
+    * read confs, the Spark schema a Spark writer stores in the footer
+    * first), so resolving the table runs no schema-inference job. A
+    * directory falls back to inference. */
+  private def read(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = new Path(s"$dir/$name.parquet")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val isFile = try path.getFileSystem(conf).getFileStatus(path).isFile
+      catch { case _: java.io.FileNotFoundException => false }
+    if (!isFile) spark.read.parquet(path.toString)
+    else {
+      val footer = ParquetFileReader.readFooter(conf, path,
+        ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      val converter = new ParquetToSparkSchemaConverter(
+        spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf)
+      val schema = ParquetFileFormat.readSchemaFromFooter(new Footer(path, footer), converter)
+      spark.read.schema(schema).parquet(path.toString)
+    }
+  }
 
   def region(spark: SparkSession, dir: String): DataFrame    = read(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame    = read(spark, dir, "nation")

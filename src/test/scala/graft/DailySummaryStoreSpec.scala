@@ -258,40 +258,14 @@ class DailySummaryStoreSpec extends AnyFunSuite {
     storeDir(root).listFiles().filter(_.isDirectory).foreach(d =>
       assert(parquetFiles(d).size == (if (d.getName == newest) 1 else 7), d.getName))
     val before = manifest(root)
-    val (tag, marker) = ("dss-noop", "dss-marker")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val seen = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("dss.tag")).foreach {
-          case `tag` => jobs.incrementAndGet()
-          case `marker` => seen.countDown()
-          case _ =>
-        }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty("dss.tag", tag)
-      store.maintainTrailing(H, "octave_bands", 3, DT, Seq(1, 7))
-      // one marker job after the pass: the listener sees events in order,
-      // so once it has seen the marker it has seen any job of the pass
-      sc.setLocalProperty("dss.tag", marker)
-      sc.parallelize(Seq(1), 1).count()
-      assert(seen.await(30, java.util.concurrent.TimeUnit.SECONDS))
-    } finally {
-      sc.setLocalProperty("dss.tag", null)
-      sc.removeSparkListener(listener)
-    }
-    assert(jobs.get == 0)
+    val (_, run) = TestJobs.during(spark)(
+      store.maintainTrailing(H, "octave_bands", 3, DT, Seq(1, 7)))
+    assert(run.jobs.isEmpty)
     assert(manifest(root) == before)
   }
 
-  test("a pass over a hard-link copy never rewrites a shared file in place") {
-    val days = (0 until 8).map(i => Aligned.plusDays(i.toLong))
-    val root = freshArchive(days)
-    new DailySummaryStore(spark, root).maintainTrailing(H, "octave_bands", 3, DT, Seq(1, 7))
-    val original = manifest(root)
+  /** A hard-link copy of the archive at `root` under a new root. */
+  private def linkCopy(root: String): java.nio.file.Path = {
     val copy = java.nio.file.Files.createTempDirectory("graft_dss_copy")
     val src = java.nio.file.Paths.get(root)
     val it = java.nio.file.Files.walk(src).iterator()
@@ -301,10 +275,40 @@ class DailySummaryStoreSpec extends AnyFunSuite {
       if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(q)
       else java.nio.file.Files.createLink(q, p)
     }
+    copy
+  }
+
+  test("a pass over a hard-link copy never rewrites a shared file in place") {
+    val days = (0 until 8).map(i => Aligned.plusDays(i.toLong))
+    val root = freshArchive(days)
+    new DailySummaryStore(spark, root).maintainTrailing(H, "octave_bands", 3, DT, Seq(1, 7))
+    val original = manifest(root)
+    val copy = linkCopy(root)
     PartitionedArchive.appendPsdBatch(dayPsd(Aligned.plusDays(8)), copy.toString, 0L, "t")
     val windows = new DailySummaryStore(spark, copy.toString)
       .maintainTrailing(H, "octave_bands", 3, DT, Seq(1, 7))
     assert(windows == Seq(1 -> Aligned.plusDays(8), 7 -> Aligned.plusDays(2)))
     assert(manifest(root) == original)
+  }
+
+  test("a maintained store stays fresh on a moved archive: the copy serves " +
+      "from the rollup and its pass runs no Spark job") {
+    val days = (0 until 8).map(i => Aligned.plusDays(i.toLong))
+    val root = freshArchive(days)
+    new DailySummaryStore(spark, root).maintainTrailing(H, "octave_bands", 3, DT, Seq(1, 7))
+    val copy = linkCopy(root).toString
+    val store = new DailySummaryStore(spark, copy)
+    // the first index load on the copy re-reads its footers under the new
+    // paths (and persists them); the fingerprints must still match
+    assert(stats(store, Aligned.plusDays(7), 1).isDefined, "1-day window")
+    assert(stats(store, Aligned.plusDays(1), 7).isDefined, "7-day window")
+    val before = storeFiles(copy)
+    val (windows, run) = TestJobs.during(spark)(
+      store.maintainTrailing(H, "octave_bands", 3, DT, Seq(1, 7)))
+    assert(windows == Seq(1 -> Aligned.plusDays(7), 7 -> Aligned.plusDays(1)))
+    assert(run.jobs.isEmpty, s"${run.jobs.size} jobs")
+    assert(storeFiles(copy) == before)
+    assertSame(daily(AmbientService.fromArchive(spark, copy), Aligned.plusDays(1), 7),
+      daily(rawService(copy), Aligned.plusDays(1), 7))
   }
 }

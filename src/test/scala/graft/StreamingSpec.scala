@@ -580,4 +580,27 @@ class StreamingSpec extends AnyFunSuite {
           -col("hv"), col("doc_id"), 5).as("tk")))
     assert(streamed == batch && streamed.nonEmpty)
   }
+
+  test("an empty middle tranche stages a schema-only file: a zero-row " +
+      "micro-batch, and the batch numbering does not drift") {
+    val ev = graft.tables.Tables.events(spark, TestSpark.Sf0001)
+      .select("event_id", "event_type")
+    val tranches = Seq(ev.filter(col("event_id") % 2 === 0), ev.filter(lit(false)),
+      ev.filter(col("event_id") % 2 === 1))
+    val tmp = java.nio.file.Files.createTempDirectory("graft_tranches").toString
+    StreamingOps.stageTranches(tranches, s"$tmp/src")
+    val batches = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]
+    val q = spark.readStream.schema(spark.read.parquet(s"$tmp/src/f0").schema)
+      .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src/*")
+      .writeStream
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+        batches.add(id -> b.count()): Unit
+      }
+      .option("checkpointLocation", s"$tmp/ckpt")
+      .start()
+    try q.processAllAvailable() finally q.stop()
+    import scala.jdk.CollectionConverters._
+    assert(batches.asScala.toSeq == tranches.zipWithIndex.map { case (t, i) => i.toLong -> t.count() })
+    graft.util.LocalFs.deleteRecursively(new java.io.File(tmp))
+  }
 }
