@@ -136,30 +136,6 @@ object Bench {
   private[graft] def warmInversion(w: Timing, coldRepairedWall: Double): Boolean =
     w.wall > 1.0 && coldRepairedWall > 0 && w.wall > 1.5 * coldRepairedWall
 
-  /** HOST-HEALTH PREGATE (r13 verdict #1). The r13 bench of record
-    * breached the 2× gate (785.3 s vs 359.7) purely because the suite
-    * ran inside an hours-long degraded-host window — judge-adjudicated
-    * environmental (the worst cell measured 62 s in the artifact and
-    * 0.73 s on the same host later). The repair gates are PER-CELL and
-    * can only re-run inside the same window; what was missing is a
-    * WHOLE-RUN precondition. Before the cold pass, three dedicated
-    * calibration plans (below) are timed and compared to their quiet
-    * priors from the committed baseline's `pregate_cells` map; while
-    * the median ratio exceeds the threshold (default 1.3×), the suite
-    * WAITS (bounded retries with sleeps) instead of measuring garbage.
-    * After the retry budget the suite proceeds anyway — an artifact
-    * flagged `"pregate_ok":false` beats no artifact — and every
-    * calibration reading ships in the artifact so the reader can see
-    * exactly what the host looked like when measurement began.
-    *
-    * The calibration cells are NOT contract queries: running a contract
-    * query before its own cold pass would warm its plan/codegen and
-    * silently shrink its cold reading, breaking round-over-round
-    * comparability. These three exercise the subsystems the co-tenant
-    * degrades — parquet scan + hash aggregate (memory bandwidth),
-    * shuffle join (exchange + sort), pure arithmetic (cpu/LLC) — and
-    * their readings are min-of-two so one-time codegen doesn't count
-    * against the host. */
   /** Dedicated calibration parquet under target/ — NEVER contract inputs
     * (r14 ADVICE): the r14 calibration plans scanned lineitem/orders
     * before the contract cold pass, warming the OS page cache and
@@ -192,6 +168,30 @@ object Bench {
       .write.mode("overwrite").parquet(s"$calDataDir/dim.parquet")
   }
 
+  /** HOST-HEALTH PREGATE (r13 verdict #1). The r13 bench of record
+    * breached the 2× gate (785.3 s vs 359.7) purely because the suite
+    * ran inside an hours-long degraded-host window — judge-adjudicated
+    * environmental (the worst cell measured 62 s in the artifact and
+    * 0.73 s on the same host later). The repair gates are PER-CELL and
+    * can only re-run inside the same window; what was missing is a
+    * WHOLE-RUN precondition. Before the cold pass, three dedicated
+    * calibration plans (below) are timed and compared to their quiet
+    * priors from the committed baseline's `pregate_cells` map; while
+    * the median ratio exceeds the threshold (default 1.3×), the suite
+    * WAITS (bounded retries with sleeps) instead of measuring garbage.
+    * After the retry budget the suite proceeds anyway — an artifact
+    * flagged `"pregate_ok":false` beats no artifact — and every
+    * calibration reading ships in the artifact so the reader can see
+    * exactly what the host looked like when measurement began.
+    *
+    * The calibration cells are NOT contract queries: running a contract
+    * query before its own cold pass would warm its plan/codegen and
+    * silently shrink its cold reading, breaking round-over-round
+    * comparability. These three exercise the subsystems the co-tenant
+    * degrades — parquet scan + hash aggregate (memory bandwidth),
+    * shuffle join (exchange + sort), pure arithmetic (cpu/LLC) — and
+    * their readings are min-of-two so one-time codegen doesn't count
+    * against the host. */
   private[graft] val calibrationQueries: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)] = {
     import org.apache.spark.sql.functions._
     Seq(
@@ -470,28 +470,25 @@ object Bench {
         f"${calHistory.size} attempts (ratio ${calHistory.head}%.2f) — " +
         "proceeding, artifact flagged pregate_ok:false")
 
-    // dev-only: SPARK_GRAFT_BENCH_ONLY=q_a,q_b times a subset while
-    // iterating; the driver never sets it, so contract runs time everything
     /** Drop state a full pass accumulates, so the next pass starts from
       * the same driver footprint: localCheckpoint blocks free only when
-      * the ContextCleaner GCs their RDD references (force a GC), and the
-      * streaming drivers leave sentinel parquet + spilled state under
-      * target/ (round 9's warm>cold inversions, VERDICT "What's wrong" #5). */
+      * the ContextCleaner GCs their RDD references (force a GC) (round
+      * 9's warm>cold inversions, VERDICT "What's wrong" #5). */
     def interPassCleanup(spark: SparkSession): Unit = {
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
       System.gc()
-      graft.util.LocalFs.deleteRecursively(
-        new java.io.File("target/stream_sentinel"))
       Thread.sleep(2000) // let async ContextCleaner callbacks drain
     }
 
+    // dev-only: SPARK_GRAFT_BENCH_ONLY=q_a,q_b times a subset while
+    // iterating; the driver never sets it, so contract runs time everything
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
     val named = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
     val coldRaw = named.map { case (n, fn) => n -> run(n, fn) }
-    // between passes: drop state the cold pass accumulated (streaming
-    // sentinel parquet under target/, leftover temp views) so the warm
+    // between passes: drop state the cold pass accumulated (cached and
+    // checkpointed blocks, leftover temp views) so the warm
     // pass measures the PLAN warm, not the driver progressively laden
     // (round 9 shipped warm>cold inversions on several queries)
     // ADVISORY host-health probes at the pass boundary and after the

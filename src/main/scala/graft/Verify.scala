@@ -27,10 +27,17 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
+      // a cell that throws must not leave an earlier run's dump behind
+      // for the checker to pass: clear both outcomes first, and record a
+      // failure as <name>.FAILED, which the checkers count as failing
+      val failed = Paths.get(s"$outDir/$name.FAILED")
+      graft.util.LocalFs.deleteRecursively(new java.io.File(s"$outDir/$name"))
+      Files.deleteIfExists(failed)
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Files.writeString(failed, s"${e.getMessage}\n")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

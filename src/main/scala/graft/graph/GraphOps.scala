@@ -74,8 +74,9 @@ object GraphOps {
     * BOUNDED by the node's distinct neighbour labels (≤ degree, never
     * global); `localCheckpoint(true)` truncates lineage per round like
     * [[pageRank]]. Callers pass a symmetric edge list for undirected
-    * semantics. Returns `(node, community)`. */
-  /** @param initLabel renders a node id into its INITIAL label value
+    * semantics. Returns `(node, community)`.
+    *
+    * @param initLabel renders a node id into its INITIAL label value
     *   (default: the node itself). Lets callers iterate on compact
     *   integer node keys while keeping the label domain — and therefore
     *   the (count DESC, label) tie-break ORDER — in the original string

@@ -385,7 +385,7 @@ object LayoutQueries {
     }),
 
     // The SAME daily rollup maintained CONTINUOUSLY at ingest
-    // (StreamingOps.rollupIngest): events replay as 6 ts-range
+    // (StreamingOps.runStreamRollupOnce): events replay as 6 ts-range
     // micro-batches into the flat skip-indexed archive; each batch runs
     // the identical RollupOps.maintainByKey kernel with its recompute
     // reading only the zone-map-pruned files of the batch's days, and

@@ -151,9 +151,13 @@ final class DailySummaryStore(spark: SparkSession, root: String) {
             StatsSchema.fieldNames.toSeq.map(col): _*)
         // dictionary encoding is off: the stats columns are near-unique
         // doubles, and trying a dictionary per page before falling back to
-        // plain cost ~20 % of the merge stage's task time
+        // plain cost ~20 % of the merge stage's task time. snappy, not
+        // zstd: parquet's zstd codec opens a finalizable zstd-jni stream per
+        // page that pins its file writer's 1 MB output buffer until the
+        // finalizer has run, so a pass's dozens of files outlived the next
+        // full GC; zstd saves only ~20 % on these near-unique doubles
         DailySummaryOps.mergeStats(fanned, col("target"), col("sod"), col("band"))
-          .write.option("compression", "zstd").option("parquet.enable.dictionary", "false")
+          .write.option("compression", "snappy").option("parquet.enable.dictionary", "false")
           .partitionBy("target").parquet(staging.toString)
       }
       targets.foreach { t =>

@@ -1,10 +1,9 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graftbridge.PlanBridge
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.util.Sessions
 
 /** Structured Streaming embodiment of the resample family (SURVEY §2.10:
@@ -20,40 +19,155 @@ import graft.util.Sessions
   */
 object StreamingOps {
 
-  private val runId = new AtomicInteger(0)
+  /** The one-shot runner: every finite replay (`run*Once`) goes through
+    * one. Creating it makes the run's [[StateConf]] child session `ses`
+    * and a fresh scratch directory `dir` under `java.io.tmpdir`, which
+    * holds whatever the run stages (source tranches, index, sentinel) and
+    * its `foreachBatch` checkpoint — no two runs, in one JVM or in two
+    * processes, share a checkpoint or an index root. [[drain]] or [[each]] then replays
+    * the stream once. [[drain]] deletes the directory with its result
+    * localized; after [[each]] it outlives the run, since the rollup, deletes,
+    * CDC, snapshot and index drivers return lazy frames over it. */
+  private[graft] final class OneShot(spark: SparkSession) {
+    val ses: SparkSession = Sessions.child(spark, StateConf)
+    val dir: String = java.nio.file.Files.createTempDirectory("graft_stream_").toString
+    val checkpoint: String = s"$dir/_checkpoint"
 
-  /** Run a one-shot (finite-replay) streaming query to completion, then
-    * release the state-store providers it loaded into this JVM.
-    *
-    * In local mode every stateful operator leaves its providers in the
-    * process-wide `StateStore.loadedProviders` registry after the query
-    * stops — each holding the last in-memory state maps plus maintenance
-    * bookkeeping. One query's residue is harmless; a long-lived embedding
-    * running MANY one-shot drivers (Bench runs ~15 stateful drivers twice
-    * per pass family) accumulates tens of provider sets, and the heap
-    * pressure taxes LATER stateful queries: round 10's bench shipped
-    * q_stream_neardup at 2.0 s cold → 9.7 s warm with proportional CPU
-    * growth — real (GC) work, invisible to the contended gate by design.
-    * `unloadAll()` drops the providers (the next stateful query reloads
-    * from its checkpoint as usual), making every driver pass-idempotent:
-    * warm workload ≡ cold workload. The long-running ingest helpers
-    * ([[archiveIngest]], [[indexIngest]], [[rollupIngest]]) keep their
-    * providers — they're still using them. */
-  private def awaitOneShot(q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
-    try q.processAllAvailable() finally {
-      q.stop()
-      org.apache.spark.sql.graftbridge.StateStoreBridge.unloadAll()
+    /** Replay `stream` into a memory sink in `mode` and return the sink
+      * localized, its view dropped on every path — a leaked view retains
+      * the full materialized result in the driver for the session
+      * lifetime (Bench runs every query twice; a long-lived service would
+      * grow without bound). Results here are serving-edge sized (hundreds
+      * of rows), so the local copy is fine. The sink keeps Spark's own
+      * temporary checkpoint, which Spark deletes when the query stops, and
+      * the local copy depends on nothing staged, so `dir` is deleted too:
+      * a memory run leaves nothing on disk. */
+    def drain(stream: DataFrame, mode: String,
+        landings: Seq[() => Unit] = Nil): DataFrame = {
+      val (s, name) = (stream.sparkSession, new java.io.File(dir).getName)
+      try {
+        await(stream.writeStream.outputMode(mode)
+          .format("memory").queryName(name).start(), landings)
+        graft.sources.SkipIndex.localize(s, s.table(name))
+      } finally {
+        s.catalog.dropTempView(name)
+        graft.util.LocalFs.deleteRecursively(new java.io.File(dir))
+      }
     }
 
-  /** Drain a finished memory-sink table into a standalone DataFrame and
-    * drop the temp view — a leaked view retains the full materialized
-    * result in the driver for the session lifetime (Bench runs every query
-    * twice; a long-lived service would grow without bound). Results here
-    * are serving-edge sized (hundreds of rows), so the local copy is fine. */
-  private def drainTable(spark: SparkSession, name: String): DataFrame = {
-    val out = graft.sources.SkipIndex.localize(spark, spark.table(name))
-    spark.catalog.dropTempView(name)
-    out
+    /** Replay `stream` through `f(batch, batchId, streamId)` ([[eachBatch]]). */
+    def each(stream: DataFrame, landings: Seq[() => Unit] = Nil)(
+        f: (DataFrame, Long, String) => Unit): Unit =
+      await(eachBatch(stream, checkpoint)(f), landings)
+
+    /** Process everything available; then, per landing step, land it and
+      * process again. Stop the query and release the state-store
+      * providers it loaded into this JVM on every path.
+      *
+      * In local mode every stateful operator leaves its providers in the
+      * process-wide `StateStore.loadedProviders` registry after the query
+      * stops — each holding the last in-memory state maps plus maintenance
+      * bookkeeping. One query's residue is harmless; a long-lived embedding
+      * running MANY one-shot drivers (Bench runs ~15 stateful drivers twice
+      * per pass family) accumulates tens of provider sets, and the heap
+      * pressure taxes LATER stateful queries: round 10's bench shipped
+      * q_stream_neardup at 2.0 s cold → 9.7 s warm with proportional CPU
+      * growth — real (GC) work, invisible to the contended gate by design.
+      * `unloadAll()` drops the providers (the next stateful query reloads
+      * from its checkpoint as usual), making every driver pass-idempotent:
+      * warm workload ≡ cold workload. The long-running ingest helpers
+      * ([[archiveIngest]], [[flatArchiveIngest]]) keep their providers —
+      * they're still using them. */
+    private def await(q: StreamingQuery, landings: Seq[() => Unit]): Unit =
+      try (Seq(() => ()) ++ landings).foreach { land => land(); q.processAllAvailable() }
+      finally {
+        q.stop()
+        org.apache.spark.sql.graftbridge.StateStoreBridge.unloadAll()
+      }
+  }
+
+  /** The one `foreachBatch` sink: `f(batch, batchId, streamId)` per
+    * micro-batch behind `checkpoint`. Batch ids restart at 0 per
+    * checkpoint, so `streamId` — the checkpoint's [[streamScope]] —
+    * scopes commit markers and version names to let several streams
+    * share one root without mistaking each other's batch 0. */
+  private def eachBatch(stream: DataFrame, checkpoint: String)(
+      f: (DataFrame, Long, String) => Unit): StreamingQuery = {
+    val streamId = streamScope(checkpoint)
+    stream.writeStream
+      .foreachBatch((batch: DataFrame, batchId: Long) => f(batch, batchId, streamId))
+      .option("checkpointLocation", checkpoint)
+      .start()
+  }
+
+  /** Stage a tranche feed: `tagged`'s rows go to the tranche its int
+    * column `__tranche` names (rows outside `[0, n)` are never landed),
+    * all tranches in ONE write job (tag + one shuffle on the tag, vs one
+    * filtered source scan + write job PER tranche — guide §1.2 step 1
+    * applied to the tranche-feed drivers). Returns the landings:
+    * `land(i)()` ATOMICALLY moves tranche i into `src` as `f<i>`.
+    *
+    * `repartition(n, tag)` keeps each tranche in one task → one file,
+    * the one-file-per-tranche contract `maxFilesPerTrigger=1` turns into
+    * one micro-batch per tranche. An empty tranche lands a schema-only
+    * part file of its own: every tranche is one micro-batch (a zero-row
+    * one when empty), batch numbering (and q_stream_snapshots' version
+    * numbering) does not drift whether tranches land up front or one at
+    * a time, and `f0` always carries the schema the stream is read with.
+    * Part-file mtimes are STRICTLY INCREASING in tranche order: the file
+    * source orders its listing by timestamp, and one job writes all files
+    * in the same millisecond (drivers whose apply is
+    * arrival-order-independent don't need it; q_stream_snapshots'
+    * version contents do).
+    *
+    * Atomicity (r15 sf3 finding): writing directly into the watched
+    * glob while the query runs is a RACE — the always-on trigger can
+    * list the directory mid-write and split one tranche's part files
+    * across two micro-batches in TASK-COMPLETION order (not event-time
+    * order), breaking the ordered drivers' "batch order = event-time
+    * order by construction" contract (the 30× sf3 sweep caught
+    * q_stream_attribution crediting purchases to FUTURE touches this
+    * way). Staging OUTSIDE the glob and renaming in is one atomic
+    * directory move on a local fs (and HDFS): the file source sees all
+    * of a tranche or none of it. That contract lives in the RENAME, not
+    * the write — so computing all tranches in one partitioned write job
+    * changes nothing about what a trigger can observe. */
+  private[graft] def stageTranches(tagged: DataFrame, n: Int,
+      src: String): IndexedSeq[() => Unit] = {
+    import java.nio.file.{Files, Paths}
+    val stage = s"$src.stage"
+    tagged.repartition(n, col("__tranche"))
+      .write.partitionBy("__tranche").parquet(stage)
+    val base = System.currentTimeMillis() - 60000L
+    (0 until n).map { i => () =>
+      val from = Paths.get(stage, s"__tranche=$i")
+      if (!Files.exists(from))
+        tagged.drop("__tranche").limit(0).write.parquet(from.toString)
+      val t = java.nio.file.attribute.FileTime.fromMillis(base + i * 2000L)
+      // Files.list must be closed (it holds a directory handle)
+      val listing = Files.list(from)
+      try listing.forEach(p => Files.setLastModifiedTime(p, t))
+      finally listing.close()
+      val dst = Paths.get(src, s"f$i")
+      Files.createDirectories(dst.getParent)
+      Files.move(from, dst, java.nio.file.StandardCopyOption.ATOMIC_MOVE): Unit
+    }
+  }
+
+  /** The landed tranches under `src` as a stream, one tranche per
+    * micro-batch. */
+  private def trancheStream(ses: SparkSession, src: String): DataFrame =
+    footerSchemaStream(ses, s"$src/*", "*.parquet", maxFilesPerTrigger = Some(1))
+
+  /** [[stageTranches]] of `ev` in 6 equal TIME slices of its `us` range
+    * [min, max], for the ordered drivers. Slice i holds exactly
+    * `lo + i·step ≤ us < lo + (i+1)·step`, since
+    * `(us − lo) div step = i` for us ≥ lo. */
+  private def timeSlices(ev: DataFrame, src: String): IndexedSeq[() => Unit] = {
+    val Array(lo, hi) = ev.agg(min(col("us")), max(col("us")))
+      .collect().head.toSeq.map(_.asInstanceOf[Long]).toArray
+    val step = (hi - lo) / 6 + 1
+    stageTranches(ev.withColumn("__tranche", expr(s"(us - ${lo}L) div ${step}L")), 6, src)
   }
 
   /** Streaming parquet source whose schema comes from the FILE FOOTER (via
@@ -126,8 +240,8 @@ object StreamingOps {
     * of 32 means 32 mostly-empty state stores per operator side paying
     * fixed open/commit/snapshot cost every micro-batch. A production
     * deployment of the same operators sizes this UP with load; the point
-    * is that it is sized deliberately either way. Each driver (its sink
-    * view and drain included) runs on a [[Sessions.child]] carrying it. */
+    * is that it is sized deliberately either way. Each run's [[OneShot]]
+    * session (its sink view and drain included) carries it. */
   private val StateConf = "spark.sql.shuffle.partitions" -> "8"
 
   /** Run the streaming resample to completion over the (finite) events
@@ -135,14 +249,8 @@ object StreamingOps {
     * window is emitted, so the result equals the batch aggregation and the
     * batch oracle applies. */
   def runResampleOnce(spark: SparkSession, dir: String, duration: String): DataFrame = {
-    val name = s"graft_stream_resample_${runId.incrementAndGet()}"
-    val ses = Sessions.child(spark, StateConf)
-    val q = windowedMeanMilli(eventsStream(ses, dir), duration)
-      .writeStream.outputMode("complete")
-      .format("memory").queryName(name)
-      .start()
-    awaitOneShot(q)
-    drainTable(ses, name)
+    val run = new OneShot(spark)
+    run.drain(windowedMeanMilli(eventsStream(run.ses, dir), duration), "complete")
   }
 
   /** Streaming source over the documents parquet — footer-derived schema
@@ -186,23 +294,17 @@ object StreamingOps {
       }
       marker.createNewFile(): Unit
     }
-    val name = s"graft_stream_dedup_wm_${runId.incrementAndGet()}"
-    val ses = Sessions.child(spark, StateConf)
+    val run = new OneShot(spark)
     // ONE FILE PER TRIGGER: without it the source loads both copies in a
     // single micro-batch and the cross-batch re-delivery path this
     // driver exists to exercise never runs — the duplicate of every row
     // must arrive in a LATER batch than its original
     val src = graft.tables.Tables.adaptTs(
-      footerSchemaStream(ses, root, "*.parquet", maxFilesPerTrigger = Some(1)))
-    val q = src
+      footerSchemaStream(run.ses, root, "*.parquet", maxFilesPerTrigger = Some(1)))
+    run.drain(src
       .withWatermark("ts", "1 day")
       .dropDuplicatesWithinWatermark("event_id")
-      .select(col("event_type"))
-      .writeStream.outputMode("append")
-      .format("memory").queryName(name)
-      .start()
-    awaitOneShot(q)
-    drainTable(ses, name)
+      .select(col("event_type")), "append")
       .groupBy(col("event_type")).agg(count(lit(1)).as("n"))
       .orderBy("event_type")
   }
@@ -218,21 +320,16 @@ object StreamingOps {
       sampleRate: Int, nSamples: Int, frameLen: Int, hop: Int,
       thresholdNano: Long): DataFrame = {
     import graft.audio.SpectralOps
-    val name = s"graft_stream_audio_det_${runId.incrementAndGet()}"
-    val ses = Sessions.child(spark, StateConf)
+    val run = new OneShot(spark)
     val bursts = SpectralOps.synthesizeBursts(
-      documentsStream(ses, dir).select("doc_id"), "doc_id", sampleRate, nSamples)
+      documentsStream(run.ses, dir).select("doc_id"), "doc_id", sampleRate, nSamples)
     val partials = SpectralOps.bandPartialsFused(
       SpectralOps.frameWaveform(bursts, "samples", frameLen, hop),
       "doc_id", sampleRate, frameLen)
-    val q = partials.groupBy(col("doc_id"), col("frame_idx"))
-      .agg(sum(col("p_nano")).as("frame_p"))
-      .writeStream.outputMode("complete")
-      .format("memory").queryName(name)
-      .start()
-    awaitOneShot(q)
+    val totals = run.drain(partials.groupBy(col("doc_id"), col("frame_idx"))
+      .agg(sum(col("p_nano")).as("frame_p")), "complete")
     SpectralOps.detectEventsFromTotals(
-      drainTable(ses, name), "doc_id", thresholdNano, sampleRate, hop)
+      totals, "doc_id", thresholdNano, sampleRate, hop)
   }
 
   /** STREAMING spectral pipeline (the ingest-time shape of q_audio_psd):
@@ -249,22 +346,16 @@ object StreamingOps {
   def runAudioPsdOnce(spark: SparkSession, dir: String, sampleRate: Int,
       nSamples: Int, frameLen: Int, hop: Int): DataFrame = {
     import graft.audio.SpectralOps
-    val name = s"graft_stream_audio_${runId.incrementAndGet()}"
-    val ses = Sessions.child(spark, StateConf)
+    val run = new OneShot(spark)
     val waves = SpectralOps.synthesizeWaves(
-      documentsStream(ses, dir).select("doc_id"), "doc_id", sampleRate, nSamples)
+      documentsStream(run.ses, dir).select("doc_id"), "doc_id", sampleRate, nSamples)
     val partials = SpectralOps.bandPartialsFused(
       SpectralOps.frameWaveform(waves, "samples", frameLen, hop),
       "doc_id", sampleRate, frameLen)
-    val q = partials.groupBy(col("doc_id"), col("band"))
-      .agg(sum(col("p_nano")).as("p_sum"), count(lit(1)).as("n_frames"))
-      .writeStream.outputMode("complete")
-      .format("memory").queryName(name)
-      .start()
-    awaitOneShot(q)
     // dB + noise-floor drop on the drained aggregate — same final math as
     // SpectralOps.welchBandDb, applied batch-side after the stream ends
-    drainTable(ses, name)
+    run.drain(partials.groupBy(col("doc_id"), col("band"))
+      .agg(sum(col("p_nano")).as("p_sum"), count(lit(1)).as("n_frames")), "complete")
       .filter(col("p_sum") > 0)
       .select(col("doc_id"), col("band"),
         round(lit(10.0) * log(10.0,
@@ -277,81 +368,50 @@ object StreamingOps {
     footerSchemaStream(spark, dir, "embeddings.parquet")
 
   /** Streaming ingest into a persisted IVF index
-    * ([[graft.sim.IndexOps]]): each micro-batch of vectors is assigned
+    * ([[graft.sim.IndexOps]]), driven over a finite embeddings stream
+    * into a FRESH index dir: each micro-batch of vectors is assigned
     * against the FIXED centroid table and appended to the cell
     * partitions through the replay-idempotent batch appender — the ANN
     * index stays fresh at ingest, the same way [[archiveIngest]] keeps
-    * the timeseries archive fresh. Batch ids are scoped by a
-    * checkpoint-derived stream id so several ingest streams can share
-    * one index root. */
-  def indexIngest(stream: DataFrame, idCol: String, vecCol: String,
-      centroidFrame: DataFrame, indexDir: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val streamId = streamScope(checkpoint)
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.sim.IndexOps.appendIvfBatch(batch, idCol, vecCol,
-          centroidFrame, indexDir, batchId, streamId)
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
-  }
-
-  /** Drive a finite embeddings stream through [[indexIngest]] into a
-    * FRESH index dir, then search the streamed index with the standard
-    * q_ann_ivf query set — the streamed index must answer exactly like
+    * the timeseries archive fresh. The streamed index is then searched
+    * with the standard q_ann_ivf query set; it must answer exactly like
     * the batch-built one, so the batch oracle applies verbatim. The
     * centroid frame is the deterministic lowest-16 quantizer, persisted
     * up front (search needs it; ingest closes over it). */
   def runStreamIndexOnce(spark: SparkSession, dir: String): DataFrame = {
-    val sfName = new java.io.File(dir.replaceAll("/+$", "")).getName
-    val idx = s"/tmp/graft_index/$sfName/ivf_stream_${runId.incrementAndGet()}"
+    val run = new OneShot(spark)
+    val idx = s"${run.dir}/index"
     val e = graft.tables.Tables.embeddings(spark, dir)
     val cent = e.select(col("vec_id").as("cell"), col("embedding").as("cv"))
       .orderBy("cell").limit(16).localCheckpoint(true)
     cent.coalesce(1).write.mode("overwrite").parquet(s"$idx/centroids")
-    val q = indexIngest(embeddingsStream(spark, dir), "vec_id", "embedding",
-      cent, idx, s"$idx/_checkpoint")
-    awaitOneShot(q)
+    run.each(embeddingsStream(run.ses, dir))(
+      graft.sim.IndexOps.appendIvfBatch(_, "vec_id", "embedding", cent, idx, _, _))
     val queries = e.filter(col("vec_id") % 10 === 0)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
     graft.sim.IndexOps.queryIvfIndex(spark, idx, queries, k = 5, nProbe = 2)
   }
 
-  /** Continuous inverted-index maintenance: each documents micro-batch
-    * tokenizes and lands in the term-bucket partitions through the
+  /** Continuous inverted-index maintenance, driven over a finite
+    * documents stream into a FRESH index dir: each micro-batch tokenizes
+    * and lands in the term-bucket partitions through the
     * replay-idempotent appender ([[graft.text.InvertedIndex
     * .appendBatch]]) — the lexical index stays fresh at ingest the same
-    * way [[indexIngest]] keeps the ANN index fresh. df and collection
-    * stats are DERIVED at query time (df is bucket-local; stats rows
-    * are exact-integer increments), so appends never invalidate
-    * anything already written. */
-  def textIndexIngest(stream: DataFrame, idCol: String, textCol: String,
-      indexDir: String, nBuckets: Int,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val streamId = streamScope(checkpoint)
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.text.InvertedIndex.appendBatch(batch, idCol, textCol,
-          indexDir, nBuckets, batchId, streamId)
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
-  }
-
-  /** Drive a finite documents stream through [[textIndexIngest]] into a
-    * FRESH index dir, then answer the standard q_bm25_topk query set off
-    * the streamed index — streamed index ≡ batch-built index ≡ the
-    * per-query scan path (postings are per-doc rows, stats increments
-    * are exact integers, so arrival batching cannot change a single
-    * score), hence the scan path's oracle applies verbatim. */
+    * way [[runStreamIndexOnce]] keeps the ANN index fresh. df and
+    * collection stats are DERIVED at query time (df is bucket-local;
+    * stats rows are exact-integer increments), so appends never
+    * invalidate anything already written. The standard q_bm25_topk query
+    * set is then answered off the streamed index — streamed index ≡
+    * batch-built index ≡ the per-query scan path (postings are per-doc
+    * rows, stats increments are exact integers, so arrival batching
+    * cannot change a single score), hence the scan path's oracle applies
+    * verbatim. */
   def runStreamTextIndexOnce(spark: SparkSession, dir: String,
       queryTerms: DataFrame, k: Int): DataFrame = {
-    val sfName = new java.io.File(dir.replaceAll("/+$", "")).getName
-    val idx = s"/tmp/graft_index/$sfName/bm25_stream_${runId.incrementAndGet()}"
-    val q = textIndexIngest(documentsStream(spark, dir), "doc_id", "text",
-      idx, 64, s"$idx/_checkpoint")
-    awaitOneShot(q)
+    val run = new OneShot(spark)
+    val idx = s"${run.dir}/index"
+    run.each(documentsStream(run.ses, dir))(
+      graft.text.InvertedIndex.appendBatch(_, "doc_id", "text", idx, 64, _, _))
     graft.text.InvertedIndex.bm25TopKIndexed(spark, idx, queryTerms, k)
   }
 
@@ -364,16 +424,10 @@ object StreamingOps {
     * continuous ingest bounds it with `dropDuplicatesWithinWatermark`
     * (late re-crawls of the same content arrive within the watermark). */
   def runStreamDedupOnce(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"graft_stream_dedup_${runId.incrementAndGet()}"
-    val ses = Sessions.child(spark, StateConf)
-    val q = documentsStream(ses, dir)
+    val run = new OneShot(spark)
+    run.drain(documentsStream(run.ses, dir)
       .select(md5(col("text").cast("binary")).as("content_hash"))
-      .dropDuplicates("content_hash")
-      .writeStream.outputMode("append")
-      .format("memory").queryName(name)
-      .start()
-    awaitOneShot(q)
-    drainTable(ses, name)
+      .dropDuplicates("content_hash"), "append")
   }
 
   /** Near-dup CANDIDATE edge emitted at ingest. */
@@ -427,17 +481,16 @@ object StreamingOps {
     * DuckDB oracle replays exactly that from the banded fixture. */
   def runStreamNearDupOnce(spark: SparkSession, dir: String,
       n: Int, kHashes: Int, bands: Int, seed: Long = 42L): DataFrame = {
-    val ses = Sessions.child(spark, StateConf)
-    import ses.implicits._
+    val run = new OneShot(spark)
+    import run.ses.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val name = s"graft_stream_neardup_${runId.incrementAndGet()}"
     // minhashSignatures is a pure projection + empty-signature filter, so
     // it applies to the stream unchanged — and keeps the stream's
     // semantics identical to the batch family (sub-n-token docs carry the
     // all-Prime empty signature, which would otherwise collide into one
     // giant bucket of spurious "near-dups" in every band)
     val sigs = graft.dedup.DedupOps.minhashSignatures(
-      documentsStream(ses, dir), "doc_id", "text", n, kHashes, seed)
+      documentsStream(run.ses, dir), "doc_id", "text", n, kHashes, seed)
     val banded = graft.dedup.DedupOps.bandBuckets(sigs, kHashes, bands)
       .select(col("band"), col("bucket"), col("doc_id"))
       .as[(Int, Long, Long)]
@@ -447,15 +500,10 @@ object StreamingOps {
         (_: (Int, Long), rows: Iterator[(Int, Long, Long)], state: GroupState[Long]) =>
           nearDupEmit(rows.map(_._3), state)
       }
-    val q = edges.toDF()
-      .writeStream.outputMode("append")
-      .format("memory").queryName(name)
-      .start()
-    awaitOneShot(q)
     // the same pair surfaces once per shared band: collapse to the edge
     // set (serving-edge post-processing, same as the other one-shot
     // drivers' drains)
-    drainTable(ses, name).distinct()
+    run.drain(edges.toDF(), "append").distinct()
   }
 
   /** STREAMING Count-Min sketch: [[graft.functions.CmsSketchAgg]] as a
@@ -470,21 +518,15 @@ object StreamingOps {
     * state update cost is O(rows in batch), state size never grows. */
   def runStreamCmsOnce(spark: SparkSession, dir: String,
       depth: Int, width: Int): DataFrame = {
-    val name = s"graft_stream_cms_${runId.incrementAndGet()}"
-    val ses = Sessions.child(spark, StateConf)
-    val q = documentsStream(ses, dir)
+    val run = new OneShot(spark)
+    run.drain(documentsStream(run.ses, dir)
       .select(explode(graft.functions.WordShingles.word_shingles(
         col("text"), 2, distinct = false)).as("bg"))
       // pre-projected fields: same interpreted-child rule as the batch
       // query (see q_cms_counts)
       .select(graft.text.TextOps.md5Fields(col("bg"), depth, width).as("rc"))
       .agg(graft.functions.CmsSketchAgg.cms_sketch(
-        col("rc"), depth, width).as("sk"))
-      .writeStream.outputMode("complete")
-      .format("memory").queryName(name)
-      .start()
-    awaitOneShot(q)
-    drainTable(ses, name)
+        col("rc"), depth, width).as("sk")), "complete")
   }
 
   /** STREAMING HyperLogLog: [[graft.functions.HllRegisterAgg]] as a
@@ -498,21 +540,16 @@ object StreamingOps {
     * streaming `count(distinct)` needs state per distinct key;
     * this needs 512 bytes per group, forever. */
   def runStreamHllOnce(spark: SparkSession, dir: String, p: Int): DataFrame = {
-    val name = s"graft_stream_hll_${runId.incrementAndGet()}"
-    val ses = Sessions.child(spark, StateConf)
-    val q = documentsStream(ses, dir)
+    val run = new OneShot(spark)
+    run.drain(documentsStream(run.ses, dir)
       .select(col("lang"), explode(graft.functions.WordShingles.word_shingles(
         col("text"), 2, distinct = false)).as("bg"))
       // pre-projected key: same interpreted-child rule as the batch query
       .select(col("lang"),
         graft.text.TextOps.md5Key64(col("bg"), "hll:").as("k"))
       .groupBy(col("lang"))
-      .agg(graft.functions.HllRegisterAgg.hll_registers(col("k"), p).as("regs"))
-      .writeStream.outputMode("complete")
-      .format("memory").queryName(name)
-      .start()
-    awaitOneShot(q)
-    drainTable(ses, name)
+      .agg(graft.functions.HllRegisterAgg.hll_registers(col("k"), p).as("regs")),
+      "complete")
   }
 
   /** STREAMING histogram-quantile sketch
@@ -526,17 +563,11 @@ object StreamingOps {
     * per group, forever. */
   def runStreamHistOnce(spark: SparkSession, dir: String,
                         lo: Double, hi: Double, bins: Int): DataFrame = {
-    val name = s"graft_stream_hist_${runId.incrementAndGet()}"
-    val ses = Sessions.child(spark, StateConf)
-    val q = eventsStream(ses, dir)
+    val run = new OneShot(spark)
+    run.drain(eventsStream(run.ses, dir)
       .groupBy(col("event_type"))
       .agg(graft.functions.HistogramAgg.hist_sketch(
-        col("value"), lo, hi, bins).as("h"))
-      .writeStream.outputMode("complete")
-      .format("memory").queryName(name)
-      .start()
-    awaitOneShot(q)
-    drainTable(ses, name)
+        col("value"), lo, hi, bins).as("h")), "complete")
   }
 
   /** STREAMING Misra-Gries frequent-items summary
@@ -553,17 +584,12 @@ object StreamingOps {
     * continuous-ingest shape of "what's trending" at 100 TB: ≤k entries
     * of state, forever, vs per-distinct-key state for exact counting. */
   def runStreamMgOnce(spark: SparkSession, dir: String, k: Int): DataFrame = {
-    val name = s"graft_stream_mg_${runId.incrementAndGet()}"
-    val ses = Sessions.child(spark, StateConf)
-    val q = documentsStream(ses, dir)
+    val run = new OneShot(spark)
+    run.drain(documentsStream(run.ses, dir)
       // pre-projected key: same interpreted-child rule as the batch query
       .select(explode(graft.text.TextOps.wsTokens(lower(col("text")))).as("word"))
-      .agg(graft.functions.MisraGriesAgg.misra_gries(col("word"), k).as("mg"))
-      .writeStream.outputMode("complete")
-      .format("memory").queryName(name)
-      .start()
-    awaitOneShot(q)
-    drainTable(ses, name)
+      .agg(graft.functions.MisraGriesAgg.misra_gries(col("word"), k).as("mg")),
+      "complete")
   }
 
   /** Streaming ingest into the canonical partitioned archive: each
@@ -578,19 +604,9 @@ object StreamingOps {
     * marker make the replay idempotent (exactly-once OUTPUT, at-least-once
     * delivery). Compaction runs out of band. */
   def archiveIngest(stream: DataFrame, root: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    // batch ids restart at 0 per checkpoint: scope this query's commit
-    // markers by its checkpoint identity so several ingest streams can
-    // share one archive root without mistaking each other's batch 0
-    val streamId = streamScope(checkpoint)
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.sources.PartitionedArchive.appendBroadbandBatch(
-          batch, root, batchId, streamId)
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
-  }
+      checkpoint: String): StreamingQuery =
+    eachBatch(stream, checkpoint)(
+      graft.sources.PartitionedArchive.appendBroadbandBatch(_, root, _, _))
 
   /** STREAMING KMV distinct sketch ([[graft.functions.KmvAgg]]): the
     * per-group state is the ≤k-element sorted key set in the state
@@ -600,20 +616,14 @@ object StreamingOps {
     * sketches: redelivered ROWS are absorbed, not double-counted). The
     * continuous-ingest shape of distinct + set-overlap tracking. */
   def runStreamKmvOnce(spark: SparkSession, dir: String, k: Int): DataFrame = {
-    val name = s"graft_stream_kmv_${runId.incrementAndGet()}"
-    val ses = Sessions.child(spark, StateConf)
-    val q = documentsStream(ses, dir)
+    val run = new OneShot(spark)
+    run.drain(documentsStream(run.ses, dir)
       .select(col("lang"), explode(graft.functions.WordShingles.word_shingles(
         col("text"), 2, distinct = false)).as("bg"))
       .select(col("lang"),
         graft.text.TextOps.md5Key64(col("bg"), "kmv:").as("k"))
       .groupBy(col("lang"))
-      .agg(graft.functions.KmvAgg.kmv_sketch(col("k"), k).as("mins"))
-      .writeStream.outputMode("complete")
-      .format("memory").queryName(name)
-      .start()
-    awaitOneShot(q)
-    drainTable(ses, name)
+      .agg(graft.functions.KmvAgg.kmv_sketch(col("k"), k).as("mins")), "complete")
   }
 
   /** Streaming ingest into a FLAT skip-indexed archive: each micro-batch
@@ -627,17 +637,12 @@ object StreamingOps {
     * skip-index twin of [[archiveIngest]]'s partition-directory path and
     * the ANN index's streamed postings. */
   def flatArchiveIngest(stream: DataFrame, tsCol: String, dir: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val streamId = streamScope(checkpoint)
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.sources.SkipIndex
-        SkipIndex.appendClusteredBatch(batch, tsCol, dir, batchId, streamId)
-        SkipIndex.load(batch.sparkSession, dir): Unit
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
-  }
+      checkpoint: String): StreamingQuery =
+    eachBatch(stream, checkpoint) { (batch, batchId, streamId) =>
+      import graft.sources.SkipIndex
+      SkipIndex.appendClusteredBatch(batch, tsCol, dir, batchId, streamId)
+      SkipIndex.load(batch.sparkSession, dir): Unit
+    }
 
   /** Checkpoint-scoped stream identity: batch ids restart at 0 per
     * checkpoint, so commit markers / version names are scoped by the
@@ -716,25 +721,6 @@ object StreamingOps {
     }
   }
 
-  /** One micro-batch of continuous rollup maintenance — the body
-    * [[rollupIngest]] runs per batch, factored out so the replay path is
-    * directly testable:
-    *  1. the batch lands in the flat skip-indexed archive through the
-    *     replay-idempotent clustered appender, and the zone-map index
-    *     refreshes incrementally (exactly [[flatArchiveIngest]]);
-    *  2. the SAME maintenance kernel the batch ETL uses
-    *     ([[graft.ops.RollupOps.maintainByKey]]) brings the persisted
-    *     per-day rollup up to date: the batch's days recompute from a
-    *     zone-map-PRUNED archive read (per-day file picks — never a
-    *     history scan), every other row carries from the previous rollup
-    *     version untouched;
-    *  3. the result lands as an overwrite-mode, batch-id-named VERSION:
-    *     redelivery rewrites the same version from the same idempotent
-    *     archive state, so at-least-once delivery is exactly-once output
-    *     (RollupSpec replays a mid-stream batch and pins both the rewrite
-    *     and the untouched later versions).
-    * At 100 TB the dashboard aggregate trails ingest by one pruned
-    * recompute instead of a nightly full scan. */
   /** Driver-held state the CONTINUOUS maintenance loop carries between
     * micro-batches so each batch is metadata-work-free:
     *  - `idx`: the footer-index rows (extended per batch from the
@@ -764,6 +750,25 @@ object StreamingOps {
     * removing the write from the steady-state batch path. */
   private val IndexPersistEvery = 16
 
+  /** One micro-batch of continuous rollup maintenance — the body
+    * [[runStreamRollupOnce]] runs per batch, factored out so the replay
+    * path is directly testable:
+    *  1. the batch lands in the flat skip-indexed archive through the
+    *     replay-idempotent clustered appender, and the zone-map index
+    *     refreshes incrementally (exactly [[flatArchiveIngest]]);
+    *  2. the SAME maintenance kernel the batch ETL uses
+    *     ([[graft.ops.RollupOps.maintainByKey]]) brings the persisted
+    *     per-day rollup up to date: the batch's days recompute from a
+    *     zone-map-PRUNED archive read (per-day file picks — never a
+    *     history scan), every other row carries from the previous rollup
+    *     version untouched;
+    *  3. the result lands as an overwrite-mode, batch-id-named VERSION:
+    *     redelivery rewrites the same version from the same idempotent
+    *     archive state, so at-least-once delivery is exactly-once output
+    *     (RollupSpec replays a mid-stream batch and pins both the rewrite
+    *     and the untouched later versions).
+    * At 100 TB the dashboard aggregate trails ingest by one pruned
+    * recompute instead of a nightly full scan. */
   private[graft] def maintainRollupBatch(batch: DataFrame, batchId: Long,
       streamId: String, tsCol: String, dir: String,
       recompute: DataFrame => DataFrame,
@@ -847,21 +852,6 @@ object StreamingOps {
     }
   }
 
-  /** Continuous rollup maintenance at ingest: [[maintainRollupBatch]]
-    * per micro-batch behind a checkpoint. */
-  def rollupIngest(stream: DataFrame, tsCol: String, dir: String,
-      checkpoint: String, recompute: DataFrame => DataFrame)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val streamId = streamScope(checkpoint)
-    val carry = new RollupCarry // one loop = one carried index/version
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        maintainRollupBatch(batch, batchId, streamId, tsCol, dir, recompute, carry)
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
-  }
-
   /** Drive the continuous rollup over the (finite) events table split
     * into 6 contiguous ts-range files, one micro-batch each, and return
     * the final rollup version. The result must equal one batch aggregate
@@ -869,18 +859,16 @@ object StreamingOps {
     * oracle applies unchanged. */
   def runStreamRollupOnce(spark: SparkSession, dir: String,
       recompute: DataFrame => DataFrame): DataFrame = {
-    val ses = Sessions.child(spark, StateConf)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_rollup").toString
-    val (src, arch, ckpt) = (s"$tmp/src", s"$tmp/arch", s"$tmp/ckpt")
-    graft.tables.Tables.events(ses, dir)
+    val run = new OneShot(spark)
+    val (src, arch) = (s"${run.dir}/src", s"${run.dir}/arch")
+    graft.tables.Tables.events(run.ses, dir)
       .select("event_id", "ts", "user_id", "event_type", "value")
       .repartitionByRange(6, col("ts"))
       .write.parquet(src)
-    val stream = ses.readStream.schema(ses.read.parquet(src).schema)
-      .option("maxFilesPerTrigger", "1").parquet(src)
-    val q = rollupIngest(stream, "ts", arch, ckpt, recompute)
-    awaitOneShot(q)
-    latestRollup(ses, arch, streamId = Some(streamScope(ckpt))).get
+    val carry = new RollupCarry // one loop = one carried index/version
+    run.each(footerSchemaStream(run.ses, src, "*.parquet", maxFilesPerTrigger = Some(1)))(
+      maintainRollupBatch(_, _, _, "ts", arch, recompute, carry))
+    latestRollup(run.ses, arch, streamId = Some(streamScope(run.checkpoint))).get
   }
 
   /** STREAMING deletion requests: each micro-batch of doomed keys lands
@@ -895,28 +883,19 @@ object StreamingOps {
     * post-stream logical view. */
   def runStreamDeletesOnce(spark: SparkSession, dataDir: String,
       keyCol: String, requestBatches: Seq[Seq[String]]): DataFrame = {
-    val ses = Sessions.child(spark, StateConf)
-    import ses.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_del").toString
-    requestBatches.zipWithIndex.foreach { case (keys, i) =>
-      keys.toDF("key").coalesce(1).write.parquet(s"$tmp/src/f$i")
+    val run = new OneShot(spark)
+    import run.ses.implicits._
+    val src = s"${run.dir}/src"
+    stageTranches(requestBatches.zipWithIndex
+        .flatMap { case (keys, i) => keys.map(_ -> i) }.toDF("key", "__tranche"),
+      requestBatches.size, src).foreach(_())
+    run.each(trancheStream(run.ses, src)) { (b, _, _) =>
+      // request-scale collect — the same bounded contract as the
+      // batch delete path
+      graft.sources.Deletes.addTombstones(b.sparkSession, dataDir,
+        b.select("key").collect().map(_.getString(0)).toIndexedSeq)
     }
-    val stream = ses.readStream
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("key",
-          org.apache.spark.sql.types.StringType))))
-      .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src/*")
-    val q = stream.writeStream
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        // request-scale collect — the same bounded contract as the
-        // batch delete path
-        graft.sources.Deletes.addTombstones(b.sparkSession, dataDir,
-          b.select("key").collect().map(_.getString(0)).toIndexedSeq)
-      }
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .start()
-    awaitOneShot(q)
-    graft.sources.Deletes.readWithDeletes(ses, dataDir, keyCol)
+    graft.sources.Deletes.readWithDeletes(run.ses, dataDir, keyCol)
   }
 
   /** One micro-batch of the continuous CDC sink: the previous snapshot
@@ -946,76 +925,25 @@ object StreamingOps {
     * order uncontrolled) and return the final snapshot version. The
     * versioned apply makes the result arrival-order-independent, so the
     * batch end-state oracle applies unchanged. */
-  /** Stage `frames` as tranche dirs `f0..fN` under `src` in ONE write
-    * job (tag + union + one shuffle on the tag, vs one filtered source
-    * scan + write job PER tranche — guide §1.2 step 1 applied to the
-    * tranche-feed drivers). `repartition(n, tag)` keeps each tranche in
-    * one task → one file, preserving the one-file-per-tranche contract
-    * `maxFilesPerTrigger=1` turns into one micro-batch per tranche.
-    * Part-file mtimes are set STRICTLY INCREASING in tranche order: the
-    * file source orders its initial listing by timestamp, and the
-    * former sequential writes encoded tranche order in mtimes
-    * implicitly — one job writes all files in the same millisecond, so
-    * the order is restored explicitly (drivers whose apply is
-    * arrival-order-independent don't need it; q_stream_snapshots'
-    * version contents do).
-    *
-    * An empty frame stages no file under its tag, so its tranche gets a
-    * schema-only part file of its own: every tranche is one micro-batch
-    * (a zero-row one when empty), batch numbering (and q_stream_snapshots'
-    * version numbering) does not drift, and `f0` always carries the
-    * schema the callers read the stream with. */
-  private[graft] def stageTranches(frames: Seq[DataFrame], src: String): Unit = {
-    val stage = s"$src.stage"
-    frames.zipWithIndex
-      .map { case (f, i) => f.withColumn("__g", lit(i)) }
-      .reduce(_ unionByName _)
-      .repartition(frames.size, col("__g"))
-      .write.partitionBy("__g").parquet(stage)
-    val base = System.currentTimeMillis() - 60000L
-    frames.indices.foreach { i =>
-      val from = java.nio.file.Paths.get(stage, s"__g=$i")
-      val dst = java.nio.file.Paths.get(src, s"f$i")
-      java.nio.file.Files.createDirectories(dst.getParent)
-      if (java.nio.file.Files.exists(from))
-        java.nio.file.Files.move(from, dst,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      else frames(i).limit(0).write.parquet(dst.toString)
-      val t = java.nio.file.attribute.FileTime.fromMillis(base + i * 2000L)
-      // Files.list must be closed (it holds a directory handle)
-      val listing = java.nio.file.Files.list(dst)
-      try listing.forEach(p =>
-        java.nio.file.Files.setLastModifiedTime(p, t))
-      finally listing.close()
-    }
-  }
-
   def runStreamCdcOnce(spark: SparkSession, dir: String,
       feedOf: DataFrame => Seq[DataFrame]): DataFrame = {
-    val ses = Sessions.child(spark, StateConf)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_cdc").toString
-    val (src, snapDir, ckpt) = (s"$tmp/src", s"$tmp/snap", s"$tmp/ckpt")
-    val snap = graft.tables.Tables.events(ses, dir)
+    val run = new OneShot(spark)
+    val (src, snapDir) = (s"${run.dir}/src", s"${run.dir}/snap")
+    val snap = graft.tables.Tables.events(run.ses, dir)
       .select(col("event_id"), col("event_type"), col("value"))
     val base = snap.withColumn("__seq", lit(0L))
       .withColumn("__deleted", lit(false))
     // the change feed comes from the CALLER's builder — the same one the
     // batch q_cdc_apply runs, so the two paths cannot drift apart from
     // each other (or from the shared end-state oracle) silently
-    stageTranches(feedOf(snap), src)
-    val stream = ses.readStream.schema(ses.read.parquet(s"$src/f0").schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$src/*")
-    val sid = streamScope(ckpt)
-    val q = stream.writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        maintainCdcBatch(base, b, id, sid, snapDir,
-          "event_id", "op", "seq")
-      }
-      .option("checkpointLocation", ckpt)
-      .start()
-    awaitOneShot(q)
+    val feed = feedOf(snap)
+    stageTranches(feed.zipWithIndex
+        .map { case (f, i) => f.withColumn("__tranche", lit(i)) }
+        .reduce(_ unionByName _), feed.size, src).foreach(_())
+    run.each(trancheStream(run.ses, src))(
+      maintainCdcBatch(base, _, _, _, snapDir, "event_id", "op", "seq"))
     // live view: tombstones out, bookkeeping columns dropped
-    latestRollup(ses, snapDir, streamId = Some(sid)).get
+    latestRollup(run.ses, snapDir, streamId = Some(streamScope(run.checkpoint))).get
       .filter(!col("__deleted")).drop("__seq", "__deleted")
   }
 
@@ -1034,30 +962,20 @@ object StreamingOps {
     * because streaming ingest only ever appends. */
   def runStreamSnapshotsOnce(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.Snapshots
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_stream_snap").toString
-    val (src, table, ckpt) = (s"$tmp/src", s"$tmp/table", s"$tmp/ckpt")
+    val run = new OneShot(spark)
+    val (src, table) = (s"${run.dir}/src", s"${run.dir}/table")
     val ev = graft.tables.Tables.events(spark, dir).select(
       to_date(col("ts")).as("day"), col("event_type"),
       round(col("value") * 1e6, 0).cast("long").as("vm"))
     val d11 = lit("2024-01-11").cast("date")
     val d21 = lit("2024-01-21").cast("date")
-    stageTranches(
-      Seq(ev.filter(col("day") < d11),
-          ev.filter(col("day") >= d11 && col("day") < d21),
-          ev.filter(col("day") >= d21))
-        .map(_.select("event_type", "vm")), src)
-    val stream = spark.readStream
-      .schema(spark.read.parquet(s"$src/f0").schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$src/*")
-    val sid = streamScope(ckpt)
-    val q = stream.writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        Snapshots.commitAppendOnce(b.sparkSession, table, b, s"$sid-$id"): Unit
-      }
-      .option("checkpointLocation", ckpt)
-      .start()
-    awaitOneShot(q)
+    // a null day lands in no tranche
+    stageTranches(ev.select(col("event_type"), col("vm"),
+        when(col("day") < d11, 0).when(col("day") < d21, 1)
+          .when(col("day") >= d21, 2).as("__tranche")), 3, src).foreach(_())
+    run.each(trancheStream(run.ses, src)) { (b, id, sid) =>
+      Snapshots.commitAppendOnce(b.sparkSession, table, b, s"$sid-$id"): Unit
+    }
     val cur = Snapshots.currentVersion(spark, table)
     (0 to cur).map { v =>
         Snapshots.readSnapshot(spark, table, v)
@@ -1081,20 +999,14 @@ object StreamingOps {
     * k-doc uniform preview per source" with constant state. */
   def runStreamSampleOnce(spark: SparkSession, dir: String,
       k: Int): DataFrame = {
-    val name = s"graft_stream_sample_${runId.incrementAndGet()}"
-    val ses = Sessions.child(spark, StateConf)
-    val q = documentsStream(ses, dir)
+    val run = new OneShot(spark)
+    run.drain(documentsStream(run.ses, dir)
       .select(col("source"),
         graft.text.TextOps.md5Key64(col("doc_id")).as("hv"),
         col("doc_id"))
       .groupBy(col("source"))
       .agg(graft.functions.TopKByAgg.topk_by(
-        -col("hv"), col("doc_id"), k).as("tk"))
-      .writeStream.outputMode("complete")
-      .format("memory").queryName(name)
-      .start()
-    awaitOneShot(q)
-    drainTable(ses, name)
+        -col("hv"), col("doc_id"), k).as("tk")), "complete")
   }
 
   /** STREAM-STATIC point-in-time enrichment: the lineitem fact stream
@@ -1112,9 +1024,8 @@ object StreamingOps {
     * bounded (month × matched) grid, so the batch oracle applies
     * unchanged. */
   def runStreamPitOnce(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"graft_stream_pit_${runId.incrementAndGet()}"
-    val ses = Sessions.child(spark, StateConf)
-    val orders = graft.tables.Tables.orders(ses, dir)
+    val run = new OneShot(spark)
+    val orders = graft.tables.Tables.orders(run.ses, dir)
     val dim = graft.ops.MergeOps.scd2Intervals(
         orders.select(col("o_custkey"), col("o_orderkey"),
           col("o_totalprice"), col("o_orderdate")),
@@ -1124,23 +1035,18 @@ object StreamingOps {
         col("o_orderkey").as("version_key"),
         col("o_totalprice").as("version_price"),
         col("valid_from"), col("valid_to"))
-    val probes = footerSchemaStream(ses, dir, "lineitem.parquet")
+    val probes = footerSchemaStream(run.ses, dir, "lineitem.parquet")
       .select(col("l_orderkey"), col("l_linenumber"), col("l_shipdate"))
       .join(broadcast(orders.select(col("o_orderkey"), col("o_custkey"))),
         col("l_orderkey") === col("o_orderkey"))
       .drop("o_orderkey")
-    val q = graft.ops.JoinOps.pitLookup(probes, dim,
+    run.drain(graft.ops.JoinOps.pitLookup(probes, dim,
         factKey = "o_custkey", factTs = "l_shipdate", dimKey = "dim_custkey")
       .groupBy(date_format(col("l_shipdate"), "yyyy-MM").as("ship_month"),
         when(col("version_key").isNotNull, 1).otherwise(0).as("matched"))
       .agg(count(lit(1)).as("n"),
         sum(round(coalesce(col("version_price"), lit(0.0)) * 100, 0)
-          .cast("long")).as("price_cents"))
-      .writeStream.outputMode("complete")
-      .format("memory").queryName(name)
-      .start()
-    awaitOneShot(q)
-    drainTable(ses, name)
+          .cast("long")).as("price_cents")), "complete")
   }
 
   /** STREAM-STREAM interval join (§2.10's remaining operator family):
@@ -1175,23 +1081,17 @@ object StreamingOps {
     * bounds state; a bounded-lateness replay of ordered history gets the
     * same exactness with that small delay. */
   def runStreamJoinOnce(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"graft_stream_join_${runId.incrementAndGet()}"
-    val ses = Sessions.child(spark, StateConf)
-    val purchases = eventsStream(ses, dir)
+    val run = new OneShot(spark)
+    val purchases = eventsStream(run.ses, dir)
       .filter(col("event_type") === "purchase")
       .select(col("user_id"), col("ts").as("p_ts"), col("event_id").as("purchase_id"))
       .withWatermark("p_ts", "31 days")
-    val clicks = eventsStream(ses, dir)
+    val clicks = eventsStream(run.ses, dir)
       .filter(col("event_type") === "click")
       .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
         col("event_id").as("click_id"))
       .withWatermark("c_ts", "31 days")
-    val q = intervalJoin(purchases, clicks, maxLagSecs = 3600L)
-      .writeStream.outputMode("append")
-      .format("memory").queryName(name)
-      .start()
-    awaitOneShot(q)
-    drainTable(ses, name)
+    run.drain(intervalJoin(purchases, clicks, maxLagSecs = 3600L), "append")
   }
 
   /** STREAMING sessionization via `session_window` — the merging-session
@@ -1210,34 +1110,29 @@ object StreamingOps {
     * stream needs no sentinel: the next day's data IS the watermark driver;
     * the sentinel only finalizes a bounded replay. */
   def runStreamSessionsOnce(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"graft_stream_sessions_${runId.incrementAndGet()}"
-    val ses = Sessions.child(spark, StateConf)
-    // sentinel parquet written fresh under target/ per run with a NATIVE
+    val run = new OneShot(spark)
+    // sentinel parquet written into the run's scratch dir with a NATIVE
     // timestamp column, then read back through the same footer-derived +
     // adaptive path as the real stream — both sides surface ts as
     // TimestampType whatever the events archive's physical layout is
-    val sentinelDir = new java.io.File(s"target/stream_sentinel/$name").getAbsolutePath
+    val sentinelDir = s"${run.dir}/sentinel"
     val farFuture = java.sql.Timestamp.from(
       java.time.Instant.parse("2030-01-01T00:00:00Z"))
-    import ses.implicits._
+    import run.ses.implicits._
     Seq((0L, farFuture, -1L, "sentinel", 0.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .write.mode("overwrite").parquet(sentinelDir)
-    val real = eventsStream(ses, dir).select(col("user_id"), col("ts"))
+      .write.parquet(sentinelDir)
+    val real = eventsStream(run.ses, dir).select(col("user_id"), col("ts"))
     val sentinel = graft.tables.Tables.adaptTs(
-        footerSchemaStream(ses, sentinelDir, "*.parquet"))
+        footerSchemaStream(run.ses, sentinelDir, "*.parquet"))
       .select(col("user_id"), col("ts"))
-    val q = real.union(sentinel)
+    run.drain(real.union(sentinel)
       .withWatermark("ts", "0 seconds")
       .groupBy(session_window(col("ts"), "30 minutes").as("w"), col("user_id"))
       .agg(count(lit(1)).as("n_events"))
       .select(col("user_id"), col("w.start").as("session_start"),
-        col("w.end").as("session_end"), col("n_events"))
-      .writeStream.outputMode("append")
-      .format("memory").queryName(name)
-      .start()
-    awaitOneShot(q)
-    drainTable(ses, name).filter(col("user_id") >= 0)
+        col("w.end").as("session_end"), col("n_events")), "append")
+      .filter(col("user_id") >= 0)
   }
 
   /** Per-user running totals emitted by batch. */
@@ -1263,13 +1158,12 @@ object StreamingOps {
     * widens the mask array). The streamed twin of
     * [[graft.ops.BehaviorOps.cohortRetention]]. */
   def runStreamRetentionOnce(spark: SparkSession, dir: String): DataFrame = {
-    val ses = Sessions.child(spark, StateConf)
-    import ses.implicits._
+    val run = new OneShot(spark)
+    import run.ses.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val name = s"graft_stream_retention_${runId.incrementAndGet()}"
     // UTC epoch-day = floor(µs / 86400e6) — matches to_date(ts) exactly
     // under the UTC session (the zoneChangedDays identity)
-    val ev = eventsStream(ses, dir)
+    val ev = eventsStream(run.ses, dir)
       .select(col("user_id"),
         (unix_micros(col("ts")) / lit(86400000000L)).cast("int").as("d"))
       .as[(Long, Int)]
@@ -1296,14 +1190,9 @@ object StreamingOps {
           state.update((cohort, mask, seq))
           Iterator(RetentionEmit(user, seq, cohort, mask))
       }
-    val q = updated.toDF()
-      .writeStream.outputMode("update")
-      .format("memory").queryName(name)
-      .start()
-    awaitOneShot(q)
     // last emission per user (seq monotone), then decode mask bits to
     // the (cohort_day, day_offset, n_active) retention matrix
-    drainTable(ses, name).groupBy(col("user"))
+    run.drain(updated.toDF(), "update").groupBy(col("user"))
       .agg(max_by(struct(col("cohort_day"), col("mask")), col("seq")).as("m"))
       .select(col("m.cohort_day").as("cd"), col("m.mask").as("mask"))
       .select(date_add(to_date(lit("1970-01-01")), col("cd")).as("cohort_day"),
@@ -1372,17 +1261,16 @@ object StreamingOps {
     * applies verbatim; the cross-batch carry/late-event semantics are
     * pinned separately in StreamingSpec. */
   def runStreamAsofOnce(spark: SparkSession, dir: String): DataFrame = {
-    val ses = Sessions.child(spark, StateConf)
-    import ses.implicits._
+    val run = new OneShot(spark)
+    import run.ses.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val name = s"graft_stream_asof_${runId.incrementAndGet()}"
-    val ev = eventsStream(ses, dir).select(
+    val ev = eventsStream(run.ses, dir).select(
       col("user_id"), unix_micros(col("ts")).as("us"),
       lit(0).as("side"), col("event_id").as("tie"), col("value"),
       lit(0L).as("okey")).as[AsofIn]
     // same probe derivation as q_asof_join (orders → synthetic Jan-2024
     // probe times), streamed from the orders parquet
-    val probes = footerSchemaStream(ses, dir, "orders.parquet").select(
+    val probes = footerSchemaStream(run.ses, dir, "orders.parquet").select(
       (col("o_custkey") % 150).as("user_id"),
       unix_micros(to_timestamp(concat(lit("2024-01-"),
         lpad((col("o_orderkey") % 28 + 1).cast("string"), 2, "0"),
@@ -1395,12 +1283,7 @@ object StreamingOps {
         (_: Long, rows: Iterator[AsofIn], state: GroupState[AsofCarry]) =>
           asofEmit(rows, state)
       }
-    val q = hits.toDF()
-      .writeStream.outputMode("append")
-      .format("memory").queryName(name)
-      .start()
-    awaitOneShot(q)
-    drainTable(ses, name).select(
+    run.drain(hits.toDF(), "append").select(
       col("o_orderkey"), col("user_id"),
       timestamp_micros(col("us")).as("ts"),
       col("value"), col("event_id"))
@@ -1427,71 +1310,21 @@ object StreamingOps {
     * production deployment gets the same guarantee from a watermark +
     * per-trigger sort or an upstream log ordered per key (e.g. a
     * keyed Kafka partition). */
-  /** Stage ALL ts-contiguous slices of `ev` in ONE write job
-    * (partitionBy on the slice ordinal), and return a landing function
-    * that ATOMICALLY moves slice i into the watched dir.
-    *
-    * Atomicity (r15 sf3 finding): writing directly into the watched
-    * glob while the query runs is a RACE — the always-on trigger can
-    * list the directory mid-write and split one slice's part files
-    * across two micro-batches in TASK-COMPLETION order (not event-time
-    * order), breaking the ordered drivers' "batch order = event-time
-    * order by construction" contract (the 30× sf3 sweep caught
-    * q_stream_attribution crediting purchases to FUTURE touches this
-    * way). Staging OUTSIDE the glob and renaming in is one atomic
-    * directory move on a local fs (and HDFS): the file source sees all
-    * of a slice or none of it. That contract lives in the RENAME, not
-    * the write — so computing all slices in one partitioned write job
-    * changes nothing about what a trigger can observe. Before this, the
-    * ordered drivers paid one full source scan PER SLICE (6
-    * filter+write jobs) on top of the min/max job — guide §1.2 step 1
-    * (don't re-read what one pass can produce) applied to the driver
-    * harness; the per-slice rows are bit-identical
-    * (`(us − lo) div step = i  ⇔  lo + i·step ≤ us < lo + (i+1)·step`
-    * for us ≥ lo, the exact ranges the per-slice filters stated).
-    *
-    * An empty slice (possible only on degenerate fixtures) stages no
-    * directory; landing it creates an empty dir — the file source sees
-    * no new files, exactly as the former empty parquet write behaved. */
-  private def stageSlices(ev: DataFrame, src: String,
-      lo: Long, step: Long): Int => Unit = {
-    val stage = s"$src.stage"
-    ev.withColumn("__slice", expr(s"(us - ${lo}L) div ${step}L"))
-      .write.partitionBy("__slice").parquet(stage)
-    (i: Int) => {
-      val from = java.nio.file.Paths.get(stage, s"__slice=$i")
-      val dst = java.nio.file.Paths.get(src, s"s$i")
-      java.nio.file.Files.createDirectories(dst.getParent)
-      if (java.nio.file.Files.exists(from))
-        java.nio.file.Files.move(from, dst,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      else java.nio.file.Files.createDirectories(dst)
-    }
-  }
-
   def runStreamFunnelOnce(spark: SparkSession, dir: String,
       stage1: String, stage2: String, stage3: String): DataFrame = {
-    val ses = Sessions.child(spark, StateConf)
-    import ses.implicits._
+    val run = new OneShot(spark)
+    import run.ses.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val name = s"graft_stream_funnel_${runId.incrementAndGet()}"
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_funnel").toString
-    val src = s"$tmp/src"
-    val ev = graft.tables.Tables.events(ses, dir)
+    val src = s"${run.dir}/src"
+    val ev = graft.tables.Tables.events(run.ses, dir)
       .select(unix_micros(col("ts")).as("us"), col("user_id"),
         col("event_type"))
     // 6 equal TIME slices of [min, max], all staged in ONE write job;
     // slice i still LANDS (atomic rename) only after the engine drained
-    // slice i-1 — see stageSlices
-    val Array(lo, hi) = ev.agg(min(col("us")), max(col("us")))
-      .collect().head.toSeq.map(_.asInstanceOf[Long]).toArray
-    val step = (hi - lo) / 6 + 1
-    val land = stageSlices(ev, src, lo, step)
-    land(0)
-    val stream = ses.readStream
-      .schema(ses.read.parquet(s"$src/s0").schema)
-      .parquet(s"$src/*")
-      .as[(Long, Long, String)]
+    // slice i-1 — see stageTranches
+    val lands = timeSlices(ev, src)
+    lands.head()
+    val stream = trancheStream(run.ses, src).as[(Long, Long, String)]
     val progressed = stream.groupByKey(_._2)
       .flatMapGroupsWithState[(Option[Long], Option[Long], Option[Long]),
         FunnelProgress](OutputMode.Update, GroupStateTimeout.NoTimeout) {
@@ -1510,19 +1343,8 @@ object StreamingOps {
           if (t1.isDefined) Iterator(FunnelProgress(user, t1, t2, t3))
           else Iterator.empty
       }
-    val q = progressed.toDF()
-      .writeStream.outputMode("update")
-      .format("memory").queryName(name)
-      .start()
-    try {
-      q.processAllAvailable()
-      (1 to 5).foreach { i =>
-        land(i)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
     // stages are set-once → max over a user's emissions = final state
-    drainTable(ses, name).groupBy(col("user"))
+    run.drain(progressed.toDF(), "update", lands.tail).groupBy(col("user"))
       .agg(max(col("t1")).as("t1"), max(col("t2")).as("t2"),
         max(col("t3")).as("t3"))
   }
@@ -1535,20 +1357,14 @@ object StreamingOps {
     * ([[graft.queries.StatsQueries]] q_stream_welch) applies the same
     * closed form as the batch test; constant state per group forever. */
   def runStreamWelchMomentsOnce(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"graft_stream_welch_${runId.incrementAndGet()}"
-    val ses = Sessions.child(spark, StateConf)
-    val q = eventsStream(ses, dir)
+    val run = new OneShot(spark)
+    run.drain(eventsStream(run.ses, dir)
       .select(col("event_type"), (col("user_id") % 2).as("grp"),
         round(col("value") * 1e6, 0).cast("long")
           .cast("decimal(38,0)").as("x"))
       .groupBy(col("event_type"), col("grp"))
       .agg(count(lit(1)).cast("decimal(38,0)").as("n"),
-        sum(col("x")).as("sx"), sum(col("x") * col("x")).as("sxx"))
-      .writeStream.outputMode("complete")
-      .format("memory").queryName(name)
-      .start()
-    awaitOneShot(q)
-    drainTable(ses, name)
+        sum(col("x")).as("sx"), sum(col("x") * col("x")).as("sxx")), "complete")
   }
 
   /** A purchase attributed at ingest (`us` = event-time micros,
@@ -1573,26 +1389,18 @@ object StreamingOps {
     * applies unchanged. */
   def runStreamAttributionOnce(spark: SparkSession, dir: String,
       lookbackHours: Long): DataFrame = {
-    val ses = Sessions.child(spark, StateConf)
-    import ses.implicits._
+    val run = new OneShot(spark)
+    import run.ses.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val name = s"graft_stream_attribution_${runId.incrementAndGet()}"
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_attr").toString
-    val src = s"$tmp/src"
-    val ev = graft.tables.Tables.events(ses, dir)
+    val src = s"${run.dir}/src"
+    val ev = graft.tables.Tables.events(run.ses, dir)
       .select(unix_micros(col("ts")).as("us"), col("event_id"),
         col("user_id"), col("event_type"),
         round(col("value") * 1e6, 0).cast("long").as("vmicro"))
-    val Array(lo, hi) = ev.agg(min(col("us")), max(col("us")))
-      .collect().head.toSeq.map(_.asInstanceOf[Long]).toArray
-    val step = (hi - lo) / 6 + 1
     // all 6 slices staged in one write job; ordered atomic landings below
-    val land = stageSlices(ev, src, lo, step)
-    land(0)
-    val stream = ses.readStream
-      .schema(ses.read.parquet(s"$src/s0").schema)
-      .parquet(s"$src/*")
-      .as[(Long, Long, Long, String, Long)]
+    val lands = timeSlices(ev, src)
+    lands.head()
+    val stream = trancheStream(run.ses, src).as[(Long, Long, Long, String, Long)]
     val lookbackUs = lookbackHours * 3600L * 1000000L
     val credited = stream.groupByKey(_._3)
       .flatMapGroupsWithState[(String, Long), AttributionEmit](
@@ -1614,19 +1422,7 @@ object StreamingOps {
           touch.foreach(state.update)
           out.iterator
       }
-    val q = credited.toDF()
-      .writeStream.outputMode("append")
-      .format("memory").queryName(name)
-      .start()
-    try {
-      q.processAllAvailable()
-      (1 to 5).foreach { i =>
-        land(i)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    org.apache.spark.sql.graftbridge.StateStoreBridge.unloadAll()
-    drainTable(ses, name)
+    run.drain(credited.toDF(), "append", lands.tail)
   }
 
   /** CUSTOM streaming state via `flatMapGroupsWithState` (§2.10's "novel
@@ -1637,11 +1433,10 @@ object StreamingOps {
     * to each group's LAST emission (`max_by` on the monotone count), which
     * equals the batch per-user aggregate — hence oracle-checkable. */
   def runUserStatsOnce(spark: SparkSession, dir: String): DataFrame = {
-    val ses = Sessions.child(spark, StateConf)
-    import ses.implicits._
+    val run = new OneShot(spark)
+    import run.ses.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val name = s"graft_stream_userstats_${runId.incrementAndGet()}"
-    val ev = eventsStream(ses, dir)
+    val ev = eventsStream(run.ses, dir)
       .select(col("user_id"), col("value")).as[(Long, Double)]
     val updated = ev.groupByKey(_._1)
       .flatMapGroupsWithState[(Long, Double), UserStat](
@@ -1652,13 +1447,8 @@ object StreamingOps {
           state.update((c, s))
           Iterator(UserStat(user, c, s))
       }
-    val q = updated.toDF()
-      .writeStream.outputMode("update")
-      .format("memory").queryName(name)
-      .start()
-    awaitOneShot(q)
     // last emission per user = the final (count, sum) — count is monotone
-    drainTable(ses, name).groupBy("user_id")
+    run.drain(updated.toDF(), "update").groupBy("user_id")
       .agg(max_by(struct(col("n_events"), col("sum_value")), col("n_events")).as("m"))
       .select(col("user_id"), col("m.n_events").as("n_events"),
         round(col("m.sum_value"), 2).as("sum_value"))

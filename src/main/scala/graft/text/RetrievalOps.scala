@@ -40,24 +40,6 @@ import graft.functions.TopKByAgg
   */
 object RetrievalOps {
 
-  /** BM25 scores (Robertson–Spärck Jones weighting; the Lucene-default
-    * always-positive idf `ln(1 + (N − df + ½)/(df + ½))`) of every
-    * matching document against every query.
-    *
-    * @param queryTerms SMALL frame `(query_id: long-castable, term:
-    *   string[, w: double])`; duplicated terms within a query are
-    *   collapsed (query term frequency is not modeled, the common
-    *   practice for short queries). An optional `w` column weights each
-    *   term's contribution — the RM3 second-pass shape; absent means 1.
-    *   Callers must not supply one (query, term) with conflicting
-    *   weights — the dedup is over the full row, so conflicting rows
-    *   both survive and double-count.
-    *   Broadcast twice — once as the corpus token filter, once for the
-    *   per-query fan-out.
-    * @return `(query_id, doc_id, score double)` — only (query, doc)
-    *   pairs sharing at least one term appear; score is the round-6
-    *   decode of the exact nano-unit contribution sum.
-    */
   /** Tokenized corpus `(doc_id, dl, ts)` MATERIALIZED once (eager
     * localCheckpoint): every retrieval stage that needs the token stream
     * (postings, collection stats, RM3 feedback, a second weighted pass)
@@ -87,6 +69,24 @@ object RetrievalOps {
         col("ts"))
       .localCheckpoint(true)
 
+  /** BM25 scores (Robertson–Spärck Jones weighting; the Lucene-default
+    * always-positive idf `ln(1 + (N − df + ½)/(df + ½))`) of every
+    * matching document against every query.
+    *
+    * @param queryTerms SMALL frame `(query_id: long-castable, term:
+    *   string[, w: double])`; duplicated terms within a query are
+    *   collapsed (query term frequency is not modeled, the common
+    *   practice for short queries). An optional `w` column weights each
+    *   term's contribution — the RM3 second-pass shape; absent means 1.
+    *   Callers must not supply one (query, term) with conflicting
+    *   weights — the dedup is over the full row, so conflicting rows
+    *   both survive and double-count.
+    *   Broadcast twice — once as the corpus token filter, once for the
+    *   per-query fan-out.
+    * @return `(query_id, doc_id, score double)` — only (query, doc)
+    *   pairs sharing at least one term appear; score is the round-6
+    *   decode of the exact nano-unit contribution sum.
+    */
   def bm25Scores(docs: DataFrame, idCol: String, textCol: String,
                  queryTerms: DataFrame,
                  k1: Double = 1.2, b: Double = 0.75): DataFrame =

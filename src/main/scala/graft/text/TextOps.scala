@@ -416,12 +416,6 @@ object TextOps {
         (col("shard").cast("long") * (1L << 40) + localEnd).as("seq_end"))
   }
 
-  /** Engine-exact 60-bit hash key: the first 15 hex digits of
-    * `md5(prefix ‖ id)` as a BIGINT — the shared recipe behind
-    * deterministic sampling (q_strat_sample) and the epoch shuffle.
-    * DuckDB replays it as `CAST(concat('0x', substr(md5(...), 1, 15)) AS
-    * BIGINT)`. 15 digits (60 bits) is the widest prefix that cannot
-    * overflow a signed BIGINT — do NOT widen to 16. */
   /** Driver-side md5 lowercase-hex of UTF-8 bytes — the ONE copy that
     * must match Spark's `md5()` and DuckDB's `md5()` (all three
     * lowercase-hex the UTF-8 bytes); every oracle-visible driver-side
@@ -430,6 +424,12 @@ object TextOps {
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
+  /** Engine-exact 60-bit hash key: the first 15 hex digits of
+    * `md5(prefix ‖ id)` as a BIGINT — the shared recipe behind
+    * deterministic sampling (q_strat_sample) and the epoch shuffle.
+    * DuckDB replays it as `CAST(concat('0x', substr(md5(...), 1, 15)) AS
+    * BIGINT)`. 15 digits (60 bits) is the widest prefix that cannot
+    * overflow a signed BIGINT — do NOT widen to 16. */
   def md5Key64(id: Column, prefix: String = ""): Column = {
     val s = if (prefix.isEmpty) id.cast("string")
             else concat(lit(prefix), id.cast("string"))

@@ -587,20 +587,98 @@ class StreamingSpec extends AnyFunSuite {
       .select("event_id", "event_type")
     val tranches = Seq(ev.filter(col("event_id") % 2 === 0), ev.filter(lit(false)),
       ev.filter(col("event_id") % 2 === 1))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_tranches").toString
-    StreamingOps.stageTranches(tranches, s"$tmp/src")
-    val batches = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]
-    val q = spark.readStream.schema(spark.read.parquet(s"$tmp/src/f0").schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src/*")
-      .writeStream
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        batches.add(id -> b.count()): Unit
-      }
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    val tagged = tranches.zipWithIndex
+      .map { case (t, i) => t.withColumn("__tranche", lit(i)) }.reduce(_ unionByName _)
+    val expected = tranches.zipWithIndex.map { case (t, i) => i.toLong -> t.count() }
+    // landed up front (the tranche feeds) and one at a time while the
+    // query runs (the ordered drivers)
+    Seq(false, true).foreach { ordered =>
+      val tmp = java.nio.file.Files.createTempDirectory("graft_tranches").toString
+      val lands = StreamingOps.stageTranches(tagged, tranches.size, s"$tmp/src")
+      if (ordered) lands.head() else lands.foreach(_())
+      val batches = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]
+      val q = spark.readStream.schema(spark.read.parquet(s"$tmp/src/f0").schema)
+        .option("maxFilesPerTrigger", "1").parquet(s"$tmp/src/*")
+        .writeStream
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+          batches.add(id -> b.count()): Unit
+        }
+        .option("checkpointLocation", s"$tmp/ckpt")
+        .start()
+      try {
+        q.processAllAvailable()
+        if (ordered) lands.tail.foreach { land => land(); q.processAllAvailable() }
+      } finally q.stop()
+      import scala.jdk.CollectionConverters._
+      assert(batches.asScala.toSeq == expected, s"ordered = $ordered")
+      graft.util.LocalFs.deleteRecursively(new java.io.File(tmp))
+    }
+  }
+
+  /** `f`'s outcome and the run ids of the streaming queries it started,
+    * in any session (query-start events reach the context's bus). */
+  private def queryRuns[T](f: => T): (scala.util.Try[T], Set[java.util.UUID]) = {
+    import org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent
+    val ids = new java.util.concurrent.ConcurrentLinkedQueue[java.util.UUID]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case s: QueryStartedEvent => ids.add(s.runId): Unit
+          case _ =>
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val out = scala.util.Try(f)
+    // the bus is asynchronous: wait for the start event to arrive
+    val deadline = System.nanoTime() + 30000000000L
+    while (ids.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    spark.sparkContext.removeSparkListener(listener)
     import scala.jdk.CollectionConverters._
-    assert(batches.asScala.toSeq == tranches.zipWithIndex.map { case (t, i) => i.toLong -> t.count() })
-    graft.util.LocalFs.deleteRecursively(new java.io.File(tmp))
+    (out, ids.asScala.toSet)
+  }
+
+  test("a one-shot run whose landing step throws stops its query, drops " +
+      "its sink view and unloads its state stores; so does the funnel") {
+    import org.apache.spark.sql.graftbridge.StateStoreProbe
+    // sink views other cases in this suite left on the shared session
+    // (a child session inherits them) are not this run's
+    def views(s: org.apache.spark.sql.SparkSession) =
+      s.catalog.listTables().collect().map(_.name).filter(_.startsWith("graft_stream_")).toSet
+    val before = views(spark)
+    def viewsLeft(s: org.apache.spark.sql.SparkSession) = views(s) -- before
+    val ev = graft.tables.Tables.events(spark, TestSpark.Sf0001)
+      .select("event_id", "event_type")
+    var ses: org.apache.spark.sql.SparkSession = null
+    var dir: String = null
+    var loadedMidRun = false
+    val (out, runs) = queryRuns {
+      val run = new StreamingOps.OneShot(spark)
+      ses = run.ses; dir = run.dir
+      val src = s"${run.dir}/src"
+      val lands = StreamingOps.stageTranches(
+        ev.withColumn("__tranche", (col("event_id") % 2).cast("int")), 2, src)
+      lands.head()
+      val stream = run.ses.readStream.schema(run.ses.read.parquet(s"$src/f0").schema)
+        .option("maxFilesPerTrigger", "1").parquet(s"$src/*")
+      run.drain(stream.groupBy("event_type").count(), "complete", Seq { () =>
+        // the stateful query has run a batch: its providers are loaded
+        loadedMidRun = StateStoreProbe.loadedRunIds()
+          .contains(run.ses.streams.active.head.runId)
+        throw new IllegalStateException("landing failed")
+      })
+    }
+    assert(out.failed.toOption.exists(_.getMessage == "landing failed"), out)
+    assert(runs.size == 1 && loadedMidRun)
+    assert(ses.streams.active.isEmpty && spark.streams.active.isEmpty)
+    assert(viewsLeft(ses).isEmpty && viewsLeft(spark).isEmpty)
+    assert(StateStoreProbe.loadedRunIds().intersect(runs).isEmpty)
+    // a memory-sink run leaves no scratch directory, failed or not
+    assert(!new java.io.File(dir).exists)
+    // the ordered drivers release their state like every other driver
+    val (funnel, funnelRuns) = queryRuns(StreamingOps
+      .runStreamFunnelOnce(spark, TestSpark.Sf0001, "view", "click", "purchase"))
+    assert(funnel.isSuccess && funnelRuns.size == 1, funnel)
+    assert(spark.streams.active.isEmpty && viewsLeft(spark).isEmpty)
+    assert(StateStoreProbe.loadedRunIds().intersect(funnelRuns).isEmpty)
   }
 }

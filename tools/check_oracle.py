@@ -21,6 +21,11 @@ oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
 results = {}
 for name in sorted(os.listdir(out_dir)):
     path = os.path.join(out_dir, name)
+    if name.endswith(".FAILED"):
+        # Verify records a cell that threw as <name>.FAILED (its message)
+        with open(path) as fh:
+            results[name[:-len(".FAILED")]] = f"FAILED {fh.read().strip()}"
+        continue
     if not os.path.isdir(path):
         continue
     got = con.execute(f"SELECT * FROM read_parquet('{path}/*.parquet')").fetchdf()

@@ -42,10 +42,19 @@ for t in ["region", "nation", "customer", "supplier", "part", "orders",
 
 oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
 results = {}
+# Verify records a cell that threw as <name>.FAILED (its message)
+for f in sorted(os.listdir(out_dir)):
+    name = f[:-len(".FAILED")]
+    if f.endswith(".FAILED") and (only is None or name in only):
+        with open(os.path.join(out_dir, f)) as fh:
+            results[name] = f"FAILED {fh.read().strip()}"
+        print(f"! {name} FAILED", flush=True)
 names = [n for n in sorted(os.listdir(out_dir))
          if os.path.isdir(os.path.join(out_dir, n))
          and (only is None or n in only)]
 for name in names:
+    if name in results:  # a cell that threw fails even beside a dump
+        continue
     path = os.path.join(out_dir, name)
     got = con.execute(f"SELECT * FROM read_parquet('{path}/*.parquet')").fetchdf()
     if name not in oracle:
